@@ -18,10 +18,23 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from utility_service_areas_spark.functions.geometry import polygon_area
+from utility_service_areas_spark.functions.geometry import (
+    polygon_area,
+    st_make_valid,
+    st_union_multi,
+)
+from utility_service_areas_spark.operators.localrel import local_df
+from utility_service_areas_spark.operators.relational import (
+    filter_active_utilities,
+    tag_entities,
+)
 from utility_service_areas_spark.plans.service_areas import (
+    CERT_NUM_RE,
     build_raw_service_areas,
     build_service_areas,
+    certificate_metadata,
+    enrich_chronology,
+    replay_service_areas_from_raw,
 )
 from utility_service_areas_spark.sources.geojson import read_geojson, write_geojson
 from utility_service_areas_spark.sources.html_table import read_html_tables
@@ -138,6 +151,22 @@ def test_read_kml_rows(spark, kml_dir):
     by_name = [r for r in rows if r.placemark_name == "Certificate No. 8"]
     assert len(by_name) == 2
     assert polygon_area(by_name[0].geometry) in (12.0, 4.0)
+
+
+def test_read_kml_repairs_rings(spark, tmp_path):
+    """read_kml runs make_valid in its parse worker: an unclosed,
+    clockwise ring with a repeated vertex comes back closed and
+    counter-clockwise without the duplicate."""
+    d = tmp_path / "kml"
+    d.mkdir()
+    _write_kml(
+        d / "8-servicearea.kml",
+        "Certificate No. 8",
+        "Granted to: Chugach",
+        [_ring_poly([(0, 0), (0, 3), (0, 3), (4, 3), (4, 0)])],
+    )
+    [row] = read_kml(spark, str(d) + "/*.kml").collect()
+    assert row.geometry == [[[0.0, 0.0], [4.0, 0.0], [4.0, 3.0], [0.0, 3.0], [0.0, 0.0]]]
 
 
 def test_html_wrapped_kml_description(spark, tmp_path):
@@ -259,3 +288,260 @@ def test_leaflet_map_from_pipeline(spark, kml_dir, certificates, chronology, tmp
     assert "geometry_cert_sync_status" in props
     # presentation parity (index.qmd:140-192): base-layer control + scale bar
     assert "L.control.layers" in html and "L.control.scale" in html
+
+
+# --- value pin for the single-scan KML stages ---------------------------
+# The implementation before st_make_valid moved into the parse worker
+# and the two self-joins (patch preference, acquisition merge) became
+# aggregates, kept here as the reference the current code must match.
+
+
+def _ref_kml_with_cert(kml):
+    basename = F.element_at(F.split(F.col("path"), "/"), -1)
+    df = kml.withColumn(
+        "certificate_number",
+        F.nullif(
+            F.regexp_extract(
+                F.coalesce(F.nullif(F.col("placemark_name"), F.lit("")), basename),
+                CERT_NUM_RE,
+                1,
+            ),
+            F.lit(""),
+        ).cast("double"),
+    ).withColumn("is_patch", F.col("path").contains("-plss-fix"))
+    has_patch = df.groupBy("certificate_number").agg(
+        F.max(F.col("is_patch").cast("int")).alias("any_patch")
+    )
+    return (
+        df.join(F.broadcast(has_patch), "certificate_number")
+        .filter(F.col("is_patch") | (F.col("any_patch") == 0))
+        .drop("any_patch")
+    )
+
+
+def _ref_combine_by_certificate(kml):
+    valid = kml.withColumn("geometry", st_make_valid(F.col("geometry")))
+    return valid.groupBy("certificate_number").agg(
+        F.collect_list("geometry").alias("geometry"),
+        F.count(F.lit(1)).alias("n_source_polygons"),
+    )
+
+
+def _ref_build_raw_service_areas(spark, kml_glob, certificates):
+    kml = read_kml(spark, kml_glob).withColumn(
+        "certificate_number",
+        F.nullif(
+            F.regexp_extract(F.col("placemark_name"), CERT_NUM_RE, 1), F.lit("")
+        ).cast("double"),
+    )
+    combined = _ref_combine_by_certificate(
+        kml.filter(F.col("certificate_number").isNotNull())
+    )
+    return combined.join(F.broadcast(certificates), "certificate_number", "inner")
+
+
+def _ref_merge(spark, combined, merge_patches):
+    if not merge_patches:
+        return combined
+    patch_df = local_df(spark, merge_patches, ["cert1", "cert2"])
+    acquired = (
+        combined.join(
+            F.broadcast(patch_df),
+            combined.certificate_number == patch_df.cert2,
+        )
+        .groupBy(F.col("cert1").alias("certificate_number"))
+        .agg(
+            F.flatten(
+                F.transform(
+                    F.array_sort(
+                        F.collect_list(
+                            F.struct(
+                                F.col("cert2").alias("c2"),
+                                F.col("geometry").alias("g"),
+                            )
+                        )
+                    ),
+                    lambda s: s["g"],
+                )
+            ).alias("acq_geometry")
+        )
+    )
+    combined = (
+        combined.join(F.broadcast(acquired), "certificate_number", "left")
+        .withColumn(
+            "geometry",
+            F.when(
+                F.col("acq_geometry").isNotNull(),
+                F.concat(F.col("geometry"), F.col("acq_geometry")),
+            ).otherwise(F.col("geometry")),
+        )
+        .drop("acq_geometry")
+    )
+    absorbed = [c2 for _, c2 in merge_patches]
+    return combined.filter(~F.col("certificate_number").isin(absorbed))
+
+
+def _ref_active(certificates, operator_ids, inactive_ids):
+    return filter_active_utilities(
+        tag_entities(certificates, "certificate_number", operator_ids),
+        "certificate_number",
+        inactive_ids,
+        F.col("certificate_status") == "Active",
+    )
+
+
+def _ref_build_service_areas(
+    spark, kml_glob, certificates, chronology, operator_ids, inactive_ids,
+    merge_patches, assume_disjoint=True,
+):
+    """The reference's per-certificate (certificate_number,
+    n_source_polygons, geometry); the metadata join is shared code."""
+    certs = _ref_active(certificates, operator_ids, inactive_ids)
+    combined = _ref_combine_by_certificate(_ref_kml_with_cert(read_kml(spark, kml_glob)))
+    combined = _ref_merge(spark, combined, merge_patches)
+    if merge_patches and not assume_disjoint:
+        combined = combined.withColumn(
+            "geometry",
+            F.when(
+                F.col("certificate_number").isin([c1 for c1, _ in merge_patches]),
+                st_union_multi(F.col("geometry")),
+            ).otherwise(F.col("geometry")),
+        )
+    meta = certificate_metadata(certs, enrich_chronology(chronology))
+    return combined.join(F.broadcast(meta), "certificate_number", "inner").select(
+        "certificate_number", "n_source_polygons", "geometry"
+    )
+
+
+def _ref_replay_service_areas_from_raw(
+    raw_layer, certificates, operator_ids, inactive_ids, merge_patches
+):
+    certs = _ref_active(certificates, operator_ids, inactive_ids)
+    combined = _ref_merge(raw_layer.sparkSession, raw_layer, merge_patches)
+    return combined.join(F.broadcast(certs), "certificate_number", "inner").select(
+        F.col("certificate_number").cast("int").alias("certificate_number"),
+        "n_source_polygons",
+        "geometry",
+    )
+
+
+def _ring_poly(outer, *holes):
+    """A Polygon element with the rings written exactly as given
+    (unclosed, clockwise, repeated vertices and all)."""
+
+    def ring(pts):
+        c = " ".join(f"{x},{y},0" for x, y in pts)
+        return f"<LinearRing><coordinates>{c}</coordinates></LinearRing>"
+
+    inner = "".join(f"<innerBoundaryIs>{ring(h)}</innerBoundaryIs>" for h in holes)
+    return f"<Polygon><outerBoundaryIs>{ring(outer)}</outerBoundaryIs>{inner}</Polygon>"
+
+
+# (169, 61) and (169, 285): one cert1 absorbing two certificates;
+# (8, 61): a cert2 absorbed by two owners; (77, 300): a cert1 with no
+# KML (300 is dropped as a cert2 and 77 has no row of its own);
+# (8, 999): a cert2 with no KML.
+PIN_MERGES = [(169, 61), (169, 285), (8, 61), (77, 300), (8, 999)]
+
+
+@pytest.fixture()
+def pin_kml_dir(tmp_path):
+    d = tmp_path / "kml"
+    d.mkdir()
+    # cert 8: a clockwise outer ring with a counter-clockwise hole, a
+    # ring with duplicate vertices, and a degenerate ring make_valid drops
+    _write_kml(
+        d / "8-servicearea.kml",
+        "Certificate No. 8",
+        "Granted to: Chugach",
+        [
+            _ring_poly([(0, 0), (0, 4), (4, 4), (4, 0), (0, 0)],
+                       [(1, 1), (2, 1), (2, 2), (1, 2), (1, 1)]),
+            _ring_poly([(10, 0), (10, 0), (12, 0), (12, 2), (12, 2), (10, 2), (10, 0)]),
+            _ring_poly([(20, 0), (21, 0), (20, 0)]),
+        ],
+    )
+    # cert 169: the original is dropped for its -plss-fix patch, whose
+    # placemark is unnamed (certificate from the file name) and whose
+    # ring is unclosed
+    _write_kml(d / "169-servicearea.kml", "Certificate No. 169", "AVEC", [_poly(0, 0, 1, 1)])
+    _write_kml(
+        d / "169-servicearea-plss-fix.kml",
+        "",
+        "",
+        [_ring_poly([(20, 20), (26, 20), (26, 26), (20, 26)]), _poly(30, 20, 2, 2)],
+    )
+    # 61 overlaps the 169 patch, so the assume_disjoint=False dissolve
+    # has work to do
+    _write_kml(d / "61-servicearea.kml", "Certificate No. 61", "Teller", [_poly(25, 25, 3, 3)])
+    _write_kml(
+        d / "285-servicearea.kml",
+        "Certificate No. 285",
+        "Kotzebue",
+        [_ring_poly([(40, 40), (40, 43), (43, 43), (43, 40), (40, 40)]), _poly(50, 40, 1, 1)],
+    )
+    _write_kml(d / "300-servicearea.kml", "Certificate No. 300", "Absorbed", [_poly(60, 60, 2, 2)])
+    _write_kml(d / "412-servicearea.kml", "Certificate No. 412", "Untouched", [_poly(70, 70, 2, 2)])
+    return str(d)
+
+
+@pytest.fixture()
+def pin_certificates(spark):
+    rows = [
+        (float(c), f"E{c}", f"Entity {c}", "Active", f"http://rca/{c}", dt.date(2020, 1, 1))
+        for c in (8, 61, 77, 169, 285, 300, 412, 999)
+    ]
+    return spark.createDataFrame(
+        rows,
+        "certificate_number double, entity string, certificate_name string, "
+        "certificate_status string, cpcn_url string, kml_update_date date",
+    )
+
+
+def _blocks(rows):
+    """certificate -> (n_source_polygons, own polygons as a sorted
+    multiset, the acquired block in order). Own polygons come in task
+    order, so only their multiset is pinned."""
+    return {
+        r.certificate_number: (
+            r.n_source_polygons,
+            sorted(r.geometry[: r.n_source_polygons]),
+            r.geometry[r.n_source_polygons :],
+        )
+        for r in rows
+    }
+
+
+def test_kml_stages_match_the_self_join_reference(
+    spark, pin_kml_dir, pin_certificates, chronology
+):
+    glob = pin_kml_dir + "/*.kml"
+    raw = build_raw_service_areas(spark, glob, pin_certificates)
+    raw_ref = _ref_build_raw_service_areas(spark, glob, pin_certificates)
+    assert raw.columns == raw_ref.columns
+    assert _blocks(raw.collect()) == _blocks(raw_ref.collect())
+
+    args = (spark, glob, pin_certificates, chronology, [], [], PIN_MERGES)
+    got = _blocks(build_service_areas(*args).collect())
+    assert got == _blocks(_ref_build_service_areas(*args).collect())
+    assert set(got) == {8.0, 169.0, 412.0}
+    # 169: its patch's two polygons, then 61's one and 285's two
+    assert got[169.0][0] == 2 and len(got[169.0][2]) == 3
+    # 8: two repaired polygons plus the emptied degenerate ring, then 61
+    assert got[8.0][0] == 3 and len(got[8.0][2]) == 1
+
+    def merged(rows):
+        return {r.certificate_number: (r.n_source_polygons, sorted(r.geometry)) for r in rows}
+
+    got = merged(build_service_areas(*args, assume_disjoint=False).collect())
+    ref = merged(_ref_build_service_areas(*args, assume_disjoint=False).collect())
+    assert got == ref
+    areas = sum(polygon_area(p) for p in got[169.0][1])
+    assert areas < 36 + 4 + 9 + 9 + 1  # the 61/169 overlap dissolved
+
+    # the replay from a committed raw layer shares the acquisition merge
+    layer = raw.select("certificate_number", "geometry", "n_source_polygons")
+    args = (layer, pin_certificates, [], [412], PIN_MERGES)
+    got = _blocks(replay_service_areas_from_raw(*args).collect())
+    assert got == _blocks(_ref_replay_service_areas_from_raw(*args).collect())
+    assert set(got) == {8, 169}

@@ -215,3 +215,21 @@ def test_forward_dep_is_a_loud_error(spark, tmp_path):
     ]
     with pytest.raises(ValueError, match="declared earlier"):
         run_pipeline(spark, stages, str(tmp_path / "store"))
+
+
+def test_kml_stages_read_and_parse_the_directory_once(spark, pipeline_inputs):
+    """Each KML stage scans the directory once and crosses into Python
+    once: the parse worker also repairs the polygons, and neither the
+    patch preference nor the acquisition merge re-reads the KMLs
+    through a self-join."""
+    from utility_service_areas_spark.plans.targets import service_areas_stages
+
+    kml, certs, chron, _store = pipeline_inputs
+    frames = {}
+    for s in service_areas_stages(kml, certs, chron, [520], [59], [(8, 169), (8, 61)]):
+        frames[s.name] = s.build(spark, {d: frames[d] for d in s.deps})
+    for name in ("raw_service_areas", "service_areas"):
+        plan = frames[name]._jdf.queryExecution().executedPlan().toString()
+        counts = {op: plan.count(op) for op in ("Scan binaryFile", "MapInPandas", "ArrowEvalPython")}
+        assert counts == {"Scan binaryFile": 1, "MapInPandas": 1, "ArrowEvalPython": 0}, (
+            name, plan)

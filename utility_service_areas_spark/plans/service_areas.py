@@ -7,10 +7,12 @@ Parity map (reference → here):
   build_certificates_df          (R/functions.R:306-380) → certificate_metadata
   generate_and_export_geojson    (R/functions.R:420-562) → build_service_areas
 
-Everything is declarative DataFrame ops; the only UDF on the path is
-st_make_valid (geometry repair). Dim-sized inputs (certificates,
-patches) are broadcast; the KML fact side is never shuffled except
-for the single group-by-certificate combine.
+Everything is declarative DataFrame ops; each stage that reads KML
+crosses into Python once, in the mapInPandas worker that parses every
+file and repairs its polygons (st_make_valid fused into the parse).
+Dim-sized inputs (certificates, patches) are broadcast; the KML fact
+side is scanned once and shuffled only by the group-by-certificate
+combine (and, with acquisition merges, one more group-by-owner).
 """
 
 from __future__ import annotations
@@ -18,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from utility_service_areas_spark.functions.geometry import st_make_valid, st_union_multi
+from utility_service_areas_spark.functions.geometry import st_union_multi
 from utility_service_areas_spark.operators.relational import (
     filter_active_utilities,
     latest_per_group,
@@ -31,39 +33,81 @@ from utility_service_areas_spark.operators.localrel import local_df
 CERT_NUM_RE = r"(\d+(\.\d+)?)"  # matches CPCN '18.1' too (R/functions.R:180)
 
 
-def _kml_with_cert(kml: DataFrame) -> DataFrame:
-    """Extract certificate number; prefer patch files over originals
-    per certificate (R/functions.R:450-458: if a -plss-fix KML exists,
-    the original is dropped)."""
+def _cert_number(name: F.Column) -> F.Column:
+    """The certificate number in a placemark or file name, else null."""
+    return F.nullif(F.regexp_extract(name, CERT_NUM_RE, 1), F.lit("")).cast("double")
+
+
+def _combine_preferring_patches(kml: DataFrame) -> DataFrame:
+    """Group-by-certificate st_combine (R/functions.R:466-471) that
+    prefers patch files over originals (R/functions.R:450-458: if a
+    -plss-fix KML exists, the original is dropped). One conditional
+    aggregate: a certificate with any patch-file polygon keeps only
+    those, any other keeps all of its polygons. The certificate comes
+    from the placemark name, else from the file name."""
     basename = F.element_at(F.split(F.col("path"), "/"), -1)
-    df = kml.withColumn(
-        "certificate_number",
-        F.nullif(
-            F.regexp_extract(
-                F.coalesce(F.nullif(F.col("placemark_name"), F.lit("")), basename),
-                CERT_NUM_RE,
-                1,
-            ),
-            F.lit(""),
-        ).cast("double"),
-    ).withColumn("is_patch", F.col("path").contains("-plss-fix"))
-    has_patch = df.groupBy("certificate_number").agg(
-        F.max(F.col("is_patch").cast("int")).alias("any_patch")
+    cert = _cert_number(F.coalesce(F.nullif(F.col("placemark_name"), F.lit("")), basename))
+    is_patch = F.col("path").contains("-plss-fix")
+    per_cert = (
+        kml.withColumn("certificate_number", cert)
+        .filter(F.col("certificate_number").isNotNull())
+        .groupBy("certificate_number")
+        .agg(
+            F.max(is_patch).alias("any_patch"),
+            F.collect_list(
+                F.struct(is_patch.alias("is_patch"), F.col("geometry").alias("g"))
+            ).alias("polys"),
+        )
     )
+    kept = F.filter("polys", lambda s: s["is_patch"] | ~F.col("any_patch"))
+    return per_cert.select(
+        "certificate_number", F.transform(kept, lambda s: s["g"]).alias("geometry")
+    ).withColumn("n_source_polygons", F.size("geometry").cast("long"))
+
+
+def _merge_acquisitions(
+    combined: DataFrame, merge_patches: list[tuple[int, int]]
+) -> DataFrame:
+    """Acquisition merges (get_merge_geom, R/functions.R:421-444) over
+    per-certificate rows: each cert1 appends its cert2s' polygons after
+    its own, sorted by cert2 (collect_list order is task order). A
+    cert2 never survives as its own row, a cert1 with no row of its own
+    is dropped, a cert2 absorbed by two owners goes to both, and
+    n_source_polygons counts the owner's own polygons only. No
+    self-join: a cert2 row is re-keyed to each cert1 absorbing it and
+    one group-by-owner aggregate assembles the MultiPolygon."""
+    if not merge_patches:
+        return combined
+    patch_df = local_df(combined.sparkSession, merge_patches, ["cert1", "cert2"])
+    acquired = F.col("cert1").isNotNull()
     return (
-        df.join(F.broadcast(has_patch), "certificate_number")
-        .filter(F.col("is_patch") | (F.col("any_patch") == 0))
-        .drop("any_patch")
-    )
-
-
-def combine_by_certificate(kml: DataFrame) -> DataFrame:
-    """st_make_valid + group-by-cert st_combine → MultiPolygon
-    (R/functions.R:466-471). One shuffle on certificate_number."""
-    valid = kml.withColumn("geometry", st_make_valid(F.col("geometry")))
-    return valid.groupBy("certificate_number").agg(
-        F.collect_list("geometry").alias("geometry"),
-        F.count(F.lit(1)).alias("n_source_polygons"),
+        combined.join(
+            F.broadcast(patch_df),
+            combined.certificate_number == patch_df.cert2,
+            "left",
+        )
+        .groupBy(F.coalesce(F.col("cert1"), F.col("certificate_number")).alias("owner"))
+        .agg(
+            F.flatten(
+                F.transform(
+                    F.array_sort(
+                        F.collect_list(
+                            F.struct(
+                                acquired.alias("acquired"),
+                                F.col("certificate_number").alias("c"),
+                                F.col("geometry").alias("g"),
+                            )
+                        )
+                    ),
+                    lambda s: s["g"],
+                )
+            ).alias("geometry"),
+            F.sum(F.when(~acquired, F.col("n_source_polygons"))).alias(
+                "n_source_polygons"
+            ),
+        )
+        .filter(F.col("n_source_polygons").isNotNull())  # has an own row
+        .withColumnRenamed("owner", "certificate_number")
     )
 
 
@@ -71,14 +115,18 @@ def build_raw_service_areas(
     spark: SparkSession, kml_glob: str, certificates: DataFrame
 ) -> DataFrame:
     """Raw merged layer: every KML, no filtering/patching
-    (R/functions.R:173-192)."""
-    kml = read_kml(spark, kml_glob).withColumn(
-        "certificate_number",
-        F.nullif(
-            F.regexp_extract(F.col("placemark_name"), CERT_NUM_RE, 1), F.lit("")
-        ).cast("double"),
+    (R/functions.R:173-192), combined per certificate
+    (st_combine, R/functions.R:466-471)."""
+    combined = (
+        read_kml(spark, kml_glob)
+        .withColumn("certificate_number", _cert_number(F.col("placemark_name")))
+        .filter(F.col("certificate_number").isNotNull())
+        .groupBy("certificate_number")
+        .agg(
+            F.collect_list("geometry").alias("geometry"),
+            F.count(F.lit(1)).alias("n_source_polygons"),
+        )
     )
-    combined = combine_by_certificate(kml.filter(F.col("certificate_number").isNotNull()))
     return combined.join(F.broadcast(certificates), "certificate_number", "inner")
 
 
@@ -154,62 +202,20 @@ def build_service_areas(
         inactive_ids,
         F.col("certificate_status") == "Active",
     )
-    combined = combine_by_certificate(_kml_with_cert(read_kml(spark, kml_glob)))
-
-    # Acquisition merges: cert2's polygons are appended into cert1's
-    # MultiPolygon (disjoint service areas: union == combine,
-    # R/functions.R:421-444 get_merge_geom).
-    if merge_patches:
-        patch_df = local_df(spark, merge_patches, ["cert1", "cert2"])
-        # collect_list order is task-completion order — sort by cert2
-        # before flattening so a cert absorbing several others gets a
-        # run-stable polygon order (r15 review #4)
-        acquired = (
-            combined.join(
-                F.broadcast(patch_df),
-                combined.certificate_number == patch_df.cert2,
-            )
-            .groupBy(F.col("cert1").alias("certificate_number"))
-            .agg(
-                F.flatten(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(
-                                F.struct(
-                                    F.col("cert2").alias("c2"),
-                                    F.col("geometry").alias("g"),
-                                )
-                            )
-                        ),
-                        lambda s: s["g"],
-                    )
-                ).alias("acq_geometry")
-            )
+    combined = _merge_acquisitions(
+        _combine_preferring_patches(read_kml(spark, kml_glob)), merge_patches
+    )
+    if merge_patches and not assume_disjoint:
+        # True dissolve of the merged MultiPolygon — only the
+        # certificates that actually absorbed another one pay the
+        # overlay cost; untouched rows keep their geometry as-is.
+        combined = combined.withColumn(
+            "geometry",
+            F.when(
+                F.col("certificate_number").isin([c1 for c1, _ in merge_patches]),
+                st_union_multi(F.col("geometry")),
+            ).otherwise(F.col("geometry")),
         )
-        combined = (
-            combined.join(F.broadcast(acquired), "certificate_number", "left")
-            .withColumn(
-                "geometry",
-                F.when(
-                    F.col("acq_geometry").isNotNull(),
-                    F.concat(F.col("geometry"), F.col("acq_geometry")),
-                ).otherwise(F.col("geometry")),
-            )
-            .drop("acq_geometry")
-        )
-        absorbed = [c2 for _, c2 in merge_patches]
-        combined = combined.filter(~F.col("certificate_number").isin(absorbed))
-        if not assume_disjoint:
-            # True dissolve of the merged MultiPolygon — only the
-            # certificates that actually absorbed another one pay the
-            # overlay cost; untouched rows keep their geometry as-is.
-            combined = combined.withColumn(
-                "geometry",
-                F.when(
-                    F.col("certificate_number").isin([c1 for c1, _ in merge_patches]),
-                    st_union_multi(F.col("geometry")),
-                ).otherwise(F.col("geometry")),
-            )
 
     meta = certificate_metadata(certs, enrich_chronology(chronology))
     joined = combined.join(F.broadcast(meta), "certificate_number", "inner")
@@ -311,53 +317,7 @@ def replay_service_areas_from_raw(
         inactive_ids,
         F.col("certificate_status") == "Active",
     )
-    combined = raw_layer
-    if merge_patches:
-        spark = raw_layer.sparkSession
-        patch_df = local_df(spark, merge_patches, ["cert1", "cert2"])
-        acquired = (
-            combined.join(
-                F.broadcast(patch_df),
-                combined.certificate_number == patch_df.cert2,
-            )
-            .groupBy(F.col("cert1").alias("certificate_number"))
-            .agg(
-                # run-stable absorb order (sort by cert2) — the same
-                # determinism fix as build_service_areas (r15 review #4)
-                F.flatten(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(
-                                F.struct(
-                                    F.col("cert2").alias("c2"),
-                                    F.col("geometry").alias("g"),
-                                )
-                            )
-                        ),
-                        lambda s: s["g"],
-                    )
-                ).alias("acq_geometry")
-            )
-        )
-        combined = (
-            combined.join(F.broadcast(acquired), "certificate_number", "left")
-            .withColumn(
-                "geometry",
-                F.when(
-                    F.col("acq_geometry").isNotNull(),
-                    F.concat(F.col("geometry"), F.col("acq_geometry")),
-                ).otherwise(F.col("geometry")),
-            )
-            .drop("acq_geometry")
-        )
-        # absorbed certs must never survive as their own rows even if
-        # the CSV filter would keep them (build_service_areas applies
-        # the same drop — r15 review #5; on the real data every cert2
-        # is Inactive anyway, so this is robustness, not a result fix)
-        absorbed = [c2 for _, c2 in merge_patches]
-        combined = combined.filter(
-            ~F.col("certificate_number").isin(absorbed)
-        )
+    combined = _merge_acquisitions(raw_layer, merge_patches)
     joined = combined.join(F.broadcast(certs), "certificate_number", "inner")
     return joined.select(
         F.col("certificate_number").cast("int").alias("certificate_number"),

@@ -2,9 +2,10 @@
 
 Parity: st_read of RCA service-area KMLs (reference
 R/functions.R:177,460). Spark-first shape: `binaryFile` scan (each
-file is one row, split across executors) → `mapInPandas` XML parse →
-long-form (file, name, description, geometry) rows. At 100 TB of
-files the binaryFile scan parallelizes by file; no driver-side loop.
+file is one row, split across executors) → `mapInPandas` XML parse
+and polygon repair → long-form (file, name, description, geometry)
+rows. At 100 TB of files the binaryFile scan parallelizes by file;
+no driver-side loop.
 
 Only stdlib xml.etree is used (no lxml in the environment).
 """
@@ -25,6 +26,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from utility_service_areas_spark.functions.geometry import make_valid
 
 KML_SCHEMA = StructType(
     [
@@ -133,17 +136,22 @@ def parse_kml_bytes(path: str, blob: bytes) -> list[dict]:
 
 
 def read_kml(spark: SparkSession, path_glob: str) -> DataFrame:
-    """Distributed KML read: (path, placemark_name, description, geometry)."""
+    """Distributed KML read: (path, placemark_name, description,
+    geometry), every polygon already through make_valid (st_read then
+    st_make_valid, R/functions.R:177-182,460-468) in the one
+    mapInPandas worker, so a KML stage crosses into Python once.
+    make_valid is row-wise and idempotent, so repairing before any
+    certificate filter gives the same values as repairing after it."""
     binary = spark.read.format("binaryFile").load(path_glob)
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                out.extend(parse_kml_bytes(row["path"], row["content"]))
-            yield pd.DataFrame(
-                out, columns=["path", "placemark_name", "description", "geometry"]
-            )
+            rows = [
+                {**r, "geometry": make_valid(r["geometry"])}
+                for path, blob in zip(pdf["path"], pdf["content"])
+                for r in parse_kml_bytes(path, blob)
+            ]
+            yield pd.DataFrame(rows, columns=KML_SCHEMA.fieldNames())
 
     return binary.select("path", "content").mapInPandas(parse, KML_SCHEMA)
 
