@@ -416,33 +416,36 @@ def test_driver_priority_prefix_invariants():
     (they can only burn a slot with err:no_oracle)."""
     from utility_service_areas_spark.plans.registry import (
         REGISTRY,
-        _DRIVER_PRIORITY,
         _load_all,
+        _ordered,
     )
 
     _load_all()
-    assert len(_DRIVER_PRIORITY) == 50
-    assert len(set(_DRIVER_PRIORITY)) == 50
-    unknown = [n for n in _DRIVER_PRIORITY if n not in REGISTRY]
+    order = list(_ordered())
+    prefix = order[:50]
+    assert len(prefix) == 50
+    assert len(set(prefix)) == 50
+    unknown = [n for n in prefix if n not in REGISTRY]
     assert not unknown, unknown
     oracle_less = {n for n, spec in REGISTRY.items() if spec.oracle is None}
-    assert not oracle_less & set(_DRIVER_PRIORITY), (
+    assert not oracle_less & set(prefix), (
         "oracle-less keys can only burn a driver slot"
     )
+    assert sorted(order) == sorted(REGISTRY), "the walk must visit every key once"
 
 
 def test_rotation_matches_correctness_union():
-    """VERDICT r15 task #3: the rotation can never drift from the data.
+    """The rotation can never drift from the data: `_ordered()` derives
+    it, and this test recomputes it independently.
 
-    Recompute each sql-oracled key's newest driver-attestation round
-    from the union of the committed CORRECTNESS_r*.json files
-    (never-attested keys count as round 0), sort the pool by
-    (newest_round, name) — the documented rotation discipline is
-    "stalest first, boundary cohort split alphabetically" — and assert
-    that `_DRIVER_PRIORITY` ∪ `_NEXT_ROUND_REMAINDER` equals exactly
-    the first len(prefix)+len(remainder) keys of that ordering. Any
-    hand-edit of either tuple that disagrees with the committed
-    attestation history fails here, not in a judge's reconstruction.
+    Recompute each sql-oracled key's newest GREEN driver-attestation
+    round from the union of the committed CORRECTNESS_r*.json files
+    (never-attested keys count as round 0; a red row — err set or
+    rows_match not true — keeps the key's old staleness so it re-enters
+    the sample at once), sort that pool by (newest_round, name) — the
+    rotation discipline is "stalest first, boundary cohort split
+    alphabetically" — and assert that the driver walk is exactly that
+    pool followed by the oracle-less keys in module-load order.
     """
     import glob
     import json
@@ -450,9 +453,8 @@ def test_rotation_matches_correctness_union():
 
     from utility_service_areas_spark.plans.registry import (
         REGISTRY,
-        _DRIVER_PRIORITY,
-        _NEXT_ROUND_REMAINDER,
         _load_all,
+        _ordered,
     )
 
     _load_all()
@@ -463,12 +465,6 @@ def test_rotation_matches_correctness_union():
     for path in files:
         rnd = int(os.path.basename(path).split("_r")[1].split(".")[0])
         for key, row in json.load(open(path, encoding="utf-8")).items():
-            # Only a GREEN attestation counts (r18): a red row (err
-            # set / rows_match not true, e.g. medallion_stream_pipeline
-            # in r17) keeps its old staleness so it re-enters the next
-            # round's sample immediately — the documented "red rows
-            # first" half of the rotation discipline, previously
-            # unreachable because no sampled row had ever been red.
             green = (
                 isinstance(row, dict)
                 and row.get("err") is None
@@ -481,26 +477,23 @@ def test_rotation_matches_correctness_union():
         (name for name, spec in REGISTRY.items() if spec.oracle is not None),
         key=lambda n: (newest.get(n, 0), n),
     )
-    want = set(pool[: len(_DRIVER_PRIORITY) + len(_NEXT_ROUND_REMAINDER)])
-    got = set(_DRIVER_PRIORITY) | set(_NEXT_ROUND_REMAINDER)
-    assert not set(_DRIVER_PRIORITY) & set(_NEXT_ROUND_REMAINDER), (
-        "a key cannot be both in this round's prefix and next round's head"
-    )
-    if got != want:
-        # Emit the expected tuples verbatim so the round-opening
-        # rotation edit is copy-paste mechanical (VERDICT r16 task #1).
-        n_prefix = len(_DRIVER_PRIORITY)
-        exp_prefix = pool[:n_prefix]
-        exp_rem = pool[n_prefix : n_prefix + len(_NEXT_ROUND_REMAINDER)]
+    oracle_less = [name for name, spec in REGISTRY.items() if spec.oracle is None]
+    assert list(_ordered()) == pool + oracle_less
 
-        def _tuple_src(names):
-            return "(\n" + "".join(f'    "{n}",\n' for n in names) + ")"
 
-        raise AssertionError(
-            "rotation drift: prefix∪remainder is missing stale keys "
-            f"{sorted(want - got)} and carries fresher-than-necessary keys "
-            f"{sorted(got - want)}.\n"
-            "Paste into plans/registry.py:\n"
-            f"_DRIVER_PRIORITY = {_tuple_src(exp_prefix)}\n"
-            f"_NEXT_ROUND_REMAINDER = {_tuple_src(exp_rem)}"
-        )
+def test_red_rows_do_not_count_as_attested(tmp_path):
+    """A key whose newest driver row is red keeps the staleness of its
+    last green row, so it heads the next rotation."""
+    import json
+
+    from utility_service_areas_spark.plans.registry import _newest_green_round
+
+    green = {"rows_match": True, "err": None}
+    rounds = {
+        1: {"a": green, "b": green},
+        2: {"a": {"rows_match": False, "err": None}, "b": {"rows_match": True, "err": "boom"}},
+        3: {"c": green, "d": "not a row"},
+    }
+    for rnd, rows in rounds.items():
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
+    assert _newest_green_round(str(tmp_path)) == {"a": 1, "b": 1, "c": 3}

@@ -2,7 +2,9 @@
 
 Runs every ``queries()`` entry at a given SF and compares with the
 DuckDB oracle: row count, schema (column names + coarse types), and an
-order-insensitive value hash. Usage:
+order-insensitive value hash. The summary line also gives the sweep's
+Janino compile count and compile seconds (Spark's CodegenMetrics), so a
+loss of generated-class reuse shows up in the gate's own output. Usage:
 
     python tools/check_oracle.py [--sf /root/testdata/sf0.01] [name ...]
 """
@@ -99,6 +101,11 @@ def main() -> int:
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    compiler = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    compiles0, compile_ns0 = compiles.getCount(), compiler.compileTime()
+
     n_pass = n_fail = n_rows_only = 0
     for name in names:
         t0 = time.time()
@@ -156,7 +163,11 @@ def main() -> int:
         else:
             print(f"PASS {name}: {len(s_rows)} rows ({dt:.1f}s)")
             n_pass += 1
-    print(f"\n{n_pass} pass, {n_rows_only} rows-only, {n_fail} fail")
+    print(
+        f"\n{n_pass} pass, {n_rows_only} rows-only, {n_fail} fail; "
+        f"{compiles.getCount() - compiles0} Janino compiles, "
+        f"{(compiler.compileTime() - compile_ns0) / 1e9:.1f} s compiling"
+    )
     return 1 if n_fail else 0
 
 

@@ -13,6 +13,10 @@ Conventions (see SURVEY.md §6):
 
 from __future__ import annotations
 
+import functools
+import glob
+import json
+import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -43,13 +47,39 @@ def query(name: str, oracle: str | None = None, doc: str = "", tags: tuple[str, 
 
 
 def _ordered() -> dict[str, QuerySpec]:
-    """Registry in driver-walk order: `_DRIVER_PRIORITY` names first
-    (the verification driver attests a bounded prefix per round, so the
-    prefix must hold the queries with no green row yet), then everything
-    else in module-load order."""
-    prio = [n for n in _DRIVER_PRIORITY if n in REGISTRY]
-    rest = [n for n in REGISTRY if n not in set(_DRIVER_PRIORITY)]
-    return {n: REGISTRY[n] for n in (*prio, *rest)}
+    """Registry in driver-walk order. The verification driver attests a
+    bounded prefix of this order each round, so the prefix must hold
+    the keys that have gone longest without a green attestation:
+    sql-oracled keys sorted by (newest green round, name), where a
+    never-attested key counts as round 0, then the oracle-less keys
+    (which can only burn a driver slot) in module-load order."""
+    newest = _newest_green_round()
+    oracled = sorted(
+        (n for n, spec in REGISTRY.items() if spec.oracle is not None),
+        key=lambda n: (newest.get(n, 0), n),
+    )
+    rest = [n for n, spec in REGISTRY.items() if spec.oracle is None]
+    return {n: REGISTRY[n] for n in (*oracled, *rest)}
+
+
+_REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+@functools.cache
+def _newest_green_round(root: str = _REPO) -> dict[str, int]:
+    """Newest round in which each key's driver row was green, from the
+    union of the committed CORRECTNESS_r<N>.json files in ``root``.
+    A red row (err set or rows_match not true) does not count, so a key
+    that went red re-enters the next round's prefix."""
+    newest: dict[str, int] = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        rnd = int(os.path.basename(path)[len("CORRECTNESS_r") : -len(".json")])
+        with open(path, encoding="utf-8") as f:
+            rows = json.load(f)
+        for key, row in rows.items():
+            if isinstance(row, dict) and row.get("err") is None and row.get("rows_match") is True:
+                newest[key] = max(newest.get(key, 0), rnd)
+    return newest
 
 
 def all_queries() -> dict[str, QueryFn]:
@@ -65,100 +95,9 @@ def all_oracles() -> dict[str, str]:
 _LOADED = False
 
 
-# Module load order == registry iteration order == the order the
-# verification driver walks queries. Families whose driver rows were
-# missing in round 1 (analytics/tpch/etl/multimodal) load first so a
-# time-budgeted driver pass reaches them; the slow dedup/geo families
-# load last. Every module is first-party and REQUIRED — an import
-# failure must crash loudly, not silently shrink the registry.
-# The prefix is rotated each round to exactly the driver's 50-row
-# attestation budget: red rows first, then the stalest-attested keys,
-# then keys whose definitions were edited this round.
-_DRIVER_PRIORITY = (
-    # Round-18 rotation (round-opening ritual; red rows first, then
-    # stalest — medallion_stream_pipeline was RED in r17 (the driver-
-    # session DATA_SOURCE_NOT_FOUND failure, fixed this round), so it
-    # re-enters the sample immediately: a red attestation no longer
-    # counts as 'attested' in the staleness computation (the pin test
-    # now counts GREEN rows only). Then the 16-key r12-stale remainder
-    # promised as r18's head, then the r13 cohort alphabetically.
-    "medallion_stream_pipeline",
-    "order_backlog_timeseries",
-    "order_status_priority_cube",
-    "orders_ols_trend",
-    "orders_with_late_items",
-    "search_rrf_fusion",
-    "small_lot_revenue_by_brand",
-    "source_token_entropy",
-    "supplier_count_by_part_type",
-    "supplier_ship_gap_stats",
-    "text_bm25_topk",
-    "text_hashing_trick_features",
-    "text_rake_keyphrases",
-    "text_redact_pii",
-    "trade_graph_lpa",
-    "trade_graph_pagerank",
-    "user_session_stats",
-    "abtest_cuped_adjusted",
-    "abtest_srm_check",
-    "ann_ivfpq_search_persisted",
-    "bloom_new_customer_orders",
-    "corpus_heaps_fit",
-    "dedup_cc_twostar",
-    "dedup_first_per_key",
-    "disjunctive_bracket_revenue",
-    "docs_curriculum_rank",
-    "docs_dsir_importance",
-    "docs_gopher_quality_flags",
-    "docs_model_quality_scores",
-    "docs_training_filter",
-    "earliest_year_per_entity",
-    "events_exact_quartiles_nosort",
-    "events_poisson_rate_ci",
-    "excess_quantity_suppliers",
-    "filter_tag_entities",
-    "flagship_service_area_report",
-    "fuzzy_match_part_names",
-    "large_volume_orders",
-    "latest_update_per_entity",
-    "merge_upsert_customers",
-    "nation_market_share_inputs",
-    "order_fulfillment_latency",
-    "orders_seasonality_index",
-    "orders_theil_sen_trend",
-    "part_brand_type_chi2",
-    "part_revenue_concentration",
-    "pivot_status_by_year",
-    "profit_by_nation_year",
-    "promo_revenue_share_by_month",
-    "quality_pair_mining",
-)
-
-# The stalest-attested keys that did NOT fit this round's 50-slot
-# prefix: they head the NEXT round's rotation. Kept as data (not a
-# comment) so tests/test_registry.py can recompute the stale pool from
-# the CORRECTNESS_r*.json union and assert prefix ∪ remainder equals
-# it exactly — a rotation note can never drift from the data again
-# (VERDICT r15 task #3).
-_NEXT_ROUND_REMAINDER = (
-    "regex_extract_fields",
-    "reservoir_sample_docs",
-    "returned_item_report",
-    "salted_hot_key_join",
-    "scd2_customer_history",
-    "simple_revenue_delta",
-    "source_kl_drift",
-    "supplier_order_exclusivity",
-    "text_naive_bayes_source",
-    "top_revenue_supplier",
-    "trade_graph_hits",
-    "unpivot_part_metrics",
-    "user_activity_gini",
-    "versioned_merge_snapshot",
-    "vocab_coverage_sweep",
-    "weighted_sample_orders",
-)
-
+# Every module is first-party and REQUIRED — an import failure must
+# crash loudly, not silently shrink the registry. Load order fixes the
+# position of the oracle-less keys in `_ordered()`.
 _PLAN_MODULES = (
     "relational_queries",
     "analytics_queries",

@@ -1,9 +1,13 @@
 """Tuned SparkSession builder.
 
-Defaults chosen for the local[32] test harness but expressed so the
+One builder for every entry point (tests, the oracle gate, bench.py,
+the benchmark and the CLI). It runs ``local[SPARK_GRAFT_CPUS]`` (32
+when unset) with one shuffle partition per core, and is written so the
 same code scales to a multi-executor cluster: AQE handles runtime
 partition coalescing and skew joins, Arrow handles Python<->JVM
-transfer for the pandas-UDF geometry/hash paths.
+transfer for the pandas-UDF geometry/hash paths, and the codegen cache
+and JIT settings below suit any long-lived JVM that keeps running the
+same query shapes.
 """
 
 from __future__ import annotations
@@ -11,6 +15,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Entries in Spark's generated-class cache; build_session says why.
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def build_session(app_name: str = "usa-spark", master: str | None = None) -> SparkSession:
@@ -59,6 +66,43 @@ def build_session(app_name: str = "usa-spark", master: str | None = None) -> Spa
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # Generated-class cache. Spark keeps 100 classes by default, in
+        # an LRU keyed by generated source. A workload whose pass compiles
+        # more distinct classes than that evicts what its next re-run
+        # needs, so every re-run recompiles nearly all of them. Distinct
+        # classes per pass: curation_dedup 134, service_areas_etl 97, so
+        # 2000 holds the larger with room for whatever else the session
+        # ran. Measured 100 -> 2000 on 4 cores: steady passes recompile
+        # 88-107 -> 0-4 classes on curation_dedup and 29 -> 0-8 on
+        # service_areas_etl, and the median curation steady-pass CPU
+        # falls 13.1 -> 10.1 s (10 alternating pairs), mostly C2 no
+        # longer re-JITting reloaded classes. Fewer class loads also mean
+        # fewer of the CHA deoptimizations the JIT-flag comment below
+        # describes. One tools/check_oracle.py sweep of all 268 queries
+        # compiles 3709 distinct classes at sf0.01, more than the cache
+        # holds, yet still 5434 -> 3825 compiles, because neighbouring
+        # queries share classes. Metaspace at the end of the test suite
+        # went 217 -> 247 MB.
+        #
+        # The few classes a second or third pass still compiles are AQE's
+        # doing, not the cache's. AQE numbers whole-stage-codegen stages
+        # in the order it creates query stages, which follows which of
+        # the concurrently running stages finishes first, so one stage is
+        # *(5) in one run and *(7) in the next. The number is part of the
+        # generated class name, GeneratedIteratorForCodegenStage<N>, hence
+        # of the cache key: every residual class seen (dedup_minhash_
+        # verified, and five stages of service_areas_etl) differed from an
+        # earlier one only there. Once each order has been seen, re-runs
+        # compile nothing. The internal conf
+        # spark.sql.codegen.useIdInClassName=false drops the number and
+        # measured 0 residual compiles (134 -> 130 on the first curation
+        # pass), but it also drops the stage id from every generated frame
+        # in jstack and profiler output, which is how stage-level CPU
+        # cliffs are traced to their operator.
+        #
+        # A static conf: it takes effect only when set before the JVM's
+        # CodeGenerator first initializes, i.e. in the first builder.
+        .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_ENTRIES)
     )
     if not os.environ.get("SPARK_GRAFT_NO_JIT_TUNING"):
         # HotSpot permanently demotes a method to the interpreter after
