@@ -183,6 +183,7 @@ def overlap_kml_dir(tmp_path):
 
 def test_pipeline_dissolve_on_overlapping_acquisition(spark, overlap_kml_dir):
     from utility_service_areas_spark.plans.service_areas import build_service_areas
+    from utility_service_areas_spark.sources.kml import read_kml
 
     cert_schema = StructType(
         [
@@ -212,13 +213,13 @@ def test_pipeline_dissolve_on_overlapping_acquisition(spark, overlap_kml_dir):
         inactive_ids=[],
         merge_patches=[(200, 201)],
     )
-    glob = overlap_kml_dir + "/*.kml"
+    kml = read_kml(spark, overlap_kml_dir)
     # concat path double-counts the 8-unit overlap: 16 + 16 = 32
-    concat = build_service_areas(spark, glob, assume_disjoint=True, **common).collect()
+    concat = build_service_areas(kml, assume_disjoint=True, **common).collect()
     (r,) = concat
     assert approx(sum(polygon_area(list(p)) for p in r.geometry), 32.0)
     # dissolve path unions it away: area 24, one merged polygon
-    dissolved = build_service_areas(spark, glob, assume_disjoint=False, **common).collect()
+    dissolved = build_service_areas(kml, assume_disjoint=False, **common).collect()
     (r,) = dissolved
     assert len(r.geometry) == 1
     assert approx(sum(polygon_area(list(p)) for p in r.geometry), 24.0)

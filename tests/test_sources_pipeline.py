@@ -145,12 +145,63 @@ def chronology(spark):
 
 
 def test_read_kml_rows(spark, kml_dir):
-    df = read_kml(spark, kml_dir + "/*.kml")
+    df = read_kml(spark, kml_dir)
     rows = df.collect()
     assert len(rows) == 7  # 6 files, one with 2 polygons
     by_name = [r for r in rows if r.placemark_name == "Certificate No. 8"]
     assert len(by_name) == 2
     assert polygon_area(by_name[0].geometry) in (12.0, 4.0)
+
+
+def _spark_work_during(spark, fn):
+    """Run ``fn()``; return (its result, the number of Spark jobs it
+    launched, the plan-node names of every SQL execution it ran).
+    Waits for the listener bus on both sides, since the status stores
+    fill from it."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    jobs = spark.sparkContext._jsc.sc().statusStore()
+    sql = spark._jsparkSession.sharedState().statusStore()
+
+    def last_ids():
+        js, ex = jobs.jobsList(None), sql.executionsList()
+        return (
+            max((js.apply(i).jobId() for i in range(js.size())), default=-1),
+            max((ex.apply(i).executionId() for i in range(ex.size())), default=-1),
+        )
+
+    bus.waitUntilEmpty()
+    job0, exec0 = last_ids()
+    result = fn()
+    bus.waitUntilEmpty()
+    js, ex = jobs.jobsList(None), sql.executionsList()
+    n_jobs = sum(1 for i in range(js.size()) if js.apply(i).jobId() > job0)
+    names = []
+    for i in range(ex.size()):
+        eid = ex.apply(i).executionId()
+        if eid > exec0:
+            nodes = sql.planGraph(eid).allNodes()
+            names.extend(nodes.apply(k).name() for k in range(nodes.size()))
+    return result, n_jobs, names
+
+
+def test_read_kml_lists_a_large_directory_without_a_job(spark, tmp_path):
+    """40 KMLs, past Spark's 32-path parallel-listing threshold: a
+    ``dir/*.kml`` glob expands to 40 root paths and launches a listing
+    job of 40 tasks; one directory root with ``pathGlobFilter`` is
+    listed by the driver. The files the glob left out (an editor
+    backup, a nested directory) stay out."""
+    d = tmp_path / "kml"
+    d.mkdir()
+    for c in range(1, 41):
+        _write_kml(d / f"{c}-servicearea.kml", f"Certificate No. {c}", "", [_poly(c, 0, 1, 1)])
+    _write_kml(d / "41-servicearea.kml.orig", "Certificate No. 41", "", [_poly(0, 0, 1, 1)])
+    (d / "old").mkdir()
+    _write_kml(d / "old" / "42-servicearea.kml", "Certificate No. 42", "", [_poly(0, 0, 1, 1)])
+
+    kml, n_jobs, _ = _spark_work_during(spark, lambda: read_kml(spark, str(d)))
+    assert n_jobs == 0
+    names = sorted(r.placemark_name for r in kml.collect())
+    assert names == sorted(f"Certificate No. {c}" for c in range(1, 41))
 
 
 def test_read_kml_repairs_rings(spark, tmp_path):
@@ -165,7 +216,7 @@ def test_read_kml_repairs_rings(spark, tmp_path):
         "Granted to: Chugach",
         [_ring_poly([(0, 0), (0, 3), (0, 3), (4, 3), (4, 0)])],
     )
-    [row] = read_kml(spark, str(d) + "/*.kml").collect()
+    [row] = read_kml(spark, str(d)).collect()
     assert row.geometry == [[[0.0, 0.0], [4.0, 0.0], [4.0, 3.0], [0.0, 3.0], [0.0, 0.0]]]
 
 
@@ -189,13 +240,13 @@ def test_html_wrapped_kml_description(spark, tmp_path):
     _write_kml(d / "190-servicearea.kml", "Certificate No. 190", html_desc, [_poly(0, 0, 1, 1)])
     # plain description passes through untouched
     _write_kml(d / "8-servicearea.kml", "Certificate No. 8", "Granted to: Chugach", [_poly(0, 0, 1, 1)])
-    rows = {r.placemark_name: r.description for r in read_kml(spark, str(d) + "/*.kml").collect()}
+    rows = {r.placemark_name: r.description for r in read_kml(spark, str(d)).collect()}
     assert rows["Certificate No. 190"] == "Granted to: Doyon Utilities <LLC>"
     assert rows["Certificate No. 8"] == "Granted to: Chugach"
 
 
 def test_raw_layer_keeps_everything(spark, kml_dir, certificates):
-    raw = build_raw_service_areas(spark, kml_dir + "/*.kml", certificates)
+    raw = build_raw_service_areas(read_kml(spark, kml_dir), certificates)
     got = {r.certificate_number: r.n_source_polygons for r in raw.collect()}
     # raw layer: no filtering, patch files keep their parsed cert too
     assert got[8.0] == 2 and 520.0 in got and 59.0 in got
@@ -203,8 +254,7 @@ def test_raw_layer_keeps_everything(spark, kml_dir, certificates):
 
 def test_cleaned_patched_pipeline(spark, kml_dir, certificates, chronology):
     out = build_service_areas(
-        spark,
-        kml_dir + "/*.kml",
+        read_kml(spark, kml_dir),
         certificates,
         chronology,
         operator_ids=[520],
@@ -230,7 +280,7 @@ def test_cleaned_patched_pipeline(spark, kml_dir, certificates, chronology):
 
 def test_geojson_round_trip(spark, kml_dir, certificates, chronology, tmp_path):
     out = build_service_areas(
-        spark, kml_dir + "/*.kml", certificates, chronology, [520], [59], [(169, 61)]
+        read_kml(spark, kml_dir), certificates, chronology, [520], [59], [(169, 61)]
     )
     path = str(tmp_path / "service-areas.geojson")
     write_geojson(out, path, multi=True)
@@ -272,7 +322,7 @@ def test_leaflet_map_from_pipeline(spark, kml_dir, certificates, chronology, tmp
     from utility_service_areas_spark.sources.geojson import write_leaflet_map
 
     out = build_service_areas(
-        spark, kml_dir + "/*.kml", certificates, chronology, [520], [59], [(169, 61)]
+        read_kml(spark, kml_dir), certificates, chronology, [520], [59], [(169, 61)]
     )
     path = str(tmp_path / "service-areas.html")
     write_leaflet_map(out, path, multi=True)
@@ -327,8 +377,8 @@ def _ref_combine_by_certificate(kml):
     )
 
 
-def _ref_build_raw_service_areas(spark, kml_glob, certificates):
-    kml = read_kml(spark, kml_glob).withColumn(
+def _ref_build_raw_service_areas(spark, kml_dir, certificates):
+    kml = read_kml(spark, kml_dir).withColumn(
         "certificate_number",
         F.nullif(
             F.regexp_extract(F.col("placemark_name"), CERT_NUM_RE, 1), F.lit("")
@@ -391,13 +441,13 @@ def _ref_active(certificates, operator_ids, inactive_ids):
 
 
 def _ref_build_service_areas(
-    spark, kml_glob, certificates, chronology, operator_ids, inactive_ids,
+    spark, kml_dir, certificates, chronology, operator_ids, inactive_ids,
     merge_patches, assume_disjoint=True,
 ):
     """The reference's per-certificate (certificate_number,
     n_source_polygons, geometry); the metadata join is shared code."""
     certs = _ref_active(certificates, operator_ids, inactive_ids)
-    combined = _ref_combine_by_certificate(_ref_kml_with_cert(read_kml(spark, kml_glob)))
+    combined = _ref_combine_by_certificate(_ref_kml_with_cert(read_kml(spark, kml_dir)))
     combined = _ref_merge(spark, combined, merge_patches)
     if merge_patches and not assume_disjoint:
         combined = combined.withColumn(
@@ -515,15 +565,15 @@ def _blocks(rows):
 def test_kml_stages_match_the_self_join_reference(
     spark, pin_kml_dir, pin_certificates, chronology
 ):
-    glob = pin_kml_dir + "/*.kml"
-    raw = build_raw_service_areas(spark, glob, pin_certificates)
-    raw_ref = _ref_build_raw_service_areas(spark, glob, pin_certificates)
+    kml = read_kml(spark, pin_kml_dir)
+    raw = build_raw_service_areas(kml, pin_certificates)
+    raw_ref = _ref_build_raw_service_areas(spark, pin_kml_dir, pin_certificates)
     assert raw.columns == raw_ref.columns
     assert _blocks(raw.collect()) == _blocks(raw_ref.collect())
 
-    args = (spark, glob, pin_certificates, chronology, [], [], PIN_MERGES)
-    got = _blocks(build_service_areas(*args).collect())
-    assert got == _blocks(_ref_build_service_areas(*args).collect())
+    rest = (pin_certificates, chronology, [], [], PIN_MERGES)
+    got = _blocks(build_service_areas(kml, *rest).collect())
+    assert got == _blocks(_ref_build_service_areas(spark, pin_kml_dir, *rest).collect())
     assert set(got) == {8.0, 169.0, 412.0}
     # 169: its patch's two polygons, then 61's one and 285's two
     assert got[169.0][0] == 2 and len(got[169.0][2]) == 3
@@ -533,8 +583,10 @@ def test_kml_stages_match_the_self_join_reference(
     def merged(rows):
         return {r.certificate_number: (r.n_source_polygons, sorted(r.geometry)) for r in rows}
 
-    got = merged(build_service_areas(*args, assume_disjoint=False).collect())
-    ref = merged(_ref_build_service_areas(*args, assume_disjoint=False).collect())
+    got = merged(build_service_areas(kml, *rest, assume_disjoint=False).collect())
+    ref = merged(
+        _ref_build_service_areas(spark, pin_kml_dir, *rest, assume_disjoint=False).collect()
+    )
     assert got == ref
     areas = sum(polygon_area(p) for p in got[169.0][1])
     assert areas < 36 + 4 + 9 + 9 + 1  # the 61/169 overlap dissolved

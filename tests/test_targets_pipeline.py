@@ -7,10 +7,11 @@ from __future__ import annotations
 
 import glob
 import os
+from pathlib import Path
 
 import pytest
 
-from tests.test_sources_pipeline import _poly, _write_kml
+from tests.test_sources_pipeline import _poly, _write_kml, _spark_work_during
 
 CERT_CSV = """certificate_number,certificate_type,entity,certificate_name,utility_type,certificate_status,cpcn_url,entity_url,kml_update_date
 8,Electric,Chugach,Chugach Electric Association,Utility,Active,http://rca/8,,2020-01-01
@@ -218,18 +219,56 @@ def test_forward_dep_is_a_loud_error(spark, tmp_path):
 
 
 def test_kml_stages_read_and_parse_the_directory_once(spark, pipeline_inputs):
-    """Each KML stage scans the directory once and crosses into Python
-    once: the parse worker also repairs the polygons, and neither the
-    patch preference nor the acquisition merge re-reads the KMLs
-    through a self-join."""
-    from utility_service_areas_spark.plans.targets import service_areas_stages
+    """Building and writing all four stages scans the KML directory
+    once and crosses into Python once, in total: both KML stages
+    build from one shared parse, the parse worker also repairs the
+    polygons, and neither the patch preference nor the acquisition
+    merge re-reads the KMLs through a self-join."""
+    from utility_service_areas_spark.plans.targets import (
+        run_pipeline,
+        service_areas_stages,
+    )
 
-    kml, certs, chron, _store = pipeline_inputs
-    frames = {}
-    for s in service_areas_stages(kml, certs, chron, [520], [59], [(8, 169), (8, 61)]):
-        frames[s.name] = s.build(spark, {d: frames[d] for d in s.deps})
-    for name in ("raw_service_areas", "service_areas"):
-        plan = frames[name]._jdf.queryExecution().executedPlan().toString()
-        counts = {op: plan.count(op) for op in ("Scan binaryFile", "MapInPandas", "ArrowEvalPython")}
-        assert counts == {"Scan binaryFile": 1, "MapInPandas": 1, "ArrowEvalPython": 0}, (
-            name, plan)
+    kml, certs, chron, store = pipeline_inputs
+    stages = service_areas_stages(kml, certs, chron, [520], [59], [(8, 169), (8, 61)])
+    report, _, names = _spark_work_during(spark, lambda: run_pipeline(spark, stages, store))
+    assert set(report.values()) == {"built"}
+    counts = {
+        "Scan binaryFile": sum(n.startswith("Scan binaryFile") for n in names),
+        "MapInPandas": names.count("MapInPandas"),
+        "ArrowEvalPython": names.count("ArrowEvalPython"),
+    }
+    assert counts == {"Scan binaryFile": 1, "MapInPandas": 1, "ArrowEvalPython": 0}, names
+
+
+def test_kml_edit_between_runs_rebuilds_both_kml_stages(spark, pipeline_inputs):
+    """Editing one KML between two runs in one session rebuilds
+    exactly the two KML stages, and both read the edited polygons:
+    each run parses the directory afresh, never an earlier run's
+    parse."""
+    from utility_service_areas_spark.plans.targets import run_pipeline
+
+    kml, certs, chron, store = pipeline_inputs
+    run_pipeline(spark, _stages(kml, certs, chron), store)
+    # cert 8: two polygons become one 5x5 square elsewhere
+    _write_kml(
+        Path(kml) / "8-servicearea.kml",
+        "Certificate No. 8",
+        "Granted to: Chugach",
+        [_poly(100, 100, 5, 5)],
+    )
+    report = run_pipeline(spark, _stages(kml, certs, chron), store)
+    assert report == {
+        "certificates": "skipped",
+        "chronology": "skipped",
+        "raw_service_areas": "built",
+        "service_areas": "built",
+    }
+    square = [[[100.0, 100.0], [105.0, 100.0], [105.0, 105.0], [100.0, 105.0], [100.0, 100.0]]]
+    for stage in ("raw_service_areas", "service_areas"):
+        rows = {
+            r.certificate_number: r
+            for r in spark.read.parquet(os.path.join(store, stage)).collect()
+        }
+        assert (rows[8.0].n_source_polygons, rows[8.0].geometry) == (1, [square]), stage
+        assert rows[169.0].n_source_polygons == 1, stage

@@ -497,7 +497,7 @@ def simhash_candidate_pairs(
     )
 
 
-def lineage_cut(df: DataFrame) -> DataFrame:
+def lineage_cut(df: DataFrame, eager: bool = False) -> DataFrame:
     """Materialize a multi-consumer frame once: reliable checkpoint
     when the caller configured a checkpoint dir (cluster posture —
     survives executor loss), localCheckpoint otherwise (same lineage
@@ -505,6 +505,14 @@ def lineage_cut(df: DataFrame) -> DataFrame:
     subtrees consumed by several joins of one plan (0 ReusedExchange,
     measured r8) — without the cut each consumer re-runs the whole
     upstream pipeline.
+
+    The reliable checkpoint is always eager. The local one is lazy
+    unless ``eager``: a lazy local checkpoint computes the frame inside
+    its first consumer's job, where the SQL plan shows only the
+    checkpointed RDD scan, so the upstream operators' metrics (a
+    Python worker's run time, say) are never recorded. ``eager=True``
+    runs the frame now, as its own "checkpoint" SQL execution with
+    every operator's metrics.
 
     A frame whose optimized plan is already a LocalRelation (e.g. the
     r17 CC driver fast path's label frame) is returned as-is: there is
@@ -516,7 +524,7 @@ def lineage_cut(df: DataFrame) -> DataFrame:
         return df
     spark = df.sparkSession
     reliable = spark.sparkContext.getCheckpointDir() is not None
-    return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=False)
+    return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=eager)
 
 
 def minhash_verified_pairs(

@@ -110,17 +110,6 @@ def _scan_partitions_from_bytes(
     return max(1, math.ceil((nbytes + n_files * open_cost) / max(1, max_split)))
 
 
-def _scan_partitions_estimate(df: DataFrame) -> int | None:
-    """Back-compat wrapper: scan-partition estimate with its own
-    ``inputFiles`` pass. Prefer ``cpu_spread``, which shares one pass
-    across the estimate, broadcast guard, and width."""
-    try:
-        files = list(df.inputFiles())
-    except Exception:
-        return None
-    return _scan_partitions_from_bytes(df, _bytes_of(files), len(files))
-
-
 def cpu_spread(
     df: DataFrame,
     key: Column,

@@ -7,12 +7,14 @@ Parity map (reference → here):
   build_certificates_df          (R/functions.R:306-380) → certificate_metadata
   generate_and_export_geojson    (R/functions.R:420-562) → build_service_areas
 
-Everything is declarative DataFrame ops; each stage that reads KML
-crosses into Python once, in the mapInPandas worker that parses every
-file and repairs its polygons (st_make_valid fused into the parse).
-Dim-sized inputs (certificates, patches) are broadcast; the KML fact
-side is scanned once and shuffled only by the group-by-certificate
-combine (and, with acquisition merges, one more group-by-owner).
+Everything is declarative DataFrame ops; each pipeline run parses the
+KML directory once, in the mapInPandas worker that parses every file
+and repairs its polygons (st_make_valid fused into the parse), and
+both KML stages build from that one parsed frame (sources.kml.read_kml,
+shared by plans.targets.service_areas_stages). Dim-sized inputs
+(certificates, patches) are broadcast; the KML fact side is shuffled
+only by the group-by-certificate combine (and, with acquisition
+merges, one more group-by-owner).
 """
 
 from __future__ import annotations
@@ -27,7 +29,6 @@ from utility_service_areas_spark.operators.relational import (
     sync_status_expr,
     tag_entities,
 )
-from utility_service_areas_spark.sources.kml import read_kml
 from utility_service_areas_spark.operators.localrel import local_df
 
 CERT_NUM_RE = r"(\d+(\.\d+)?)"  # matches CPCN '18.1' too (R/functions.R:180)
@@ -111,15 +112,12 @@ def _merge_acquisitions(
     )
 
 
-def build_raw_service_areas(
-    spark: SparkSession, kml_glob: str, certificates: DataFrame
-) -> DataFrame:
-    """Raw merged layer: every KML, no filtering/patching
-    (R/functions.R:173-192), combined per certificate
-    (st_combine, R/functions.R:466-471)."""
+def build_raw_service_areas(kml: DataFrame, certificates: DataFrame) -> DataFrame:
+    """Raw merged layer: every KML (``kml`` is sources.kml.read_kml's
+    parsed frame), no filtering/patching (R/functions.R:173-192),
+    combined per certificate (st_combine, R/functions.R:466-471)."""
     combined = (
-        read_kml(spark, kml_glob)
-        .withColumn("certificate_number", _cert_number(F.col("placemark_name")))
+        kml.withColumn("certificate_number", _cert_number(F.col("placemark_name")))
         .filter(F.col("certificate_number").isNotNull())
         .groupBy("certificate_number")
         .agg(
@@ -175,8 +173,7 @@ def certificate_metadata(
 
 
 def build_service_areas(
-    spark: SparkSession,
-    kml_glob: str,
+    kml: DataFrame,
     certificates: DataFrame,
     chronology: DataFrame,
     operator_ids: list[int],
@@ -185,7 +182,8 @@ def build_service_areas(
     assume_disjoint: bool = True,
 ) -> DataFrame:
     """Cleaned + patched layer (R/functions.R:420-562): filter to
-    active utilities, combine KML geometry per certificate, apply
+    active utilities, combine the parsed KML polygons (``kml``, from
+    sources.kml.read_kml) per certificate, apply
     acquisition merges (cert1 absorbs cert2's geometry), attach
     chronology metadata and the 3-state sync status.
 
@@ -203,7 +201,7 @@ def build_service_areas(
         F.col("certificate_status") == "Active",
     )
     combined = _merge_acquisitions(
-        _combine_preferring_patches(read_kml(spark, kml_glob)), merge_patches
+        _combine_preferring_patches(kml), merge_patches
     )
     if merge_patches and not assume_disjoint:
         # True dissolve of the merged MultiPolygon — only the

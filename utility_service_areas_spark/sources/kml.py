@@ -12,7 +12,6 @@ Only stdlib xml.etree is used (no lxml in the environment).
 
 from __future__ import annotations
 
-import os
 import re
 import xml.etree.ElementTree as ET
 from collections.abc import Iterator
@@ -135,14 +134,27 @@ def parse_kml_bytes(path: str, blob: bytes) -> list[dict]:
     return rows
 
 
-def read_kml(spark: SparkSession, path_glob: str) -> DataFrame:
-    """Distributed KML read: (path, placemark_name, description,
-    geometry), every polygon already through make_valid (st_read then
+def read_kml(spark: SparkSession, directory: str) -> DataFrame:
+    """Distributed KML read of the ``*.kml`` files directly in
+    ``directory``: (path, placemark_name, description, geometry),
+    every polygon already through make_valid (st_read then
     st_make_valid, R/functions.R:177-182,460-468) in the one
-    mapInPandas worker, so a KML stage crosses into Python once.
+    mapInPandas worker, so the read crosses into Python once.
     make_valid is row-wise and idempotent, so repairing before any
-    certificate filter gives the same values as repairing after it."""
-    binary = spark.read.format("binaryFile").load(path_glob)
+    certificate filter gives the same values as repairing after it.
+
+    The directory is the scan's one root path and ``pathGlobFilter``
+    picks the files (the read_shp idiom), so the driver lists them
+    itself. A ``dir/*.kml`` glob would expand to one root path per
+    file, and past Spark's 32-path parallel-discovery threshold (the
+    RCA drop has 43 KMLs) that launches a listing job of one task per
+    file. Nested directories and non-``.kml`` files are left out,
+    exactly as that glob leaves them out."""
+    binary = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.kml")
+        .load(directory)
+    )
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -154,7 +166,3 @@ def read_kml(spark: SparkSession, path_glob: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=KML_SCHEMA.fieldNames())
 
     return binary.select("path", "content").mapInPandas(parse, KML_SCHEMA)
-
-
-def local_kml_glob(directory: str) -> str:
-    return os.path.join(directory, "*.kml")
