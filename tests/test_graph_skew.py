@@ -4,9 +4,13 @@ IVF recall, and the stream-stream join.
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SMOKE_SF
+from utility_service_areas_spark.operators import graph
 from utility_service_areas_spark.operators.ann import brute_force_topk, ivf_topk
 from utility_service_areas_spark.operators.graph import (
     connected_components,
@@ -122,21 +126,82 @@ def test_stream_stream_join_equals_batch(spark):
     assert got == want and len(got) > 0
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    """With a checkpoint dir configured (cluster posture), the loop
-    uses reliable checkpoint() instead of localCheckpoint and still
-    converges on a long chain (worst case for label propagation)."""
+def _chain_and_clique(spark, a="doc_a", b="doc_b"):
+    # a 12-node chain (worst case for label propagation) plus a
+    # 4-clique, so the triangle operators have something to count
+    rows = [(i, i + 1) for i in range(1, 12)] + [
+        (x, y) for x in range(20, 24) for y in range(x + 1, 24)
+    ]
+    return spark.createDataFrame(rows, f"{a} long, {b} long")
+
+
+_GRAPH_OPS = {
+    "connected_components": lambda s: graph.connected_components(_chain_and_clique(s)),
+    "connected_components_twostar": lambda s: graph.connected_components_twostar(
+        _chain_and_clique(s)
+    ),
+    "pagerank_micros": lambda s: graph.pagerank_micros(_chain_and_clique(s, "src", "dst")),
+    "hits_micros": lambda s: graph.hits_micros(_chain_and_clique(s, "src", "dst")),
+    "triangle_counts": lambda s: graph.triangle_counts(_chain_and_clique(s)),
+    "cluster_density": lambda s: graph.cluster_density(_chain_and_clique(s)),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_GRAPH_OPS))
+def test_connected_components_reliable_checkpoint(spark, tmp_path, monkeypatch, op):
+    """With a checkpoint dir configured (cluster posture), every graph
+    operator cuts its lineage with reliable checkpoint() instead of
+    localCheckpoint, and returns the same rows. The driver fast path
+    is off, so the CC operators run their iterative loops."""
+    monkeypatch.setattr(graph, "_LOCAL_CC_EDGES", 0)
     sc = spark.sparkContext
     assert sc.getCheckpointDir() is None
-    sc.setCheckpointDir(str(tmp_path / "ck"))
+    want = sorted(map(tuple, _GRAPH_OPS[op](spark).collect()))
+    assert want
+    ck = tmp_path / "ck"
+    sc.setCheckpointDir(str(ck))
     try:
-        n = 12
-        pairs = spark.createDataFrame(
-            [(i, i + 1) for i in range(1, n)], ["doc_a", "doc_b"]
-        )
-        comp = {r.node: r.comp for r in connected_components(pairs).collect()}
-        assert comp == {i: 1 for i in range(1, n + 1)}
+        got = sorted(map(tuple, _GRAPH_OPS[op](spark).collect()))
+        assert got == want
+        assert any(files for _, _, files in os.walk(ck)), "no checkpoint files written"
     finally:
         # restore: no checkpoint dir for the rest of the suite
         getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
         assert sc.getCheckpointDir() is None
+
+
+# Jobs each operator runs on _chain_and_clique with no checkpoint dir,
+# the driver fast path off and AQE off, measured before the graph
+# operators went through lineage_cut. CC runs one fingerprint job per
+# round; HITS one broadcast job per max-normalization.
+_LAZY_CUT_JOBS = {
+    "cluster_density": 5,
+    "connected_components": 5,
+    "connected_components_twostar": 6,
+    "hits_micros": 30,
+    "pagerank_micros": 1,
+    "triangle_counts": 1,
+}
+
+
+@pytest.mark.parametrize("op", sorted(_LAZY_CUT_JOBS))
+def test_local_cut_is_lazy(spark, monkeypatch, op):
+    """Without a checkpoint dir the cuts are lazy local checkpoints,
+    materialized by the job that first consumes them; an eager cut
+    adds one job per cut. AQE is off while counting: it submits each
+    query stage as its own job, and how many it submits depends on
+    which stage finishes first (42-47 jobs for one CC call)."""
+    monkeypatch.setattr(graph, "_LOCAL_CC_EDGES", 0)
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    group = f"lazy-cut-{op}"
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup(group, group)
+    try:
+        assert _GRAPH_OPS[op](spark).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == _LAZY_CUT_JOBS[op]

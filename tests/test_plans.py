@@ -72,12 +72,6 @@ def test_spatial_join_is_broadcast_not_cartesian(spark, queries):
     assert "CartesianProduct" not in plan
 
 
-def test_no_cartesian_anywhere(spark, queries):
-    for name, fn in queries.items():
-        plan = plan_of(fn(spark, SMOKE_SF), "simple")
-        assert "CartesianProduct" not in plan, name
-
-
 def test_quartiles_have_no_partition_sort(spark, queries):
     # VERDICT r1: ntile() would sort each event_type's entire row set
     # in one reducer. The cutoff formulation must show a broadcast
@@ -90,15 +84,6 @@ def test_quartiles_have_no_partition_sort(spark, queries):
     assert "rangepartitioning" not in plan
     assert "partial_percentile" in plan
     assert plan.count("Exchange hashpartitioning") == 1
-
-
-def test_no_row_at_a_time_python_udf_anywhere(spark, queries):
-    """Python must only ever appear Arrow-batched (ArrowEvalPython /
-    MapInPandas / FlatMapGroupsInPandas) — a BatchEvalPython node is
-    a row-at-a-time UDF, the 10-100x-slower path SURVEY §6 bans."""
-    for name, fn in queries.items():
-        plan = plan_of(fn(spark, SMOKE_SF), "simple")
-        assert "BatchEvalPython" not in plan, name
 
 
 def test_semi_join_for_exists(spark, queries):

@@ -228,14 +228,14 @@ def test_twostar_raises_on_exhaustion_instead_of_wrong_labels(
     max_iter on the same graph converges and matches the propagation
     operator. (r17: the driver union-find fast path solves a 40-edge
     chain exactly without iterating — force the distributed loop via
-    the cap env so this still pins the LOOP's exhaustion contract.)"""
+    the cap so this still pins the LOOP's exhaustion contract.)"""
     from utility_service_areas_spark.operators import graph
     from utility_service_areas_spark.operators.graph import (
         connected_components,
         connected_components_twostar,
     )
 
-    monkeypatch.setenv(graph._LOCAL_CC_ENV, "0")
+    monkeypatch.setattr(graph, "_LOCAL_CC_EDGES", 0)
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "doc_a long, doc_b long"
     )

@@ -139,7 +139,7 @@ def test_twostar_still_raises_when_genuinely_unconverged(spark, monkeypatch):
     # r17: the driver union-find fast path solves a 63-edge chain
     # exactly without iterating — disable it so this still pins the
     # LOOP's exhaustion contract.
-    monkeypatch.setenv(graph._LOCAL_CC_ENV, "0")
+    monkeypatch.setattr(graph, "_LOCAL_CC_EDGES", 0)
     # a 64-node path needs several rounds; max_iter=1 + one verify
     # round cannot reach the fixpoint -> loud failure, never wrong labels
     pairs = spark.createDataFrame(

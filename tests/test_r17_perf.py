@@ -208,7 +208,7 @@ def test_workers_run_and_see_preloaded_modules(spark):
     assert rows[0]["warm"] == list(pydaemon.PRELOAD_MODULES)
 
 
-def test_cpu_spread_width_tracks_input_size(spark, monkeypatch):
+def test_cpu_spread_width_tracks_input_size(spark):
     from utility_service_areas_spark.operators.spread import (
         cpu_spread_width,
     )
@@ -219,9 +219,7 @@ def test_cpu_spread_width_tracks_input_size(spark, monkeypatch):
     # sf0.001 documents.parquet is a few tens of KiB: one 128 KiB task
     assert cpu_spread_width(docs, target) == 1
     # tiny per-task budget -> width caps at the core count
-    monkeypatch.setenv("SPARK_GRAFT_CPU_TASK_BYTES", "1")
-    assert cpu_spread_width(docs, target) == target
-    monkeypatch.delenv("SPARK_GRAFT_CPU_TASK_BYTES")
+    assert cpu_spread_width(docs, target, bytes_per_task=1) == target
     # no input files (in-memory frame) -> old behavior (core count)
     mem = spark.createDataFrame([(1, "x")], "doc_id long, text string")
     assert cpu_spread_width(mem, target) == target
@@ -359,7 +357,7 @@ def test_local_cc_fastpath_matches_distributed_loop(spark, monkeypatch):
 
     pairs = _cc_ref_pairs(spark)
     fast = {(r.node, r.comp) for r in graph.connected_components(pairs).collect()}
-    monkeypatch.setenv(graph._LOCAL_CC_ENV, "0")
+    monkeypatch.setattr(graph, "_LOCAL_CC_EDGES", 0)
     loop = {(r.node, r.comp) for r in graph.connected_components(pairs).collect()}
     assert fast == loop
     assert fast  # non-empty sanity
@@ -373,7 +371,7 @@ def test_local_cc_fastpath_matches_twostar_loop(spark, monkeypatch):
         (r.node, r.comp)
         for r in graph.connected_components_twostar(pairs).collect()
     }
-    monkeypatch.setenv(graph._LOCAL_CC_ENV, "0")
+    monkeypatch.setattr(graph, "_LOCAL_CC_EDGES", 0)
     loop = {
         (r.node, r.comp)
         for r in graph.connected_components_twostar(pairs).collect()
@@ -401,7 +399,7 @@ def test_local_cc_cap_falls_back_to_loop(spark, monkeypatch):
     from utility_service_areas_spark.operators import graph
 
     pairs = _cc_ref_pairs(spark)
-    monkeypatch.setenv(graph._LOCAL_CC_ENV, "3")  # graph has more edges
+    monkeypatch.setattr(graph, "_LOCAL_CC_EDGES", 3)  # graph has more edges
     taken = []
     orig = graph._local_cc_fastpath
 

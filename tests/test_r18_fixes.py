@@ -205,20 +205,6 @@ def test_suffix_lead_matches_join_reference(spark):
     assert LRS_K >= k_levels
 
 
-def test_funnel_split_mode_value_identical(spark, monkeypatch):
-    """The §8 proxy/payload split behind SPARK_GRAFT_FUNNEL_SPLIT
-    (measured, not taken by default — see the site comment) must stay
-    value-identical to the default carry-text shape."""
-    from __spark_entry__ import queries
-
-    q = queries()["curation_funnel_report"]
-    monkeypatch.delenv("SPARK_GRAFT_FUNNEL_SPLIT", raising=False)
-    base = sorted(map(tuple, q(spark, SMOKE_SF).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_FUNNEL_SPLIT", "1")
-    split = sorted(map(tuple, q(spark, SMOKE_SF).collect()))
-    assert base == split
-
-
 _DRIVER_SIM = """
 import sys
 sys.path.insert(0, {repo!r})

@@ -6,18 +6,17 @@ Implementation is large-star/small-star-style min-label propagation:
 each iteration joins the current labels across the edge list and
 takes the min neighbor label, until a fixpoint. Iterations are
 O(diameter); dedup graphs are near-clique clusters, so 2-4 rounds
-converge. Each round is one shuffle; intermediate frames are
-checkpointed (localCheckpoint) to cut the growing lineage — the
-standard Spark iterative-algorithm discipline.
+converge. Each round is one shuffle; intermediate frames go through
+``lineage_cut`` to cut the growing lineage — the standard Spark
+iterative-algorithm discipline.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from utility_service_areas_spark.operators.dedup import lineage_cut
 from utility_service_areas_spark.operators.spread import cpu_spread_width
 
 # Small-graph fast path (r17): a pair graph that fits comfortably on
@@ -28,21 +27,13 @@ from utility_service_areas_spark.operators.spread import cpu_spread_width
 # 5-round convergence is ~10 jobs for a graph union-find resolves in
 # microseconds). The labels are identical BY CONSTRUCTION: component =
 # min node id, the same fixpoint the propagation loop reaches
-# (equivalence pinned in tests). The cap is edge rows, parameterized
-# for deployments; above it — every at-scale corpus — the loop runs
-# exactly as before, having spent one O(cap)-row limit job to decide
-# (the partitions it materialized stay cached for round 1). Driver
-# memory is bounded: cap rows × 2 ids. Same sanctioned class of
-# driver-side fold as Lloyd's k-centroid collect (kmeans.py).
-_LOCAL_CC_ENV = "SPARK_GRAFT_LOCAL_CC_EDGES"
-_LOCAL_CC_DEFAULT = 100_000
-
-
-def _local_cc_cap() -> int:
-    try:
-        return int(os.environ.get(_LOCAL_CC_ENV, _LOCAL_CC_DEFAULT))
-    except ValueError:
-        return _LOCAL_CC_DEFAULT
+# (equivalence pinned in tests). The cap is edge rows; above it —
+# every at-scale corpus — the loop runs exactly as before, having
+# spent one O(cap)-row limit job to decide (the partitions it
+# materialized stay cached for round 1). Driver memory is bounded:
+# cap rows × 2 ids. Same sanctioned class of driver-side fold as
+# Lloyd's k-centroid collect (kmeans.py).
+_LOCAL_CC_EDGES = 100_000
 
 
 def _local_cc_fastpath(edges: DataFrame) -> DataFrame | None:
@@ -50,7 +41,7 @@ def _local_cc_fastpath(edges: DataFrame) -> DataFrame | None:
     the graph exceeds the cap (or node ids aren't plainly orderable
     across engines — only numeric ids take the fast path; Python and
     SQL string collation subtleties stay out of scope)."""
-    cap = _local_cc_cap()
+    cap = _LOCAL_CC_EDGES
     if cap <= 0:
         return None
     u_type, v_type = (f.dataType.typeName() for f in edges.schema.fields[:2])
@@ -131,12 +122,7 @@ def connected_components(
         edges = edges.union(
             pairs.select(F.col(b_col).alias("u"), F.col(a_col).alias("v"))
         ).distinct()
-    # Reliable checkpointing when the caller configured a checkpoint
-    # dir (cluster posture: survives executor loss; localCheckpoint
-    # would recompute the whole lineage on loss). Local/test runs fall
-    # back to localCheckpoint — same lineage cut, no HDFS round-trip.
     spark = pairs.sparkSession
-    reliable = spark.sparkContext.getCheckpointDir() is not None
     # Materialize the edge list ONCE, PRE-PARTITIONED on the join key
     # (r8): checkpoint preserves outputPartitioning, so every round's
     # edge⋈label join shuffles only the node-sized label frame — the
@@ -172,17 +158,9 @@ def connected_components(
             # old n_shuffle.
             w = min(width, n_shuffle) if width else cpu_spread_width(pairs, n_shuffle)
             edges = edges.repartition(w, "v")
-        # Local path: LAZY localCheckpoint (r17) — the cut is the
-        # LogicalRDD plan truncation plus persist-once semantics, both
-        # of which hold with eager=False; round 1's fingerprint action
-        # materializes it, saving one standalone job per CC call. The
-        # reliable path stays eager: RDD.checkpoint() recomputes the
-        # lineage when materialized lazily by a consuming job.
-        edges = (
-            edges.checkpoint(eager=True)
-            if reliable
-            else edges.localCheckpoint(eager=False)
-        )
+        # The local cut is lazy (r17): round 1's fingerprint action
+        # materializes it, saving one standalone job per CC call.
+        edges = lineage_cut(edges)
     fast = _local_cc_fastpath(edges)
     if fast is not None:
         return fast
@@ -215,11 +193,7 @@ def connected_components(
         new_labels = new_labels.join(jump, "comp", "left").select(
             "node", F.coalesce("comp2", "comp").alias("comp")
         )
-        new_labels = (
-            new_labels.checkpoint(eager=True)
-            if reliable
-            else new_labels.localCheckpoint(eager=False)
-        )
+        new_labels = lineage_cut(new_labels)
         # Convergence = labels identical to last round. Min-label
         # propagation is monotone (labels only decrease), so a 64-bit
         # XOR fingerprint being unchanged means fixpoint (bit_xor is
@@ -227,8 +201,8 @@ def connected_components(
         # tiny partial-agg scan of the checkpointed frame — no join,
         # no extra shuffle (the old per-round join+count was a full
         # driver action with a shuffle at cluster scale). r17: the
-        # local checkpoint above is lazy, so THIS action materializes
-        # it — one job per round instead of two.
+        # local cut above is lazy, so THIS action materializes it —
+        # one job per round instead of two.
         fp = new_labels.agg(
             F.expr("bit_xor(xxhash64(node, comp))").alias("fp")
         ).collect()[0][0]
@@ -250,8 +224,6 @@ def dedup_clusters(
     every id mapped to its cluster keeper (min id; singletons keep
     themselves). Returns (id, keeper_id, cluster_size).
     """
-    from utility_service_areas_spark.operators.dedup import lineage_cut
-
     # The id frame is the file-backed corpus side, so it carries the
     # size signal the (often cached) pair frame hides (r17).
     comp = connected_components(
@@ -309,18 +281,13 @@ def pagerank_micros(
     Returns (node, rank_micros) for every node appearing in edges.
     """
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).distinct()
-    reliable = edges.sparkSession.sparkContext.getCheckpointDir() is not None
-
-    def _cut(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=False)
-
     # Materialize the loop-invariant frames ONCE: the edge list with
     # its out-degree fused in (saves a per-round join), and the node
     # frame (otherwise its distinct-shuffle re-runs every round).
-    e = _cut(
+    e = lineage_cut(
         e.join(e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")), "src")
     )
-    nodes = _cut(
+    nodes = lineage_cut(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
@@ -353,7 +320,7 @@ def pagerank_micros(
         # doesn't need the per-round materialization CC's unbounded
         # loop does — each eager checkpoint costs a full job.
         if i % 2 == 1 or i == n_iter - 1:
-            ranks = _cut(ranks)
+            ranks = lineage_cut(ranks)
     return ranks
 
 
@@ -394,17 +361,9 @@ def triangle_counts(
     # (minhash, banding, bucket join) re-runs per branch. Both frames
     # are edge-sized, tiny next to the doc corpus they derive from.
     # Measured at 10× interleaved A/B (warm rounds): 17.3-18.5 s →
-    # 4.1 s (4.2×). Reliable checkpoint when a dir is configured
-    # (cluster posture), localCheckpoint otherwise — the same
-    # discipline as connected_components above.
-    spark = pairs.sparkSession
-    reliable = spark.sparkContext.getCheckpointDir() is not None
-
-    def _cut(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=False)
-
-    und = _cut(und)
-    tri = _oriented_triangles(und, _cut)
+    # 4.1 s (4.2×).
+    und = lineage_cut(und)
+    tri = _oriented_triangles(und)
     corners = (
         tri.select(F.explode(F.array("x", "y", "z")).alias("node"))
         .groupBy("node")
@@ -413,7 +372,7 @@ def triangle_counts(
     return corners
 
 
-def _oriented_triangles(und: DataFrame, _cut, deg: DataFrame | None = None) -> DataFrame:
+def _oriented_triangles(und: DataFrame, deg: DataFrame | None = None) -> DataFrame:
     """(x, y, z) rows, one per triangle, from an already-materialized
     both-directions edge list — the shared kernel of per-node
     `triangle_counts` and per-cluster `cluster_density`. ``deg`` is
@@ -429,7 +388,7 @@ def _oriented_triangles(und: DataFrame, _cut, deg: DataFrame | None = None) -> D
     lower_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = _cut(with_deg.filter(lower_first).select("u", "v"))
+    oriented = lineage_cut(with_deg.filter(lower_first).select("u", "v"))
     e1 = oriented.select(F.col("u").alias("x"), F.col("v").alias("y"))
     e2 = oriented.select(F.col("u").alias("y"), F.col("v").alias("z"))
     e3 = oriented.select(F.col("u").alias("x"), F.col("v").alias("z"))
@@ -465,11 +424,6 @@ def cluster_density(
     isolated docs have no edges and no cluster.
     """
     spark = pairs.sparkSession
-    reliable = spark.sparkContext.getCheckpointDir() is not None
-
-    def _cut(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=False)
-
     sym = (
         pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
         .union(pairs.select(F.col(b_col).alias("u"), F.col(a_col).alias("v")))
@@ -490,17 +444,17 @@ def cluster_density(
         # Same source-size width bound as connected_components (r17).
         w = min(width, n_shuffle) if width else cpu_spread_width(pairs, n_shuffle)
         sym = sym.repartition(w, "v")
-    und = _cut(sym)
+    und = lineage_cut(sym)
     # Degree frame computed ONCE (node-sized, cut) and shared by the
     # orientation and the per-cluster stats; `und` is already
     # symmetric+distinct+partitioned+materialized, so CC adds no
     # edge-frame pass of its own (pre_materialized=True).
-    deg = _cut(
+    deg = lineage_cut(
         und.groupBy("u").agg(F.count(F.lit(1)).alias("d")).withColumnRenamed(
             "u", "node"
         )
     )
-    tri = _oriented_triangles(und, _cut, deg)
+    tri = _oriented_triangles(und, deg)
     comp = connected_components(und, "u", "v", pre_materialized=True)
     per_node = comp.join(deg, "node")
     base = per_node.groupBy("comp").agg(
@@ -558,20 +512,12 @@ def connected_components_twostar(
     (tests/test_r13_operators.py).
 
     Each round: two groupBy-min aggregations + two node-keyed joins
-    (all partial-agged, no global structure), localCheckpoint per
-    round for the lineage cut, bit_xor(xxhash64) fingerprint for the
+    (all partial-agged, no global structure), ``lineage_cut`` per
+    round, bit_xor(xxhash64) fingerprint for the
     fixpoint test (order-independent, one tiny scan).
 
     Returns (node, comp) for every node appearing in pairs.
     """
-    spark = pairs.sparkSession
-    reliable = spark.sparkContext.getCheckpointDir() is not None
-
-    def _cut(df: DataFrame) -> DataFrame:
-        return (
-            df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=False)
-        )
-
     def _sym(e: DataFrame) -> DataFrame:
         return (
             e.filter(F.col("u") != F.col("v"))
@@ -585,7 +531,7 @@ def connected_components_twostar(
             F.least(F.min("v"), F.first("u")).alias("m")
         )
 
-    edges = _cut(
+    edges = lineage_cut(
         _sym(pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")))
     )
     # Same size-bounded driver fast path as connected_components —
@@ -604,7 +550,7 @@ def connected_components_twostar(
             .filter(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
         )
-        e = _cut(_sym(large))
+        e = lineage_cut(_sym(large))
         # SMALL-STAR: every neighbor <= the center, plus the center
         # itself, re-attaches to the center's minimum.
         mins = _center_mins(e)
@@ -614,7 +560,7 @@ def connected_components_twostar(
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(mins.select(F.col("u"), F.col("m").alias("v")))
         )
-        return _cut(_sym(small))
+        return lineage_cut(_sym(small))
 
     def _fingerprint(e: DataFrame) -> int:
         return e.agg(
@@ -693,14 +639,7 @@ def hits_micros(
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).distinct()
-    reliable = edges.sparkSession.sparkContext.getCheckpointDir() is not None
-
-    def _cut(df: DataFrame) -> DataFrame:
-        return (
-            df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=False)
-        )
-
-    e = _cut(e)
+    e = lineage_cut(e)
     hubs = (
         e.select("src").distinct().withColumn("h", F.lit(1_000_000).cast("long"))
     )
@@ -724,8 +663,8 @@ def hits_micros(
             "src", F.expr("(h_raw * 1000000) div mx").alias("h")
         )
         if i % 2 == 1 or i == n_iter - 1:
-            hubs = _cut(hubs)
-            auths = _cut(auths)
+            hubs = lineage_cut(hubs)
+            auths = lineage_cut(auths)
     return hubs.select(
         F.col("src").alias("node"), F.lit("hub").alias("side"),
         F.col("h").alias("score_micros"),

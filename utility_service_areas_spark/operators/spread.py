@@ -12,8 +12,8 @@ derived from it) 32 tasks wide — pure scheduling overhead.
 ``cpu_spread`` keeps the repartition conditional (a wide cluster scan
 is left alone — no extra shuffle of the raw corpus at 100 TB) but
 derives the fan-out width from the INPUT SIZE instead of the core
-count: one task per ~``SPARK_GRAFT_CPU_TASK_BYTES`` (default 128 KiB)
-of source bytes, capped at ``defaultParallelism``. 128 KiB of raw
+count: one task per ``bytes_per_task`` (default 128 KiB) of source
+bytes, capped at ``defaultParallelism``. 128 KiB of raw
 text is roughly 0.5-1 s of shingle+md5 work per task — large enough
 to amortize task overhead, small enough to saturate the cores by the
 time the input reaches a few MiB. When the input size is unknowable
@@ -27,18 +27,7 @@ import os
 
 from pyspark.sql import Column, DataFrame
 
-_ENV = "SPARK_GRAFT_CPU_TASK_BYTES"
 _DEFAULT_BYTES_PER_TASK = 128 * 1024
-
-
-def _resolve_bytes_per_task(bytes_per_task: int | None) -> int:
-    per_task = bytes_per_task
-    if per_task is None:
-        try:
-            per_task = int(os.environ.get(_ENV, _DEFAULT_BYTES_PER_TASK))
-        except ValueError:
-            per_task = _DEFAULT_BYTES_PER_TASK
-    return max(1, per_task)
 
 
 def _bytes_of(files: list[str]) -> int | None:
@@ -66,24 +55,21 @@ def _input_bytes(df: DataFrame) -> int | None:
     return _bytes_of(files)
 
 
-def _width_from_bytes(
-    nbytes: int | None, target: int, bytes_per_task: int | None
-) -> int:
-    per_task = _resolve_bytes_per_task(bytes_per_task)
+def _width_from_bytes(nbytes: int | None, target: int, bytes_per_task: int) -> int:
     if nbytes is None or nbytes <= 0:
         return target
-    return max(1, min(target, math.ceil(nbytes / per_task)))
+    return max(1, min(target, math.ceil(nbytes / max(1, bytes_per_task))))
 
 
 def cpu_spread_width(
-    df: DataFrame, target: int, bytes_per_task: int | None = None
+    df: DataFrame, target: int, bytes_per_task: int = _DEFAULT_BYTES_PER_TASK
 ) -> int:
     """Partitions a CPU-dense projection over ``df`` should fan out
     to: ceil(input_bytes / bytes_per_task), clamped to [1, target];
     ``target`` when the input size cannot be determined.
 
-    ``bytes_per_task`` defaults to the env/128 KiB budget tuned for
-    the text kernels (md5/shingle storms — ~0.5-1 s of work per
+    ``bytes_per_task`` defaults to the 128 KiB budget tuned for the
+    text kernels (md5/shingle storms — ~0.5-1 s of work per
     128 KiB); callers with lighter per-byte work (e.g. relational
     join+agg over numeric columns) pass a larger budget — measured
     ~1.5 MiB/task optimal for the lineitem join shapes (r17; 32-way
@@ -113,7 +99,7 @@ def _scan_partitions_from_bytes(
 def cpu_spread(
     df: DataFrame,
     key: Column,
-    bytes_per_task: int | None = None,
+    bytes_per_task: int = _DEFAULT_BYTES_PER_TASK,
     skip_if_broadcastable: bool = False,
 ) -> DataFrame:
     """Hash-repartition ``df`` on ``key`` for a CPU-dense downstream

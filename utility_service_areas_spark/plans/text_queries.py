@@ -1196,38 +1196,16 @@ def _funnel_stage_frame(
             & F.coalesce(F.col("pass_clf"), F.lit(False))
             & F.col("t").between(5, 5000)
         )
-    # §8 proxy/payload split (r18, VERDICT item 7) — MEASURED AND NOT
-    # TAKEN by default. The h-window only needs (doc_id, h, p1) to
-    # decide the exact-dedup keeper; dropping text before the window
-    # and re-attaching it to p2 survivors only (join against a fresh
-    # narrow scan) shuffles a ~50-byte proxy row instead of the
-    # document payload. Interleaved A/B (same session, alternating):
-    #   sf0.1 warm:  split 2.84-3.06 s vs carry-text 2.74-2.97 s (even)
-    #   10× warm:    split 7.41-8.07 s vs carry-text 8.62-9.03 s (~10%)
-    #   (a first cold series read the OPPOSITE way — within the
-    #   documented cold-JIT variance band)
-    # Under the ≥15%-at-10× bar set for this decision the split stays
-    # OFF; SPARK_GRAFT_FUNNEL_SPLIT=1 enables it for cluster runs where
-    # the non-survivors' payload never shuffling is the §8 win
-    # (value-identical either way — both modes oracle-gated).
-    import os as _os
-
-    _split = _os.environ.get("SPARK_GRAFT_FUNNEL_SPLIT", "0") == "1"
+    # The §8 proxy/payload split (drop text before the h-window and
+    # re-attach it to p2 survivors only) was measured and rejected:
+    # interleaved A/B, sf0.1 warm even, 10× warm ~10% faster — under
+    # the 15%-at-10× bar, so the payload rides through the window.
     st = base.withColumn("p1", p1).withColumn(
         "h", F.md5(normalized_text(F.col("text")))
     )
-    if _split:
-        st = st.select("doc_id", "source", "t", "p1", "h")
     kmin = F.min(F.when(F.col("p1"), F.col("doc_id"))).over(Window.partitionBy("h"))
     s2 = st.withColumn("p2", F.col("p1") & (F.col("doc_id") == kmin))
-    if _split:
-        surv2 = (
-            cpu_spread(docs, F.col("doc_id"))
-            .select("doc_id", "text")
-            .join(s2.filter("p2").select("doc_id"), "doc_id")
-        )
-    else:
-        surv2 = s2.filter("p2").select("doc_id", "text")
+    surv2 = s2.filter("p2").select("doc_id", "text")
     sig = minhash_signatures(surv2, "doc_id", "text", k=3, n_hashes=8)
     pairs = lsh_candidate_pairs(sig, n_hashes=8, band_size=2).filter(
         "n_matching_minhashes >= 6"

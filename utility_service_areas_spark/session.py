@@ -44,14 +44,8 @@ def build_session(app_name: str = "usa-spark", master: str | None = None) -> Spa
         # and the package's Arrow kernels import ONCE per daemon (= per
         # executor) before the fork loop; forked workers inherit the
         # warm modules copy-on-write instead of each paying the ~1 s
-        # import storm on the first Python-evaluation stage. Falls back
-        # to the stock daemon via SPARK_GRAFT_NO_PYDAEMON=1.
-        .config(
-            "spark.python.daemon.module",
-            "pyspark.daemon"
-            if os.environ.get("SPARK_GRAFT_NO_PYDAEMON")
-            else "utility_service_areas_spark.pydaemon",
-        )
+        # import storm on the first Python-evaluation stage.
+        .config("spark.python.daemon.module", "utility_service_areas_spark.pydaemon")
         .config("spark.sql.session.timeZone", "UTC")
         # events.parquet carries TIMESTAMP(NANOS); Spark reads it as
         # long ns-since-epoch and sources/tables.py converts to µs.
@@ -104,42 +98,41 @@ def build_session(app_name: str = "usa-spark", master: str | None = None) -> Spa
         # CodeGenerator first initializes, i.e. in the first builder.
         .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_ENTRIES)
     )
-    if not os.environ.get("SPARK_GRAFT_NO_JIT_TUNING"):
-        # HotSpot permanently demotes a method to the interpreter after
-        # PerMethodRecompilationCutoff (default 400) deoptimizations.
-        # Every whole-stage-codegen class load invalidates CHA-based
-        # inlining in the SHARED Catalyst eval methods (Expression.eval,
-        # higher-order functions, Md5.nullSafeEval, ...), so a session
-        # that keeps compiling new queries trips the cutoff and those
-        # methods run interpreted — measured here as intermittent
-        # 10-20x CPU cliffs on whole stages (dedup_minhash_lsh warm
-        # repeat: 1.1 s normally, 21 s during a demotion window; all
-        # task time was Executor CPU in interpreted eval frames).
-        # Raising the cutoff keeps recompilation available for the life
-        # of the JVM. Applies to any long-lived codegen-heavy Spark JVM,
-        # driver or executor, local or cluster.
-        jit_flags = (
-            "-XX:+UnlockDiagnosticVMOptions "
-            "-XX:PerMethodRecompilationCutoff=10000 "
-            "-XX:PerBytecodeRecompilationCutoff=10000"
-        )
-        # APPEND to any extraJavaOptions already supplied via
-        # spark-defaults.conf / the environment instead of overwriting
-        # them (ADVICE r17): SparkConf() picks up spark.* properties
-        # from the standard config chain.
-        try:
-            from pyspark import SparkConf
+    # HotSpot permanently demotes a method to the interpreter after
+    # PerMethodRecompilationCutoff (default 400) deoptimizations.
+    # Every whole-stage-codegen class load invalidates CHA-based
+    # inlining in the SHARED Catalyst eval methods (Expression.eval,
+    # higher-order functions, Md5.nullSafeEval, ...), so a session
+    # that keeps compiling new queries trips the cutoff and those
+    # methods run interpreted — measured here as intermittent
+    # 10-20x CPU cliffs on whole stages (dedup_minhash_lsh warm
+    # repeat: 1.1 s normally, 21 s during a demotion window; all
+    # task time was Executor CPU in interpreted eval frames).
+    # Raising the cutoff keeps recompilation available for the life
+    # of the JVM. Applies to any long-lived codegen-heavy Spark JVM,
+    # driver or executor, local or cluster.
+    jit_flags = (
+        "-XX:+UnlockDiagnosticVMOptions "
+        "-XX:PerMethodRecompilationCutoff=10000 "
+        "-XX:PerBytecodeRecompilationCutoff=10000"
+    )
+    # APPEND to any extraJavaOptions already supplied via
+    # spark-defaults.conf / the environment instead of overwriting
+    # them (ADVICE r17): SparkConf() picks up spark.* properties
+    # from the standard config chain.
+    try:
+        from pyspark import SparkConf
 
-            base = SparkConf()
-        except Exception:  # pragma: no cover - gateway bootstrap quirk
-            base = None
-        for key in (
-            "spark.driver.extraJavaOptions",
-            "spark.executor.extraJavaOptions",
-        ):
-            existing = (base.get(key, "") if base is not None else "") or ""
-            merged = f"{existing} {jit_flags}".strip()
-            builder = builder.config(key, merged)
+        base = SparkConf()
+    except Exception:  # pragma: no cover - gateway bootstrap quirk
+        base = None
+    for key in (
+        "spark.driver.extraJavaOptions",
+        "spark.executor.extraJavaOptions",
+    ):
+        existing = (base.get(key, "") if base is not None else "") or ""
+        merged = f"{existing} {jit_flags}".strip()
+        builder = builder.config(key, merged)
     spark = builder.getOrCreate()
     _register_python_datasources(spark)
     return spark
