@@ -29,6 +29,15 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def versioned_table(spark):
+    """Registers format("versioned_table") on the shared session, as any
+    caller must before reading the source (build_session does not)."""
+    from utility_service_areas_spark.sources.pyds import register_versioned_table
+
+    register_versioned_table(spark)
+
+
 def pytest_configure(config):
     config.addinivalue_line(
         "markers",

@@ -4,12 +4,11 @@ is the failure scenario from the review, now pinned fixed.
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
 
+@pytest.mark.usefixtures("versioned_table")
 def test_datasource_survives_reordered_column_append(spark, tmp_path):
     """Review #1 (confirmed live): append allows schema-valid column
     REORDERING (the name+type check is order-insensitive), but Arrow
@@ -168,42 +167,3 @@ def test_vacuum_refuses_keep_last_zero(spark, tmp_path):
     with pytest.raises(ValueError, match="retain NOTHING"):
         vacuum(t, keep_last=0)
     assert list_versions(t) == [0]
-
-
-def test_shapefile_append_seq_claim_skips_concurrent_marker(spark, tmp_path):
-    """Review #8: the append sequence is claimed ATOMICALLY — a marker
-    left by a concurrent in-flight job forces the next append past
-    that seq instead of colliding with it. Both appends' rows survive."""
-    d = str(tmp_path / "shp")
-    schema = (
-        "shape_type string, geometry array<array<array<double>>>, "
-        "attrs map<string,string>"
-    )
-
-    def write(rows, mode):
-        (
-            spark.createDataFrame(rows, schema)
-            .repartition(1)
-            .write.format("shapefile")
-            .option("fields", "NAME:C:16:0")
-            .mode(mode)
-            .save(d)
-        )
-
-    write([("point", [[[1.0, 2.0]]], {"NAME": "A"})], "overwrite")
-    # simulate a concurrent job that claimed the next seq but hasn't
-    # renamed yet
-    open(os.path.join(d, "_seq-00001"), "w").close()
-    write([("point", [[[3.0, 4.0]]], {"NAME": "B"})], "append")
-    names = sorted(
-        n for n in os.listdir(d) if n.startswith("part-") and n.endswith(".shp")
-    )
-    # first job at seq 0, concurrent claim holds seq 1, ours landed at 2+
-    assert any(n.startswith("part-00000") for n in names)
-    assert not any(n.startswith("part-00001") for n in names)
-    assert any(int(n.split("-")[1]) >= 2 for n in names)
-    got = {
-        r.attrs["NAME"]
-        for r in spark.read.format("shapefile").load(d).collect()
-    }
-    assert got == {"A", "B"}

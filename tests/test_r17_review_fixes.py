@@ -114,6 +114,7 @@ def test_exact_stat_bounds_drops_truncated_bounds():
     assert exact_stat_bounds(NoMinMax()) == (None, None)
 
 
+@pytest.mark.usefixtures("versioned_table")
 def test_long_string_zones_never_false_prune(spark, tmp_path):
     """>64-byte string stats end-to-end: equality on a long-string
     column with manifest zones answers row-identically to the unpruned
@@ -226,6 +227,7 @@ def test_restore_carries_file_stats(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.usefixtures("versioned_table")
 def test_stream_restart_survives_vacuumed_offset_manifest(spark, tmp_path):
     """A stream that restarts AFTER its last-consumed version's
     manifest was vacuumed must keep going: the offset carries the
@@ -276,6 +278,7 @@ def test_stream_restart_survives_vacuumed_offset_manifest(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.usefixtures("versioned_table")
 def test_driver_footer_partitions_carry_explicit_row_groups(spark, tmp_path):
     """In the no-manifest-stats branch the driver already opened every
     surviving file's footer — the planned partitions must say so
@@ -322,6 +325,7 @@ def _wide_rows(n=200):
 _WIDE_SCHEMA = "id long, " + ", ".join(f"c{j} long" for j in range(9))
 
 
+@pytest.mark.usefixtures("versioned_table")
 def test_columns_option_projects_schema_and_values(spark, tmp_path):
     t = str(tmp_path / "tbl")
     write_version(spark.createDataFrame(_wide_rows(), _WIDE_SCHEMA), t)
@@ -350,6 +354,7 @@ def test_columns_option_projects_schema_and_values(spark, tmp_path):
         ).load(t).collect()
 
 
+@pytest.mark.usefixtures("versioned_table")
 def test_columns_projection_reads_only_named_pages(spark, tmp_path):
     """The plan-pinned I/O claim: the Arrow scan passes the projection
     to pyarrow's column-chunk reader — a 1-column read of a 10-column
@@ -393,6 +398,7 @@ def test_columns_projection_reads_only_named_pages(spark, tmp_path):
     assert all(b.schema.names == ["c3"] for b in rows)
 
 
+@pytest.mark.usefixtures("versioned_table")
 def test_columns_projection_with_pushed_filter_and_evolution(spark, tmp_path):
     """Projection composes with filter pushdown (filter on a projected
     column still prunes) and with schema evolution (projecting an

@@ -1,11 +1,13 @@
 """Round-18 regression pins.
 
 VERDICT r17 item 1: `medallion_stream_pipeline` failed the driver's
-oracle with DATA_SOURCE_NOT_FOUND because the `versioned_table` Python
-data source was registered only by `build_session`, and the driver
-harness supplies its own SparkSession. The fix registers it inside the
-query; this test runs the query through the driver's entry path
-(`queries()` → a session WITHOUT prior registration) to pin that.
+oracle with DATA_SOURCE_NOT_FOUND because it read
+`format("versioned_table")` without registering that Python data
+source, in a session the driver harness built itself. No session
+registers it up front (build_session does not either); the query calls
+`register_versioned_table` itself, and this test runs it through the
+driver's entry path (`queries()` → a session WITHOUT prior
+registration) to pin that.
 """
 
 from __future__ import annotations
@@ -210,8 +212,8 @@ import sys
 sys.path.insert(0, {repo!r})
 from pyspark.sql import SparkSession, functions as F
 
-# Bare session exactly like the driver harness: NOT build_session, so
-# none of the repo's Python data sources are registered up front.
+# Bare session exactly like the driver harness: NOT build_session, and
+# nothing registers the versioned_table data source before the query.
 spark = (
     SparkSession.builder.master("local[4]")
     .appName("driver-sim")
@@ -250,8 +252,8 @@ spark.stop()
 
 def test_medallion_runs_under_driver_harness_session():
     """VERDICT r17 item 1: the driver's oracle failed with
-    DATA_SOURCE_NOT_FOUND because `versioned_table` was registered only
-    by build_session and the driver supplies its own SparkSession.
+    DATA_SOURCE_NOT_FOUND because the query read `versioned_table`
+    without registering it, in a SparkSession the driver built itself.
     Reproduce the driver exactly: a FRESH process, a bare
     SparkSession.builder session, `queries()` entry path. (A
     `newSession()` in this JVM cannot simulate it: Spark 4.1's

@@ -245,317 +245,12 @@ def test_shapefile_pip_fixture_layout(spark):
     assert {p: os.path.getmtime(p) for p in shps + dbfs} == mtimes  # reused
 
 
-def test_python_datasource_matches_composition_reader(spark, tmp_path):
-    """spark.read.format('shapefile') (the Spark 4 Python DataSource
-    connector, sources/pyds.py) must return exactly the rows of the
-    binaryFile+mapInPandas composition (read_shapefile) on the same
-    directory — same kernels, two packagings. Also pins partition
-    planning: one input partition per .shp/.dbf pair."""
-    from utility_service_areas_spark.sources.shapefile import (
-        read_shapefile,
-        write_shapefile,
-    )
-
-    d = str(tmp_path)
-    fields = [("NAME", "C", 16, 0), ("CODE", "N", 4, 0)]
-    write_shapefile(
-        d,
-        "areas_a",
-        [
-            (
-                5,
-                [[[0.0, 0.0], [2.0, 0.0], [2.0, 2.0], [0.0, 0.0]]],
-                {"NAME": "alpha", "CODE": 1},
-            ),
-            (
-                5,
-                [[[5.0, 5.0], [9.0, 5.0], [9.0, 9.0], [5.0, 5.0]]],
-                {"NAME": "beta", "CODE": 2},
-            ),
-        ],
-        fields,
-    )
-    write_shapefile(
-        d,
-        "areas_b",
-        [(1, [[[3.5, 4.5]]], {"NAME": "gamma", "CODE": 3})],
-        fields,
-    )
-
-    ds = spark.read.format("shapefile").load(d)
-    # FULL-ROW parity including base: the connector normalizes base to
-    # binaryFile's file:/abs/path form, so no column needs stripping.
-    key = lambda r: (  # noqa: E731
-        r.base,
-        r.recno,
-        r.shape_type,
-        str(r.geometry),
-        str(dict(r.attrs)),
-    )
-    got = {key(r) for r in ds.collect()}
-    want = {key(r) for r in read_shapefile(spark, d).collect()}
-    assert got == want and len(got) == 3
-    assert ds.rdd.getNumPartitions() == 2  # one per shapefile pair
-
-
-def test_python_datasource_empty_dir_and_fixed_schema(spark, tmp_path):
-    """Behavioral parity with the composition reader: an empty (or
-    not-yet-created) directory is an EMPTY frame, never an error; and
-    a user-supplied schema is rejected loudly — read() yields tuples
-    positionally, so honoring a reordered schema would silently
-    mislabel columns."""
-    import pytest
-
-    empty = tmp_path / "empty"
-    empty.mkdir()
-    assert spark.read.format("shapefile").load(str(empty)).count() == 0
-
-    with pytest.raises(Exception, match="fixed schema"):
-        spark.read.format("shapefile").schema(
-            "recno bigint, base string"
-        ).load(str(empty)).collect()
-
-
-def test_python_datasource_stream_is_incremental(spark, tmp_path):
-    """S28: readStream.format('shapefile') — the streaming half of the
-    Python DataSource connector. Two drains against ONE checkpoint:
-    the first sees both initial files, the second (after a third file
-    drops) processes ONLY the new pair — the positional offset into
-    the sorted base listing is the incremental contract."""
-    from utility_service_areas_spark.sources.shapefile import write_shapefile
-
-    data_dir = tmp_path / "shp"
-    data_dir.mkdir()
-    fields = [("NAME", "C", 16, 0)]
-
-    def drop(base, name, x):
-        write_shapefile(
-            str(data_dir),
-            base,
-            [(1, [[[x, x]]], {"NAME": name})],
-            fields,
-        )
-
-    drop("a_first", "alpha", 1.0)
-    drop("b_second", "beta", 2.0)
-
-    ckpt = str(tmp_path / "ckpt")
-    sink = str(tmp_path / "sink")
-
-    def drain():
-        q = (
-            spark.readStream.format("shapefile")
-            .load(str(data_dir))
-            .select("base", "attrs")
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "stream drain timed out"
-        return sorted(
-            (r.base.rsplit("/", 1)[-1], r.attrs["NAME"])
-            for r in spark.read.parquet(sink).collect()
-        )
-
-    first = drain()
-    assert first == [("a_first", "alpha"), ("b_second", "beta")]
-
-    drop("c_third", "gamma", 3.0)  # append-only, lexicographically after
-    second = drain()
-    # exactly-once across restarts: the old pairs are NOT re-emitted,
-    # only the newly dropped pair lands in the sink
-    assert second == [
-        ("a_first", "alpha"),
-        ("b_second", "beta"),
-        ("c_third", "gamma"),
-    ], "second drain must process ONLY the newly dropped pair"
-
-
-def test_stream_reader_raises_when_committed_offset_uncoverable(tmp_path):
-    """ADVICE r11 (pyds.py): if a replayed offset promises more pairs
-    than the directory can list (files deleted/renamed after commit),
-    partitions() must raise — silently slicing short would drop
-    records while the stream keeps reporting success, violating the
-    exactly-once contract."""
-    import pytest
-
-    from utility_service_areas_spark.sources.pyds import ShapefileStreamReader
-
-    reader = ShapefileStreamReader({"path": str(tmp_path)})
-    with pytest.raises(RuntimeError, match="append-only"):
-        reader.partitions({"idx": 0}, {"idx": 3})
-
-
-def test_python_datasource_writer_roundtrip_and_overwrite(spark, tmp_path):
-    """S31 — df.write.format('shapefile'): each task writes temp files,
-    only the driver-side commit renames them to part-N (the Spark
-    write protocol). Round-trip: write via the connector, read via the
-    connector, full record parity; overwrite mode replaces prior
-    part files; no _tmp- leftovers survive a successful commit."""
-    out = str(tmp_path / "out")
-    rows = [
-        ("polygon", [[[0.0, 0.0], [2.0, 0.0], [2.0, 2.0], [0.0, 0.0]]], {"NAME": "alpha", "CODE": "1"}),
-        ("polygon", [[[5.0, 5.0], [9.0, 5.0], [9.0, 9.0], [5.0, 5.0]]], {"NAME": "beta", "CODE": "2"}),
-        ("point", [[[3.5, 4.5]]], {"NAME": "gamma", "CODE": "3"}),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "shape_type string, geometry array<array<array<double>>>, "
-        "attrs map<string,string>",
-    ).repartition(2)
-    (
-        df.write.format("shapefile")
-        .option("fields", "NAME:C:16:0,CODE:N:4:0")
-        .mode("append")
-        .save(out)
-    )
-    import os
-
-    names = sorted(os.listdir(out))
-    assert not any(n.startswith("_tmp-") for n in names), names
-    assert any(n.startswith("part-") and n.endswith(".shp") for n in names)
-
-    back = spark.read.format("shapefile").load(out)
-    got = sorted(
-        (r.shape_type, str(r.geometry), r.attrs["NAME"], r.attrs["CODE"].strip())
-        for r in back.collect()
-    )
-    want = sorted(
-        (st, str(geom), a["NAME"], a["CODE"]) for st, geom, a in rows
-    )
-    assert got == want
-
-    # overwrite: a 1-row write replaces all previous parts
-    one = spark.createDataFrame(
-        rows[:1],
-        "shape_type string, geometry array<array<array<double>>>, "
-        "attrs map<string,string>",
-    ).coalesce(1)
-    (
-        one.write.format("shapefile")
-        .option("fields", "NAME:C:16:0,CODE:N:4:0")
-        .mode("overwrite")
-        .save(out)
-    )
-    assert spark.read.format("shapefile").load(out).count() == 1
-
-
-def test_python_datasource_writer_append_adds_not_replaces(spark, tmp_path):
-    """r13 ADVICE-high regression: two sequential .mode('append') jobs
-    into the same directory must BOTH survive. The r12 writer named
-    every job's outputs part-{pid}, so the second append's os.replace
-    silently overwrote the first job's trio (verified data loss).
-    Now the driver-side commit assigns a job-sequence prefix
-    (part-{seq:05d}-{pid:05d}) strictly greater than anything already
-    in the directory, so appends extend the sorted listing — which
-    also preserves the streaming reader's positional-offset
-    exactly-once contract."""
-    import os
-
-    out = str(tmp_path / "out")
-    schema = (
-        "shape_type string, geometry array<array<array<double>>>, "
-        "attrs map<string,string>"
-    )
-
-    def write_one(name):
-        df = spark.createDataFrame(
-            [("point", [[[1.0, 2.0]]], {"NAME": name})], schema
-        ).coalesce(1)
-        (
-            df.write.format("shapefile")
-            .option("fields", "NAME:C:16:0")
-            .mode("append")
-            .save(out)
-        )
-
-    write_one("first")
-    bases_after_first = sorted(
-        n[:-4] for n in os.listdir(out) if n.endswith(".shp")
-    )
-    write_one("second")
-    bases_after_second = sorted(
-        n[:-4] for n in os.listdir(out) if n.endswith(".shp")
-    )
-
-    # both jobs' rows survive
-    back = spark.read.format("shapefile").load(out)
-    names = sorted(r.attrs["NAME"].strip() for r in back.collect())
-    assert names == ["first", "second"]
-    # append EXTENDED the sorted listing: old bases unchanged and
-    # every new base sorts after all old ones
-    assert bases_after_second[: len(bases_after_first)] == bases_after_first
-    new = [b for b in bases_after_second if b not in bases_after_first]
-    assert new and all(b > max(bases_after_first) for b in new)
-
-
-def test_python_datasource_writer_abort_leaves_no_temps(spark, tmp_path):
-    """A failing task must abort the job and leave the directory free
-    of temp files — a crashed write can never surface half a pair to
-    a reader."""
-    import os
-
-    import pytest
-
-    out = str(tmp_path / "out")
-    bad = spark.createDataFrame(
-        [("polygon", [[["oops", 0.0]]], {"NAME": "x"})],
-        "shape_type string, geometry array<array<array<string>>>, "
-        "attrs map<string,string>",
-    ).selectExpr(
-        "shape_type",
-        "CAST(geometry AS array<array<array<double>>>) AS geometry",
-        "attrs",
-    ).selectExpr(
-        "shape_type",
-        # NULL point x -> float(None) raises inside write()
-        "transform(geometry, p -> transform(p, q -> array(q[0], q[1]))) AS geometry",
-        "attrs",
-    )
-    with pytest.raises(Exception):
-        (
-            bad.write.format("shapefile")
-            .option("fields", "NAME:C:16:0")
-            .mode("append")
-            .save(out)
-        )
-    leftovers = [n for n in os.listdir(out)] if os.path.exists(out) else []
-    assert not any(n.startswith("_tmp-") for n in leftovers), leftovers
-    assert not any(n.startswith("part-") for n in leftovers), leftovers
-
-
-def test_python_datasource_writer_rejects_wrong_schema_and_missing_fields(
-    spark, tmp_path
-):
-    import pytest
-
-    df = spark.createDataFrame([(1,)], "x int")
-    with pytest.raises(Exception, match="expects columns"):
-        df.write.format("shapefile").option("fields", "A:C:4:0").mode(
-            "append"
-        ).save(str(tmp_path / "o1"))
-
-    ok = spark.createDataFrame(
-        [(1, [[[0.0, 0.0]]], {"A": "v"})],
-        "shape_type string, geometry array<array<array<double>>>, "
-        "attrs map<string,string>",
-    )
-    with pytest.raises(Exception, match="fields"):
-        ok.write.format("shapefile").mode("append").save(str(tmp_path / "o2"))
-
-
 def test_reader_ignores_underscore_temp_files(spark, tmp_path):
-    """Code-review r12: uncommitted writer temps (`_tmp-...`) live in
-    the target directory until the driver-side commit renames them —
-    the reader must never list them (Hadoop's hidden-file convention,
-    which binaryFile already applies), or a read racing a write
-    observes half-written pairs and the streaming positional offset
-    shifts."""
-    from utility_service_areas_spark.sources.shapefile import write_shapefile
-
+    """A writer's uncommitted temps (`_tmp-...`) can sit in the target
+    directory until a commit renames them; read_shapefile must never
+    list them, or a read racing a write observes half-written pairs.
+    binaryFile applies Hadoop's hidden-file convention (`_` and `.`
+    prefixed names are never data) to both of its scans."""
     d = str(tmp_path)
     fields = [("NAME", "C", 8, 0)]
     write_shapefile(d, "part-00000", [(1, [[[1.0, 2.0]]], {"NAME": "ok"})], fields)
@@ -563,5 +258,5 @@ def test_reader_ignores_underscore_temp_files(spark, tmp_path):
     write_shapefile(
         d, "_tmp-dead-part-00001", [(1, [[[9.0, 9.0]]], {"NAME": "no"})], fields
     )
-    got = spark.read.format("shapefile").load(d).collect()
+    got = read_shapefile(spark, d).collect()
     assert len(got) == 1 and got[0].attrs["NAME"].strip() == "ok"

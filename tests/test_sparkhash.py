@@ -88,6 +88,7 @@ def test_bucket_matches_versioned_layout(spark):
         assert spark_hash_bucket([(r.k, "bigint")], 8) == r.b, r.k
 
 
+@pytest.mark.usefixtures("versioned_table")
 def test_datasource_bucket_pruning_plans_only_matching_buckets(spark, tmp_path):
     """On a bucketed lineage, EqualTo/In on the bucket key restricts
     the planned partitions to the matching buckets' files — and the
@@ -165,6 +166,7 @@ def test_datasource_bucket_pruning_plans_only_matching_buckets(spark, tmp_path):
     assert sorted((r.k, r.v) for r in got) == [(37, "v37"), (111, "v111")]
 
 
+@pytest.mark.usefixtures("versioned_table")
 def test_bucket_pruning_composes_with_merge_and_skips_gracefully(
     spark, tmp_path
 ):

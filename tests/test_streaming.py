@@ -9,6 +9,7 @@ from __future__ import annotations
 import datetime as dt
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SMOKE_SF
@@ -1549,8 +1550,6 @@ def test_vector_stream_writer_requires_explicit_app_id(spark):
     """ADVICE r15 #1: exactly-once across restart-from-checkpoint (the
     common failure) must not hinge on an optional argument — app_id is
     required, and minting a fresh one is an explicit opt-in."""
-    import pytest as _pytest
-
     from utility_service_areas_spark.streaming.events import (
         vector_index_stream_writer,
     )
@@ -1558,9 +1557,9 @@ def test_vector_stream_writer_requires_explicit_app_id(spark):
     stream = (
         spark.readStream.format("rate").option("rowsPerSecond", 1).load()
     )
-    with _pytest.raises(ValueError, match="stable app_id"):
+    with pytest.raises(ValueError, match="stable app_id"):
         vector_index_stream_writer(stream, "/tmp/nope-idx")
-    with _pytest.raises(ValueError, match="not both"):
+    with pytest.raises(ValueError, match="not both"):
         vector_index_stream_writer(
             stream, "/tmp/nope-idx", app_id="x", fresh_app_id=True
         )
@@ -1598,6 +1597,7 @@ def _drain_versioned_stream(spark, t, ckpt, opts=None):
     return set(got)
 
 
+@pytest.mark.usefixtures("versioned_table")
 def test_versioned_stream_source_tails_appends(spark, tmp_path):
     """The S46 headline: a readStream over a versioned table emits the
     starting snapshot plus each append's OWN rows exactly once, and a
@@ -1624,6 +1624,7 @@ def test_versioned_stream_source_tails_appends(spark, tmp_path):
     assert _drain_versioned_stream(spark, t, ckpt) == set()
 
 
+@pytest.mark.usefixtures("versioned_table")
 def test_versioned_stream_source_rejects_rewrites_unless_opted_in(
     spark, tmp_path
 ):
@@ -1650,6 +1651,7 @@ def test_versioned_stream_source_rejects_rewrites_unless_opted_in(
     assert got == {(1, "a"), (2, "b"), (9, "z"), (1, "a2")}
 
 
+@pytest.mark.usefixtures("versioned_table")
 def test_versioned_stream_source_starting_version(spark, tmp_path):
     """starting_version=n begins with version n's FULL snapshot (an
     append manifest references all prior dirs), skipping older
@@ -1675,6 +1677,7 @@ def test_versioned_stream_source_starting_version(spark, tmp_path):
         )
 
 
+@pytest.mark.usefixtures("versioned_table")
 def test_versioned_stream_starting_version_survives_vacuumed_history(
     spark, tmp_path
 ):
@@ -1706,6 +1709,7 @@ def test_versioned_stream_starting_version_survives_vacuumed_history(
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.usefixtures("versioned_table")
 def test_medallion_stream_pipeline_composition(spark, tmp_path):
     """The streamed bronze->silver pipeline end-state equals the batch
     transform of bronze (stream==batch, the standing discipline); the

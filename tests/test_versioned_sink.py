@@ -275,6 +275,7 @@ def test_vacuum_crash_midway_leaves_only_invisible_dirs(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.usefixtures("versioned_table")
 def test_datasource_reads_latest_and_time_travels(spark, tmp_path):
     """`spark.read.format('versioned_table')` equals read_version for
     both the latest snapshot and an explicit .option('version', n) —
@@ -315,6 +316,7 @@ def test_datasource_reads_latest_and_time_travels(spark, tmp_path):
     assert {(r.k, r.v) for r in again.collect()} == want1
 
 
+@pytest.mark.usefixtures("versioned_table")
 def test_datasource_partitions_are_per_file_and_crash_invisible(spark, tmp_path):
     """One InputPartition per parquet part file (data-parallel), and a
     crashed commit's orphan parquet is invisible to the source."""
@@ -335,6 +337,7 @@ def test_datasource_partitions_are_per_file_and_crash_invisible(spark, tmp_path)
     assert (999, "ORPHAN") not in got and len(got) == 32
 
 
+@pytest.mark.usefixtures("versioned_table")
 def test_datasource_missing_table_raises(spark, tmp_path):
     with pytest.raises(Exception, match="no committed versions"):
         spark.read.format("versioned_table").load(str(tmp_path / "nope")).count()
@@ -440,6 +443,7 @@ def test_merge_schema_type_change_stays_loud(spark, tmp_path):
     assert list_versions(t) == [0]  # nothing committed
 
 
+@pytest.mark.usefixtures("versioned_table")
 def test_merge_schema_datasource_reader_across_boundary(spark, tmp_path):
     """S37 x evolution: the versioned_table DataSource announces the
     manifest's union schema on an evolved lineage, fills NULL for
@@ -587,6 +591,7 @@ def test_cli_table_optimize(spark, tmp_path, capsys):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.usefixtures("versioned_table")
 def test_datasource_pushdown_prunes_planned_partitions(spark, tmp_path):
     """On a Z-ORDERed table, a range predicate plans exactly the
     partition count files_scanned_for_range predicts (a), results are
@@ -634,6 +639,7 @@ def test_datasource_pushdown_prunes_planned_partitions(spark, tmp_path):
     assert pushed.rdd.getNumPartitions() == want_files
 
 
+@pytest.mark.usefixtures("versioned_table")
 def test_datasource_pushdown_equality_and_in_and_unsupported(spark, tmp_path):
     """EqualTo/In prune; IsNull and non-top-level shapes are returned
     un-pruned (still handled by Spark); a predicate excluding every
@@ -679,6 +685,7 @@ def test_datasource_pushdown_equality_and_in_and_unsupported(spark, tmp_path):
     assert got == {(25, "v25")}
 
 
+@pytest.mark.usefixtures("versioned_table")
 def test_datasource_pushdown_prunes_pre_evolution_files(spark, tmp_path):
     """merge_schema lineage: a comparison filter on a column ADDED
     after v0 prunes v0's files outright (their rows read NULL there,
@@ -970,6 +977,7 @@ def test_restore_version_rereferences_without_rewrite(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.usefixtures("versioned_table")
 def test_manifest_file_stats_plan_without_footers(spark, tmp_path, monkeypatch):
     """stats_columns records per-file zones in the manifest at WRITE
     time (the Delta commit-log posture); the reader then plans file
@@ -1031,6 +1039,7 @@ def test_manifest_file_stats_plan_without_footers(spark, tmp_path, monkeypatch):
     assert got == sorted((i, a) for i, a in rows if 100 <= a <= 150)
 
 
+@pytest.mark.usefixtures("versioned_table")
 def test_manifest_file_stats_carry_across_appends(spark, tmp_path):
     """Appends carry the previous stats forward (immutable dirs) and
     add their own; files without stats are simply scanned, never

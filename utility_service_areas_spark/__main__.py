@@ -282,6 +282,11 @@ def main(argv: list[str] | None = None) -> int:
             v = vt.restore_version(args.table_dir, args.version)
             print(f"restored v{args.version} -> v{v} at {args.table_dir}")
         elif args.action == "read":
+            from utility_service_areas_spark.sources.pyds import (
+                register_versioned_table,
+            )
+
+            register_versioned_table(spark)
             opts = {}
             if args.version is not None:
                 opts["version"] = str(args.version)

@@ -1070,16 +1070,14 @@ def medallion_stream_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         versioned_table_stream_writer,
     )
 
-    # The driver harness supplies its own SparkSession (not
-    # build_session), where the Spark-4 Python DataSource behind
-    # format("versioned_table") is unregistered — .load() then fails at
-    # analysis with DATA_SOURCE_NOT_FOUND. Register idempotently here;
-    # this query is the only registry entry that streams through it.
-    from utility_service_areas_spark.session import (
-        _register_python_datasources,
-    )
+    # No session registers the Python DataSource behind
+    # format("versioned_table") up front (not build_session, not the
+    # driver harness's own session), so .load() would fail at analysis
+    # with DATA_SOURCE_NOT_FOUND. This query is the only registry entry
+    # that streams through it.
+    from utility_service_areas_spark.sources.pyds import register_versioned_table
 
-    _register_python_datasources(spark)
+    register_versioned_table(spark)
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderpriority"

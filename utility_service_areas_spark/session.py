@@ -56,7 +56,9 @@ def build_session(app_name: str = "usa-spark", master: str | None = None) -> Spa
         # The versioned_table DataSource implements pushFilters (zone-map
         # file/row-group skipping); Spark 4.1 refuses to plan a reader
         # that implements it unless this is on (DATA_SOURCE_PUSHDOWN_
-        # DISABLED) — deliberate loudness, so the conf lives here.
+        # DISABLED) — deliberate loudness, so the conf lives here. The
+        # source itself is registered only where it is read, by
+        # sources/pyds.py:register_versioned_table.
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
@@ -133,28 +135,4 @@ def build_session(app_name: str = "usa-spark", master: str | None = None) -> Spa
         existing = (base.get(key, "") if base is not None else "") or ""
         merged = f"{existing} {jit_flags}".strip()
         builder = builder.config(key, merged)
-    spark = builder.getOrCreate()
-    _register_python_datasources(spark)
-    return spark
-
-
-def _register_python_datasources(spark: SparkSession) -> None:
-    """Engine-register the repo's Spark 4 Python DataSource connectors.
-
-    Re-registering in the SAME session overwrites silently; a SECOND
-    session in one JVM raises DATA_SOURCE_ALREADY_EXISTS (Spark 4.1's
-    uniqueness check is JVM-global while lookup is per-session), which
-    is tolerated here — the caller's lookup will still fail with
-    DATA_SOURCE_NOT_FOUND if the source is genuinely unusable, which is
-    the clearer error."""
-    from utility_service_areas_spark.sources.pyds import (
-        ShapefileDataSource,
-        VersionedTableDataSource,
-    )
-
-    for cls in (ShapefileDataSource, VersionedTableDataSource):
-        try:
-            spark.dataSource.register(cls)
-        except Exception as exc:  # pragma: no cover - cross-session only
-            if "DATA_SOURCE_ALREADY_EXISTS" not in str(exc):
-                raise
+    return builder.getOrCreate()
