@@ -20,6 +20,39 @@ def backdate_tree(path: str, ts: float = 0.0) -> None:
             os.utime(os.path.join(walk_root, name), (ts, ts))
 
 
+def read_events_stream(spark, sf_dir: str):
+    """File-source stream of the events table. Its schema comes from
+    the substrate's parquet footer through the batch reader's own
+    resolution path (raw_table_schema + normalize_event_ts), so stream
+    and batch see the same timestamps whichever way events.ts is
+    encoded (long nanos or TIMESTAMP_NTZ)."""
+    from utility_service_areas_spark.sources.tables import (
+        normalize_event_ts,
+        raw_table_schema,
+    )
+
+    raw = (
+        spark.readStream.schema(raw_table_schema(spark, sf_dir, "events"))
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
+    )
+    return normalize_event_ts(raw)
+
+
+def run_to_memory(stream_df, name: str, output_mode: str = "append"):
+    """Drain a stream with availableNow into the in-memory table
+    ``name``, so a test can compare it against the batch twin."""
+    q = (
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    return q
+
+
 @pytest.fixture(scope="session")
 def spark():
     from utility_service_areas_spark.session import build_session

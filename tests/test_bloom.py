@@ -5,7 +5,6 @@ from pyspark.sql import functions as F
 from utility_service_areas_spark.operators.bloom import (
     bloom_anti_join,
     bloom_membership,
-    bloom_semi_join,
 )
 
 
@@ -36,14 +35,6 @@ def test_bloom_anti_join_equals_plain_anti(spark):
         got.select("rid").exceptAll(want.select("rid")).count() == 0
         and want.select("rid").exceptAll(got.select("rid")).count() == 0
     )
-
-
-def test_bloom_semi_join_equals_plain_semi(spark):
-    probe, build = _frames(spark)
-    got = bloom_semi_join(probe, build, "key", "key", probe_id="rid")
-    want = probe.join(build, "key", "left_semi")
-    assert got.count() == want.count() == 1000
-    assert got.select("rid").exceptAll(want.select("rid")).count() == 0
 
 
 def test_bloom_tiny_m_degrades_to_exact_not_wrong(spark):

@@ -10,7 +10,6 @@ from utility_service_areas_spark.sources.certificates import (
     clean_certificates,
     read_certificates_csv,
 )
-from utility_service_areas_spark.sources.tables import register_views
 
 CSV = """certificate_number,certificate_type,entity,certificate_name,utility_type,certificate_status,cpcn_url,entity_url
 1,CPCN,AEL&P,ALASKA ELECTRIC LIGHT & POWER COMPANY,Electric,Active,http://rca/1,http://e/1
@@ -39,24 +38,3 @@ def test_read_and_clean(spark, csv_path):
     assert rows[2.0].certificate_name == "ALASKA POWER COMPANY"
     # nulls blank-filled (reference: out[is.na(out)] <- "")
     assert rows[2.0].entity_url == ""
-
-
-def test_sql_surface_matches_dataframe(spark):
-    register_views(spark, "/root/testdata/sf0.001")
-    got = spark.sql(
-        """
-        SELECT l_returnflag, count(*) AS n FROM lineitem GROUP BY l_returnflag
-        """
-    ).collect()
-    import __spark_entry__  # noqa: F401  (package importable alongside)
-
-    from utility_service_areas_spark.sources.tables import load_table
-    from pyspark.sql import functions as F
-
-    want = (
-        load_table(spark, "/root/testdata/sf0.001", "lineitem")
-        .groupBy("l_returnflag")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    assert {(r.l_returnflag, r.n) for r in got} == {(r.l_returnflag, r.n) for r in want}

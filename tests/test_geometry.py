@@ -218,47 +218,3 @@ def test_flat_mask_bit_identical_to_scalar(verts, pts):
     got = _flat_rings_mask(xs, ys, flat, n_verts)
     want = [point_in_polygon(x, y, poly) for x, y in pts]
     assert list(got) == want
-
-
-def test_st_contains_point_sql_matches_scalar(spark):
-    """The zero-Python HOF variant of point-in-polygon (used when
-    candidate volume is small enough that interpreter cost beats an
-    Arrow round trip) must agree with the scalar kernel, including on
-    holes, nulls, and empty geometries."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from utility_service_areas_spark.functions.geometry import (
-        point_in_polygon,
-        st_contains_point_sql,
-    )
-
-    poly = [
-        [[0.0, 0.0], [10.0, 0.0], [10.0, 10.0], [0.0, 10.0], [0.0, 0.0]],
-        [[4.0, 4.0], [6.0, 4.0], [6.0, 6.0], [4.0, 6.0], [4.0, 4.0]],  # hole
-    ]
-    rng = random.Random(7)
-    pts = [(i, rng.uniform(-1, 11), rng.uniform(-1, 11)) for i in range(500)]
-    df = spark.createDataFrame(pts, "id long, x double, y double").withColumn(
-        "geom",
-        F.lit(poly).cast("array<array<array<double>>>"),
-    )
-    got = {
-        r.id: r.got
-        for r in df.select(
-            "id",
-            st_contains_point_sql(F.col("geom"), F.col("x"), F.col("y")).alias("got"),
-        ).collect()
-    }
-    for i, x, y in pts:
-        assert got[i] == point_in_polygon(x, y, poly)
-
-    edge = spark.createDataFrame(
-        [(1, None), (2, [])],
-        "id long, geom array<array<array<double>>>",
-    )
-    out = edge.select(
-        st_contains_point_sql(F.col("geom"), F.lit(1.0), F.lit(1.0)).alias("got")
-    ).collect()
-    assert [r.got for r in out] == [False, False]

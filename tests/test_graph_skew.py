@@ -1,5 +1,5 @@
-"""Connected-components dedup resolution, salted join equivalence,
-IVF recall, and the stream-stream join.
+"""Connected-components dedup resolution, salted join equivalence
+and IVF recall.
 """
 
 from __future__ import annotations
@@ -93,39 +93,6 @@ def test_ivf_recall_vs_brute_force(spark):
     assert recall >= 0.4, recall  # 3/8 of cells probed
 
 
-def test_stream_stream_join_equals_batch(spark):
-    from utility_service_areas_spark.sources.tables import load_table
-    from utility_service_areas_spark.streaming.events import (
-        click_purchase_join,
-        read_events_stream,
-        run_to_memory,
-    )
-
-    run_to_memory(
-        click_purchase_join(read_events_stream(spark, SMOKE_SF)), "t_ssjoin", "append"
-    )
-    got = {
-        (r.purchase_id, r.click_id) for r in spark.table("t_ssjoin").collect()
-    }
-    ev = load_table(spark, SMOKE_SF, "events")
-    clicks = ev.filter("event_type = 'click'").select(
-        F.col("user_id").alias("c_user"), F.col("event_id").alias("click_id"), F.col("ts").alias("cts")
-    )
-    purchases = ev.filter("event_type = 'purchase'").select(
-        F.col("user_id").alias("p_user"), F.col("event_id").alias("purchase_id"), F.col("ts").alias("pts")
-    )
-    want = {
-        (r.purchase_id, r.click_id)
-        for r in purchases.join(
-            clicks,
-            (F.col("p_user") == F.col("c_user"))
-            & (F.col("cts") <= F.col("pts"))
-            & (F.col("cts") >= F.col("pts") - F.expr("INTERVAL 60 MINUTES")),
-        ).collect()
-    }
-    assert got == want and len(got) > 0
-
-
 def _chain_and_clique(spark, a="doc_a", b="doc_b"):
     # a 12-node chain (worst case for label propagation) plus a
     # 4-clique, so the triangle operators have something to count
@@ -205,3 +172,76 @@ def test_local_cut_is_lazy(spark, monkeypatch, op):
         sc.setLocalProperty("spark.job.description", None)
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == _LAZY_CUT_JOBS[op]
+
+
+def test_twostar_cc_label_identical_to_minlabel(spark):
+    """The algorithm-equivalence pin: two-star CC and min-label
+    propagation produce IDENTICAL (node, comp) labels on every
+    adversarial topology — 20-deep chain (propagation's worst case),
+    clique (two-star's best case), star, two disjoint components,
+    and a lollipop (clique + tail)."""
+    from utility_service_areas_spark.operators.graph import (
+        connected_components,
+        connected_components_twostar,
+    )
+
+    graphs = {
+        "chain": [(i, i + 1) for i in range(100, 120)],
+        "clique": [(i, j) for i in range(200, 210) for j in range(200, 210) if i < j],
+        "star": [(300, i) for i in range(301, 320)],
+        "two_comps": [(1, 2), (2, 3), (10, 11), (11, 12), (12, 10)],
+        "lollipop": [(i, j) for i in range(400, 406) for j in range(400, 406) if i < j]
+        + [(405, 406), (406, 407), (407, 408)],
+    }
+    for name, edges in graphs.items():
+        pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+        want = {
+            (r.node, r.comp) for r in connected_components(pairs).collect()
+        }
+        got = {
+            (r.node, r.comp)
+            for r in connected_components_twostar(pairs).collect()
+        }
+        assert got == want, name
+        # every component's label is its minimum member
+        comp_members = {}
+        for node, comp in got:
+            comp_members.setdefault(comp, []).append(node)
+        for comp, members in comp_members.items():
+            assert comp == min(members + [comp]), name
+
+
+def test_twostar_cc_matches_on_substrate_pairs(spark):
+    """Same equivalence on the REAL LSH pair graph (the #50/#243
+    input) at the smoke SF."""
+    from tests.conftest import SMOKE_SF
+    from utility_service_areas_spark.plans.dedup_queries import (
+        dedup_cc_twostar,
+        dedup_clusters_q,
+    )
+
+    got = sorted(map(tuple, dedup_cc_twostar(spark, SMOKE_SF).collect()))
+    want = sorted(map(tuple, dedup_clusters_q(spark, SMOKE_SF).collect()))
+    assert got == want
+
+
+def test_hits_planted_authority_ranking(spark):
+    """Semantic pin on a planted bipartite graph: the authority cited
+    by every hub outranks one cited by a single hub; the best hub
+    (points at both authorities) holds the 1e6 max after
+    normalization; all scores stay in (0, 1e6]."""
+    from utility_service_areas_spark.operators.graph import hits_micros
+
+    #  hubs 1..3 -> auth 100 (everyone), hub 1 -> auth 200 (only one)
+    edges = [(1, 100), (2, 100), (3, 100), (1, 200)]
+    got = {
+        (r.side, r.node): r.score_micros
+        for r in hits_micros(
+            spark.createDataFrame(edges, "src long, dst long")
+        ).collect()
+    }
+    assert got[("auth", 100)] == 1_000_000  # max-normalized
+    assert 0 < got[("auth", 200)] < got[("auth", 100)]
+    assert got[("hub", 1)] == 1_000_000  # points at both
+    assert got[("hub", 2)] == got[("hub", 3)]  # symmetric hubs tie
+    assert 0 < got[("hub", 2)] < got[("hub", 1)]

@@ -5,16 +5,13 @@ real even though the byte-level decode is a deterministic stub.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from utility_service_areas_spark.operators.multimodal import (
     FEATURE_DIM,
     attach_media,
     decode_media,
-    decode_media_real,
     extract_features,
     fake_decode_meta,
-    resize_images,
     sample_frames,
 )
 
@@ -35,11 +32,6 @@ def test_attach_schema(media):
     assert mimes == {0: "image/png", 1: "audio/wav", 2: "video/mp4", 3: "image/png"}
 
 
-def test_real_decoder_is_clearly_stubbed():
-    with pytest.raises(NotImplementedError, match="PIL"):
-        decode_media_real(b"bytes", "image/png")
-
-
 def test_fake_decode_deterministic_and_typed(media, spark):
     decoded = decode_media(media)
     rows = {r.doc_id: r.meta for r in decoded.collect()}
@@ -50,14 +42,6 @@ def test_fake_decode_deterministic_and_typed(media, spark):
     # python-level contract matches the distributed result
     local = fake_decode_meta(b"a video doc", "video/mp4")
     assert (rows[2].width, rows[2].duration_ms) == (local["width"], local["duration_ms"])
-
-
-def test_resize_rewrites_dims_only(media):
-    decoded = decode_media(media)
-    resized = resize_images(decoded, 224, 224)
-    r = resized.filter(F.col("doc_id") == 0).collect()[0]
-    assert (r.meta.width, r.meta.height) == (224, 224)
-    assert r.media_bytes == b"an image doc"  # bytes untouched by fake
 
 
 def test_frame_sampling_counts(media):
@@ -71,20 +55,14 @@ def test_frame_sampling_counts(media):
 
 
 def test_pdf_source_stub(spark, tmp_path):
-    from utility_service_areas_spark.sources.pdf import (
-        extract_pdf_text_real,
-        pdf_metadata,
-        read_binary_docs,
-    )
+    from utility_service_areas_spark.sources.pdf import pdf_metadata
 
     (tmp_path / "a.pdf").write_bytes(b"%PDF-1.4 fake body")
     (tmp_path / "b.pdf").write_bytes(b"not actually a pdf")
-    df = read_binary_docs(spark, str(tmp_path / "*.pdf"))
+    df = spark.read.format("binaryFile").load(str(tmp_path / "*.pdf"))
     meta = {r.path.split("/")[-1]: r for r in pdf_metadata(df).collect()}
     assert meta["a.pdf"].is_pdf == "yes" and meta["b.pdf"].is_pdf == "no"
     assert meta["a.pdf"].n_bytes == 18 and 1 <= meta["a.pdf"].n_pages <= 40
-    with pytest.raises(NotImplementedError, match="pypdf"):
-        extract_pdf_text_real(b"%PDF-")
 
 
 def test_feature_extraction_shape(media):

@@ -25,15 +25,12 @@ from pyspark.sql.types import (
 )
 
 from utility_service_areas_spark.functions.geometry import (
-    difference_polygons,
-    intersection_polygons,
     make_valid,
     multipolygon_area,
     overlay,
     polygon_area,
     rect_polygon,
     union_all,
-    union_polygons,
 )
 
 A = rect_polygon(0, 0, 2, 2)
@@ -48,32 +45,32 @@ def approx(x, y, tol=1e-9):
 
 
 def test_union_intersection_difference_rects():
-    assert approx(multipolygon_area(union_polygons(A, B)), 7.0)
-    assert approx(multipolygon_area(intersection_polygons(A, B)), 1.0)
-    assert approx(multipolygon_area(difference_polygons(A, B)), 3.0)
-    assert approx(multipolygon_area(difference_polygons(B, A)), 3.0)
+    assert approx(multipolygon_area(overlay([A], [B], "union")), 7.0)
+    assert approx(multipolygon_area(overlay([A], [B], "intersection")), 1.0)
+    assert approx(multipolygon_area(overlay([A], [B], "difference")), 3.0)
+    assert approx(multipolygon_area(overlay([B], [A], "difference")), 3.0)
 
 
 def test_union_disjoint_is_two_polygons():
     c = rect_polygon(10, 10, 1, 1)
-    u = union_polygons(A, c)
+    u = overlay([A], [c], "union")
     assert len(u) == 2
     assert approx(multipolygon_area(u), 5.0)
-    assert intersection_polygons(A, c) == []
+    assert overlay([A], [c], "intersection") == []
 
 
 def test_union_shared_edge_dissolves():
     d = rect_polygon(2, 0, 2, 2)  # touches A along x=2
-    u = union_polygons(A, d)
+    u = overlay([A], [d], "union")
     assert len(u) == 1  # one merged polygon, no interior seam
     assert approx(multipolygon_area(u), 8.0)
 
 
 def test_containment_and_hole():
     inner = rect_polygon(0.5, 0.5, 1, 1)
-    assert approx(multipolygon_area(union_polygons(A, inner)), 4.0)
-    assert approx(multipolygon_area(intersection_polygons(A, inner)), 1.0)
-    donut = difference_polygons(A, inner)
+    assert approx(multipolygon_area(overlay([A], [inner], "union")), 4.0)
+    assert approx(multipolygon_area(overlay([A], [inner], "intersection")), 1.0)
+    donut = overlay([A], [inner], "difference")
     assert len(donut) == 1 and len(donut[0]) == 2  # outer ring + hole
     assert approx(multipolygon_area(donut), 3.0)
     # union of the donut with a rect inside its hole stays disjoint
@@ -82,16 +79,16 @@ def test_containment_and_hole():
 
 
 def test_self_identities():
-    assert approx(multipolygon_area(union_polygons(A, A)), 4.0)
-    assert approx(multipolygon_area(intersection_polygons(A, A)), 4.0)
-    assert multipolygon_area(difference_polygons(A, A)) == 0
+    assert approx(multipolygon_area(overlay([A], [A], "union")), 4.0)
+    assert approx(multipolygon_area(overlay([A], [A], "intersection")), 4.0)
+    assert multipolygon_area(overlay([A], [A], "difference")) == 0
 
 
 def test_triangles_inclusion_exclusion():
     t1 = make_valid([[[0, 0], [4, 0], [0, 4], [0, 0]]])
     t2 = make_valid([[[1, 1], [5, 1], [5, 5], [1, 1]]])
-    ua = multipolygon_area(union_polygons(t1, t2))
-    ia = multipolygon_area(intersection_polygons(t1, t2))
+    ua = multipolygon_area(overlay([t1], [t2], "union"))
+    ia = multipolygon_area(overlay([t1], [t2], "intersection"))
     assert approx(ua + ia, polygon_area(t1) + polygon_area(t2), 1e-9)
     assert ia > 0  # they genuinely overlap
 
@@ -116,11 +113,11 @@ def test_rect_overlay_matches_closed_form(ax, ay, aw, ah, bx, by, bw, bh):
     ov = max(0, min(ax + aw, bx + bw) - max(ax, bx)) * max(
         0, min(ay + ah, by + bh) - max(ay, by)
     )
-    assert approx(multipolygon_area(intersection_polygons(ra, rb)), ov, 1e-6)
+    assert approx(multipolygon_area(overlay([ra], [rb], "intersection")), ov, 1e-6)
     assert approx(
-        multipolygon_area(union_polygons(ra, rb)), aw * ah + bw * bh - ov, 1e-6
+        multipolygon_area(overlay([ra], [rb], "union")), aw * ah + bw * bh - ov, 1e-6
     )
-    assert approx(multipolygon_area(difference_polygons(ra, rb)), aw * ah - ov, 1e-6)
+    assert approx(multipolygon_area(overlay([ra], [rb], "difference")), aw * ah - ov, 1e-6)
 
 
 # ------------------------------------------------------------- Spark
@@ -272,5 +269,5 @@ def test_rect_overlay_fractional_and_large_magnitude(
     )
     area_a, area_b = aw * ah * scale * scale, bw * bh * scale * scale
     tol = 1e-6 * scale * scale
-    assert abs(multipolygon_area(intersection_polygons(ra, rb)) - ov) <= tol
-    assert abs(multipolygon_area(union_polygons(ra, rb)) - (area_a + area_b - ov)) <= tol
+    assert abs(multipolygon_area(overlay([ra], [rb], "intersection")) - ov) <= tol
+    assert abs(multipolygon_area(overlay([ra], [rb], "union")) - (area_a + area_b - ov)) <= tol

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from utility_service_areas_spark.operators.relational import (
@@ -81,3 +82,51 @@ def test_patch_override_guard(spark):
     got = {r.k: r.final for r in out.collect()}
     # k=2 fails the version guard → keeps original (R/functions.R:421-444)
     assert got == {1: "patch1", 2: "orig2", 3: "orig3"}
+
+
+def _brute_cdc_winner(rows):
+    """Reference winner under (v DESC, op ASC, bal ASC NULLS FIRST)."""
+
+    def key(r):
+        v, op, bal = r
+        return (-v, op, (0, 0) if bal is None else (1, bal))
+
+    return min(rows, key=key)
+
+
+CDC_TIE_LOGS = [
+    # (rows per key, description) — every row is (v, op, bal_cents)
+    [(2, "U", 100), (2, "D", None)],  # same-version delete+update: D wins
+    [(2, "D", None), (2, "U", 100)],  # arrival order must not matter
+    [(3, "U", 500), (3, "U", 200)],  # same-version updates: lower bal wins
+    [(1, "U", 9), (2, "U", 7), (2, "U", None)],  # NULL bal sorts first
+    [(5, "D", None), (5, "D", None), (4, "U", 1)],  # exact duplicates
+]
+
+
+def test_cdc_version_tie_batch_window_is_deterministic(spark):
+    """ADVICE r12: cdc_latest_version_merge's window ordered by v DESC
+    alone — nondeterministic on duplicate versions. Now the shared
+    cdc_tiebreak_order resolves ties (delete beats update, then
+    bal ASC NULLS FIRST); pin the window pick against a brute
+    reference on tie-adversarial changelogs the substrate never
+    produces (its versions are unique per key by construction)."""
+    from utility_service_areas_spark.plans.etl_queries import (
+        cdc_tiebreak_order,
+    )
+
+    rows = []
+    for k, log in enumerate(CDC_TIE_LOGS):
+        rows.extend((k, v, op, bal) for v, op, bal in log)
+    df = spark.createDataFrame(
+        rows, "k long, v long, op string, bal_cents long"
+    )
+    w = Window.partitionBy("k").orderBy(*cdc_tiebreak_order())
+    got = {
+        r.k: (r.v, r.op, r.bal_cents)
+        for r in df.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .collect()
+    }
+    want = {k: _brute_cdc_winner(log) for k, log in enumerate(CDC_TIE_LOGS)}
+    assert got == want

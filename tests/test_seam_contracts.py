@@ -135,18 +135,12 @@ def test_pdf_extractor_seam_contract(spark, tmp_path):
       fields (the reference only ever downloads, never parses:
       R/functions.R:115-140 — so a failed decode is data, not error);
     - n_bytes must equal len(blob) (the audit column downstream
-      compaction checks);
-    - the environment's text-decode default (extract_pdf_text_real)
-      raises NotImplementedError naming the needed libs.
+      compaction checks).
     """
     from utility_service_areas_spark.sources.pdf import (
         PDF_META_SCHEMA,
-        extract_pdf_text_real,
         fake_extract_meta,
     )
-
-    with pytest.raises(NotImplementedError, match="pypdf|pdfminer"):
-        extract_pdf_text_real(b"%PDF-1.4 whatever")
 
     # the shipped deterministic fake IS a conformant implementation —
     # pin the conformance clauses on it
@@ -161,17 +155,14 @@ def test_pdf_extractor_seam_contract(spark, tmp_path):
 
     # plumbing acceptance: a binaryFile scan through pdf_metadata
     # yields one PDF_META_SCHEMA row per file
-    from utility_service_areas_spark.sources.pdf import (
-        pdf_metadata,
-        read_binary_docs,
-    )
+    from utility_service_areas_spark.sources.pdf import pdf_metadata
 
     (tmp_path / "a.pdf").write_bytes(pdf_blob)
     (tmp_path / "b.pdf").write_bytes(b"not a pdf")
     rows = {
         r.path.rsplit("/", 1)[-1]: r
         for r in pdf_metadata(
-            read_binary_docs(spark, str(tmp_path) + "/*.pdf")
+            spark.read.format("binaryFile").load(str(tmp_path) + "/*.pdf")
         ).collect()
     }
     assert rows["a.pdf"].is_pdf == "yes" and rows["b.pdf"].is_pdf == "no"
@@ -191,18 +182,12 @@ def test_media_decoder_seam_contract(spark):
       positive duration — downstream frame-sampling branches on it;
     - bytes NEVER shuffle to Python row-at-a-time: the plumbing is
       mapInPandas over Arrow batches (schema/batch shape pinned in
-      test_multimodal.py);
-    - the environment default (decode_media_real) raises
-      NotImplementedError naming the needed codecs.
+      test_multimodal.py).
     """
     from utility_service_areas_spark.operators.multimodal import (
         MEDIA_META_SCHEMA,
-        decode_media_real,
         fake_decode_meta,
     )
-
-    with pytest.raises(NotImplementedError, match="PIL|librosa|pyav"):
-        decode_media_real(b"\x89PNG...", "image/png")
 
     img = fake_decode_meta(b"\x89PNG fake", "image/png")
     assert set(img) == {f.name for f in MEDIA_META_SCHEMA.fields}
@@ -293,3 +278,21 @@ def test_model_inference_seam_contract(spark):
     # poison, so its healthy row observed batch size 2 (> 1, and the
     # chunking respected batch_size=3: valid rows 1,4,5 then 6,7)
     assert rows[7].status == "ok" and rows[7].output == [9.0, 2.0]
+
+
+def test_infer_batches_infers_injected_model_dim(spark):
+    """An injected production model with a dimension other than the
+    fake's 4 must NOT have every row rejected: with output_dim unset,
+    infer_batches takes the dimension from the first valid row."""
+    from utility_service_areas_spark.operators.inference import infer_batches
+
+    docs = spark.createDataFrame(
+        [(1, "alpha"), (2, "beta")], "doc_id long, text string"
+    )
+
+    def eight_dim(texts):
+        return [[float(len(t))] * 8 for t in texts]
+
+    rows = infer_batches(docs, model_fn=eight_dim).collect()
+    assert all(r.status == "ok" for r in rows)
+    assert all(len(r.output) == 8 for r in rows)

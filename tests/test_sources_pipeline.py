@@ -597,3 +597,116 @@ def test_kml_stages_match_the_self_join_reference(
     got = _blocks(replay_service_areas_from_raw(*args).collect())
     assert got == _blocks(_ref_replay_service_areas_from_raw(*args).collect())
     assert set(got) == {8, 169}
+
+
+def test_leaflet_map_sink_self_contained(spark, tmp_path):
+    """Map presentation layer (reference index.qmd): one HTML file,
+    FeatureCollection inlined and parseable, leaflet from CDN, every
+    non-geometry column a popup property."""
+    import json
+    import re
+
+    from pyspark.sql import functions as F
+
+    from utility_service_areas_spark.operators.geo import rect_geometry
+    from utility_service_areas_spark.sources.geojson import write_leaflet_map
+
+    df = spark.createDataFrame(
+        [("CERT-1", "Alpha Utility", 0.0), ("CERT-2", "Beta Co", 10.0)],
+        ["certificate_number", "name", "x0"],
+    ).select(
+        "certificate_number",
+        "name",
+        rect_geometry(F.col("x0"), F.lit(0.0), F.lit(5.0), F.lit(4.0)).alias(
+            "geometry"
+        ),
+    )
+    out = str(tmp_path / "map.html")
+    assert write_leaflet_map(df, out) == out
+    html = open(out).read()
+    assert "unpkg.com/leaflet@1.9.4" in html and "L.geoJSON" in html
+    m = re.search(r"const areas = (\{.*?\});\n", html, re.DOTALL)
+    fc = json.loads(m.group(1))
+    assert fc["type"] == "FeatureCollection" and len(fc["features"]) == 2
+    props = {f["properties"]["certificate_number"] for f in fc["features"]}
+    assert props == {"CERT-1", "CERT-2"}
+    ring = fc["features"][0]["geometry"]["coordinates"][0]
+    assert ring[0] == ring[-1]  # closed ring survives the round trip
+    # presentation parity (index.qmd): base-layer switcher + scale bar
+    assert "L.control.layers" in html and "L.control.scale" in html
+
+
+def test_leaflet_map_community_sidebar(spark, tmp_path):
+    """Community-pin sidebar parity (index.qmd:169-189 + its TODO):
+    pins are inlined (self-contained, no runtime CSV fetch), the
+    sidebar/zoom/reset machinery ships, and a hostile community name
+    cannot break out of the script block (same XSS discipline as the
+    feature properties)."""
+    import json
+    import re
+
+    from pyspark.sql import functions as F
+
+    from utility_service_areas_spark.operators.geo import rect_geometry
+    from utility_service_areas_spark.sources.geojson import write_leaflet_map
+
+    df = spark.createDataFrame(
+        [("CERT-1", 0.0)], ["certificate_number", "x0"]
+    ).select(
+        "certificate_number",
+        rect_geometry(F.col("x0"), F.lit(0.0), F.lit(5.0), F.lit(4.0)).alias(
+            "geometry"
+        ),
+    )
+    pins = spark.createDataFrame(
+        [("Anchorage", 61.2, -149.9), ("</script><b>x", 60.0, -150.0)],
+        ["name", "lat", "lon"],
+    )
+    out = str(tmp_path / "map.html")
+    write_leaflet_map(df, out, communities=pins)
+    html = open(out).read()
+    m = re.search(r"const communities = (\[.*?\]);\n", html, re.DOTALL)
+    got = json.loads(m.group(1))
+    assert {p["name"] for p in got} == {"Anchorage", "</script><b>x"}
+    # the raw terminator never appears inside the script payload
+    assert "</script><b>x" not in html  # escaped to </script...
+    # sidebar machinery: list-in-bounds, zoom-to-pin, reset view
+    assert "showSidebar" in html and "flyTo" in html and "Reset view" in html
+    assert 'id="sidebar"' in html
+    # without communities the sidebar layer list stays minimal
+    out2 = str(tmp_path / "map2.html")
+    write_leaflet_map(df, out2)
+    assert "const communities = [];" in open(out2).read()
+
+
+def test_leaflet_map_escapes_untrusted_properties(spark, tmp_path):
+    """Stored-XSS guard (ADVICE r5): property values come from untrusted
+    KML/HTML fetches. A '</script>' value must not terminate the inlined
+    script block, and popup HTML must be built via textContent, never
+    string-interpolated innerHTML."""
+    import json
+    import re
+
+    from pyspark.sql import functions as F
+
+    from utility_service_areas_spark.operators.geo import rect_geometry
+    from utility_service_areas_spark.sources.geojson import write_leaflet_map
+
+    payload = "</script><script>alert(1)</script><img src=x onerror=alert(2)>"
+    df = spark.createDataFrame([("CERT-1", payload)], ["certificate_number", "name"]).select(
+        "certificate_number",
+        "name",
+        rect_geometry(F.lit(0.0), F.lit(0.0), F.lit(1.0), F.lit(1.0)).alias("geometry"),
+    )
+    out = str(tmp_path / "map.html")
+    write_leaflet_map(df, out, title="<script>bad</script>")
+    html = open(out).read()
+    # the raw close-tag must never appear inside the inlined JSON/title
+    body = html.split("const areas = ", 1)[1]
+    assert "</script><script>" not in html
+    assert "<script>bad" not in html  # title is HTML-escaped
+    # the payload survives escaped and round-trips intact
+    m = re.search(r"const areas = (\{.*?\});\n", html, re.DOTALL)
+    assert json.loads(m.group(1))["features"][0]["properties"]["name"] == payload
+    # popups are DOM-built: no template-string innerHTML of property values
+    assert "textContent" in body and "innerHTML" not in body

@@ -4,17 +4,23 @@
   conftest.py marks manifest IDs as slow and silently ignores the rest,
   so a stale line would otherwise go unnoticed.
 - The package reads exactly the environment values listed below.
+- Every package definition is reached from the engine's entry points,
+  or is on ``REACH_ALLOWLIST`` with a reason.
 """
 
 from __future__ import annotations
 
 import ast
+import glob
 import os
+import re
+from collections import defaultdict
 
 import pytest
 
 TESTS_DIR = os.path.dirname(os.path.abspath(__file__))
-PACKAGE_DIR = os.path.join(os.path.dirname(TESTS_DIR), "utility_service_areas_spark")
+REPO_DIR = os.path.dirname(TESTS_DIR)
+PACKAGE_DIR = os.path.join(REPO_DIR, "utility_service_areas_spark")
 
 # The engine's whole environment surface: the two deployment settings
 # (core count, driver heap) and the worker import path session.py
@@ -114,3 +120,186 @@ def test_env_scan_sees_every_read_form(tmp_path, src, want):
     path = tmp_path / "m.py"
     path.write_text(src)
     assert _env_names(str(path)) == want
+
+
+# Package definitions that no query, pipeline stage, CLI command,
+# bench.py, tools/ script or perfbench workload reaches, kept on
+# purpose. Each reason starts with one of three categories:
+# - parity: a stage PAPER.md or SURVEY.md §1 cites from the reference
+#   pipeline (R/functions.R, index.qmd);
+# - reference twin: the simpler implementation the named test compares
+#   a reached path against;
+# - recovery: fault recovery for a store that reached code writes.
+REACH_ALLOWLIST: dict[str, str] = {
+    "sources/fetch.py::fetch_assets": "parity: the per-certificate "
+    "download fan-out, R/functions.R:84-164",
+    "sources/fetch.py::missing_assets": "parity: the download stage's "
+    "data/missing-placeholder listing, R/functions.R:100-108",
+    "plans/targets.py::service_areas_replay_stages": "parity: the "
+    "export re-derived from the reference's committed raw layer and CSV",
+    "sources/geojson.py::write_leaflet_map": "parity: index.qmd's "
+    "Leaflet map (SURVEY S9)",
+    "sources/html_table.py::read_html_tables": "parity: the rvest "
+    "html_table scrape, R/functions.R:40-54,251-256 (SURVEY S5)",
+    "sources/pdf.py::pdf_metadata": "parity: download_certificate_pdf, "
+    "R/functions.R:115-140 (SURVEY S6)",
+    "operators/kmeans.py::kmeans_fit_assign": "reference twin: "
+    "test_ann_kernels.py::test_kmeans_numpy_path_matches_jvm holds "
+    "kmeans_fit_assign_np to it",
+    "functions/textops.py::shingles": "reference twin: "
+    "test_r18_fixes.py::test_shingle_sql_matches_column_builders holds "
+    "shingles_sql to it",
+    "functions/textops.py::minhash_col": "reference twin: "
+    "test_r17_perf.py::test_minhash_signatures_match_explode_groupby_reference "
+    "holds minhash_signatures to it",
+    "functions/hashing.py::simhash64_py": "reference twin: "
+    "test_dedup.py::test_simhash_batch_matches_reference_kernel holds "
+    "simhash_batch to it",
+    "functions/spacefill.py::hilbert_index_scalar": "reference twin: "
+    "test_spacefill.py::test_hilbert_vectorized_matches_scalar_reference "
+    "holds hilbert_index to it",
+    "operators/vector_index.py::vacuum_ivfpq_index": "recovery: reclaims "
+    "the _tmp-seg-* staging and unlisted segment directories a crashed "
+    "`index add` leaves",
+}
+
+_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
+
+
+def _names(node: ast.AST) -> set[str]:
+    """Every identifier ``node`` could refer to a definition by: names,
+    attribute names, imported names and identifier-shaped strings (the
+    registry and getattr-style dispatch name functions by string)."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rsplit(".", 1)[-1])
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str) and _IDENT.match(n.value):
+            out.add(n.value)
+    return out
+
+
+def _is_query(decorator: ast.expr) -> bool:
+    fn = decorator.func if isinstance(decorator, ast.Call) else decorator
+    return (isinstance(fn, ast.Name) and fn.id == "query") or (
+        isinstance(fn, ast.Attribute) and fn.attr == "query"
+    )
+
+
+def _reach_report(pkg_dir: str, entry_files: list[str], allow: dict[str, str]):
+    """(unreached, bad_allow) for the top-level definitions of every
+    module under ``pkg_dir``, keyed ``"module/path.py::name"``.
+
+    Roots are the @query functions, every module's top-level statements
+    other than imports, every name in ``entry_files`` and the allowlist.
+    A reached definition reaches every definition whose name its body
+    mentions, in any module; this over-approximates, so a definition
+    used through a local import or a by-name lookup is never reported.
+    ``bad_allow`` lists the allowlist entries that name no definition
+    or that the other roots already reach."""
+    body: dict[str, set[str]] = {}
+    seeds: set[str] = set()
+    queries = set()
+    for path in sorted(glob.glob(os.path.join(pkg_dir, "**", "*.py"), recursive=True)):
+        module = os.path.relpath(path, pkg_dir).replace(os.sep, "/")
+        for node in _parse(path).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                key = f"{module}::{node.name}"
+                body[key] = _names(node)
+                if any(_is_query(d) for d in node.decorator_list):
+                    queries.add(key)
+            elif not isinstance(node, (ast.Import, ast.ImportFrom)):
+                seeds |= _names(node)
+    for path in entry_files:
+        seeds |= _names(_parse(path))
+    by_name = defaultdict(set)
+    for key in body:
+        by_name[key.split("::", 1)[1]].add(key)
+
+    def reach(extra: set[str]) -> set[str]:
+        todo = [*queries, *extra, *(k for n in seeds for k in by_name[n])]
+        seen: set[str] = set()
+        while todo:
+            key = todo.pop()
+            if key not in seen:
+                seen.add(key)
+                todo.extend(k for n in body[key] for k in by_name[n])
+        return seen
+
+    allowed = set(allow) & set(body)
+    unreached = sorted(set(body) - reach(allowed))
+    stale = {k for k in allowed if k in reach(allowed - {k})}
+    return unreached, sorted(stale | (set(allow) - set(body)))
+
+
+def _entry_files() -> list[str]:
+    perfbench = glob.glob(os.path.join(REPO_DIR, "perfbench", "*.py"))
+    return [
+        os.path.join(PACKAGE_DIR, "__main__.py"),
+        os.path.join(REPO_DIR, "__spark_entry__.py"),
+        os.path.join(REPO_DIR, "bench.py"),
+        *glob.glob(os.path.join(REPO_DIR, "tools", "*.py")),
+        *(p for p in perfbench if not os.path.basename(p).startswith("test_")),
+    ]
+
+
+def test_package_code_is_reached():
+    unreached, bad_allow = _reach_report(PACKAGE_DIR, _entry_files(), REACH_ALLOWLIST)
+    assert not unreached, f"package code no entry point reaches: {unreached}"
+    assert not bad_allow, f"allowlist entries missing or already reached: {bad_allow}"
+
+
+@pytest.mark.parametrize(
+    "module, entry, allow, want",
+    [
+        (
+            "def run():\n    return _helper()\n\n\ndef _helper():\n    return 1\n",
+            "from pkg.m import run\nrun()\n",
+            {},
+            ([], []),
+        ),
+        ('@query("q")\ndef q(spark, sf):\n    return 1\n', "", {}, ([], [])),
+        (
+            '@query("q")\ndef q(spark, sf):\n    return globals()["_impl"]()\n\n\n'
+            "def _impl():\n    return 1\n",
+            "",
+            {},
+            ([], []),
+        ),
+        ('KERNELS = {"a": _a}\n\n\ndef _a():\n    return 1\n', "", {}, ([], [])),
+        (
+            "def dead():\n    return _inner()\n\n\ndef _inner():\n    return 1\n",
+            "",
+            {},
+            (["m.py::_inner", "m.py::dead"], []),
+        ),
+        ("def twin():\n    return 1\n", "", {"m.py::twin": "reference twin"}, ([], [])),
+        (
+            '@query("q")\ndef q(spark, sf):\n    return kept()\n\n\ndef kept():\n    return 1\n',
+            "",
+            {"m.py::kept": "reference twin"},
+            ([], ["m.py::kept"]),
+        ),
+        ("", "", {"m.py::gone": "parity"}, ([], ["m.py::gone"])),
+    ],
+    ids=[
+        "helper_of_reached_def",
+        "query_decorator",
+        "string_dispatch",
+        "module_level_code",
+        "unreached_reported",
+        "allowlisted_kept",
+        "stale_allowlist_entry",
+        "missing_allowlist_entry",
+    ],
+)
+def test_reach_scan_follows_every_root_and_edge(tmp_path, module, entry, allow, want):
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "m.py").write_text(module)
+    (tmp_path / "entry.py").write_text(entry)
+    assert _reach_report(str(pkg), [str(tmp_path / "entry.py")], allow) == want

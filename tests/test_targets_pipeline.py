@@ -272,3 +272,32 @@ def test_kml_edit_between_runs_rebuilds_both_kml_stages(spark, pipeline_inputs):
         }
         assert (rows[8.0].n_source_polygons, rows[8.0].geometry) == (1, [square]), stage
         assert rows[169.0].n_source_polygons == 1, stage
+
+
+def test_targets_hash_sees_module_attribute_callees():
+    """Review #5: a build calling `helpers.clean(df)` (module-attribute
+    reference) must change its code hash when helpers.clean changes."""
+    import types
+
+    from utility_service_areas_spark.plans.targets import _build_code_hash
+
+    mod = types.ModuleType("utility_service_areas_spark._fake_helpers")
+
+    def clean_v1(x):
+        return x + 1
+
+    def clean_v2(x):
+        return x + 2
+
+    clean_v1.__module__ = mod.__name__
+    clean_v2.__module__ = mod.__name__
+
+    ns = {"helpers": mod, "__builtins__": {}}
+    exec("def build(df):\n    return helpers.clean(df)\n", ns)
+    build = ns["build"]
+
+    mod.clean = clean_v1
+    h1 = _build_code_hash(build)
+    mod.clean = clean_v2
+    h2 = _build_code_hash(build)
+    assert h1 != h2  # the callee edit invalidates the stage key

@@ -423,3 +423,31 @@ def test_concurrent_overlapping_adds_abort_loudly(spark, tmp_path, monkeypatch):
     # the documented recovery: re-running the add skips committed docs
     again = add_to_bm25_index(spark, d, same)
     assert again["n_docs"] == manifest["n_docs"]
+
+
+def test_bm25_add_dedupes_within_the_batch(spark, tmp_path):
+    """Review #4: duplicate doc_ids INSIDE one add batch (upstream
+    union without dedup / a retried batch concatenation) must not
+    double-count tf/dl — one deterministic row per id survives."""
+    from utility_service_areas_spark.operators.text_index import (
+        add_to_bm25_index,
+        build_bm25_index,
+        load_bm25_index,
+    )
+
+    base = spark.createDataFrame(
+        [(1, "alpha beta", "en", "s", 10)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    d = str(tmp_path / "idx")
+    build_bm25_index(base, d)
+    dup_batch = spark.createDataFrame(
+        [(2, "gamma delta", "en", "s", 11), (2, "gamma delta", "en", "s", 11)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    manifest = add_to_bm25_index(spark, d, dup_batch)
+    assert manifest["n_docs"] == 2
+    assert manifest["l_total"] == 4  # 2 + 2, not 2 + 4
+    _m, postings, doclens = load_bm25_index(spark, d)
+    assert doclens.filter("doc_id = 2").count() == 1
+    assert postings.groupBy("t", "doc_id").count().filter("count > 1").count() == 0

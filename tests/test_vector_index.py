@@ -190,7 +190,7 @@ def test_cli_index_lifecycle(spark, tmp_path, capsys):
 
 
 def _split_emb_files(spark, tmp_path, pred):
-    """The stream side of the corpus as 3 mtime-ordered parquet files."""
+    """The added side of the corpus as 3 mtime-ordered parquet files."""
     import pyarrow.parquet as pq
 
     rest = _emb(spark).filter(pred).orderBy("vec_id")
@@ -210,20 +210,14 @@ def _split_emb_files(spark, tmp_path, pred):
     return str(d)
 
 
-def test_stream_vector_index_maintenance_equals_batch_add(spark, tmp_path):
-    """S42: train the index offline on half the corpus, feed the other
-    half through vector_index_stream_writer (3 micro-batches) — the
-    drained index answers search_ivfpq_index ROW-IDENTICALLY to the
-    same trained index fed the remainder as one batch add (encode is
-    deterministic per row against the frozen geometry, so the batch
-    split cannot matter). A replayed micro-batch (same txn_id) is a
-    no-op. Streamed vectors are searchable: a streamed id finds
-    itself at rank 1."""
-    from utility_service_areas_spark.sources.tables import raw_table_schema
-    from utility_service_areas_spark.streaming.events import (
-        vector_index_stream_writer,
-    )
-
+def test_split_adds_equal_one_batch_add(spark, tmp_path):
+    """S42: train the index offline on half the corpus, add the other
+    half as 3 batches keyed txn_id='stream-{i}' — the index answers
+    search_ivfpq_index ROW-IDENTICALLY to the same trained index fed
+    the remainder as one batch add (encode is deterministic per row
+    against the frozen geometry, so the batch split cannot matter). A
+    replayed batch (same txn_id) is a no-op. Added vectors are
+    searchable: an added id finds itself at rank 1."""
     emb = _emb(spark)
     train = emb.filter(F.col("vec_id") % 2 == 0)
     d_stream = str(tmp_path / "idx_stream")
@@ -232,20 +226,13 @@ def test_stream_vector_index_maintenance_equals_batch_add(spark, tmp_path):
     build_ivfpq_index(train, d_batch)
 
     files = _split_emb_files(spark, tmp_path, F.col("vec_id") % 2 == 1)
-    stream = (
-        spark.readStream.schema(raw_table_schema(spark, SMOKE_SF, "embeddings"))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(files)
-    )
-    q = (
-        vector_index_stream_writer(stream, d_stream, app_id="stream")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    fed = [p for p in q.recentProgress if p["numInputRows"] > 0]
-    assert len(fed) == 3
+    for i in range(3):
+        add_to_ivfpq_index(
+            spark,
+            d_stream,
+            spark.read.parquet(os.path.join(files, f"b{i}.parquet")),
+            txn_id=f"stream-{i}",
+        )
 
     add_to_ivfpq_index(
         spark, d_batch, emb.filter(F.col("vec_id") % 2 == 1)
@@ -266,7 +253,7 @@ def test_stream_vector_index_maintenance_equals_batch_add(spark, tmp_path):
     )
     assert got == want and len(got) == 40
 
-    # planted-new-vector searchable: query WITH a streamed (odd) id,
+    # planted-new-vector searchable: query WITH an added (odd) id,
     # self excluded -> search including self finds it at rank 1
     self_q = emb.filter(F.col("vec_id") == 1).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
@@ -279,7 +266,7 @@ def test_stream_vector_index_maintenance_equals_batch_add(spark, tmp_path):
     )
     assert len(top) == 1 and top[0]["neighbor_id"] == 1
 
-    # replayed micro-batch: txn already recorded -> manifest unchanged
+    # replayed batch: txn already recorded -> manifest unchanged
     replay = add_to_ivfpq_index(
         spark,
         d_stream,

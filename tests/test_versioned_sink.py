@@ -21,6 +21,20 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, "k long, v string")
 
 
+def _files_scanned_for_range(zones: list[dict], lo, hi) -> tuple[int, int]:
+    """(files scanned, rows scanned) for a BETWEEN predicate under
+    zone-map pruning, from a zone_map_audit listing: a file is skipped
+    iff its zone provably excludes the range (NULL-zoned files are
+    always scanned)."""
+    files = rows = 0
+    for z in zones:
+        if z["min"] is not None and (z["max"] < lo or z["min"] > hi):
+            continue
+        files += 1
+        rows += z["rows"]
+    return files, rows
+
+
 def test_round_trip_append_and_time_travel(spark, tmp_path):
     t = str(tmp_path / "tbl")
     v0 = write_version(_df(spark, [(1, "a"), (2, "b")]), t)
@@ -502,7 +516,6 @@ def test_optimize_zorder_row_identical_and_prunes(spark, tmp_path):
     z-order key — the measurable point of clustering."""
     from utility_service_areas_spark.sources.versioned import (
         diff_versions,
-        files_scanned_for_range,
         optimize_version,
         zone_map_audit,
     )
@@ -515,7 +528,7 @@ def test_optimize_zorder_row_identical_and_prunes(spark, tmp_path):
     base_v = write_version(df, t)
 
     zones_a = zone_map_audit(spark, t, base_v, "a")
-    files_before, rows_before = files_scanned_for_range(zones_a, 100, 150)
+    files_before, rows_before = _files_scanned_for_range(zones_a, 100, 150)
     assert files_before == 8  # scattered: every file overlaps
 
     v = optimize_version(spark, t, ["a", "b"], n_files=8)
@@ -531,8 +544,8 @@ def test_optimize_zorder_row_identical_and_prunes(spark, tmp_path):
 
     for key in ("a", "b"):
         zones = zone_map_audit(spark, t, v, key)
-        f_after, r_after = files_scanned_for_range(zones, 100, 150)
-        f_before, r_before = files_scanned_for_range(
+        f_after, r_after = _files_scanned_for_range(zones, 100, 150)
+        f_before, r_before = _files_scanned_for_range(
             zone_map_audit(spark, t, base_v, key), 100, 150
         )
         assert f_after < f_before, key  # the clustering win, measured
@@ -594,7 +607,7 @@ def test_cli_table_optimize(spark, tmp_path, capsys):
 @pytest.mark.usefixtures("versioned_table")
 def test_datasource_pushdown_prunes_planned_partitions(spark, tmp_path):
     """On a Z-ORDERed table, a range predicate plans exactly the
-    partition count files_scanned_for_range predicts (a), results are
+    partition count _files_scanned_for_range predicts (a), results are
     row-identical with pruning active (b), and the plan keeps the
     Filter applied above the scan (c) — pruning is partial, so every
     pushed filter is also returned for Spark to re-apply."""
@@ -602,7 +615,6 @@ def test_datasource_pushdown_prunes_planned_partitions(spark, tmp_path):
 
     from utility_service_areas_spark.sources.pyds import VersionedTableReader
     from utility_service_areas_spark.sources.versioned import (
-        files_scanned_for_range,
         optimize_version,
         zone_map_audit,
     )
@@ -614,7 +626,7 @@ def test_datasource_pushdown_prunes_planned_partitions(spark, tmp_path):
     v = optimize_version(spark, t, ["a"], n_files=8)
 
     zones = zone_map_audit(spark, t, v, "a")
-    want_files, _ = files_scanned_for_range(zones, 100, 150)
+    want_files, _ = _files_scanned_for_range(zones, 100, 150)
     assert 0 < want_files < 8  # the clustered layout actually prunes
 
     # (a) partitions planned == the zone-map audit's prediction
@@ -868,7 +880,6 @@ def test_zone_map_audit_null_zone_for_pre_evolution_files(spark, tmp_path):
     zone (always-scanned) for files that predate it, instead of a bare
     ValueError."""
     from utility_service_areas_spark.sources.versioned import (
-        files_scanned_for_range,
         zone_map_audit,
     )
 
@@ -888,7 +899,7 @@ def test_zone_map_audit_null_zone_for_pre_evolution_files(spark, tmp_path):
     assert null_zones and sum(z["rows"] for z in null_zones) == 4
     assert [(z["min"], z["max"]) for z in real_zones] == [(100, 100)]
     # NULL zones are always scanned, even for a range excluding them
-    files, rows = files_scanned_for_range(zones, 0, 1)
+    files, rows = _files_scanned_for_range(zones, 0, 1)
     assert files == len(null_zones) and rows == 4
 
 
@@ -899,7 +910,6 @@ def test_optimize_hilbert_row_identical_and_prunes(spark, tmp_path):
     base on BOTH keys; an unknown curve is refused."""
     from utility_service_areas_spark.sources.versioned import (
         diff_versions,
-        files_scanned_for_range,
         optimize_version,
         zone_map_audit,
     )
@@ -914,10 +924,10 @@ def test_optimize_hilbert_row_identical_and_prunes(spark, tmp_path):
     d = diff_versions(spark, t, base_v, v)
     assert d["added"] == 0 and d["removed"] == 0
     for key in ("a", "b"):
-        f_after, r_after = files_scanned_for_range(
+        f_after, r_after = _files_scanned_for_range(
             zone_map_audit(spark, t, v, key), 100, 150
         )
-        f_before, r_before = files_scanned_for_range(
+        f_before, r_before = _files_scanned_for_range(
             zone_map_audit(spark, t, base_v, key), 100, 150
         )
         assert f_after < f_before, key
@@ -990,7 +1000,6 @@ def test_manifest_file_stats_plan_without_footers(spark, tmp_path, monkeypatch):
 
     from utility_service_areas_spark.sources.pyds import VersionedTableReader
     from utility_service_areas_spark.sources.versioned import (
-        files_scanned_for_range,
         optimize_version,
         zone_map_audit,
     )
@@ -1008,7 +1017,7 @@ def test_manifest_file_stats_plan_without_footers(spark, tmp_path, monkeypatch):
     for z in zone_map_audit(spark, t, v, "a"):
         assert stats[z["file"]]["cols"]["a"] == [z["min"], z["max"]]
 
-    want_files, _ = files_scanned_for_range(
+    want_files, _ = _files_scanned_for_range(
         zone_map_audit(spark, t, v, "a"), 100, 150
     )
     schema = spark.read.format("versioned_table").load(t).schema
@@ -1084,3 +1093,85 @@ def test_manifest_file_stats_carry_across_appends(spark, tmp_path):
         .collect()
     }
     assert got == {(5, "x")}
+
+
+@pytest.mark.usefixtures("versioned_table")
+def test_datasource_survives_reordered_column_append(spark, tmp_path):
+    """Review #1 (confirmed live): append allows schema-valid column
+    REORDERING (the name+type check is order-insensitive), but Arrow
+    batches bind positionally — the reader must re-project every
+    batch to the announced schema order or it crashes (mixed types)
+    or silently swaps values (same types)."""
+    from utility_service_areas_spark.sources.versioned import write_version
+
+    t = str(tmp_path / "tbl")
+    write_version(
+        spark.createDataFrame([(1, "a")], "k long, v string"), t
+    )
+    write_version(
+        spark.createDataFrame([("b", 2)], "v string, k long"),
+        t,
+        mode="append",
+    )
+    got = {
+        (r.k, r.v)
+        for r in spark.read.format("versioned_table").load(t).collect()
+    }
+    assert got == {(1, "a"), (2, "b")}
+
+    # same-typed reorder: values must not swap
+    t2 = str(tmp_path / "tbl2")
+    write_version(
+        spark.createDataFrame([(1, 100)], "k long, val long"), t2
+    )
+    write_version(
+        spark.createDataFrame([(200, 2)], "val long, k long"),
+        t2,
+        mode="append",
+    )
+    got = {
+        (r.k, r.val)
+        for r in spark.read.format("versioned_table").load(t2).collect()
+    }
+    assert got == {(1, 100), (2, 200)}
+
+
+def test_merge_refuses_ambiguous_duplicate_key_changeset(spark, tmp_path):
+    """Review #3: a changeset with two rows for one key is ambiguous
+    (D+U would lose the delete; U+U would break key uniqueness) —
+    merge must refuse loudly, and the table must be unchanged."""
+    from utility_service_areas_spark.sources.versioned import (
+        list_versions,
+        merge_version,
+        write_version_bucketed,
+    )
+
+    t = str(tmp_path / "tbl")
+    write_version_bucketed(
+        spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"),
+        t,
+        ["k"],
+        4,
+    )
+    bad = spark.createDataFrame(
+        [(1, "x", "U"), (1, None, "D")], "k long, v string, op string"
+    )
+    with pytest.raises(ValueError, match="multiple rows"):
+        merge_version(spark, t, bad)
+    assert list_versions(t) == [0]
+
+
+def test_vacuum_refuses_keep_last_zero(spark, tmp_path):
+    """Review #9: vacuum(keep_last=0) would silently destroy the whole
+    table — it must raise and touch nothing."""
+    from utility_service_areas_spark.sources.versioned import (
+        list_versions,
+        vacuum,
+        write_version,
+    )
+
+    t = str(tmp_path / "tbl")
+    write_version(spark.createDataFrame([(1, "a")], "k long, v string"), t)
+    with pytest.raises(ValueError, match="retain NOTHING"):
+        vacuum(t, keep_last=0)
+    assert list_versions(t) == [0]

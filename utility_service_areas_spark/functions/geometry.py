@@ -2,8 +2,10 @@
 
 The execution environment has no shapely/GEOS, so this module supplies
 the `sf`-equivalent primitives the reference pipeline needs
-(st_area/st_bbox/centroid/st_make_valid/st_intersects/point-in-polygon,
-reference R/functions.R:182,184,406,431,468,471) over a GeoJSON-style
+(st_area/st_bbox/centroid/st_make_valid/point-in-polygon, and
+polygons_intersect, the overlap test that
+operators/geo.py:polygon_overlap_pairs runs; reference
+R/functions.R:182,184,406,431,468,471) over a GeoJSON-style
 representation:
 
     polygon  = list[ring],  ring = list[[x, y]]   (first ring = outer)
@@ -113,30 +115,6 @@ def point_in_polygon(x: float, y: float, poly: Polygon) -> bool:
     return not any(point_in_ring(x, y, hole) for hole in poly[1:])
 
 
-def _ring_contains_sql(ring, x, y):
-    """JVM-side ray cast over one ring: a fold (F.aggregate) over edge
-    indices — no UDF, no Arrow transfer, evaluated inside the stage
-    that produced the candidate row. Bit-identical to the scalar
-    point_in_ring: same half-open semantics, same IEEE op order in the
-    x-crossing expression (try_divide == IEEE divide whenever the
-    scalar path divides at all, because y1 == y2 skips the edge)."""
-    n = F.size(ring)
-    idx = F.sequence(F.lit(1), n - F.lit(1))
-
-    def step(acc, i):
-        p1 = F.try_element_at(ring, i)
-        p2 = F.try_element_at(ring, i + F.lit(1).cast("int"))
-        x1, y1 = F.try_element_at(p1, F.lit(1)), F.try_element_at(p1, F.lit(2))
-        x2, y2 = F.try_element_at(p2, F.lit(1)), F.try_element_at(p2, F.lit(2))
-        cross = (y1 > y) != (y2 > y)
-        xc = x1 + F.try_divide((y - y1) * (x2 - x1), y2 - y1)
-        return F.when(cross & (x < xc), ~acc).otherwise(acc)
-
-    return F.when(n >= F.lit(2), F.aggregate(idx, F.lit(False), step)).otherwise(
-        F.lit(False)
-    )
-
-
 def _flat_rings_mask(xs, ys, flat, n_verts):
     """Vectorized point_in_polygon over a FLAT polygon encoding:
     ``flat`` is every vertex coordinate ([x0,y0,x1,y1,...], rings
@@ -210,24 +188,6 @@ def st_contains_point_grouped(ghash, flat, n_verts, x, y) -> F.Column:
     )
 
 
-def st_contains_point_sql(geom, x, y):
-    """point_in_polygon as a pure Spark SQL expression (higher-order
-    functions): outer-ring ray cast AND NOT any hole ray cast. The
-    whole spatial-join verify stays JVM-side — the plan for a
-    points-in-polygons join is broadcast-join + filter in ONE
-    codegen'd stage, nothing crosses into Python. Null/empty
-    geometries contain nothing (matches the scalar kernel).
-
-    Measured caveat: HOFs are interpreted, not codegen'd — at high
-    candidate volume the grouped Arrow verify
-    (st_contains_point_grouped) wins; this stays the zero-Python
-    option for small/medium joins."""
-    outer = _ring_contains_sql(F.try_element_at(geom, F.lit(1)), _c(x), _c(y))
-    holes = F.slice(geom, 2, F.greatest(F.size(geom) - F.lit(1), F.lit(0)))
-    in_hole = F.exists(holes, lambda r: _ring_contains_sql(r, _c(x), _c(y)))
-    return F.coalesce(outer & ~in_hole, F.lit(False))
-
-
 def _orient(ax, ay, bx, by, cx, cy) -> int:
     v = (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
     return 0 if v == 0 else (1 if v > 0 else -1)
@@ -254,7 +214,7 @@ def segments_intersect(p1, p2, p3, p4) -> bool:
 
 
 def polygons_intersect(a: Polygon, b: Polygon) -> bool:
-    """st_intersects for simple polygons: bbox reject, then edge
+    """Intersection test for simple polygons: bbox reject, then edge
     crossings, then mutual containment."""
     ax0, ay0, ax1, ay1 = polygon_bbox(a)
     bx0, by0, bx1, by1 = polygon_bbox(b)
@@ -605,18 +565,6 @@ def overlay(ma: MultiPolygon, mb: MultiPolygon, op: str) -> MultiPolygon:
     return _rings_to_multipolygon(_chain_rings(kept, tol), scale)
 
 
-def union_polygons(a: Polygon, b: Polygon) -> MultiPolygon:
-    return overlay([a], [b], "union")
-
-
-def intersection_polygons(a: Polygon, b: Polygon) -> MultiPolygon:
-    return overlay([a], [b], "intersection")
-
-
-def difference_polygons(a: Polygon, b: Polygon) -> MultiPolygon:
-    return overlay([a], [b], "difference")
-
-
 def multipolygon_area(mp: MultiPolygon) -> float:
     return sum(polygon_area(p) for p in mp)
 
@@ -759,29 +707,6 @@ def _st_centroid_raw(polys: pd.Series) -> pd.DataFrame:
 def st_centroid(poly) -> F.Column:
     poly = _c(poly)
     return F.when(poly.isNotNull(), _st_centroid_raw(F.coalesce(poly, _sentinel_poly())))
-
-
-@F.pandas_udf(BooleanType())
-def _st_intersects_raw(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            polygons_intersect(pa, pb)
-            if pa is not None and len(pa) and pb is not None and len(pb)
-            else False
-            for pa, pb in zip(a, b)
-        ]
-    )
-
-
-def st_intersects(a, b) -> F.Column:
-    a, b = _c(a), _c(b)
-    return F.coalesce(
-        F.when(
-            a.isNotNull() & b.isNotNull(),
-            _st_intersects_raw(F.coalesce(a, _sentinel_poly()), F.coalesce(b, _sentinel_poly())),
-        ),
-        F.lit(False),
-    )
 
 
 @F.pandas_udf(POLYGON_DTYPE)

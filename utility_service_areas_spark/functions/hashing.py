@@ -14,8 +14,6 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, LongType
 
-_MASK64 = (1 << 64) - 1
-
 
 def _token_hash64(token: str) -> int:
     return int.from_bytes(hashlib.md5(token.encode()).digest()[:8], "big")
@@ -79,10 +77,6 @@ def simhash_batch(texts) -> np.ndarray:
 @F.pandas_udf(LongType())
 def simhash64(texts: pd.Series) -> pd.Series:
     return pd.Series(simhash_batch(texts.tolist()))
-
-
-def hamming64_py(a: int, b: int) -> int:
-    return bin((a ^ b) & _MASK64).count("1")
 
 
 _POPCOUNT8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)

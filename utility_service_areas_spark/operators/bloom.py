@@ -141,24 +141,6 @@ def bloom_anti_join(
     return definite_new.unionByName(confirmed_new)
 
 
-def bloom_semi_join(
-    probe: DataFrame,
-    build: DataFrame,
-    probe_key: str,
-    build_key: str,
-    m: int = 1 << 20,
-    k: int = 5,
-    probe_id: str | None = None,
-) -> DataFrame:
-    """Exact ``probe WHERE key IN build`` via bloom prefilter."""
-    tagged = bloom_membership(probe, build, probe_key, build_key, m, k, probe_id)
-    candidates = tagged.filter(F.col("__maybe_member")).drop("__maybe_member")
-    build_keys = build.select(F.col(build_key).alias("__bk")).distinct()
-    return candidates.join(
-        build_keys, candidates[probe_key] == F.col("__bk"), "left_semi"
-    )
-
-
 def repeated_key_prefilter(
     df: DataFrame,
     key_col: str,

@@ -95,20 +95,6 @@ def shingle_exploded(
     return ex
 
 
-_PAIRS_EXPR = """
-    flatten(transform(docs, (a, i) ->
-        transform(slice(docs, i + 2, size(docs) - i - 1),
-                  b -> struct(a AS doc_a, b AS doc_b))))
-"""
-
-
-# Star pairs for an over-cap bucket: keeper (min doc — the list is
-# sorted) paired with every other member. O(B) instead of O(B²).
-_STAR_PAIRS_EXPR = """
-    transform(slice(docs, 2, size(docs) - 1),
-              b -> struct(docs[0] AS doc_a, b AS doc_b))
-"""
-
 _STAR_SIG_PAIRS_EXPR = """
     transform(slice(items, 2, size(items) - 1),
               b -> struct(items[0].doc AS doc_a, b.doc AS doc_b,

@@ -136,10 +136,11 @@ def points_in_polygons(
     arrive with their polygon's flat vertex encoding (computed once
     per polygon BELOW the join), a JVM-computed geometry hash groups
     each Arrow batch so the numpy kernel runs once per distinct
-    polygon over all its points. Measured against the pure-JVM
-    higher-order-function verify (st_contains_point_sql): the HOF is
-    interpreted per edge per row and loses ~8× at 10× point volume,
-    while the grouped kernel's per-row cost is a vectorized numpy op.
+    polygon over all its points. Measured against a pure-JVM
+    higher-order-function verify (an F.aggregate ray cast over the
+    edges): the HOF is interpreted per edge per row and loses ~8× at
+    10× point volume, while the grouped kernel's per-row cost is a
+    vectorized numpy op.
 
     Duplicate or null ``id_col`` values are sound by construction:
     every polygon ROW participates independently (no keyed collapse).

@@ -509,7 +509,7 @@ def connected_components_twostar(
     node is adjacent to its component minimum — and pinned
     label-identical to ``connected_components`` on chains, cliques,
     stars, and the substrate's LSH pair graph
-    (tests/test_r13_operators.py).
+    (tests/test_graph_skew.py).
 
     Each round: two groupBy-min aggregations + two node-keyed joins
     (all partial-agged, no global structure), ``lineage_cut`` per

@@ -110,11 +110,6 @@ def kmeans_fit_assign(
     )
 
 
-def kmeans_cost(assigned_with_dist: DataFrame) -> float:
-    """Total within-cluster squared distance (micros units)."""
-    return assigned_with_dist.agg(F.sum("dist2_micros")).collect()[0][0]
-
-
 def _np_half_away(v):
     """round-half-away-from-zero on doubles. Spark's round() (BigDecimal
     HALF_UP on the shortest-decimal rendering) and DuckDB's round()

@@ -1,14 +1,13 @@
 """Multimodal columns (SURVEY.md §2.5): image/audio/video as opaque
-binary columns with typed metadata, plus decode / resize /
-frame-sample / feature-extract stages.
+binary columns with typed metadata, plus decode / frame-sample /
+feature-extract stages.
 
-The container has no media libraries (PIL/ffmpeg/librosa), so the
-byte-level decoders are STUBS: `decode_media_real` raises
-NotImplementedError and documents exactly where a real decoder plugs
-in; the pipeline uses `fake_decode_meta`, a deterministic md5-based
-stand-in, so the Spark-side plumbing — schema, Arrow batch shape,
-partitioning, UDF signatures — is real and fully tested. Swapping the
-fake for PIL is a one-function change with no plan-shape impact.
+No media library (PIL/ffmpeg/librosa) is a dependency, so decoding
+uses `fake_decode_meta`, a deterministic md5-based stand-in with the
+contract a real decoder has (bytes, mime -> metadata dict); the
+Spark-side plumbing — schema, Arrow batch shape, partitioning, UDF
+signatures — is real and fully tested. Swapping the fake for PIL is a
+one-function change with no plan-shape impact.
 
 Scale: media bytes stay in executor-side Arrow batches end-to-end
 (mapInPandas); metadata-only stages (frame sampling, filtering by
@@ -22,13 +21,12 @@ import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     FloatType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -57,16 +55,6 @@ def attach_media(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         F.col(id_col),
         F.encode(F.col(text_col), "utf-8").alias("media_bytes"),
         mime.alias("mime"),
-    )
-
-
-def decode_media_real(blob: bytes, mime: str) -> dict:
-    """Real decoder entry point — requires PIL (images), wave/librosa
-    (audio), or pyav/ffmpeg (video), none of which exist in this
-    environment."""
-    raise NotImplementedError(
-        "media decoding requires PIL/librosa/pyav; this environment has "
-        "none — use fake_decode_meta (deterministic stand-in) instead"
     )
 
 
@@ -99,23 +87,6 @@ def decode_media(df: DataFrame, bytes_col: str = "media_bytes", mime_col: str = 
             yield pdf
 
     return df.mapInPandas(decode, out_schema)
-
-
-def resize_images(
-    df: DataFrame, target_w: int, target_h: int, bytes_col: str = "media_bytes"
-) -> DataFrame:
-    """Resize stage: recompute metadata (and, with a real codec, the
-    bytes). The fake keeps bytes and rewrites dimensions — identical
-    batch shape and schema to a real implementation."""
-    return df.withColumn(
-        "meta",
-        F.struct(
-            F.col("meta.mime").alias("mime"),
-            F.lit(target_w).cast("int").alias("width"),
-            F.lit(target_h).cast("int").alias("height"),
-            F.col("meta.duration_ms").alias("duration_ms"),
-        ),
-    )
 
 
 def sample_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:

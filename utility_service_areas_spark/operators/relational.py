@@ -78,18 +78,6 @@ def latest_per_group(
     )
 
 
-def earliest_per_group(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    order_cols: Sequence[Column],
-) -> DataFrame:
-    """Keep the single earliest row per group (head(n=1) semantics).
-
-    Parity: get_formed_year_for_cert, reference R/functions.R:314-319.
-    """
-    return latest_per_group(df, group_cols, order_cols)
-
-
 def dedup_first_per_key(
     df: DataFrame,
     key_cols: Sequence[str],

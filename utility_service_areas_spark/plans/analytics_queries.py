@@ -1413,8 +1413,7 @@ def revenue_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bootstrap_hash_col(hash_seam: str):
     """Per-(o_orderkey, r) integer draw uniform on [0, 2^60) — the
-    seam shared by the two batch CI variants AND the S24 streaming
-    twin (streaming/events.py:bootstrap_sums_stream), so \'identical
+    seam shared by the two batch CI variants, so \'identical
     expression\' is true by construction. \'md5\' is the
     cross-engine-replayable anchor; \'xxhash64\' the production seam
     (~13x cheaper, no DuckDB replay)."""
@@ -1461,7 +1460,7 @@ def _bootstrap_ci_plan(
     md5 at ~13x the CPU of xxhash64 at 9.6M draws, a real cluster-CPU
     multiplier at 100 TB x 64 replicates (VERDICT r9 'What's wrong'
     #2). Threshold sharing is by construction, and the twin pin
-    (tests/test_r10_operators.py) asserts both variants agree on the
+    (tests/test_analytics_queries.py) asserts both variants agree on the
     point sum and produce CIs within the bootstrap's own sampling
     error of each other."""
     od = load_table(spark, sf_dir, "orders").select(
@@ -1497,17 +1496,6 @@ def _bootstrap_ci_plan(
     )
 
 
-def revenue_bootstrap_ci_fast_full(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The full 4-column CI surface of the xxhash64 production seam
-    (point + both order-statistic bounds) — NOT registered, because
-    the xxhash64-derived bounds have no DuckDB replay; the twin pin
-    (tests/test_r10_operators.py) holds them to the md5 anchor's CI
-    within bootstrap sampling error."""
-    return _bootstrap_ci_plan(spark, sf_dir, hash_seam="xxhash64")
-
-
 @query(
     "revenue_bootstrap_ci_fast",
     oracle=f"""
@@ -1535,9 +1523,9 @@ def revenue_bootstrap_ci_fast_full(
     "and 63 materialized and ordered — NULL-poisoned to a mismatch "
     "if any replicate sum went missing), and n_replicates. The "
     "xxhash CI computation still EXECUTES under this projection "
-    "(ci_ok depends on both bounds); the full 4-column surface lives "
-    "in revenue_bootstrap_ci_fast_full, twin-pinned to the md5 "
-    "anchor (tests/test_r10_operators.py).",
+    "(ci_ok depends on both bounds); the full 4-column surface of "
+    "_bootstrap_ci_plan is twin-pinned to the md5 anchor "
+    "(tests/test_analytics_queries.py).",
     tags=("analytics",),
 )
 def revenue_bootstrap_ci_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1857,14 +1845,7 @@ def part_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def hourly_event_rollup(df: DataFrame) -> DataFrame:
     """The (event_type, hour) count rollup used by
-    events_burst_detection. The S23 streaming twin
-    (streaming/events.py:hourly_counts_stream) computes the same
-    counts but keys on F.window('ts', '1 hour') instead of this
-    date_trunc alias — a derived-expression alias carries no
-    watermark metadata, so sharing this exact expression would
-    silently disable state eviction (ADVICE r9); window.start equals
-    date_trunc('hour', ts) value-for-value and the fold equality is
-    pinned in tests/test_streaming.py."""
+    events_burst_detection."""
     return (
         df.groupBy("event_type", F.date_trunc("hour", "ts").alias("h"))
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
@@ -2345,8 +2326,7 @@ _KMV_NUM = float((_KMV_K - 1) * _KMV_SCALE)
 def _kmv_hash_col(col_name: str):
     """The md5 integer-hash seam over [0, 2^60) — the ONE Spark
     expression mirroring DuckDB's ('0x'||substr(md5(x),1,15))::BIGINT.
-    Shared by the KMV sketches, the S25 streaming sketch
-    (streaming/events.py:kmv_sketch_stream), shard_zonemap_prune and
+    Shared by the KMV sketches, shard_zonemap_prune and
     dataset_split_assign, so every consumer hashes identically by
     construction."""
     return F.conv(

@@ -1242,7 +1242,7 @@ def minhash_bbit_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     "#50's min-label propagation — same pairs, same keeper/size "
     "output, SAME oracle (the two algorithms are additionally pinned "
     "label-identical on chain/clique/star/substrate graphs in "
-    "tests/test_r13_operators.py). Why a second CC: label propagation "
+    "tests/test_graph_skew.py). Why a second CC: label propagation "
     "re-joins the FULL edge list every round; two-star provably "
     "shrinks the edge multiset toward stars (O(log^2 n) rounds, and "
     "near-clique dedup components collapse to a star in ONE "

@@ -21,7 +21,8 @@ def merge_upsert(
     """MERGE semantics without a table format: full outer join on the
     key; changed rows win, unmatched changes insert, unmatched
     snapshot rows carry forward. One shuffle on the key (or zero if
-    both sides are co-bucketed on it — see sources/sinks.py)."""
+    both sides are bucketed on it, as
+    sources/versioned.py:write_version_bucketed lays a table out)."""
     s = snapshot.select(key, *[F.col(c).alias(f"s_{c}") for c in cols])
     c = changes.select(key, *[F.col(ch).alias(f"c_{ch}") for ch in cols])
     joined = s.join(c, key, "full_outer")
@@ -637,7 +638,7 @@ def dataset_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     "row-local rules fold into ONE partial-agged pass per table; the "
     "orphan check is a broadcast/AQE anti-join; the temporal rule's "
     "fact-fact join keys on orderkey — the canonical candidate for "
-    "co-bucketed layout (sources/sinks.py:write_bucketed_table), "
+    "bucketed layout (sources/versioned.py:write_version_bucketed), "
     "which makes it exchange-free at scale. The two stats frames are "
     "lineage-cut 1-row checkpoints (five/two consumers each — "
     "without the cut every union branch re-runs its corpus "
@@ -802,14 +803,12 @@ def revenue_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def cdc_tiebreak_order():
     """THE deterministic CDC winner order, shared by the batch window
-    (#233), the S32 streaming fold's comparator
-    (streaming/events.py:_cdc_winner_key) and the version-tie property
-    test: highest version wins; on a version TIE a delete beats an
-    update (op ASC — 'D' < 'U': a same-version delete+update pair
-    resolves to tombstone, the defensive read), and two same-version
-    updates break on bal_cents ASC NULLS FIRST. r13 ADVICE fix — the
-    r12 window ordered by v DESC alone, nondeterministic on duplicate
-    versions, and the streaming fold kept first-arrival instead."""
+    (#233) and the version-tie property test: highest version wins; on
+    a version TIE a delete beats an update (op ASC — 'D' < 'U': a
+    same-version delete+update pair resolves to tombstone, the
+    defensive read), and two same-version updates break on bal_cents
+    ASC NULLS FIRST. r13 ADVICE fix — the r12 window ordered by v DESC
+    alone, nondeterministic on duplicate versions."""
     return (
         F.col("v").desc(),
         F.col("op").asc(),

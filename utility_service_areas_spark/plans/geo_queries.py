@@ -139,8 +139,9 @@ def geo_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND a.y0 <= b.y0 + b.h AND b.y0 <= a.y0 + a.h
     """,
     doc="Overlap detection self-join (README Q1 'do service areas "
-    "overlap?'): bbox candidates, exact st_intersects verify "
-    "(touching boundaries count, matching inclusive interval oracle).",
+    "overlap?'): bbox candidates, exact polygons_intersect verify in "
+    "operators/geo.py:polygon_overlap_pairs (touching boundaries "
+    "count, matching inclusive interval oracle).",
     tags=("geo",),
 )
 def geo_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1270,7 +1270,7 @@ def _splice_oracle_sql(k_levels: int = _LRS_K) -> str:
     "rank round + one descent level (measured: lrs_k_sweep in "
     "BENCH_TREND, `python tools/stress.py --lrs-k`); too-small K "
     "saturates max_rep_len at 2^K but never corrupts sub-resolution "
-    "repeats (tests/test_r13_operators.py production-direction pin).",
+    "repeats (tests/test_dedup.py production-direction pin).",
     tags=("dedup", "pipeline"),
 )
 def dedup_suffix_lrs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1407,10 +1407,7 @@ def tokenizer_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def drift_binned_counts(df: DataFrame) -> DataFrame:
-    """(source, bin, a, b) cohort counts — shared by
-    source_length_drift and the S22 streaming twin
-    (streaming/events.py:drift_counts_stream), so the twins'
-    'identical expression' contract is true by construction."""
+    """(source, bin, a, b) cohort counts for source_length_drift."""
     h = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
     ).cast("long")

@@ -3,10 +3,10 @@
 Parity: download_certificate_pdf (reference R/functions.R:115-140)
 fetches a per-certificate PDF; the engine side treats PDFs as opaque
 binary columns with metadata, exactly like the multimodal media
-columns. Text extraction needs a PDF library (pdfminer/pypdf — not in
-this environment): `extract_pdf_text_real` raises NotImplementedError
-naming the dependency; `fake_extract_meta` supplies deterministic
-metadata so the distributed plumbing is testable end-to-end.
+columns, read with ``spark.read.format("binaryFile")``. Text
+extraction needs a PDF library (pdfminer/pypdf), which is not a
+dependency; `fake_extract_meta` supplies deterministic metadata so the
+distributed plumbing is testable end-to-end.
 """
 
 from __future__ import annotations
@@ -15,7 +15,7 @@ import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -32,18 +32,6 @@ PDF_META_SCHEMA = StructType(
         StructField("is_pdf", StringType()),
     ]
 )
-
-
-def read_binary_docs(spark: SparkSession, path_glob: str) -> DataFrame:
-    """Distributed binary scan: (path, modificationTime, length, content)."""
-    return spark.read.format("binaryFile").load(path_glob)
-
-
-def extract_pdf_text_real(blob: bytes) -> str:
-    raise NotImplementedError(
-        "PDF text extraction requires pypdf/pdfminer; not present in this "
-        "environment — use fake_extract_meta for pipeline plumbing"
-    )
 
 
 def fake_extract_meta(path: str, blob: bytes) -> dict:

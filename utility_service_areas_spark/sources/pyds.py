@@ -541,8 +541,7 @@ class VersionedTableDataSource(DataSource):
     (pushFilters) and prune whole files and row groups by parquet
     footer min/max — on a Z-ORDERed table (optimize_version) a range
     predicate reads the few files its zones allow instead of all of
-    them, automatically (VERDICT r15 task #2; files_scanned_for_range
-    predicts exactly the partition count planned). On a BUCKETED
+    them, automatically (VERDICT r15 task #2). On a BUCKETED
     lineage (write_version_bucketed), EqualTo/In predicates covering
     the bucket key additionally prune to the matching buckets' dirs —
     the planner evaluates the layout's own pmod(xxhash64(keys), n)

@@ -120,12 +120,3 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every substrate table as a temp view so users can run
-    plain `spark.sql(...)` against the engine (same names DuckDB's
-    oracle side uses)."""
-    for name in TABLES:
-        if os.path.exists(os.path.join(sf_dir, f"{name}.parquet")):
-            load_table(spark, sf_dir, name).createOrReplaceTempView(name)

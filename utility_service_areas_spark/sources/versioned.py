@@ -50,8 +50,6 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from utility_service_areas_spark.operators.localrel import local_df
 
-_MANIFEST_RE = "_v{n}.json"
-
 
 def _manifest_name(n: int) -> str:
     return f"_v{n}.json"
@@ -1267,8 +1265,7 @@ def zone_map_audit(
             if column not in pf.schema_arrow.names:
                 # pre-evolution file on a merge_schema lineage: its
                 # rows read NULL for this column, so report a NULL
-                # zone — always-scanned, consistent with
-                # files_scanned_for_range (ADVICE r15)
+                # zone — always scanned (ADVICE r15)
                 rows = sum(
                     pf.metadata.row_group(rg).num_rows
                     for rg in range(pf.num_row_groups)
@@ -1296,18 +1293,3 @@ def zone_map_audit(
                 {"file": os.path.join(rel, name), "min": mn, "max": mx, "rows": rows}
             )
     return out
-
-
-def files_scanned_for_range(
-    zones: list[dict], lo, hi
-) -> tuple[int, int]:
-    """(files scanned, rows scanned) for a BETWEEN predicate under
-    zone-map pruning — a file is skipped iff its zone provably
-    excludes the range (NULL-zoned files are always scanned)."""
-    files = rows = 0
-    for z in zones:
-        if z["min"] is not None and (z["max"] < lo or z["min"] > hi):
-            continue
-        files += 1
-        rows += z["rows"]
-    return files, rows

@@ -1,24 +1,29 @@
-"""Structured Streaming operators over the events stream
-(SURVEY.md §2.6): windowed aggregation with watermarks, native
-session windows, stateful sessionization via applyInPandasWithState,
-and stream dedup.
+"""Structured Streaming operators (SURVEY.md §2.6).
 
-Each streaming transform has a batch twin in plans/event_queries.py
-whose DuckDB oracle is the correctness spec; tests run the stream
-with trigger(availableNow=True) and assert stream == batch.
+- ``tumbling_counts``: windowed aggregation with a watermark;
+- ``sessionize_stateful``: stateful sessionization via
+  applyInPandasWithState;
+- ``tdigest_stream``: t-digest quantiles held in keyed state;
+- ``versioned_table_stream_writer``: the exactly-once sink into the
+  versioned table;
+- the S40 online logistic-regression state (``logreg_online_*``).
+
+The three stream transforms have batch twins in plans/event_queries.py
+and plans/analytics_queries.py whose DuckDB oracles are the
+correctness spec; tests run the stream with trigger(availableNow=True)
+and assert stream == batch. tools/stress.py times them at scale.
 
 Scale: watermarks bound state; session state is per-user (keyed state
-scales horizontally with the shuffle on user_id); the parquet source
-is a stand-in for Kafka — the transforms are source-agnostic.
+scales horizontally with the shuffle on user_id); the transforms are
+source-agnostic.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -33,28 +38,6 @@ from pyspark.sql.types import (
 from utility_service_areas_spark.operators.localrel import local_df
 
 SESSION_GAP_MIN = 30
-
-
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream of the events table (stand-in for Kafka).
-
-    Streaming file sources require an explicit schema; it is derived
-    from the substrate's parquet footer via the SAME resolution path
-    the batch reader uses (raw_table_schema + normalize_event_ts), so
-    the two readers cannot desync when the driver switches events.ts
-    encodings (long-nanos vs TIMESTAMP_NTZ).
-    """
-    from utility_service_areas_spark.sources.tables import (
-        normalize_event_ts,
-        raw_table_schema,
-    )
-
-    raw = (
-        spark.readStream.schema(raw_table_schema(spark, sf_dir, "events"))
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(os.path.join(sf_dir))
-    )
-    return normalize_event_ts(raw)
 
 
 def tumbling_counts(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -73,23 +56,6 @@ def tumbling_counts(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
             "event_type",
             "n_events",
             "sum_value_cents",
-        )
-    )
-
-
-def session_windows(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Native gap-based session windows (F.session_window)."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(
-            F.session_window("ts", f"{SESSION_GAP_MIN} minutes").alias("w"), "user_id"
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
         )
     )
 
@@ -151,84 +117,6 @@ def sessionize_stateful(stream: DataFrame) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-
-
-def dedup_users_within_watermark(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Stream dedup: one event per user within the watermark horizon
-    (keeps the first-arrived row — streaming semantics; the batch twin
-    events_latest_per_user keeps the latest by timestamp instead)."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(["user_id"])
-    )
-
-
-def enrich_with_dim(stream: DataFrame, dim: DataFrame, stream_key: str, dim_key: str) -> DataFrame:
-    """Stream-static enrichment join: the static dim side is broadcast
-    to every micro-batch (re-resolved per batch, so slowly-changing
-    dims refresh on re-read). No stream state is kept — the canonical
-    way to attach reference data to a stream."""
-    return stream.join(F.broadcast(dim), stream[stream_key] == dim[dim_key], "left")
-
-
-def click_purchase_join(stream: DataFrame, horizon_min: int = 60) -> DataFrame:
-    """Stream-stream inner join: purchases matched to any click by the
-    same user within the preceding ``horizon_min`` minutes. Watermarks
-    on both sides bound the join state buffers (the scale requirement
-    for stream-stream joins: state is dropped once an input falls
-    behind its watermark + horizon).
-    """
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "2 hours")
-    )
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    return purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {horizon_min} MINUTES")),
-    ).select("purchase_id", "click_id", F.col("p_user").alias("user_id"))
-
-
-def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "append"):
-    """Drain a stream with availableNow into an in-memory table; used
-    by tests to compare stream results against the batch twin."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return q
-
-
-def first_seen_daily_counts(stream: DataFrame) -> DataFrame:
-    """Streaming twin of daily_new_users_cumulative's heavy half: a
-    user's FIRST event survives a global stream dedup on user_id
-    (state = one row per user; no watermark column, so the dedup key
-    set is the retained state — at 100 TB scope it per app-defined
-    cohort or use dropDuplicatesWithinWatermark for a bounded
-    horizon), then new-user counts aggregate per day. The running
-    cumulative sum stays a batch-side window over the tiny per-day
-    output, exactly as in the batch query."""
-    firsts = stream.dropDuplicates(["user_id"])
-    return firsts.groupBy(F.to_date("ts").alias("d")).count()
 
 
 _TDIGEST_STATE_SCHEMA = StructType(
@@ -298,828 +186,6 @@ def tdigest_stream(stream: DataFrame) -> DataFrame:
     )
 
 
-def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream of the documents table (the ingest side of a
-    streaming curation pipeline; stand-in for Kafka)."""
-    from utility_service_areas_spark.sources.tables import raw_table_schema
-
-    return (
-        spark.readStream.schema(raw_table_schema(spark, sf_dir, "documents"))
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(os.path.join(sf_dir))
-    )
-
-
-def dedup_documents_stream(stream: DataFrame) -> DataFrame:
-    """Streaming exact dedup on the normalized-text hash — the stream
-    twin of `dedup_exact_docs` (plans/dedup_queries.py): the FIRST
-    document with each hash passes through, later copies are dropped
-    by keyed state.
-
-    State posture: dropDuplicates state is per-hash and unbounded by
-    design here (documents carry no event time); a 100 TB ingest
-    attaches an arrival timestamp and switches to
-    dropDuplicatesWithinWatermark — same plan, bounded state — or
-    periodically rewrites the corpus through the batch operator.
-    """
-    from utility_service_areas_spark.functions.textops import normalized_text
-
-    return stream.select(
-        "doc_id",
-        F.md5(normalized_text(F.col("text"))).alias("text_hash"),
-    ).dropDuplicates(["text_hash"])
-
-
-def _funnel_map_stage(stream: DataFrame) -> DataFrame:
-    """Map-side prefix of the curation funnel (plans/text_queries.py:
-    _funnel_stage_frame), stream-safe by construction: token count,
-    language guess, quality score, the stage-1 gate predicate, and the
-    normalized-text hash. No state, no shuffle — every downstream
-    funnel stream hangs off this one projection."""
-    from utility_service_areas_spark.functions.textops import normalized_text
-    from utility_service_areas_spark.operators.text import (
-        lang_guess,
-        quality_score_micros,
-        token_counts,
-    )
-
-    ws, _ = token_counts(F.col("text"))
-    t = ws.cast("long")
-    p1 = (
-        (lang_guess(F.col("text")) == "en")
-        & (quality_score_micros(F.col("text")) >= 500_000)
-        & t.between(5, 5000)
-    )
-    return stream.select(
-        "doc_id",
-        "source",
-        t.alias("t"),
-        p1.alias("p1"),
-        F.md5(normalized_text(F.col("text"))).alias("h"),
-    )
-
-
-def funnel_gate_counts_stream(stream: DataFrame) -> DataFrame:
-    """Streaming twin of the funnel's stage-0/1 per-source counts
-    (curation_funnel_by_source rows stage_idx 0-1): cumulative
-    (n0, t0, n1, t1) per source as an update-mode aggregation.
-    Stages 0-1 are pure map-side predicates, so the streaming counts
-    are exact — the dashboard's top-of-funnel updates per trigger."""
-    m = _funnel_map_stage(stream)
-    return m.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n0"),
-        F.sum("t").cast("long").alias("t0"),
-        F.sum(F.when(F.col("p1"), 1).otherwise(0)).cast("long").alias("n1"),
-        F.coalesce(F.sum(F.when(F.col("p1"), F.col("t"))), F.lit(0))
-        .cast("long")
-        .alias("t1"),
-    )
-
-
-_FUNNEL_DELTA_STATE_SCHEMA = StructType(
-    [
-        StructField("keeper_doc", LongType()),
-        StructField("keeper_src", StringType()),
-        StructField("keeper_t", LongType()),
-    ]
-)
-_FUNNEL_DELTA_OUT_SCHEMA = StructType(
-    [
-        StructField("source", StringType()),
-        StructField("d_docs", LongType()),
-        StructField("d_tokens", LongType()),
-    ]
-)
-
-
-def _funnel_dedup_delta_fn(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Keeper-correction deltas for one normalized-text hash: state is
-    the current keeper (the MIN gate-passing doc_id seen so far — the
-    batch funnel's exact keeper rule, so the converged result is
-    arrival-order independent). When a batch brings a smaller doc_id,
-    emit a retraction (-1) for the old keeper's source and an
-    assertion (+1) for the new one — the Flink-style retract-stream
-    shape a downstream dashboard materializes by summing."""
-    best_doc = best_src = best_t = None
-    for pdf in pdfs:
-        if len(pdf) == 0:
-            continue
-        row = pdf.loc[pdf["doc_id"].idxmin()]
-        if best_doc is None or int(row["doc_id"]) < best_doc:
-            best_doc = int(row["doc_id"])
-            best_src = str(row["source"])
-            best_t = int(row["t"])
-    out = []
-    if best_doc is not None:
-        if not state.exists:
-            state.update((best_doc, best_src, best_t))
-            out.append((best_src, 1, best_t))
-        else:
-            old_doc, old_src, old_t = state.get
-            if best_doc < old_doc:
-                state.update((best_doc, best_src, best_t))
-                out.append((old_src, -1, -old_t))
-                out.append((best_src, 1, best_t))
-    yield pd.DataFrame(out, columns=["source", "d_docs", "d_tokens"])
-
-
-def funnel_exact_dedup_deltas(stream: DataFrame) -> DataFrame:
-    """Streaming twin of the funnel's stage-2 per-source counts: the
-    exact-dedup keeper state keyed by normalized-text hash, emitting
-    +1/-1 correction deltas as keepers change. SUM(d_docs), SUM(
-    d_tokens) per source converges to curation_funnel_by_source's
-    (n2, t2) for any arrival order — pinned by tests/test_streaming.py.
-
-    Scale posture: state is one 3-field row per DISTINCT hash whose
-    gate survivors have appeared (bounded by distinct content, not
-    stream length); the delta output is bounded by keeper churn, not
-    input volume. Stages 3-4 are deliberately batch-only: minhash+CC
-    needs within-corpus pairs over the full survivor set and the
-    quota is a global per-source ranking — the streaming answer to
-    near-dup ingest is ingest_dedup_stream (the persisted band
-    index), and quota runs as a periodic batch over the materialized
-    survivor set."""
-    m = _funnel_map_stage(stream).filter(F.col("p1"))
-    return m.groupBy("h").applyInPandasWithState(
-        _funnel_dedup_delta_fn,
-        outputStructType=_FUNNEL_DELTA_OUT_SCHEMA,
-        stateStructType=_FUNNEL_DELTA_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def minhash_sig_map(
-    docs: DataFrame,
-    n_hashes: int = 8,
-    k: int = 3,
-    keep: tuple[str, ...] = (),
-) -> DataFrame:
-    """MAP-SIDE MinHash signatures — the streaming-safe twin of
-    operators/dedup.py:minhash_signatures.
-
-    The batch operator computes each component as a min-AGGREGATE over
-    exploded shingles (one shuffle); a stream can't afford a stateful
-    aggregation just to hash a row, so this computes the same value as
-    `array_min` over the per-row shingle array: both are the
-    lexicographic minimum of the seeded md5 hex strings, so the two
-    are value-identical doc by doc (pinned by
-    tests/test_streaming.py::test_ingest_dedup_stream_matches_batch).
-    Docs with < k tokens have no shingles → null components (the batch
-    twin simply has no row; callers treat both as "no bands").
-
-    Note the HOF caveat (BENCH_TREND r8): transform() lambdas evaluate
-    interpreted, not codegen — fine for per-micro-batch ingest rates,
-    deliberately NOT used for the 100 TB batch re-index path.
-    """
-    from utility_service_areas_spark.functions.textops import shingles, tokens
-
-    def seeded(i):
-        # A single-arg lambda is REQUIRED: F.transform treats a 2-arg
-        # lambda as (element, index), so the `lambda s, i=i` idiom
-        # silently replaces the seed with the array position.
-        return lambda s: F.md5(F.concat(F.lit(f"{i}:"), s))
-
-    sh = shingles(tokens(F.col("text")), k)
-    return docs.select(
-        F.col("doc_id").alias("doc"),
-        *[F.col(c) for c in keep],  # passthrough (e.g. event time)
-        *[
-            F.array_min(F.transform(sh, seeded(i))).alias(f"h{i}")
-            for i in range(n_hashes)
-        ],
-    )
-
-
-def ingest_dedup_stream(
-    stream: DataFrame,
-    old_bands: DataFrame,
-    old_sig: DataFrame,
-    cap: int = 100,
-    match_threshold: int = 6,
-    n_hashes: int = 8,
-    event_time_col: str | None = None,
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """Streaming incremental-ingest dedup — the stream twin of
-    plans/dedup_queries.py:dedup_incremental_ingest composed with the
-    PERSISTED band index (tools/stress.py:run_incremental_index): each
-    arriving document is flagged against the existing corpus without
-    the corpus ever re-banding.
-
-    Shape (all stream-static, no stream-stream join):
-      map-side signature + band explode on the stream rows
-      → LEFT join the capped static band index (over-cap buckets are
-        pre-dropped on the static side, exactly like the batch query)
-      → LEFT join the static signature table on the matched old doc
-      → per-doc UPDATE-mode aggregation; collect_set gives the
-        distinct-pair semantics the batch query gets from .distinct()
-        (a pair found via two bands counts once).
-
-    Emits one row per new doc (zero-candidate docs included):
-    (new_doc_id, n_candidates, n_dups, min_dup_old_id, max_matching)
-    — the batch query's exact schema, so stream == batch is assertable
-    row for row. State is per-new-doc only; the old corpus lives in
-    the parquet index, not in stream state.
-
-    State lifetime: WITHOUT ``event_time_col`` the per-doc aggregation
-    groups have no watermark, so one state row per ingested doc is
-    retained forever — that mode is for bounded / ``availableNow``
-    replays only (the pytest + stress harness posture). For a
-    long-running ingest, pass the stream's arrival-timestamp column as
-    ``event_time_col``: the stream gets
-    ``withWatermark(event_time_col, watermark_delay)`` and the column
-    rides into the grouping key, so a doc's (single-arrival) group is
-    evicted once the watermark passes it — bounded state. The column
-    is dropped from the output, so the schema (and the stream==batch
-    pin) is identical in both modes.
-    """
-    keep: tuple[str, ...] = ()
-    if event_time_col is not None:
-        stream = stream.withWatermark(event_time_col, watermark_delay)
-        keep = (event_time_col,)
-    sig = minhash_sig_map(stream, n_hashes=n_hashes, keep=keep)
-    # Band explode INLINE (not operators/dedup.py:minhash_bands) so the
-    # signature components ride along with each band row — rejoining
-    # them would be a stream-stream self-join.
-    band_size, n_bands = 2, n_hashes // 2
-    new_bands = sig.select(
-        "doc",
-        *keep,
-        *[F.col(f"h{i}") for i in range(n_hashes)],
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_idx"),
-                        F.md5(
-                            F.concat(
-                                *[
-                                    F.col(f"h{i * band_size + j}")
-                                    for j in range(band_size)
-                                ]
-                            )
-                        ).alias("band_hash"),
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("b"),
-    ).select(
-        "doc", *keep, *[f"h{i}" for i in range(n_hashes)], "b.band_idx", "b.band_hash"
-    )
-    old_sz = old_bands.groupBy("band_idx", "band_hash").agg(
-        F.count(F.lit(1)).alias("old_n")
-    )
-    capped_old = (
-        old_bands.withColumnRenamed("doc", "old_doc")
-        .join(old_sz.filter(F.col("old_n") <= cap), ["band_idx", "band_hash"])
-        .select("band_idx", "band_hash", "old_doc")
-    )
-    cand = new_bands.join(capped_old, ["band_idx", "band_hash"], "left")
-    osig = old_sig.select(
-        F.col("doc").alias("old_doc"),
-        *[F.col(f"h{i}").alias(f"o{i}") for i in range(n_hashes)],
-    )
-    m = (
-        sum(
-            (F.col(f"h{i}") == F.col(f"o{i}")).cast("int")
-            for i in range(n_hashes)
-        )
-        .cast("long")
-        .alias("m")
-    )
-    est = cand.join(osig, "old_doc", "left").select("doc", *keep, "old_doc", m)
-    dup_old = F.when(F.col("m") >= match_threshold, F.col("old_doc"))
-    return (
-        est.groupBy("doc", *keep)  # event time in the key → evictable
-        .agg(
-            F.size(F.collect_set("old_doc")).cast("long").alias("n_candidates"),
-            F.size(F.collect_set(dup_old)).cast("long").alias("n_dups"),
-            F.array_min(F.collect_set(dup_old)).alias("min_dup_old_id"),
-            F.max("m").alias("max_matching"),
-        )
-        .drop(*keep)
-        .withColumnRenamed("doc", "new_doc_id")
-    )
-
-
-def shard_manifest_stream(
-    stream: DataFrame, n_shards: int, shard_budget: int = 16384
-) -> DataFrame:
-    """Streaming twin of plans/pipeline_queries.py:docs_shard_manifest:
-    the per-shard loader manifest (docs, bytes, id range, fill ratio)
-    maintained incrementally as documents arrive — update-mode
-    aggregation whose state is bounded at n_shards rows FOREVER (the
-    manifest IS the state; no watermark needed).
-
-    Divergence from the batch query, by necessity: batch derives
-    n_shards from the corpus byte total, which a stream cannot know —
-    production fixes the shard count up front (the standard WebDataset
-    posture), so it is a parameter here. Run with the batch-derived
-    value and the drained stream equals the batch manifest row for row
-    (tests/test_streaming.py).
-    """
-    shard = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
-        ).cast("long")
-        % n_shards
-    )
-    return (
-        stream.select(shard.alias("shard_id"), "doc_id", "n_chars")
-        .groupBy("shard_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("n_bytes"),
-            F.min("doc_id").alias("min_doc_id"),
-            F.max("doc_id").alias("max_doc_id"),
-            F.floor(F.sum("n_chars") * 1000000.0 / shard_budget + 0.5)
-            .cast("long")
-            .alias("fill_micros"),
-        )
-    )
-
-
-@F.pandas_udf(ArrayType(StringType()))
-def cdc_chunk_hashes(texts: pd.Series) -> pd.Series:
-    """Per-document content-defined chunk hashes, computed entirely
-    map-side (Arrow-batched) — the streaming-safe form of the chunking
-    in plans/pipeline_queries.py:docs_cdc_chunks, which batch computes
-    with a per-doc ordered window (windows are not stream-safe). Same
-    rule bit for bit: tokens split on the mirrored whitespace class, a
-    boundary falls AFTER any token whose md5-top-60-bit integer is
-    ≡ 0 mod 16, each chunk hashes as md5 of its space-joined tokens,
-    and the per-doc chunk set is deduplicated. Equivalence with the
-    batch window path is pytest-asserted (two independent
-    implementations of the same spec)."""
-    import hashlib
-    import re
-
-    ws = re.compile(r"[ \t\n\x0b\f\r]+")
-    out = []
-    for t in texts:
-        toks = ws.split((t or "").strip(" "))
-        seen: dict[str, None] = {}
-        cur: list[str] = []
-        for tok in toks:
-            cur.append(tok)
-            h = hashlib.md5(tok.encode("utf-8")).hexdigest()
-            if int(h[:15], 16) % 16 == 0:
-                chunk = " ".join(cur)
-                seen.setdefault(
-                    hashlib.md5(chunk.encode("utf-8")).hexdigest()
-                )
-                cur = []
-        if cur:
-            chunk = " ".join(cur)
-            seen.setdefault(hashlib.md5(chunk.encode("utf-8")).hexdigest())
-        out.append(list(seen))
-    return pd.Series(out)
-
-
-def cdc_chunk_index_stream(stream: DataFrame) -> DataFrame:
-    """S19 — streaming twin of the CDC chunk INDEX (the `cnt` stage of
-    docs_cdc_chunks / dedup_cdc_clusters): per distinct chunk hash,
-    how many docs hold it and the smallest holder (the star-edge
-    keeper), maintained incrementally as documents arrive. This is the
-    index a streaming ingest consults to flag shared-content docs on
-    arrival instead of re-running the batch dedup.
-
-    State posture: one state row per DISTINCT chunk (~corpus_tokens /
-    16 rows) — the chunk index IS the state, exactly like the shard
-    manifest (S18); it grows with corpus content, not with time, and
-    a 100 TB deployment shards it by chunk hash across executors via
-    the groupBy shuffle. Chunking itself is stateless map-side work
-    (cdc_chunk_hashes), so the only shuffle is the index update.
-    Drained with the batch-derived input, the index equals the batch
-    chunk-frequency table row for row (tests/test_streaming.py)."""
-    chunks = stream.select(
-        "doc_id", F.explode(cdc_chunk_hashes(F.col("text"))).alias("h")
-    )
-    return chunks.groupBy("h").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.min("doc_id").alias("first_doc_id"),
-    )
-
-
-def histogram_quantile_stream(
-    stream: DataFrame, lo: float, hi: float, n_bins: int = 4096
-) -> DataFrame:
-    """S20 — streaming twin of the explicit histogram quantile sketch
-    (plans/analytics_queries.py:histogram_value_quantiles): per
-    (event_type, bin) counts maintained incrementally in update mode;
-    the count vector IS the state, bounded at types x n_bins rows
-    FOREVER — quantile extraction is a cumulative walk over the
-    drained counts (batch-side, trivial) or a dashboard-side fold.
-
-    Divergence from the batch query, by necessity: batch derives each
-    group's [lo, hi] from its own min/max, which a stream cannot know
-    — production fixes the value range up front (the fixed-range
-    histogram posture, same reasoning as S18's fixed shard count), so
-    the bounds are parameters. Run with the batch-derived bounds and
-    the drained counts equal the batch bin counts row for row
-    (tests/test_streaming.py)."""
-    # binning expression operand-order-identical to the batch query
-    # ((value - lo) * n_bins / (hi - lo)), so the drained counts are
-    # bit-comparable; the low clamp is a no-op when the fixed bounds
-    # enclose the data and floors out-of-range arrivals otherwise.
-    bin_col = F.when(F.lit(hi) == F.lit(lo), F.lit(0).cast("long")).otherwise(
-        F.least(
-            F.lit(n_bins - 1).cast("long"),
-            F.greatest(
-                F.lit(0).cast("long"),
-                F.floor(
-                    (F.col("value") - F.lit(lo))
-                    * float(n_bins)
-                    / (F.lit(hi) - F.lit(lo))
-                ),
-            ),
-        )
-    )
-    return (
-        stream.select("event_type", bin_col.alias("bin"))
-        .groupBy("event_type", "bin")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_bin"))
-    )
-
-
-def audience_counts_stream(stream: DataFrame) -> DataFrame:
-    """S21 — streaming substrate of the audience-overlap matrix
-    (plans/analytics_queries.py:event_audience_overlap): per
-    (user, event_type) event counts maintained incrementally in
-    update mode. State is one row per (user, type) pair — bounded by
-    the ENTITY space (|users| x 5), not by time (the same
-    entity/content-bounded posture as S19's chunk index; no watermark
-    needed because the key space does not grow with the stream).
-
-    The bitmask fold and the 10-row pair matrix are drain-side
-    arithmetic over these counts (mask = bit_or(1 << type_idx) over
-    types with n >= threshold, intersection = (mask>>i)&1 products) —
-    a dashboard-side fold over |users| rows, exactly the batch
-    query's post-count stages. Drained counts equal the batch
-    (user, type) counts row for row (tests/test_streaming.py), so the
-    folded matrix equals the batch query's output by construction.
-    """
-    return (
-        stream.groupBy("user_id", "event_type")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-
-
-def drift_counts_stream(stream: DataFrame) -> DataFrame:
-    """S22 — streaming substrate of the two-sample drift screen
-    (plans/text_queries.py:source_length_drift): per (source,
-    256-char length bin) cohort counts maintained incrementally in
-    update mode. The select+agg is the batch query's own
-    `drift_binned_counts` — identical by construction, so the drained
-    counts equal the batch binned frame row for row. State is one row
-    per occupied (source, bin) — bounded by sources x bins, never by
-    doc volume (the S19/S21 entity-bounded posture; no watermark
-    needed).
-
-    The chi-square fold sum((a-b)^2*1000 div (a+b)) is drain-side
-    integer arithmetic over these counts — the drift monitor a
-    streaming ingest evaluates per micro-batch without re-reading
-    the corpus."""
-    from utility_service_areas_spark.plans.text_queries import (
-        drift_binned_counts,
-    )
-
-    return drift_binned_counts(stream)
-
-
-def hourly_counts_stream(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """S23 — streaming substrate of the burst monitor
-    (plans/analytics_queries.py:events_burst_detection): per
-    (event_type, hour) counts maintained incrementally in update
-    mode with an event-time watermark (hours are CALENDAR-bounded,
-    and unlike the S19/S21/S22 entity-bounded twins the key space
-    grows with time — the watermark lets completed hours evict, so
-    state is bounded by types x watermark-horizon hours).
-
-    r10 fix (ADVICE r9): the streaming path must group by
-    ``F.window('ts', '1 hour')``, NOT by the batch rollup's
-    ``date_trunc('hour', ts)`` — an Alias over a derived expression
-    carries no watermark metadata, so StateStoreSave got no eviction
-    predicate and the state grew with every (type, hour) forever,
-    exactly the unbounded mode this twin exists to avoid. The
-    time-window grouping key keeps the watermark attached;
-    ``window.start`` IS ``date_trunc('hour', ts)`` value-for-value,
-    so the drained rows still fold to the batch query row-for-row
-    (tests/test_streaming.py pins both the fold equality and, in a
-    two-batch run, that state rows are actually REMOVED).
-
-    The burst rule (calendar-densify the drained counts per type,
-    zero-fill, then cnt * n_trail * 10 > 15 * trail over the trailing
-    24 calendar hours with >=12 hours warmup) is drain-side integer
-    arithmetic over the tiny hourly table — evaluated per micro-batch
-    by the alerting consumer; the folded result equals the batch
-    query exactly (tests/test_streaming.py)."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy("event_type", F.window("ts", "1 hour"))
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .select("event_type", F.col("window.start").alias("h"), "cnt")
-    )
-
-
-def read_orders_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream of the orders table (the fact-ingest side of
-    a streaming metrics pipeline; stand-in for Kafka)."""
-    from utility_service_areas_spark.sources.tables import raw_table_schema
-
-    return (
-        spark.readStream.schema(raw_table_schema(spark, sf_dir, "orders"))
-        .option("pathGlobFilter", "orders.parquet")
-        .parquet(os.path.join(sf_dir))
-    )
-
-
-def bootstrap_sums_stream(
-    stream: DataFrame, hash_seam: str = "xxhash64"
-) -> DataFrame:
-    """S24 — streaming twin of the Poisson-bootstrap CI family
-    (plans/analytics_queries.py:revenue_bootstrap_ci / _fast): the
-    replicate sums are MERGEABLE state, because each row's
-    contribution to replicate r is a pure row function
-    (poisson_weight(hash(o_orderkey, r)) * cents) — so per-replicate
-    running sums maintained incrementally in update mode ARE the
-    bootstrap, with no re-resampling and no second pass. State is
-    _BOOT_REPLICATES + 1 rows FOREVER (the S21/S22 entity-bounded
-    posture taken to its limit: the key space is the replicate index,
-    fixed at plan time; no watermark needed). r = -1 carries the
-    unweighted point sum so a single drain feeds both the estimate
-    and its error bars.
-
-    The hash and weight expressions are the batch queries' own
-    `_bootstrap_hash_col` / `_poisson_weight_col` (shared seam —
-    identical by construction); the CI extraction (integer order
-    statistics, ranks 2 and 63 of the 64 replicate sums) is
-    drain-side arithmetic over 64 rows, exactly the batch plan's
-    rank stage (tests/test_streaming.py pins the drained fold equal
-    to BOTH batch variants' full output rows)."""
-    from utility_service_areas_spark.plans.analytics_queries import (
-        _BOOT_REPLICATES,
-        _bootstrap_hash_col,
-        _poisson_weight_col,
-    )
-
-    od = stream.select(
-        "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    reps = od.select(
-        "o_orderkey",
-        "cents",
-        F.explode(
-            F.sequence(F.lit(-1), F.lit(_BOOT_REPLICATES - 1))
-        ).alias("r"),
-    )
-    weight = F.when(F.col("r") < 0, F.lit(1)).otherwise(
-        _poisson_weight_col(_bootstrap_hash_col(hash_seam))
-    )
-    return (
-        reps.select("r", (weight * F.col("cents")).alias("wc"))
-        .groupBy("r")
-        .agg(F.sum("wc").alias("s"))
-    )
-
-
-_KMV_STREAM_STATE = StructType([StructField("hvs", ArrayType(LongType()))])
-_KMV_STREAM_OUT = StructType(
-    [
-        StructField("o_orderpriority", StringType()),
-        StructField("rk", LongType()),
-        StructField("hv", LongType()),
-    ]
-)
-
-
-def _kmv_state_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    from utility_service_areas_spark.plans.analytics_queries import _KMV_K
-
-    kept = set(state.get[0]) if state.exists else set()
-    for pdf in pdfs:
-        kept.update(int(h) for h in pdf["hv"])
-    merged = sorted(kept)[:_KMV_K]
-    state.update((merged,))
-    yield pd.DataFrame(
-        {
-            "o_orderpriority": [key[0]] * len(merged),
-            "rk": range(1, len(merged) + 1),
-            "hv": merged,
-        }
-    )
-
-
-def kmv_sketch_stream(stream: DataFrame) -> DataFrame:
-    """S25 — streaming twin of the KMV sketch family
-    (plans/analytics_queries.py:kmv_distinct_customers /
-    kmv_customer_overlap): the k smallest distinct hashes per key are
-    MERGEABLE state (min-k of a union == min-k over partial min-k
-    sets — the pytest-pinned mergeability contract), so a keyed
-    applyInPandasWithState fold that merges each micro-batch's hashes
-    into a sorted k-array IS the sketch, incrementally. State is
-    bounded at k int64s per key FOREVER (the S21/S22 entity-bounded
-    posture: the key space is the 5 order priorities; no watermark
-    needed). Every emission is the key's CURRENT sketch rows —
-    identical, row for row, to the batch `_kmv_sketch` output over
-    the rows seen so far (the hash expression is the batch family's
-    own `_kmv_hash_col`, shared by construction), so ANY downstream
-    estimate — distinct count, theta intersection — folds from the
-    drain with the batch queries' own arithmetic."""
-    from utility_service_areas_spark.plans.analytics_queries import _kmv_hash_col
-
-    return (
-        stream.select(
-            "o_orderpriority", _kmv_hash_col("o_custkey").alias("hv")
-        )
-        .groupBy("o_orderpriority")
-        .applyInPandasWithState(
-            _kmv_state_fn,
-            outputStructType=_KMV_STREAM_OUT,
-            stateStructType=_KMV_STREAM_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def daily_ohlc_stream(stream: DataFrame, watermark: str = "2 days") -> DataFrame:
-    """S26 — streaming twin of orders_daily_ohlc
-    (plans/analytics_queries.py): the OHLC bar is pure aggregate state
-    (count/min/max/sum plus min_by/max_by, whose merge carries the
-    (value, key) pair — positional UNDER A TOTAL ORDER, o_orderkey, so
-    incremental merge order is immaterial), maintained per event-time
-    day in update mode WITH a watermark: like S23's hourly rollup —
-    and unlike the entity-bounded S21/S22/S25 twins — the day key
-    space grows with TIME, so the group key must be F.window (carries
-    watermark metadata; a bare date_trunc alias would never evict) and
-    completed days leave the store. State = one 6-number bar per day
-    inside the horizon, forever bounded. Drained bars == the batch
-    query's rows day for day (pytest), eviction pinned via
-    numRowsRemoved > 0 on a two-batch time-ordered drain."""
-    od = stream.select(
-        F.col("o_orderdate").cast("timestamp").alias("ts"),
-        F.col("o_orderkey").alias("k"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("c"),
-    )
-    return (
-        od.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 day").alias("w"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_orders"),
-            F.min_by("c", "k").cast("long").alias("open_cents"),
-            F.max("c").cast("long").alias("high_cents"),
-            F.min("c").cast("long").alias("low_cents"),
-            F.max_by("c", "k").cast("long").alias("close_cents"),
-            F.sum("c").cast("long").alias("volume_cents"),
-        )
-        .select(
-            F.col("w.start").cast("date").alias("day"),
-            "n_orders",
-            "open_cents",
-            "high_cents",
-            "low_cents",
-            "close_cents",
-            "volume_cents",
-        )
-    )
-
-
-def variant_stats_stream(stream: DataFrame) -> DataFrame:
-    """S30 — streaming twin of events_variant_stats
-    (plans/event_queries.py #218): the VARIANT parse
-    (parse_json/variant_get) is a stateless map-side projection, so
-    the twin is a plain update-mode aggregate over it. The group key
-    space is event_type (entity-bounded, like S21/S22/S25 — state is
-    3 numbers per type, no watermark needed); count/sum/max merge
-    incrementally, so a drain equals the batch frame row for row."""
-    k = F.variant_get(F.parse_json(F.col("props")), "$.k", "long")
-    return (
-        stream.select("event_type", k.alias("k"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.sum("k").cast("long").alias("sum_k"),
-            F.max("k").cast("long").alias("max_k"),
-        )
-    )
-
-
-_CDC_STREAM_STATE = StructType(
-    [
-        StructField("v", LongType()),
-        StructField("op", StringType()),
-        StructField("bal_cents", LongType()),
-    ]
-)
-
-_CDC_STREAM_OUT = StructType(
-    [
-        StructField("k", LongType()),
-        StructField("v", LongType()),
-        StructField("op", StringType()),
-        StructField("bal_cents", LongType()),
-    ]
-)
-
-
-def _cdc_winner_key(row: tuple) -> tuple:
-    """Sort key mirroring cdc_tiebreak_order (plans/etl_queries.py):
-    (v DESC, op ASC, bal_cents ASC NULLS FIRST) — the row that sorts
-    FIRST under this key is the winner; the fold keeps the min. r13
-    ADVICE fix: the r12 fold's strict v> kept first-arrival on version
-    ties, diverging from the batch window's (then nondeterministic)
-    pick."""
-    v, op, bal = row
-    return (-v, op, (0, 0) if bal is None else (1, bal))
-
-
-def _cdc_state_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    best = tuple(state.get) if state.exists else None  # (v, op, bal)
-    for pdf in pdfs:
-        for v, op, bal in zip(pdf["v"], pdf["op"], pdf["bal_cents"]):
-            cand = (int(v), str(op), None if pd.isna(bal) else int(bal))
-            if best is None or _cdc_winner_key(cand) < _cdc_winner_key(best):
-                best = cand
-    state.update(best)
-    yield pd.DataFrame(
-        {
-            "k": [int(key[0])],
-            "v": [best[0]],
-            "op": [best[1]],
-            "bal_cents": [best[2]],
-        }
-    )
-
-
-def cdc_apply_stream(stream: DataFrame) -> DataFrame:
-    """S32 — streaming twin of cdc_latest_version_merge's apply rule
-    (plans/etl_queries.py #233): a CDC changelog consumed as a stream,
-    per-key state = the highest VERSION seen so far (not the latest
-    ARRIVAL — the property that makes out-of-order delivery safe: a
-    v2 arriving after v3 must not regress the row). update-mode
-    emission of the current winner per key; state is 3 scalars per
-    key (entity-bounded, the S21/S25 posture). The batch query's
-    latest-version window and this fold compute the same winner by
-    construction — pinned across micro-batch boundaries in pytest
-    (the out-of-order versions arrive in SEPARATE batches)."""
-    return (
-        stream.select("k", "v", "op", "bal_cents")
-        .groupBy("k")
-        .applyInPandasWithState(
-            _cdc_state_fn,
-            outputStructType=_CDC_STREAM_OUT,
-            stateStructType=_CDC_STREAM_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def score_documents_stream(
-    stream: DataFrame, model_fn=None, output_dim: int | None = None
-) -> DataFrame:
-    """S36 — streaming twin of the batch model-inference seam
-    (operators/inference.py, #238): neural scoring applied to a
-    document STREAM. infer_batches is a stateless mapInPandas
-    projection, so the same seam — same batching, same malformed-
-    input quarantine, same poison-row isolation — composes with
-    Structured Streaming unchanged: each micro-batch's Arrow batches
-    flow through model_fn; no state, no watermark. Append mode; a
-    drain equals the batch frame row for row with the deterministic
-    fake (pinned in tests/test_streaming.py), which is exactly the
-    property a production scorer needs: scoring a corpus by replaying
-    it as a stream must give the batch answer."""
-    from utility_service_areas_spark.operators.inference import (
-        fake_hash_model,
-        infer_batches,
-    )
-
-    # output_dim pins the fake's known dimension ONLY when the fake is
-    # in play; an injected production model keeps infer_batches'
-    # infer-from-first-valid-row behavior (r13 code review #2 — a
-    # hardcoded 4 rejected every row of a 768-dim embedder).
-    if model_fn is None:
-        model_fn, output_dim = fake_hash_model, (output_dim or 4)
-    return infer_batches(
-        stream.select("doc_id", "text"),
-        model_fn=model_fn,
-        id_col="doc_id",
-        text_col="text",
-        batch_size=64,
-        output_dim=output_dim,
-    )
-
-
 def versioned_table_stream_writer(stream: DataFrame, table_dir: str):
     """S39 — EXACTLY-ONCE streaming sink into the versioned table:
     each micro-batch commits as one append version with
@@ -1147,131 +213,20 @@ def list_versions_nonempty(table_dir: str) -> bool:
     return bool(list_versions(table_dir))
 
 
-def bm25_index_stream_writer(
-    stream: DataFrame, index_dir: str, compact_every: int | None = None
-):
-    """S38 — streaming INDEX MAINTENANCE: each document micro-batch
-    is folded into the persisted BM25 index (S34) via
-    add_to_bm25_index. Exactly-once falls out of the index's own
-    FIRST-WRITER-WINS doc_id contract: a retried micro-batch's docs
-    are all already present, so the re-add is a no-op — no txn
-    bookkeeping needed (idempotence by data semantics, the strongest
-    kind) — and since r14 each batch commits as ONE atomic segment
-    made visible only by the manifest, so the guarantee holds even
-    across a crash INSIDE feed_batch (the r13 torn-add window where
-    postings landed without doclens is closed — ADVICE r13 #1).
-    Because incremental add is EXACT (additive corpus stats), the
-    stream-fed index answers queries row-identically to an index
-    built in one batch over the same corpus (pinned).
-    ``compact_every=N`` folds segments together whenever their count
-    reaches N, bounding the small-file accrual of a long-running
-    feed. Returns a DataStreamWriter."""
-    from utility_service_areas_spark.operators.text_index import (
-        add_to_bm25_index,
-        build_bm25_index,
-        load_bm25_index,
-    )
-
-    def feed_batch(df: DataFrame, batch_id: int) -> None:
-        spark = df.sparkSession
-        try:
-            load_bm25_index(spark, index_dir)
-        except FileNotFoundError:
-            build_bm25_index(df.limit(0), index_dir)
-        add_to_bm25_index(
-            spark, index_dir, df, compact_every=compact_every
-        )
-
-    return stream.writeStream.foreachBatch(feed_batch)
-
-
-def vector_index_stream_writer(
-    stream: DataFrame,
-    index_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    compact_every: int | None = None,
-    app_id: str | None = None,
-    *,
-    fresh_app_id: bool = False,
-):
-    """S42 (r15) — streaming VECTOR-INDEX maintenance: the S38 of the
-    persisted IVFPQ index (#237). Each embedding micro-batch is
-    encoded against the FROZEN centroids/codebooks and committed as
-    ONE atomic segment via add_to_ivfpq_index; exactly-once across
-    sink retries AND across a crash inside the add via
-    txn_id='{app_id}-{batch_id}' (a retried batch whose txn is
-    already in the manifest no-ops; a torn add left its segment
-    UNLISTED, so the retry lands it exactly once — the BM25 v2
-    posture with the S39 txn contract, since vector ids carry no
-    first-writer-wins dedup of their own).
-
-    ``app_id`` is Delta's txnAppId leg of the contract and is REQUIRED
-    (ADVICE r15 #1): pass the SAME stable id every time a stream runs
-    against the same checkpoint — batch ids resume monotonically
-    there, so a driver restart replaying the in-flight micro-batch
-    no-ops instead of double-adding its vectors. The common failure
-    mode is exactly that restart, so exactly-once across it must not
-    depend on an optional argument. The inverse caveat is Delta's too:
-    NEVER reuse an app_id with a fresh/reset checkpoint (batch ids
-    restart at 0 and every new batch would look like a replay and be
-    silently dropped — r15 review #1); for a reset checkpoint or a
-    second stream into the same index, pass a NEW id, or set
-    ``fresh_app_id=True`` to mint a random one explicitly. Because
-    incremental add is EXACT (frozen-
-    geometry encode, pinned against a numpy replay), the stream-fed
-    index answers search_ivfpq_index row-identically to a single-
-    batch build over the same corpus (pinned). The index must be
-    BUILT (trained) before the stream starts — the FAISS train-
-    offline/add-online contract; there is no meaningful empty-index
-    bootstrap because codebook geometry requires a fit corpus.
-    ``compact_every=N`` bounds segment accrual on long feeds.
-    Returns a DataStreamWriter."""
-    import uuid as _uuid
-
-    from utility_service_areas_spark.operators.vector_index import (
-        add_to_ivfpq_index,
-    )
-
-    if app_id is not None and fresh_app_id:
-        raise ValueError("pass app_id OR fresh_app_id=True, not both")
-    if app_id is None and not fresh_app_id:
-        raise ValueError(
-            "vector_index_stream_writer requires a stable app_id (reuse "
-            "it on every restart from the same checkpoint — that is what "
-            "makes the replayed micro-batch a no-op); for a fresh/reset "
-            "checkpoint pass a NEW app_id or fresh_app_id=True"
-        )
-    txn_app = app_id if app_id is not None else _uuid.uuid4().hex[:8]
-
-    def feed_batch(df: DataFrame, batch_id: int) -> None:
-        add_to_ivfpq_index(
-            df.sparkSession,
-            index_dir,
-            df,
-            id_col=id_col,
-            vec_col=vec_col,
-            txn_id=f"{txn_app}-{batch_id}",
-            compact_every=compact_every,
-        )
-
-    return stream.writeStream.foreachBatch(feed_batch)
-
-
 # ---------------------------------------------------------------------------
 # S40 (r14): STREAMING ONLINE UPDATES for the #259 quality classifier —
 # continual learning at the serving edge. Batch-train with
 # docs_quality_logreg_train, deploy its weights + feature means into a
-# state file, then let the document stream take one integer-quantized
-# gradient step per micro-batch (features centered by the FROZEN
+# state file, then let each document micro-batch take one
+# integer-quantized gradient step (features centered by the FROZEN
 # training-time means — the standard deployment posture; re-centering
 # per batch would make the model chase its own normalization).
 # Everything stays in the #259 bit-replayable integer discipline, so
-# the drained stream state is EXACTLY reproducible by an offline fold
-# over the same batch splits (pinned against a plain-Python integer
-# replay in tests/test_streaming.py — cross-implementation, not just
-# cross-run). Exactly-once across micro-batch retries via the recorded
-# last_batch_id (the S39 txn posture applied to model state).
+# the state after a sequence of batches is EXACTLY reproducible by an
+# offline fold over the same splits (pinned against a plain-Python
+# integer replay in tests/test_streaming.py — cross-implementation,
+# not just cross-run). Exactly-once across micro-batch retries via the
+# recorded last_batch_id (the S39 txn posture applied to model state).
 # ---------------------------------------------------------------------------
 
 LOGREG_STATE_VERSION = 1
@@ -1409,19 +364,6 @@ def logreg_online_apply_batch(
     updated["last_batch_id"] = batch_id
     _write_logreg_state(state_path, updated)
     return updated
-
-
-def logreg_online_stream_writer(stream: DataFrame, state_path: str):
-    """S40 — each document micro-batch takes one gradient step against
-    the persisted state. A RETRIED micro-batch (batch_id <= the
-    recorded last_batch_id) is a no-op, so the weight trajectory is
-    exactly-once across sink-side failures; the state write itself is
-    atomic (temp + rename). Returns a DataStreamWriter."""
-
-    def step_batch(df: DataFrame, batch_id: int) -> None:
-        logreg_online_apply_batch(df, batch_id, state_path)
-
-    return stream.writeStream.foreachBatch(step_batch)
 
 
 def logreg_online_pr_sweep(docs: DataFrame, state_path: str) -> DataFrame:
