@@ -225,6 +225,33 @@ def test_twostar_cc_matches_on_substrate_pairs(spark):
     assert got == want
 
 
+def test_twostar_converging_exactly_at_max_iter_returns_labels(spark):
+    # A single edge reaches the star fixpoint in round 1; fingerprint
+    # EQUALITY would only be observed in round 2, so max_iter=1 used
+    # to raise despite correct labels. The exhaustion path now runs
+    # one verify round and accepts the fixpoint.
+    pairs = spark.createDataFrame([(2, 1)], "doc_a long, doc_b long")
+    got = {
+        (r.node, r.comp)
+        for r in graph.connected_components_twostar(pairs, max_iter=1).collect()
+    }
+    assert got == {(1, 1), (2, 1)}
+
+
+def test_twostar_still_raises_when_genuinely_unconverged(spark, monkeypatch):
+    # r17: the driver union-find fast path solves a 63-edge chain
+    # exactly without iterating — disable it so this still pins the
+    # LOOP's exhaustion contract.
+    monkeypatch.setattr(graph, "_LOCAL_CC_EDGES", 0)
+    # a 64-node path needs several rounds; max_iter=1 + one verify
+    # round cannot reach the fixpoint -> loud failure, never wrong labels
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        graph.connected_components_twostar(pairs, max_iter=1)
+
+
 def test_hits_planted_authority_ranking(spark):
     """Semantic pin on a planted bipartite graph: the authority cited
     by every hub outranks one cited by a single hub; the best hub

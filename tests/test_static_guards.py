@@ -6,6 +6,9 @@
 - The package reads exactly the environment values listed below.
 - Every package definition is reached from the engine's entry points,
   or is on ``REACH_ALLOWLIST`` with a reason.
+- Each store claims its commits in one place: ``os.link`` only in the
+  versioned tables' claim helper, the manifest generation claims only
+  in ``sources/fsutil.py``.
 """
 
 from __future__ import annotations
@@ -158,9 +161,6 @@ REACH_ALLOWLIST: dict[str, str] = {
     "functions/spacefill.py::hilbert_index_scalar": "reference twin: "
     "test_spacefill.py::test_hilbert_vectorized_matches_scalar_reference "
     "holds hilbert_index to it",
-    "operators/vector_index.py::vacuum_ivfpq_index": "recovery: reclaims "
-    "the _tmp-seg-* staging and unlisted segment directories a crashed "
-    "`index add` leaves",
 }
 
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
@@ -303,3 +303,69 @@ def test_reach_scan_follows_every_root_and_edge(tmp_path, module, entry, allow, 
     (pkg / "m.py").write_text(module)
     (tmp_path / "entry.py").write_text(entry)
     assert _reach_report(str(pkg), [str(tmp_path / "entry.py")], allow) == want
+
+
+# Who may call each commit primitive: a call outside its owner is a
+# second, hand-written copy of a store's commit protocol.
+COMMIT_OWNERS = {
+    "os.link": {"sources/versioned.py::_claim_version"},
+    "claim_generation": {"sources/fsutil.py::commit_manifest"},
+    "clear_generation_markers": {
+        "sources/fsutil.py::commit_manifest",
+        "sources/fsutil.py::commit_overwrite",
+    },
+}
+
+
+def _call_sites(pkg_dir: str, names: set[str]) -> dict[str, set[str]]:
+    """For each name in ``names`` (``f`` or a dotted ``mod.f``), the
+    ``"module/path.py::top-level definition"`` keys whose code calls
+    it; a call in module-level code is keyed ``::<module>``."""
+    sites: dict[str, set[str]] = defaultdict(set)
+    for path in sorted(glob.glob(os.path.join(pkg_dir, "**", "*.py"), recursive=True)):
+        module = os.path.relpath(path, pkg_dir).replace(os.sep, "/")
+        for top in _parse(path).body:
+            owner = getattr(top, "name", "<module>")
+            for node in ast.walk(top):
+                if not isinstance(node, ast.Call):
+                    continue
+                fn = node.func
+                if isinstance(fn, ast.Name):
+                    called = {fn.id}
+                elif isinstance(fn, ast.Attribute):
+                    called = {fn.attr}
+                    if isinstance(fn.value, ast.Name):
+                        called.add(f"{fn.value.id}.{fn.attr}")
+                else:
+                    continue
+                for name in called & names:
+                    sites[name].add(f"{module}::{owner}")
+    return sites
+
+
+def test_each_store_commits_through_one_helper():
+    sites = _call_sites(PACKAGE_DIR, set(COMMIT_OWNERS))
+    stray = {
+        name: sorted(where - COMMIT_OWNERS[name])
+        for name, where in sites.items()
+        if where - COMMIT_OWNERS[name]
+    }
+    assert not stray, f"commit primitives called outside their helper: {stray}"
+    assert dict(sites) == COMMIT_OWNERS  # each helper still calls its primitive
+
+
+def test_call_site_scan_sees_every_call_form(tmp_path):
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "m.py").write_text(
+        "import os\n"
+        "from x import claim_generation\n"
+        "def a():\n    os.link('s', 'd')\n"
+        "class B:\n    def c(self):\n        fsutil.claim_generation(1, 2)\n"
+        "claim_generation(3, 4)\n"
+        "def d():\n    link('s', 'd')\n"
+    )
+    assert _call_sites(str(pkg), {"os.link", "claim_generation"}) == {
+        "os.link": {"m.py::a"},
+        "claim_generation": {"m.py::B", "m.py::<module>"},
+    }

@@ -21,12 +21,12 @@ from pyspark.sql import functions as F
 from tests.conftest import SMOKE_SF
 
 from utility_service_areas_spark.operators.text_index import (
-    MANIFEST_NAME,
     add_to_bm25_index,
     build_bm25_index,
     load_bm25_index,
     search_bm25_index,
 )
+from utility_service_areas_spark.sources.fsutil import MANIFEST_NAME, vacuum_index
 from utility_service_areas_spark.sources.tables import load_table
 
 
@@ -170,7 +170,7 @@ def test_torn_add_is_invisible_and_retry_lands_exactly_once(
     commits exactly once — no doubled tf/df, counts equal a
     from-scratch rebuild (the S38 exactly-once claim across a failure
     inside feed_batch)."""
-    from utility_service_areas_spark.operators import text_index
+    from utility_service_areas_spark.sources import fsutil
 
     docs = _docs(spark)
     half_a = docs.filter(F.col("doc_id") % 2 == 0)
@@ -180,15 +180,15 @@ def test_torn_add_is_invisible_and_retry_lands_exactly_once(
     q = _qterms(spark)
     before = sorted(map(tuple, search_bm25_index(spark, d, q).collect()))
 
-    real_commit = text_index._commit_manifest
+    real_commit = fsutil.commit_manifest
 
     def crash(index_dir, manifest):
         raise RuntimeError("simulated crash before manifest commit")
 
-    monkeypatch.setattr(text_index, "_commit_manifest", crash)
+    monkeypatch.setattr(fsutil, "commit_manifest", crash)
     with pytest.raises(RuntimeError, match="simulated crash"):
         add_to_bm25_index(spark, d, half_b)
-    monkeypatch.setattr(text_index, "_commit_manifest", real_commit)
+    monkeypatch.setattr(fsutil, "commit_manifest", real_commit)
 
     # torn segment staged on disk but absent from every read path
     seg_dirs = os.listdir(os.path.join(d, "segments"))
@@ -267,7 +267,6 @@ def test_compaction_preserves_search_and_counts(spark, tmp_path):
 
     from utility_service_areas_spark.operators.text_index import (
         compact_bm25_index,
-        vacuum_bm25_index,
     )
 
     m2 = compact_bm25_index(spark, d)
@@ -282,17 +281,17 @@ def test_compaction_preserves_search_and_counts(spark, tmp_path):
     assert after == before
 
     # vacuum: young retired dirs spared (grace), stale ones swept
-    plan = vacuum_bm25_index(d, grace_seconds=3600, dry_run=True)
+    plan = vacuum_index(d, grace_seconds=3600, dry_run=True)
     assert plan["dirs"] == []  # everything is younger than the grace
     from tests.conftest import backdate_tree
 
     for name in os.listdir(seg_root):
         if name not in {s["name"] for s in m2["segments"]}:
             backdate_tree(os.path.join(seg_root, name))
-    plan = vacuum_bm25_index(d, grace_seconds=3600, dry_run=True)
+    plan = vacuum_index(d, grace_seconds=3600, dry_run=True)
     assert plan["dirs_removed"] == 3 and plan["dry_run"]
     assert len(os.listdir(seg_root)) == 4  # dry run touched nothing
-    real = vacuum_bm25_index(d, grace_seconds=3600)
+    real = vacuum_index(d, grace_seconds=3600)
     assert real["dirs"] == plan["dirs"]
     assert len(os.listdir(seg_root)) == 1
     assert (
@@ -362,7 +361,7 @@ def test_concurrent_disjoint_adds_both_commit(spark, tmp_path, monkeypatch):
     land: the loser's claim fails, it re-reads the winner's manifest,
     verifies disjointness against the winner's new doclens, and
     re-applies its delta."""
-    import utility_service_areas_spark.operators.text_index as tix
+    from utility_service_areas_spark.sources import fsutil
 
     docs = _docs(spark)
     d = str(tmp_path / "idx")
@@ -375,17 +374,17 @@ def test_concurrent_disjoint_adds_both_commit(spark, tmp_path, monkeypatch):
         ).count()
     )
 
-    real_commit = tix._commit_manifest
+    real_commit = fsutil.commit_manifest
     state = {"raced": False}
 
     def racing_commit(index_dir, manifest):
         if not state["raced"]:
             state["raced"] = True
-            monkeypatch.setattr(tix, "_commit_manifest", real_commit)
+            monkeypatch.setattr(fsutil, "commit_manifest", real_commit)
             add_to_bm25_index(spark, d, add_b)  # B wins the claim
         return real_commit(index_dir, manifest)
 
-    monkeypatch.setattr(tix, "_commit_manifest", racing_commit)
+    monkeypatch.setattr(fsutil, "commit_manifest", racing_commit)
     manifest = add_to_bm25_index(spark, d, add_a)
     assert manifest["n_docs"] == n_total  # nothing lost
     assert len(manifest["segments"]) == 3
@@ -398,24 +397,24 @@ def test_concurrent_overlapping_adds_abort_loudly(spark, tmp_path, monkeypatch):
     loser must abort (its anti-join ran against a stale committed set;
     rebasing would double-count the doc) — and the store still answers
     from the winner's consistent state."""
-    import utility_service_areas_spark.operators.text_index as tix
+    from utility_service_areas_spark.sources import fsutil
 
     docs = _docs(spark)
     d = str(tmp_path / "idx")
     build_bm25_index(docs.filter(F.col("doc_id") < 100), d)
     same = docs.filter(F.col("doc_id") >= 400)
 
-    real_commit = tix._commit_manifest
+    real_commit = fsutil.commit_manifest
     state = {"raced": False}
 
     def racing_commit(index_dir, manifest):
         if not state["raced"]:
             state["raced"] = True
-            monkeypatch.setattr(tix, "_commit_manifest", real_commit)
+            monkeypatch.setattr(fsutil, "commit_manifest", real_commit)
             add_to_bm25_index(spark, d, same)  # B commits the SAME docs
         return real_commit(index_dir, manifest)
 
-    monkeypatch.setattr(tix, "_commit_manifest", racing_commit)
+    monkeypatch.setattr(fsutil, "commit_manifest", racing_commit)
     with pytest.raises(RuntimeError, match="first-writer-wins"):
         add_to_bm25_index(spark, d, same)
     manifest, _p, doclens = load_bm25_index(spark, d)
@@ -451,3 +450,64 @@ def test_bm25_add_dedupes_within_the_batch(spark, tmp_path):
     _m, postings, doclens = load_bm25_index(spark, d)
     assert doclens.filter("doc_id = 2").count() == 1
     assert postings.groupBy("t", "doc_id").count().filter("count > 1").count() == 0
+
+
+def test_compact_empty_doclens_raises_lost_docs(spark, tmp_path):
+    """compact_bm25_index raises its own lost-docs RuntimeError (not a
+    TypeError) when the committed doclens are empty while the manifest
+    claims docs."""
+    from utility_service_areas_spark.operators.text_index import (
+        compact_bm25_index,
+    )
+    from utility_service_areas_spark.sources.fsutil import segments_root
+
+    d = str(tmp_path / "idx")
+    docs = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "beta gamma")], "doc_id long, text string"
+    )
+    build_bm25_index(docs, d)
+    add_to_bm25_index(
+        spark,
+        d,
+        spark.createDataFrame([(3, "gamma delta")], "doc_id long, text string"),
+    )
+    man, _p, _dl = load_bm25_index(spark, d)
+    assert len(man["segments"]) == 2 and man["n_docs"] == 3
+    # out-of-band corruption: every segment's doclens truncated to empty
+    empty = spark.createDataFrame([], "doc_id long, dl bigint")
+    for s in man["segments"]:
+        empty.write.mode("overwrite").parquet(
+            os.path.join(segments_root(d), s["name"], "doclens")
+        )
+    with pytest.raises(RuntimeError, match="compaction lost docs"):
+        compact_bm25_index(spark, d)
+
+
+def test_bm25_vacuum_spares_segment_with_fresh_inner_file(spark, tmp_path):
+    """The vacuum age gate keys off the NEWEST file in the segment
+    tree, so an in-flight write whose parent dir mtime went stale is
+    spared."""
+    from tests.conftest import backdate_tree
+    from utility_service_areas_spark.sources.fsutil import segments_root
+
+    d = str(tmp_path / "idx")
+    build_bm25_index(
+        spark.createDataFrame([(1, "alpha")], "doc_id long, text string"), d
+    )
+    # orphan staging dir: top-level mtime ancient, but one file inside
+    # is FRESH (a parquet write still landing) -> must be spared
+    inflight = os.path.join(segments_root(d), "_tmp-seg-inflight")
+    os.makedirs(os.path.join(inflight, "postings"))
+    backdate_tree(inflight)
+    with open(os.path.join(inflight, "postings", "part-live"), "w") as f:
+        f.write("x")
+    os.utime(inflight, (0, 0))  # parent dir LOOKS ancient
+
+    plan = vacuum_index(d, grace_seconds=3600, dry_run=True)
+    assert "_tmp-seg-inflight" not in plan["dirs"]
+
+    # once the whole tree is stale it goes
+    backdate_tree(inflight)
+    plan = vacuum_index(d, grace_seconds=3600)
+    assert "_tmp-seg-inflight" in plan["dirs"]
+    assert not os.path.exists(inflight)

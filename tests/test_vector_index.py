@@ -16,12 +16,12 @@ from pyspark.sql import functions as F
 from tests.conftest import SMOKE_SF
 
 from utility_service_areas_spark.operators.vector_index import (
-    MANIFEST_NAME,
     add_to_ivfpq_index,
     build_ivfpq_index,
     load_ivfpq_index,
     search_ivfpq_index,
 )
+from utility_service_areas_spark.sources.fsutil import MANIFEST_NAME, vacuum_index
 from utility_service_areas_spark.sources.tables import load_table
 
 
@@ -285,7 +285,7 @@ def test_vector_torn_add_invisible_and_retry_exactly_once(
     invisible to load/search, and the RETRY with the same txn_id
     lands the batch exactly once — counts equal the clean path, no
     duplicate neighbor_id rows."""
-    from utility_service_areas_spark.operators import vector_index
+    from utility_service_areas_spark.sources import fsutil
 
     emb = _emb(spark)
     train = emb.filter(F.col("vec_id") % 2 == 0)
@@ -299,15 +299,15 @@ def test_vector_torn_add_invisible_and_retry_exactly_once(
         map(tuple, search_ivfpq_index(spark, d, queries, train).collect())
     )
 
-    real_commit = vector_index._commit_manifest
+    real_commit = fsutil.commit_manifest
 
     def crash(index_dir, manifest):
         raise RuntimeError("simulated crash before manifest commit")
 
-    monkeypatch.setattr(vector_index, "_commit_manifest", crash)
+    monkeypatch.setattr(fsutil, "commit_manifest", crash)
     with pytest.raises(RuntimeError, match="simulated crash"):
         add_to_ivfpq_index(spark, d, rest, txn_id="stream-0")
-    monkeypatch.setattr(vector_index, "_commit_manifest", real_commit)
+    monkeypatch.setattr(fsutil, "commit_manifest", real_commit)
 
     seg_dirs = os.listdir(os.path.join(d, "segments"))
     m, _c, codes = load_ivfpq_index(spark, d)
@@ -332,7 +332,6 @@ def test_vector_compaction_and_vacuum_preserve_search(spark, tmp_path):
     from tests.conftest import backdate_tree
     from utility_service_areas_spark.operators.vector_index import (
         compact_ivfpq_index,
-        vacuum_ivfpq_index,
     )
 
     emb = _emb(spark)
@@ -359,13 +358,13 @@ def test_vector_compaction_and_vacuum_preserve_search(spark, tmp_path):
         == before
     )
 
-    plan = vacuum_ivfpq_index(d, grace_seconds=3600, dry_run=True)
+    plan = vacuum_index(d, grace_seconds=3600, dry_run=True)
     assert plan["dirs"] == []  # everything younger than the grace
     live = {s["name"] for s in m2["segments"]}
     for name in os.listdir(seg_root):
         if name not in live:
             backdate_tree(os.path.join(seg_root, name))
-    real = vacuum_ivfpq_index(d, grace_seconds=3600)
+    real = vacuum_index(d, grace_seconds=3600)
     assert real["dirs_removed"] == 3
     assert set(os.listdir(seg_root)) == live
     assert (
@@ -384,7 +383,7 @@ def test_concurrent_adds_both_commit_no_lost_segment(spark, tmp_path, monkeypatc
     fails (O_EXCL generation marker), it re-reads the winner's
     manifest and re-applies its delta — no last-replace-wins segment
     drop (the ADVICE r15 lost-update)."""
-    import utility_service_areas_spark.operators.vector_index as vix
+    from utility_service_areas_spark.sources import fsutil
 
     emb = _emb(spark)
     base = emb.filter(F.col("vec_id") < 40)
@@ -394,20 +393,20 @@ def test_concurrent_adds_both_commit_no_lost_segment(spark, tmp_path, monkeypatc
     build_ivfpq_index(base, d)
     n_total = emb.count()
 
-    real_commit = vix._commit_manifest
+    real_commit = fsutil.commit_manifest
     state = {"raced": False}
 
     def racing_commit(index_dir, manifest):
         if not state["raced"]:
             state["raced"] = True
-            monkeypatch.setattr(vix, "_commit_manifest", real_commit)
+            monkeypatch.setattr(fsutil, "commit_manifest", real_commit)
             # B commits fully between A's manifest read and A's claim
             add_to_ivfpq_index(
                 spark, d, add_b, id_col="vec_id", vec_col="embedding"
             )
         return real_commit(index_dir, manifest)
 
-    monkeypatch.setattr(vix, "_commit_manifest", racing_commit)
+    monkeypatch.setattr(fsutil, "commit_manifest", racing_commit)
     manifest = add_to_ivfpq_index(
         spark, d, add_a, id_col="vec_id", vec_col="embedding"
     )
@@ -447,7 +446,6 @@ def test_compaction_touches_retired_segments_for_vacuum_grace(spark, tmp_path):
     from tests.conftest import backdate_tree
     from utility_service_areas_spark.operators.vector_index import (
         compact_ivfpq_index,
-        vacuum_ivfpq_index,
     )
 
     emb = _emb(spark)
@@ -470,10 +468,10 @@ def test_compaction_touches_retired_segments_for_vacuum_grace(spark, tmp_path):
 
     # within the grace window nothing is swept despite the ancient
     # write times — the window now counts from retirement
-    plan = vacuum_ivfpq_index(d, grace_seconds=3600, dry_run=True)
+    plan = vacuum_index(d, grace_seconds=3600, dry_run=True)
     assert plan["dirs"] == []
     # past the window they go
-    plan0 = vacuum_ivfpq_index(d, grace_seconds=0, dry_run=True)
+    plan0 = vacuum_index(d, grace_seconds=0, dry_run=True)
     assert sorted(plan0["dirs"]) == sorted(retired)
 
 
@@ -486,7 +484,6 @@ def test_bm25_compaction_touches_retired_segments(spark, tmp_path):
         add_to_bm25_index,
         build_bm25_index,
         compact_bm25_index,
-        vacuum_bm25_index,
     )
     from utility_service_areas_spark.sources.tables import load_table
 
@@ -503,4 +500,4 @@ def test_bm25_compaction_touches_retired_segments(spark, tmp_path):
     compact_bm25_index(spark, d)
     for name in retired:
         assert os.path.getmtime(os.path.join(segroot, name)) >= t0 - 5
-    assert vacuum_bm25_index(d, grace_seconds=3600, dry_run=True)["dirs"] == []
+    assert vacuum_index(d, grace_seconds=3600, dry_run=True)["dirs"] == []

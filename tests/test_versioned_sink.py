@@ -135,6 +135,7 @@ def test_diff_across_versions(spark, tmp_path):
 
 from utility_service_areas_spark.sources.versioned import (  # noqa: E402
     merge_version,
+    restore_version,
     vacuum,
     write_version_bucketed,
 )
@@ -1175,3 +1176,162 @@ def test_vacuum_refuses_keep_last_zero(spark, tmp_path):
     with pytest.raises(ValueError, match="retain NOTHING"):
         vacuum(t, keep_last=0)
     assert list_versions(t) == [0]
+
+
+def test_merge_rejects_unknown_op_bucketed(spark, tmp_path):
+    """merge_version rejects op values outside {'U','D'} — a typo'd op
+    used to fall through as a silent DELETE."""
+    t = str(tmp_path / "tbl")
+    write_version_bucketed(_kv(spark, [(1, "a"), (2, "b")]), t, ["k"], 4)
+    with pytest.raises(ValueError, match="must be 'U' or 'D'"):
+        merge_version(spark, t, _ch(spark, [(1, "x", "u")]))
+    with pytest.raises(ValueError, match="must be 'U' or 'D'"):
+        merge_version(spark, t, _ch(spark, [(2, "y", None)]))
+    # nothing committed, base intact
+    got = {(r.k, r.v) for r in read_version(spark, t, 0).collect()}
+    assert got == {(1, "a"), (2, "b")}
+
+
+def test_merge_rejects_unknown_op_plain_lineage(spark, tmp_path):
+    t = str(tmp_path / "tbl")
+    write_version(_kv(spark, [(1, "a")]), t)
+    with pytest.raises(ValueError, match="must be 'U' or 'D'"):
+        merge_version(
+            spark, t, _ch(spark, [(1, "x", "upsert")]), key_cols=["k"]
+        )
+    assert list_versions(t) == [0]
+
+
+def test_versioned_vacuum_spares_dir_with_fresh_inner_file(spark, tmp_path):
+    """The data-dir age gate keys off the NEWEST file in the tree, so
+    an in-flight write whose parent dir mtime went stale is spared."""
+    from tests.conftest import backdate_tree
+
+    t = str(tmp_path / "tbl")
+    write_version(_kv(spark, [(1, "a")]), t)
+    inflight = os.path.join(t, "data", "commit-inflight")
+    os.makedirs(inflight)
+    backdate_tree(inflight)
+    with open(os.path.join(inflight, "part-live.parquet"), "w") as f:
+        f.write("x")
+    os.utime(inflight, (0, 0))  # stale parent, fresh child
+
+    plan = vacuum(t, keep_last=1, dry_run=True)
+    assert os.path.join("data", "commit-inflight") not in plan["dirs"]
+    backdate_tree(inflight)
+    vacuum(t, keep_last=1)
+    assert not os.path.exists(inflight)
+
+
+def test_vacuum_finishes_list_when_dir_vanishes_midway(
+    spark, tmp_path, monkeypatch
+):
+    """vacuum's act phase tolerates a planned dir vanishing (a
+    concurrent vacuum) and still finishes its delete list."""
+    import shutil as shutil_mod
+
+    from tests.conftest import backdate_tree
+
+    t = str(tmp_path / "tbl")
+    write_version(_kv(spark, [(1, "a")]), t)
+    orphans = []
+    for name in ("commit-gone-aa", "commit-gone-bb"):
+        p = os.path.join(t, "data", name)
+        os.makedirs(p)
+        with open(os.path.join(p, "junk"), "w") as f:
+            f.write("x")
+        backdate_tree(p)
+        orphans.append(p)
+
+    calls = {"n": 0}
+    real_rmtree = shutil_mod.rmtree
+
+    def racing_rmtree(path, *a, **kw):
+        # a concurrent vacuum deletes the dir an instant before us
+        calls["n"] += 1
+        if calls["n"] == 1 and os.path.exists(path):
+            real_rmtree(path)
+        return real_rmtree(path, *a, **kw)
+
+    # versioned.vacuum imports shutil at function scope -> patch the
+    # module attribute itself (monkeypatch restores it afterwards)
+    monkeypatch.setattr(shutil_mod, "rmtree", racing_rmtree)
+    plan = vacuum(t, keep_last=1)  # must not raise
+    assert plan["dirs_removed"] == 2
+    for p in orphans:
+        assert not os.path.exists(p)
+
+
+_BASE = [(1, "a"), (2, "b")]
+
+
+@pytest.mark.parametrize(
+    "setup, commit, want",
+    [
+        pytest.param(
+            lambda spark, t: write_version(_kv(spark, _BASE), t),
+            lambda spark, t: write_version(_kv(spark, [(3, "c")]), t),
+            {(1, "a"), (2, "b"), (3, "c")},
+            id="write_version",
+        ),
+        pytest.param(
+            lambda spark, t: (
+                write_version(_kv(spark, _BASE), t),
+                write_version(_kv(spark, [(9, "z")]), t, mode="overwrite"),
+            ),
+            lambda spark, t: restore_version(t, 0),
+            set(_BASE),
+            id="restore_version",
+        ),
+        pytest.param(
+            lambda spark, t: write_version(_kv(spark, _BASE), t),
+            lambda spark, t: write_version_bucketed(
+                _kv(spark, [(3, "c")]), t, ["k"], 4
+            ),
+            {(3, "c")},
+            id="write_version_bucketed",
+        ),
+        pytest.param(
+            lambda spark, t: write_version(_kv(spark, _BASE), t),
+            lambda spark, t: merge_version(
+                spark, t, _ch(spark, [(1, "x", "U")]), key_cols=["k"]
+            ),
+            {(1, "x"), (2, "b")},
+            id="merge_full_rewrite",
+        ),
+        pytest.param(
+            lambda spark, t: write_version_bucketed(_kv(spark, _BASE), t, ["k"], 4),
+            lambda spark, t: merge_version(spark, t, _ch(spark, [(1, "x", "U")])),
+            {(1, "x"), (2, "b")},
+            id="merge_version_bucketed",
+        ),
+    ],
+)
+def test_claim_rewrites_a_swept_temp(spark, tmp_path, monkeypatch, setup, commit, want):
+    """A vacuum that sweeps a writer's commit temp between its write
+    and the hard-link claim (the young-temp grace makes this rare, not
+    impossible) must neither fail the commit nor double it: the claim
+    rewrites the temp and links again. Every versioned writer claims
+    through the same helper, so each is run once here."""
+    import utility_service_areas_spark.sources.versioned as vmod
+
+    t = str(tmp_path / "tbl")
+    setup(spark, t)
+    before = list_versions(t)
+
+    real_link = os.link
+    swept = []
+
+    def sweep_once(src, dst, *a, **kw):
+        if not swept:
+            swept.append(src)
+            os.unlink(src)  # the vacuum got there first
+            raise FileNotFoundError(src)
+        return real_link(src, dst, *a, **kw)
+
+    monkeypatch.setattr(vmod.os, "link", sweep_once)
+    v = commit(spark, t)
+    assert swept
+    assert list_versions(t) == before + [before[-1] + 1] and v == before[-1] + 1
+    assert {(r.k, r.v) for r in read_version(spark, t).collect()} == want
+    assert not [n for n in os.listdir(t) if n.startswith("_tmp-")]

@@ -405,11 +405,9 @@ def main(argv: list[str] | None = None) -> int:
                 f"{manifest['n_docs']} docs, {manifest['l_total']} tokens"
             )
         elif args.action == "vacuum":
-            from utility_service_areas_spark.operators.text_index import (
-                vacuum_bm25_index,
-            )
+            from utility_service_areas_spark.sources.fsutil import vacuum_index
 
-            plan = vacuum_bm25_index(
+            plan = vacuum_index(
                 args.index_dir,
                 grace_seconds=args.grace_seconds,
                 dry_run=args.dry_run,

@@ -15,9 +15,11 @@ Index layout (format_version 2, r14) under ``index_dir``::
 
 Each build/add batch becomes ONE immutable segment, staged under
 ``segments/_tmp-seg-<token>/`` and made visible by a single atomic
-``os.rename`` — but even a renamed segment is INVISIBLE until the
-manifest lists it, because every reader (load/search/add's anti-join)
-walks ``manifest["segments"]``, never the directory. That closes the
+rename (``fsutil.stage_segment`` — the segment-index store in
+``sources/fsutil.py``, shared with the IVFPQ index) — but even a
+renamed segment is INVISIBLE until the manifest lists it, because
+every reader (load/search/add's anti-join) walks
+``manifest["segments"]``, never the directory. That closes the
 r13 torn-add window (ADVICE r13 #1): the old layout appended postings
 then doclens as two non-atomic writes, so a crash between them let a
 retried micro-batch pass the doclens anti-join and re-append the same
@@ -58,45 +60,34 @@ search-from-artifacts is row-identical to the inline query over the
 same corpus (driver-oracled via text_bm25_search_persisted against
 the same SQL as #219).
 
-Concurrency contract (r16 — upgraded from the documented single-writer
-posture): every manifest read-modify-write claims an O_EXCL GENERATION
-marker before its atomic replace (the shared fsutil protocol, ADVICE
-r15), so two concurrent mutators can no longer lose an update — a
-losing add re-applies its delta onto the winner's manifest when their
-doc_id sets are disjoint (first-writer-wins stays intact) and aborts
-loudly when they overlap; a losing compaction refolds; a losing repair
-recounts. Readers are always safe against writers: every mutation is
-an atomic manifest replace, a retried batch of the S38 stream writer
-is exactly-once, and compaction does NOT delete the retired segment
-dirs (an in-flight search over the old manifest keeps reading them;
-their retirement moment is stamped via os.utime) —
-``vacuum_bm25_index`` reclaims unlisted dirs later, age-gated so it
+Concurrency contract (r16): every mutation commits through
+``fsutil.commit_manifest``, which claims an O_EXCL GENERATION marker
+before its atomic manifest replace, inside ``fsutil.commit_attempts``'
+retry loop — so two concurrent mutators can no longer lose an update:
+a losing add re-applies its delta onto the winner's manifest when
+their doc_id sets are disjoint (first-writer-wins stays intact) and
+aborts loudly when they overlap; a losing compaction refolds; a losing
+repair recounts. Readers are always safe against writers: every
+mutation is an atomic manifest replace, a retried add batch is
+exactly-once, and compaction does NOT delete the retired segment dirs
+(an in-flight search over the old manifest keeps reading them; their
+retirement moment is stamped by ``fsutil.stamp_retired``) —
+``fsutil.vacuum_index`` reclaims unlisted dirs later, age-gated so it
 cannot yank a segment from under a live reader or a mid-stage add.
 """
 
 from __future__ import annotations
 
-import json
 import os
-from utility_service_areas_spark.operators.localrel import local_df
-import shutil
-import uuid
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from utility_service_areas_spark.operators.localrel import local_df
+from utility_service_areas_spark.sources import fsutil
 
-MANIFEST_NAME = "_MANIFEST.json"
 _FORMAT_VERSION = 2
 _DEFAULT_BUCKETS = 32
-
-
-def _manifest_path(index_dir: str) -> str:
-    return os.path.join(index_dir, MANIFEST_NAME)
-
-
-def _segments_root(index_dir: str) -> str:
-    return os.path.join(index_dir, "segments")
 
 
 def _pbucket_col(n_buckets: int):
@@ -141,54 +132,22 @@ def _write_segment(
     additive counts, measured once from the staged parquet — O(batch))
     or None for an empty batch. The segment stays invisible to readers
     until the CALLER commits a manifest listing it."""
-    token = uuid.uuid4().hex[:12]
-    root = _segments_root(index_dir)
-    os.makedirs(root, exist_ok=True)
-    staged = os.path.join(root, f"_tmp-seg-{token}")
-    final = os.path.join(root, f"seg-{token}")
-    postings.withColumn("pbucket", _pbucket_col(n_buckets)).write.mode(
-        "overwrite"
-    ).partitionBy("pbucket").parquet(os.path.join(staged, "postings"))
-    doclens.write.mode("overwrite").parquet(os.path.join(staged, "doclens"))
-    n_docs, l_total = (
-        spark.read.parquet(os.path.join(staged, "doclens"))
-        .agg(F.count(F.lit(1)), F.sum("dl"))
-        .collect()[0]
-    )
-    if not n_docs:
-        shutil.rmtree(staged)
-        return None
-    os.rename(staged, final)  # atomic: the segment exists whole or not at all
-    return {
-        "name": f"seg-{token}",
-        "n_docs": int(n_docs),
-        "l_total": int(l_total or 0),
-    }
 
+    def write(staged: str) -> dict | None:
+        postings.withColumn("pbucket", _pbucket_col(n_buckets)).write.mode(
+            "overwrite"
+        ).partitionBy("pbucket").parquet(os.path.join(staged, "postings"))
+        doclens.write.mode("overwrite").parquet(os.path.join(staged, "doclens"))
+        n_docs, l_total = (
+            spark.read.parquet(os.path.join(staged, "doclens"))
+            .agg(F.count(F.lit(1)), F.sum("dl"))
+            .collect()[0]
+        )
+        if not n_docs:
+            return None
+        return {"n_docs": int(n_docs), "l_total": int(l_total or 0)}
 
-def _commit_manifest(index_dir: str, manifest: dict) -> bool:
-    """Claim generation read+1 (r16 — the vector_index generation
-    protocol shared via fsutil), then atomic manifest replace (write
-    temp + os.replace): readers see the old manifest or the new one,
-    never a torn file. Returns False when another writer committed
-    first — the caller re-reads and re-applies its delta, or aborts
-    when the deltas conflict (overlapping doc_ids). This is the single
-    commit point of every index mutation."""
-    from utility_service_areas_spark.sources.fsutil import (
-        claim_generation,
-        clear_generation_markers,
-    )
-
-    gen = int(manifest.get("generation", 0)) + 1
-    if not claim_generation(index_dir, gen):
-        return False
-    manifest["generation"] = gen
-    tmp = _manifest_path(index_dir) + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, _manifest_path(index_dir))
-    clear_generation_markers(index_dir, below=gen)
-    return True
+    return fsutil.stage_segment(index_dir, write)
 
 
 def _empty_store(
@@ -232,29 +191,7 @@ def build_bm25_index(
         "n_adds": 0,
         "n_compactions": 0,
     }
-    # Carry a live index's generation forward (rebuild = overwrite);
-    # with no committed manifest, leftover markers are crashed-claim
-    # debris — clear them rather than wedge the bootstrap.
-    import time as _time
-
-    from utility_service_areas_spark.sources.fsutil import (
-        clear_generation_markers,
-    )
-
-    for _attempt in range(20):
-        try:
-            with open(_manifest_path(index_dir)) as f:
-                manifest["generation"] = int(json.load(f).get("generation", 0))
-        except FileNotFoundError:
-            manifest.pop("generation", None)
-            clear_generation_markers(index_dir)
-        if _commit_manifest(index_dir, manifest):
-            return manifest
-        _time.sleep(0.05)
-    raise RuntimeError(
-        f"build could not claim a manifest generation at {index_dir} "
-        "(extreme commit contention)"
-    )
+    return fsutil.commit_overwrite(index_dir, manifest)
 
 
 def load_bm25_index(
@@ -265,24 +202,12 @@ def load_bm25_index(
     never committed (no manifest — a crashed build's partial parquet
     is invisible by contract); unlisted segment dirs (torn adds) are
     never read."""
-    mpath = _manifest_path(index_dir)
-    if not os.path.exists(mpath):
-        raise FileNotFoundError(
-            f"no committed index at {index_dir} ({MANIFEST_NAME} missing — "
-            "a partial/crashed build is not readable)"
-        )
-    with open(mpath) as f:
-        manifest = json.load(f)
-    if manifest.get("format_version") != _FORMAT_VERSION:
-        raise ValueError(
-            f"index format {manifest.get('format_version')} != "
-            f"{_FORMAT_VERSION}"
-        )
+    manifest = fsutil.load_manifest(index_dir, _FORMAT_VERSION)
     if not manifest["segments"]:
         postings, doclens = _empty_store(spark, manifest)
         return manifest, postings, doclens
     roots = [
-        os.path.join(_segments_root(index_dir), s["name"])
+        os.path.join(fsutil.segments_root(index_dir), s["name"])
         for s in manifest["segments"]
     ]
     # Per-segment scans unioned (not one multi-root read): partition
@@ -340,54 +265,47 @@ def add_to_bm25_index(
     seg = _write_segment(
         spark, index_dir, new_postings, new_doclens, manifest["n_buckets"]
     )
-    # Optimistic-concurrency commit (r16, the vector_index generation
+    # Optimistic-concurrency commit (r16, fsutil's generation
     # protocol): the segment is staged once; on a lost claim the delta
     # re-applies onto the winner's manifest — UNLESS the winner added
     # any of OUR doc_ids, which would break first-writer-wins
     # disjointness (the anti-join above ran against a stale committed
     # set). That conflict aborts loudly; the staged segment stays an
     # unlisted orphan for the age-gated vacuum.
-    import time as _time
-
     seen_names = {s["name"] for s in manifest["segments"]}
-    root = _segments_root(index_dir)
-    for _attempt in range(20):
+    root = fsutil.segments_root(index_dir)
+    for attempt in fsutil.commit_attempts(index_dir, "add"):
+        if attempt:
+            manifest = fsutil.read_manifest(index_dir)  # deltas never double
+            winner_new = [
+                s["name"]
+                for s in manifest["segments"]
+                if s["name"] not in seen_names
+                and (not seg or s["name"] != seg["name"])
+            ]
+            seen_names = {s["name"] for s in manifest["segments"]}
+            if seg and winner_new:
+                theirs = spark.read.parquet(
+                    *[os.path.join(root, n, "doclens") for n in winner_new]
+                )
+                ours = spark.read.parquet(
+                    os.path.join(root, seg["name"], "doclens")
+                )
+                n_dup = ours.join(theirs, "doc_id", "left_semi").count()
+                if n_dup:
+                    raise RuntimeError(
+                        f"concurrent add committed {n_dup} of this batch's "
+                        f"doc_ids first at {index_dir} — first-writer-wins "
+                        "disjointness would break; re-run the add (the retry "
+                        "will skip the already-committed docs)"
+                    )
         if seg:
             manifest["segments"].append(seg)
             manifest["n_docs"] += seg["n_docs"]
             manifest["l_total"] += seg["l_total"]
         manifest["n_adds"] += 1
-        if _commit_manifest(index_dir, manifest):
+        if fsutil.commit_manifest(index_dir, manifest):
             break
-        _time.sleep(0.05)
-        with open(_manifest_path(index_dir)) as f:
-            manifest = json.load(f)  # fresh read: deltas never double
-        winner_new = [
-            s["name"]
-            for s in manifest["segments"]
-            if s["name"] not in seen_names and (not seg or s["name"] != seg["name"])
-        ]
-        seen_names = {s["name"] for s in manifest["segments"]}
-        if seg and winner_new:
-            theirs = spark.read.parquet(
-                *[os.path.join(root, n, "doclens") for n in winner_new]
-            )
-            ours = spark.read.parquet(
-                os.path.join(root, seg["name"], "doclens")
-            )
-            n_dup = ours.join(theirs, "doc_id", "left_semi").count()
-            if n_dup:
-                raise RuntimeError(
-                    f"concurrent add committed {n_dup} of this batch's "
-                    f"doc_ids first at {index_dir} — first-writer-wins "
-                    "disjointness would break; re-run the add (the retry "
-                    "will skip the already-committed docs)"
-                )
-    else:
-        raise RuntimeError(
-            f"add could not claim a manifest generation at {index_dir} "
-            "(extreme commit contention)"
-        )
     if compact_every and len(manifest["segments"]) >= compact_every:
         manifest = compact_bm25_index(spark, index_dir)
     return manifest
@@ -400,14 +318,12 @@ def compact_bm25_index(spark: SparkSession, index_dir: str) -> dict:
     segment dirs are NOT deleted here — an in-flight search that
     loaded the pre-compaction manifest keeps reading them (the Delta
     OPTIMIZE posture: rewrites never break concurrent readers);
-    ``vacuum_bm25_index`` reclaims them later behind an age gate.
+    ``fsutil.vacuum_index`` reclaims them later behind an age gate.
     Search results are unchanged (pinned): doc_ids are disjoint
     across segments by first-writer-wins, so union == concatenation.
     Counts are carried additively from the retired entries, not
     recounted."""
-    import time as _time
-
-    for _attempt in range(20):
+    for _attempt in fsutil.commit_attempts(index_dir, "compaction"):
         manifest, postings, doclens = load_bm25_index(spark, index_dir)
         old = list(manifest["segments"])
         if len(old) <= 1:
@@ -431,61 +347,11 @@ def compact_bm25_index(spark: SparkSession, index_dir: str) -> dict:
             )
         manifest["segments"] = [seg]
         manifest["n_compactions"] += 1
-        if not _commit_manifest(index_dir, manifest):
-            # lost to a concurrent add: the fold misses its segment —
-            # the staged fold stays an unlisted orphan, refold (r16)
-            _time.sleep(0.05)
-            continue
-        # ADVICE r15 #3: stamp RETIREMENT time on the replaced dirs so
-        # the vacuum grace window protects a pre-compaction manifest's
-        # reader for grace_seconds from NOW — an old segment's
-        # write-time mtime would make it sweepable the instant it was
-        # retired.
-        root = _segments_root(index_dir)
-        for entry in old:
-            try:
-                os.utime(os.path.join(root, entry["name"]))
-            except FileNotFoundError:
-                pass
-        return manifest
-    raise RuntimeError(
-        f"compaction kept losing the manifest claim at {index_dir} "
-        "(extreme commit contention)"
-    )
-
-
-def vacuum_bm25_index(
-    index_dir: str,
-    grace_seconds: float = 600.0,
-    dry_run: bool = False,
-) -> dict:
-    """Reclaim segment dirs the manifest no longer (or never) lists:
-    compaction-retired segments, torn-add leftovers, crashed staging
-    dirs. Age-gated: a dir younger than ``grace_seconds`` is spared,
-    so a vacuum can never delete (a) a segment an in-flight reader
-    loaded from a just-replaced manifest or (b) a segment the single
-    writer renamed but has not yet committed — crash debris is only
-    swept once it is demonstrably stale. ``dry_run=True`` returns the
-    exact would-delete list without touching disk. Runs regardless of
-    the live segment count (a 1-segment index can still carry orphans
-    from a crash between a compaction's commit and an older vacuum)."""
-    from utility_service_areas_spark.sources.fsutil import (
-        vacuum_unlisted_dirs,
-    )
-
-    mpath = _manifest_path(index_dir)
-    if not os.path.exists(mpath):
-        raise FileNotFoundError(f"no committed index at {index_dir}")
-    with open(mpath) as f:
-        manifest = json.load(f)
-    listed = {s["name"] for s in manifest["segments"]}
-    # Age off the NEWEST file in each segment tree, not the dir's
-    # top-level mtime — that goes stale once postings/ and doclens/
-    # exist, so a slow in-flight parquet write could otherwise be
-    # swept mid-add (ADVICE r14 #4; shared discipline in fsutil).
-    return vacuum_unlisted_dirs(
-        _segments_root(index_dir), listed, grace_seconds, dry_run
-    )
+        if fsutil.commit_manifest(index_dir, manifest):
+            fsutil.stamp_retired(index_dir, [s["name"] for s in old])
+            return manifest
+        # lost to a concurrent add: the fold misses its segment — the
+        # staged fold stays an unlisted orphan (vacuumed later), refold
 
 
 def repair_bm25_manifest(spark: SparkSession, index_dir: str) -> dict:
@@ -493,15 +359,15 @@ def repair_bm25_manifest(spark: SparkSession, index_dir: str) -> dict:
     committed segment's (n_docs, l_total) from its parquet and rewrite
     the manifest. O(store) by design — run it on suspicion (a manifest
     edited out-of-band), not per add."""
-    import time as _time
-
-    for _attempt in range(20):
+    for _attempt in fsutil.commit_attempts(index_dir, "repair"):
         manifest, _p, _d = load_bm25_index(spark, index_dir)
         segs = []
         for s in manifest["segments"]:
             n_docs, l_total = (
                 spark.read.parquet(
-                    os.path.join(_segments_root(index_dir), s["name"], "doclens")
+                    os.path.join(
+                        fsutil.segments_root(index_dir), s["name"], "doclens"
+                    )
                 )
                 .agg(F.count(F.lit(1)), F.sum("dl"))
                 .collect()[0]
@@ -512,13 +378,9 @@ def repair_bm25_manifest(spark: SparkSession, index_dir: str) -> dict:
         manifest["segments"] = segs
         manifest["n_docs"] = sum(s["n_docs"] for s in segs)
         manifest["l_total"] = sum(s["l_total"] for s in segs)
-        if _commit_manifest(index_dir, manifest):
+        if fsutil.commit_manifest(index_dir, manifest):
             return manifest
-        _time.sleep(0.05)  # lost to a concurrent writer: recount fresh
-    raise RuntimeError(
-        f"repair kept losing the manifest claim at {index_dir} "
-        "(extreme commit contention)"
-    )
+        # lost to a concurrent writer: recount fresh
 
 
 def search_bm25_index(

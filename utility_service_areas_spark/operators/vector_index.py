@@ -14,23 +14,24 @@ atomic-segment posture ported to vectors)::
     _MANIFEST.json        params + m x k x sub_dim PQ codebooks +
                           the SEGMENT LIST + additive counts + txn ids
 
-Commit protocol: every mutation stages parquet under
-``segments/_tmp-seg-<tok>``, renames it whole (atomic), and becomes
-visible only when the manifest (the single commit marker, written
-temp + os.replace) lists it. A crash ANYWHERE inside an add leaves
-either an un-renamed staging dir or an unlisted segment — both
-invisible to readers, both reclaimed later by the age-gated
-``vacuum_ivfpq_index``. A RETRIED add with the same ``txn_id`` is a
-no-op (the S39 txn posture), so streaming maintenance (S42) is
-exactly-once across torn adds.
+Commit protocol: the segment-index store in ``sources/fsutil.py``,
+shared with the BM25 index. Every mutation stages parquet under
+``segments/_tmp-seg-<tok>``, renames it whole (``fsutil.stage_segment``)
+and becomes visible only when the manifest lists it; the manifest is
+the single commit marker (``fsutil.commit_manifest``). A crash ANYWHERE
+inside an add leaves either an un-renamed staging dir or an unlisted
+segment — both invisible to readers, both reclaimed later by the
+age-gated ``fsutil.vacuum_index``. A RETRIED add with the same
+``txn_id`` is a no-op (the S39 txn posture), so streaming maintenance
+(S42) is exactly-once across torn adds.
 
-Writer concurrency (ADVICE r15): the manifest read-modify-write is
-guarded by an O_EXCL GENERATION claim (``_gen-N`` markers) — exactly
-one writer commits each generation; a loser re-reads the winner's
-manifest and re-applies its delta, so two concurrent adds BOTH land
-(neither's segment is dropped by a last-replace-wins overwrite) and a
-compaction racing an add refolds instead of losing the new segment.
-A crashed claimer's marker is stolen after
+Writer concurrency (ADVICE r15): each commit claims the manifest's
+next generation first (``_gen-N`` O_EXCL markers) — exactly one writer
+commits each generation; a loser re-reads the winner's manifest and
+re-applies its delta (``fsutil.commit_attempts``), so two concurrent
+adds BOTH land (neither's segment is dropped by a last-replace-wins
+overwrite) and a compaction racing an add refolds instead of losing
+the new segment. A crashed claimer's marker is stolen after
 ``fsutil.GEN_STEAL_SECONDS``.
 
 JSON floats round-trip IEEE doubles
@@ -57,54 +58,15 @@ corpus-sized ever reaches the driver.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from utility_service_areas_spark.operators.localrel import local_df
+from utility_service_areas_spark.sources import fsutil
 
-MANIFEST_NAME = "_MANIFEST.json"
 _FORMAT_VERSION = 2
-
-
-def _manifest_path(index_dir: str) -> str:
-    return os.path.join(index_dir, MANIFEST_NAME)
-
-
-def _segments_root(index_dir: str) -> str:
-    return os.path.join(index_dir, "segments")
-
-
-def _commit_manifest(index_dir: str, manifest: dict) -> bool:
-    """Claim generation read+1 (ADVICE r15: the unlocked manifest
-    read-modify-write let two concurrent adds both commit with the
-    LAST replace silently dropping the other's segment), then atomic
-    manifest replace — readers see the old manifest or the new one,
-    never a torn file. Returns False when another writer committed
-    first (the caller re-reads and re-applies its delta — the
-    optimistic-concurrency loop every mutation here runs). The single
-    commit point of every index mutation."""
-    from utility_service_areas_spark.sources.fsutil import (
-        claim_generation,
-        clear_generation_markers,
-    )
-
-    gen = int(manifest.get("generation", 0)) + 1
-    if not claim_generation(index_dir, gen):
-        return False
-    manifest["generation"] = gen
-    tmp = _manifest_path(index_dir) + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, _manifest_path(index_dir))
-    # markers below the committed generation are dead history
-    clear_generation_markers(index_dir, below=gen)
-    return True
 
 
 def _write_codes_segment(
@@ -115,20 +77,15 @@ def _write_codes_segment(
     normalized to build order (neighbor_id, code_*, cell) so a
     multi-segment read never sees mixed per-file orders. The segment
     is INVISIBLE until the caller commits a manifest listing it."""
-    token = uuid.uuid4().hex[:12]
-    root = _segments_root(index_dir)
-    os.makedirs(root, exist_ok=True)
-    staged = os.path.join(root, f"_tmp-seg-{token}")
-    final = os.path.join(root, f"seg-{token}")
-    codes.select(
-        "neighbor_id", *[f"code_{s}" for s in range(m)], "cell"
-    ).write.mode("overwrite").parquet(staged)
-    n = spark.read.parquet(staged).count()
-    if not n:
-        shutil.rmtree(staged)
-        return None
-    os.rename(staged, final)  # atomic: the segment exists whole or not
-    return {"name": f"seg-{token}", "n_vectors": int(n)}
+
+    def write(staged: str) -> dict | None:
+        codes.select(
+            "neighbor_id", *[f"code_{s}" for s in range(m)], "cell"
+        ).write.mode("overwrite").parquet(staged)
+        n = spark.read.parquet(staged).count()
+        return {"n_vectors": int(n)} if n else None
+
+    return fsutil.stage_segment(index_dir, write)
 
 
 def build_ivfpq_index(
@@ -208,35 +165,8 @@ def build_ivfpq_index(
         "n_compactions": 0,
         "txn_ids": [],
     }
-    # commit marker, LAST. A rebuild over a live index carries the
-    # current generation forward so the claim stays monotonic; losing
-    # the claim race re-reads and retries (a rebuild REPLACES whatever
-    # the racer committed — overwrite semantics, like every build).
-    for _attempt in range(20):
-        try:
-            with open(_manifest_path(index_dir)) as f:
-                manifest["generation"] = int(
-                    json.load(f).get("generation", 0)
-                )
-        except FileNotFoundError:
-            manifest.pop("generation", None)
-            # No committed manifest: any leftover marker is a crashed
-            # build's claim (there is no committed state a racer's
-            # delta could lose — first builds are whole-index
-            # overwrites, so last-wins is consistent); clear them
-            # rather than wedging the bootstrap behind the steal gate.
-            from utility_service_areas_spark.sources.fsutil import (
-                clear_generation_markers,
-            )
-
-            clear_generation_markers(index_dir)
-        if _commit_manifest(index_dir, manifest):
-            return manifest
-        time.sleep(0.05)
-    raise RuntimeError(
-        f"build could not claim a manifest generation at {index_dir} "
-        "(extreme commit contention)"
-    )
+    # commit marker, LAST
+    return fsutil.commit_overwrite(index_dir, manifest)
 
 
 def load_ivfpq_index(
@@ -245,19 +175,7 @@ def load_ivfpq_index(
     """(manifest, centroids frame, codes frame). Raises
     FileNotFoundError if the index was never committed (no manifest —
     a crashed build's partial parquet is invisible by contract)."""
-    mpath = _manifest_path(index_dir)
-    if not os.path.exists(mpath):
-        raise FileNotFoundError(
-            f"no committed index at {index_dir} ({MANIFEST_NAME} missing — "
-            "a partial/crashed build is not readable)"
-        )
-    with open(mpath) as f:
-        manifest = json.load(f)
-    if manifest.get("format_version") != _FORMAT_VERSION:
-        raise ValueError(
-            f"index format {manifest.get('format_version')} != "
-            f"{_FORMAT_VERSION}"
-        )
+    manifest = fsutil.load_manifest(index_dir, _FORMAT_VERSION)
     cents = spark.read.parquet(os.path.join(index_dir, "centroids"))
     codes = _read_codes(spark, index_dir, manifest)
     return manifest, cents, codes
@@ -275,7 +193,7 @@ def _read_codes(
         schema = ", ".join(f"{c} bigint" for c in cols)
         return local_df(spark, [], schema)
     paths = [
-        os.path.join(_segments_root(index_dir), s["name"]) for s in segs
+        os.path.join(fsutil.segments_root(index_dir), s["name"]) for s in segs
     ]
     return spark.read.parquet(*paths).select(*cols)
 
@@ -301,7 +219,7 @@ def add_to_ivfpq_index(
     dedup horizon = manifest lifetime). A crash between the segment
     rename and the manifest commit leaves an UNLISTED (invisible)
     segment, so the retry lands the batch exactly once; the orphan is
-    reclaimed later by ``vacuum_ivfpq_index``. ``compact_every=N``
+    reclaimed later by ``fsutil.vacuum_index``. ``compact_every=N``
     folds segments whenever their count reaches N."""
     import numpy as np
     import pandas as pd
@@ -371,7 +289,9 @@ def add_to_ivfpq_index(
     # differ); the manifest delta re-applies onto whatever manifest
     # wins each race, so two concurrent adds both land — neither's
     # segment is dropped by a last-replace-wins overwrite.
-    for _attempt in range(20):
+    for attempt in fsutil.commit_attempts(index_dir, "add"):
+        if attempt:
+            manifest = fsutil.read_manifest(index_dir)  # deltas never double
         if txn_id is not None and txn_id in manifest.get("txn_ids", []):
             return manifest  # a racer with the SAME txn landed it
         if seg is not None:
@@ -380,16 +300,8 @@ def add_to_ivfpq_index(
         manifest["n_adds"] += 1
         if txn_id is not None:
             manifest.setdefault("txn_ids", []).append(txn_id)
-        if _commit_manifest(index_dir, manifest):
+        if fsutil.commit_manifest(index_dir, manifest):
             break
-        time.sleep(0.05)
-        with open(_manifest_path(index_dir)) as f:
-            manifest = json.load(f)  # fresh read: deltas never double
-    else:
-        raise RuntimeError(
-            f"add could not claim a manifest generation at {index_dir} "
-            "(extreme commit contention)"
-        )
     if compact_every and len(manifest["segments"]) >= compact_every:
         manifest = compact_ivfpq_index(spark, index_dir)
     return manifest
@@ -399,10 +311,10 @@ def compact_ivfpq_index(spark: SparkSession, index_dir: str) -> dict:
     """Fold every committed segment into ONE new segment and commit a
     manifest listing only it. Retired segment dirs are NOT deleted —
     a reader that loaded the pre-compaction manifest keeps reading
-    them (the Delta OPTIMIZE posture); ``vacuum_ivfpq_index`` reclaims
+    them (the Delta OPTIMIZE posture); ``fsutil.vacuum_index`` reclaims
     them behind the age gate. Codes are immutable rows, so union ==
     concatenation and search results are unchanged (pinned)."""
-    for _attempt in range(20):
+    for _attempt in fsutil.commit_attempts(index_dir, "compaction"):
         manifest, _cents, codes = load_ivfpq_index(spark, index_dir)
         if len(manifest["segments"]) <= 1:
             return manifest
@@ -415,50 +327,11 @@ def compact_ivfpq_index(spark: SparkSession, index_dir: str) -> dict:
             )
         manifest["segments"] = [seg]
         manifest["n_compactions"] = manifest.get("n_compactions", 0) + 1
-        if _commit_manifest(index_dir, manifest):
-            # ADVICE r15 #3: stamp RETIREMENT time on the replaced
-            # dirs so the vacuum grace window counts from when a
-            # pre-compaction reader could last have planned them —
-            # not from their (possibly ancient) write time.
-            root = _segments_root(index_dir)
-            for name in retired:
-                try:
-                    os.utime(os.path.join(root, name))
-                except FileNotFoundError:
-                    pass
+        if fsutil.commit_manifest(index_dir, manifest):
+            fsutil.stamp_retired(index_dir, retired)
             return manifest
         # lost to a concurrent add: the fold misses its segment — the
         # staged fold stays an unlisted orphan (vacuumed later), refold
-        time.sleep(0.05)
-    raise RuntimeError(
-        f"compaction kept losing the manifest claim at {index_dir} "
-        "(extreme commit contention)"
-    )
-
-
-def vacuum_ivfpq_index(
-    index_dir: str,
-    grace_seconds: float = 600.0,
-    dry_run: bool = False,
-) -> dict:
-    """Reclaim segment dirs the manifest no longer (or never) lists:
-    compaction-retired segments, torn-add leftovers, crashed staging
-    dirs. Age-gated off the NEWEST file in each segment TREE (ADVICE
-    r14 #4 discipline) so neither an in-flight reader's just-retired
-    segment nor a mid-write staging dir can be swept."""
-    from utility_service_areas_spark.sources.fsutil import (
-        vacuum_unlisted_dirs,
-    )
-
-    mpath = _manifest_path(index_dir)
-    if not os.path.exists(mpath):
-        raise FileNotFoundError(f"no committed index at {index_dir}")
-    with open(mpath) as f:
-        manifest = json.load(f)
-    listed = {s["name"] for s in manifest["segments"]}
-    return vacuum_unlisted_dirs(
-        _segments_root(index_dir), listed, grace_seconds, dry_run
-    )
 
 
 def search_ivfpq_index(

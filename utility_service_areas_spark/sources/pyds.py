@@ -169,12 +169,9 @@ def _versioned_manifest(options: dict) -> tuple[str, dict]:
     from utility_service_areas_spark.sources import versioned as v
 
     path = _path_option(options)
-    versions = v.list_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed versions at {path}")
     want = options.get("version")
-    ver = versions[-1] if want is None else int(want)
-    return path, v._read_manifest(path, ver)
+    _ver, manifest = v._resolve_version(path, None if want is None else int(want))
+    return path, manifest
 
 
 def _files_in_dirs(table_dir: str, rels: list[str]) -> list[str]:
@@ -185,10 +182,6 @@ def _files_in_dirs(table_dir: str, rels: list[str]) -> list[str]:
             if name.endswith(".parquet"):
                 files.append(os.path.join(d, name))
     return files
-
-
-def _versioned_files(table_dir: str, manifest: dict) -> list[str]:
-    return _files_in_dirs(table_dir, manifest["data_dirs"])
 
 
 class VersionedTableReader(DataSourceReader):
@@ -288,7 +281,7 @@ class VersionedTableReader(DataSourceReader):
                 ]
                 files = _files_in_dirs(self._table_dir, dirs)
         if files is None:
-            files = _versioned_files(self._table_dir, self._manifest)
+            files = _files_in_dirs(self._table_dir, self._manifest["data_dirs"])
         if not self._pushed:
             return [VersionedTablePartition(f) for f in files]
         file_stats = self._manifest.get("file_stats")
@@ -508,13 +501,10 @@ class VersionedTableStreamReader(DataSourceStreamReader):
                 if is_first_emitted
                 else [d for d in man["data_dirs"] if d not in prev_dirs]
             )
-            for rel in new_dirs:
-                d = os.path.join(self._table_dir, rel)
-                for name in sorted(os.listdir(d)):
-                    if name.endswith(".parquet"):
-                        out.append(
-                            VersionedTablePartition(os.path.join(d, name))
-                        )
+            out += [
+                VersionedTablePartition(f)
+                for f in _files_in_dirs(self._table_dir, new_dirs)
+            ]
             prev_dirs = set(man["data_dirs"])
         return out
 
@@ -559,7 +549,7 @@ class VersionedTableDataSource(DataSource):
 
         table_dir, manifest = _versioned_manifest(self.options)
         want = _columns_option(self.options)
-        files = _versioned_files(table_dir, manifest)
+        files = _files_in_dirs(table_dir, manifest["data_dirs"])
         if files and not manifest.get("schema_evolved"):
             full = from_arrow_schema(pq.ParquetFile(files[0]).schema_arrow)
             if want is None:

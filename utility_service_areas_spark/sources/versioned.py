@@ -19,20 +19,31 @@ only its own. Old data dirs are never mutated or deleted, which is
 what makes every historical version readable forever (time travel)
 until an explicit vacuum.
 
-Commit protocol (crash-safe, first-writer-wins):
+Commit protocol (crash-safe, first-writer-wins). Every writer —
+``write_version``, ``write_version_bucketed``, ``restore_version`` and
+both merge paths — claims its version through one helper,
+``_claim_version``:
 
 1. write the commit's parquet under ``data/commit-<token>/``
    (invisible — no manifest references it yet);
-2. write the manifest body to ``_tmp-v{N}-<token>.json``;
-3. CLAIM the version with ``os.link(tmp, _v{N}.json)`` — hard-link
-   creation is atomic and FAILS if the name exists, so exactly one
-   writer wins a version number; the loser retries at N+1 (the
-   optimistic-concurrency loop every table format runs);
-4. unlink the temp.
+2. ``_claim_version`` writes the manifest body to
+   ``_tmp-v{N}-<token>.json``, CLAIMS the version with
+   ``os.link(tmp, _v{N}.json)`` — hard-link creation is atomic and
+   FAILS if the name exists, so exactly one writer wins a version
+   number — and unlinks the temp. A temp a vacuum swept mid-claim is
+   rewritten and linked again;
+3. a writer that lost version N reacts in its own way: an append,
+   overwrite, bucketed write or restore recomputes against the winner
+   and retries at N+1 (the optimistic-concurrency loop every table
+   format runs); a plain-table merge aborts loudly; a bucketed merge
+   rebases onto a winner that touched other buckets (``merge_version``).
 
-A crash before step 3 leaves orphan data/temp files that no manifest
-references — readers never see them (pinned), and the next commit is
-unaffected. A torn manifest is impossible: readers only open
+Every retry — at N+1, by rebase, or of a swept temp — is bounded by
+the one budget ``CLAIM_ATTEMPTS``.
+
+A crash before the claim in step 2 leaves orphan data/temp files
+that no manifest references — readers never see them (pinned), and
+the next commit is unaffected. A torn manifest is impossible: readers only open
 ``_v{N}.json`` names, which come into existence atomically complete.
 
 Schema contract: append validates the incoming frame's schema against
@@ -49,6 +60,12 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from utility_service_areas_spark.operators.localrel import local_df
+
+
+# Retry budget of every version claim: how often a writer recomputes
+# against (or a merge rebases onto) a newer winner, and how often one
+# claim rewrites a temp that a vacuum swept.
+CLAIM_ATTEMPTS = 20
 
 
 def _manifest_name(n: int) -> str:
@@ -81,6 +98,46 @@ def _read_manifest(table_dir: str, version: int) -> dict:
         )
     with open(path) as f:
         return json.load(f)
+
+
+def _resolve_version(
+    table_dir: str, version: int | None = None
+) -> tuple[int, dict]:
+    """(version, manifest) of ``version``, or of the latest committed
+    version when None. Raises FileNotFoundError on an empty table."""
+    versions = list_versions(table_dir)
+    if not versions:
+        raise FileNotFoundError(f"no committed versions at {table_dir}")
+    v = versions[-1] if version is None else version
+    return v, _read_manifest(table_dir, v)
+
+
+def _claim_version(table_dir: str, n: int, manifest: dict, token: str) -> bool:
+    """Claim version ``n`` for ``manifest``: write it to a temp,
+    hard-link the temp to ``_v{n}.json`` and unlink the temp. Hard-link
+    creation is atomic and fails iff the name exists, so exactly one
+    writer wins each version; returns whether this call did. A temp
+    swept out from under the claim (a vacuum running outside its grace
+    window — ADVICE r13 #3) is rewritten and the link retried, up to
+    ``CLAIM_ATTEMPTS`` times, instead of dying mid-commit."""
+    tmp = os.path.join(table_dir, f"_tmp-v{n}-{token}.json")
+    final = os.path.join(table_dir, _manifest_name(n))
+    for _attempt in range(CLAIM_ATTEMPTS):
+        with open(tmp, "w") as f:
+            json.dump(manifest, f)
+        try:
+            os.link(tmp, final)
+        except FileExistsError:
+            os.unlink(tmp)
+            return False
+        except FileNotFoundError:
+            continue
+        os.unlink(tmp)
+        return True
+    raise RuntimeError(
+        f"could not claim version {n} at {table_dir}: the commit temp "
+        "kept disappearing (a vacuum with no grace window?)"
+    )
 
 
 def _schema_key(df: DataFrame) -> list[list[str]]:
@@ -205,7 +262,6 @@ def write_version(
     df: DataFrame,
     table_dir: str,
     mode: str = "append",
-    max_attempts: int = 20,
     txn_id: str | None = None,
     merge_schema: bool = False,
     extra_manifest: dict | None = None,
@@ -276,7 +332,7 @@ def write_version(
         else {}
     )
 
-    for _attempt in range(max_attempts):
+    for _attempt in range(CLAIM_ATTEMPTS):
         versions = list_versions(table_dir)
         nxt = (versions[-1] + 1) if versions else 0
         evolved = False
@@ -337,24 +393,11 @@ def write_version(
             if done is not None:
                 return done
             manifest["txn_id"] = txn_id
-        tmp = os.path.join(table_dir, f"_tmp-v{nxt}-{token}.json")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        final = os.path.join(table_dir, _manifest_name(nxt))
-        try:
-            os.link(tmp, final)  # atomic claim: fails iff nxt is taken
-        except FileExistsError:
-            os.unlink(tmp)  # lost the race — recompute against the winner
-            continue
-        except FileNotFoundError:
-            # our temp was swept out from under us (a vacuum running
-            # outside its grace window — ADVICE r13 #3): rewrite the
-            # temp and retry instead of dying mid-commit
-            continue
-        os.unlink(tmp)
-        return nxt
+        if _claim_version(table_dir, nxt, manifest, token):
+            return nxt
+        # lost the race: recompute against the winner
     raise RuntimeError(
-        f"could not claim a version after {max_attempts} attempts "
+        f"could not claim a version after {CLAIM_ATTEMPTS} attempts "
         f"(extreme commit contention on {table_dir})"
     )
 
@@ -386,11 +429,7 @@ def read_version(
     .select on the scan, so Catalyst's native parquet column pruning
     does the I/O reduction (ReadSchema carries only these columns);
     unknown names raise, matching the DataSource's columns option."""
-    versions = list_versions(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no committed versions at {table_dir}")
-    v = versions[-1] if version is None else version
-    man = _read_manifest(table_dir, v)
+    v, man = _resolve_version(table_dir, version)
     df = _read_snapshot(spark, table_dir, man)
     if columns is not None:
         have = set(df.columns)
@@ -421,7 +460,7 @@ def _read_snapshot(
     return spark.read.parquet(*paths)
 
 
-def restore_version(table_dir: str, version: int, max_attempts: int = 20) -> int:
+def restore_version(table_dir: str, version: int) -> int:
     """Delta ``RESTORE TABLE ... TO VERSION AS OF n`` (r16): commit a
     NEW version whose content is exactly ``version``'s — by REFERENCE
     (the new manifest lists the old version's data dirs; no byte is
@@ -440,7 +479,7 @@ def restore_version(table_dir: str, version: int, max_attempts: int = 20) -> int
     if version == versions[-1]:
         return version  # restoring to latest is a no-op, not a new commit
     token = uuid.uuid4().hex[:12]
-    for _attempt in range(max_attempts):
+    for _attempt in range(CLAIM_ATTEMPTS):
         nxt = list_versions(table_dir)[-1] + 1
         manifest = {
             "version": nxt,
@@ -459,21 +498,11 @@ def restore_version(table_dir: str, version: int, max_attempts: int = 20) -> int
             # later append's plan-time skipping.
             if key in src:
                 manifest[key] = src[key]
-        tmp = os.path.join(table_dir, f"_tmp-v{nxt}-{token}.json")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        final = os.path.join(table_dir, _manifest_name(nxt))
-        try:
-            os.link(tmp, final)
-        except FileExistsError:
-            os.unlink(tmp)
-            continue  # lost the race: recompute against the winner
-        except FileNotFoundError:
-            continue  # temp swept mid-claim (ADVICE r13 #3) — retry
-        os.unlink(tmp)
-        return nxt
+        if _claim_version(table_dir, nxt, manifest, token):
+            return nxt
+        # lost the race: recompute against the winner
     raise RuntimeError(
-        f"could not claim a version after {max_attempts} attempts "
+        f"could not claim a version after {CLAIM_ATTEMPTS} attempts "
         f"(extreme commit contention on {table_dir})"
     )
 
@@ -520,7 +549,6 @@ def write_version_bucketed(
     table_dir: str,
     bucket_cols: list[str],
     n_buckets: int = 16,
-    max_attempts: int = 20,
     stats_columns: list[str] | None = None,
 ) -> int:
     """Commit ``df`` as a new OVERWRITE-lineage version laid out in
@@ -569,7 +597,7 @@ def write_version_bucketed(
                 _collect_file_stats(table_dir, rel, list(stats_columns))
             )
 
-    for _attempt in range(max_attempts):
+    for _attempt in range(CLAIM_ATTEMPTS):
         versions = list_versions(table_dir)
         nxt = (versions[-1] + 1) if versions else 0
         manifest = {
@@ -587,21 +615,12 @@ def write_version_bucketed(
         if file_stats:
             manifest["file_stats"] = file_stats
             manifest["stats_columns"] = sorted(stats_columns)
-        tmp = os.path.join(table_dir, f"_tmp-v{nxt}-{token}.json")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        final = os.path.join(table_dir, _manifest_name(nxt))
-        try:
-            os.link(tmp, final)
-        except FileExistsError:
-            os.unlink(tmp)
-            continue
-        except FileNotFoundError:
-            continue  # temp swept mid-claim (ADVICE r13 #3) — retry
-        os.unlink(tmp)
-        return nxt
+        if _claim_version(table_dir, nxt, manifest, token):
+            return nxt
+        # lost the race: recompute against the winner
     raise RuntimeError(
-        f"could not claim a version after {max_attempts} attempts"
+        f"could not claim a version after {CLAIM_ATTEMPTS} attempts "
+        f"(extreme commit contention on {table_dir})"
     )
 
 
@@ -644,28 +663,13 @@ def _merge_full_rewrite(
         "n_rows_commit": n_rows,
         "schema": man["schema"],
     }
-    final = os.path.join(table_dir, _manifest_name(base_v + 1))
-    for _retry in range(5):
-        tmp = os.path.join(table_dir, f"_tmp-v{base_v + 1}-{token}.json")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        try:
-            os.link(tmp, final)
-        except FileExistsError:
-            os.unlink(tmp)
-            raise RuntimeError(
-                f"concurrent commit detected at {table_dir} (version "
-                f"{base_v + 1} claimed while merging against {base_v}) — "
-                "re-run the merge against the new latest version"
-            ) from None
-        except FileNotFoundError:
-            continue  # temp swept mid-claim (ADVICE r13 #3) — retry
-        os.unlink(tmp)
-        return base_v + 1
-    raise RuntimeError(
-        f"could not claim version {base_v + 1} at {table_dir}: the "
-        "commit temp kept disappearing (a vacuum with no grace window?)"
-    )
+    if not _claim_version(table_dir, base_v + 1, manifest, token):
+        raise RuntimeError(
+            f"concurrent commit detected at {table_dir} (version "
+            f"{base_v + 1} claimed while merging against {base_v}) — "
+            "re-run the merge against the new latest version"
+        )
+    return base_v + 1
 
 
 def merge_version(
@@ -711,11 +715,7 @@ def merge_version(
     only invisible orphans, as everywhere else."""
     from pyspark.sql import functions as F
 
-    versions = list_versions(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no committed versions at {table_dir}")
-    base_v = versions[-1]
-    man = _read_manifest(table_dir, base_v)
+    base_v, man = _resolve_version(table_dir)
     bucketed = "buckets" in man
     if bucketed:
         merge_keys = list(man["bucket_cols"])
@@ -852,7 +852,7 @@ def merge_version(
     # those against a stale base would silently lose the winner's
     # update.
     cur_v, cur_man = base_v, man
-    for _rebase in range(10):
+    for _rebase in range(CLAIM_ATTEMPTS):
         new_buckets = dict(cur_man["buckets"])
         new_bucket_rows = dict(cur_man.get("bucket_rows", {}))
         new_buckets.update(ours_buckets)
@@ -884,31 +884,10 @@ def merge_version(
             manifest["stats_columns"] = stats_cols
         if _rebase:
             manifest["rebased_from"] = base_v  # audit trail
-        final = os.path.join(table_dir, _manifest_name(cur_v + 1))
-        claimed = False
-        for _retry in range(5):  # FileNotFoundError = temp swept mid-claim
-            tmp = os.path.join(table_dir, f"_tmp-v{cur_v + 1}-{token}.json")
-            with open(tmp, "w") as f:
-                json.dump(manifest, f)
-            try:
-                os.link(tmp, final)
-            except FileExistsError:
-                os.unlink(tmp)
-                break  # lost the race — try to rebase below
-            except FileNotFoundError:
-                continue  # rewrite the temp and retry (ADVICE r13 #3)
-            os.unlink(tmp)
-            claimed = True
-            break
-        else:
-            raise RuntimeError(
-                f"could not claim version {cur_v + 1} at {table_dir}: the "
-                "commit temp kept disappearing (a vacuum with no grace "
-                "window?)"
-            )
-        if claimed:
+        if _claim_version(table_dir, cur_v + 1, manifest, token):
             return cur_v + 1
 
+        # lost the race — try to rebase onto the winner
         latest_v = list_versions(table_dir)[-1]
         if latest_v <= cur_v:
             # claim failed yet no newer manifest is listable — an
@@ -941,8 +920,8 @@ def merge_version(
             )
         cur_v, cur_man = latest_v, latest
     raise RuntimeError(
-        f"merge at {table_dir} lost {10} successive claim races while "
-        "rebasing onto disjoint winners — extreme commit contention"
+        f"merge at {table_dir} lost {CLAIM_ATTEMPTS} successive claim races "
+        "while rebasing onto disjoint winners — extreme commit contention"
     )
 
 
@@ -967,8 +946,8 @@ def vacuum(
 
     Commit temps younger than ``tmp_grace_seconds`` are SKIPPED: a
     concurrent writer sits between json.dump(tmp) and os.link for
-    milliseconds, so sweeping only old temps (plus the claim loops'
-    FileNotFoundError retry) closes the window where a vacuum could
+    milliseconds, so sweeping only old temps (plus ``_claim_version``'s
+    swept-temp retry) closes the window where a vacuum could
     yank a live commit's temp (ADVICE r13 #3). The SAME grace applies
     to TRUE ORPHAN data dirs — dirs referenced by NO manifest at all —
     because an in-flight commit writes its parquet for seconds before
@@ -1146,11 +1125,7 @@ def optimize_version(
 
     if not zorder_by:
         raise ValueError("zorder_by needs at least one column")
-    versions = list_versions(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no committed versions at {table_dir}")
-    base_v = versions[-1]
-    man = _read_manifest(table_dir, base_v)
+    base_v, man = _resolve_version(table_dir)
     if "buckets" in man:
         raise ValueError(
             "optimize_version applies to plain lineages; a bucketed "

@@ -198,19 +198,16 @@ def versioned_table_stream_writer(stream: DataFrame, table_dir: str):
     the retained manifest history (vacuum caveat documented at
     txn_version). Returns a DataStreamWriter — caller adds options/
     trigger and .start()."""
-    from utility_service_areas_spark.sources.versioned import write_version
+    from utility_service_areas_spark.sources.versioned import (
+        list_versions,
+        write_version,
+    )
 
     def commit_batch(df: DataFrame, batch_id: int) -> None:
-        mode = "append" if list_versions_nonempty(table_dir) else "overwrite"
+        mode = "append" if list_versions(table_dir) else "overwrite"
         write_version(df, table_dir, mode=mode, txn_id=f"stream-{batch_id}")
 
     return stream.writeStream.foreachBatch(commit_batch)
-
-
-def list_versions_nonempty(table_dir: str) -> bool:
-    from utility_service_areas_spark.sources.versioned import list_versions
-
-    return bool(list_versions(table_dir))
 
 
 # ---------------------------------------------------------------------------
