@@ -7,7 +7,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SMOKE_SF = "/root/testdata/sf0.001"
+from __spark_entry__ import SMOKE_SF_DIR as SMOKE_SF  # noqa: E402
 
 
 def backdate_tree(path: str, ts: float = 0.0) -> None:
@@ -18,6 +18,16 @@ def backdate_tree(path: str, ts: float = 0.0) -> None:
     for walk_root, dirs, files in os.walk(path):
         for name in dirs + files:
             os.utime(os.path.join(walk_root, name), (ts, ts))
+
+
+def write_docs(spark, path: str, rows) -> None:
+    """Write ``rows``, a list of (doc_id, text), as the documents table
+    under ``path`` in the schema the loaders expect (lang, source and
+    n_chars present but incidental)."""
+    spark.createDataFrame(
+        [(i, t, "en", "srcT", len(t)) for i, t in rows],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).write.mode("overwrite").parquet(f"{path}/documents.parquet")
 
 
 def read_events_stream(spark, sf_dir: str):
@@ -84,8 +94,8 @@ def pytest_collection_modifyitems(config, items):
     """Mark the node IDs listed in tests/slow_tests.txt as `slow`.
 
     A committed manifest (exact node IDs, so parametrized cases split
-    per-param — e.g. test_query_runs_smoke[dedup_suffix_splice] is slow
-    while the other 200+ params stay in the default run) instead of
+    per-param — e.g. test_registered_query[dedup_suffix_splice] is slow
+    while the other 250+ params stay in the default run) instead of
     per-function decorators: the split is duration-data-driven and
     regenerable, and no test is deleted from coverage."""
     manifest = os.path.join(os.path.dirname(__file__), "slow_tests.txt")

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tests.conftest import SMOKE_SF
+
 
 def test_kmeans_numpy_path_matches_jvm(spark):
     from utility_service_areas_spark.operators.kmeans import (
@@ -16,7 +18,7 @@ def test_kmeans_numpy_path_matches_jvm(spark):
         kmeans_fit_assign_np,
     )
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{SMOKE_SF}/embeddings.parquet")
     jvm = {
         r.id: (r.cluster, r.dist2_micros)
         for r in kmeans_fit_assign(emb, "vec_id", "embedding", k=8, n_iter=5).collect()
@@ -35,7 +37,7 @@ def test_kmeans_numpy_path_repartition_invariant(spark):
     centroid trajectory independent of partitioning/batching."""
     from utility_service_areas_spark.operators.kmeans import kmeans_fit_assign_np
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{SMOKE_SF}/embeddings.parquet")
     a = {
         r.id: (r.cluster, r.dist2_micros)
         for r in kmeans_fit_assign_np(emb, "vec_id", "embedding", k=8, n_iter=3).collect()
@@ -295,7 +297,7 @@ def test_fused_multi_subspace_fit_bit_identical(spark):
     )
     from utility_service_areas_spark.sources.tables import load_table
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = load_table(spark, SMOKE_SF, "embeddings")
     base = emb.select(
         F.col("vec_id").alias("id"),
         F.col("embedding").cast("array<double>").alias("vec"),
@@ -323,7 +325,7 @@ def test_pq_encode_drops_malformed_vectors(spark):
 
     from utility_service_areas_spark.operators.ann import pq_encode
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{SMOKE_SF}/embeddings.parquet")
     dim = len(emb.first()["embedding"])
     base = emb.select("vec_id", "embedding").limit(200)
     junk = spark.createDataFrame(
@@ -368,3 +370,43 @@ def test_pq_encode_drops_malformed_vectors(spark):
     )
     assert books_ed == books_clean
     assert {r.id for r in codes_ed.collect()} == want
+
+
+def test_knn_graph_recall_on_clustered_substrate(spark, tmp_path):
+    """NN-descent's design premise is locality: on a 12-cluster
+    substrate the 3-round graph must reach recall@10 >= 0.9 vs brute
+    force (measured 0.999 offline; the uniform-random driver substrate
+    plateaus ~0.5-0.6 and is documented, not pinned — the
+    PQ-on-random-embeddings precedent)."""
+    import numpy as np
+
+    from utility_service_areas_spark.plans.registry import all_queries
+
+    rng = np.random.default_rng(7)
+    n, d, c = 600, 64, 12
+    cent = rng.normal(size=(c, d)) * 3
+    labels = rng.integers(0, c, n)
+    X = cent[labels] + rng.normal(size=(n, d))
+    spark.createDataFrame(
+        [
+            (int(i), [float(x) for x in X[i]], int(labels[i]))
+            for i in range(n)
+        ],
+        "vec_id long, embedding array<float>, label int",
+    ).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
+
+    got = {}
+    for r in all_queries()["embedding_knn_graph"](spark, str(tmp_path)).collect():
+        got.setdefault(r.vec_id, set()).add(r.neighbor_id)
+
+    Xf = X.astype(np.float32).astype(np.float64)  # parquet stores f32
+    Xn = Xf / np.linalg.norm(Xf, axis=1, keepdims=True)
+    S = Xn @ Xn.T
+    np.fill_diagonal(S, -2.0)
+    true_top = np.argsort(-S, axis=1)[:, :10]
+    recall = np.mean(
+        [len(got.get(i, set()) & set(true_top[i])) / 10 for i in range(n)]
+    )
+    assert recall >= 0.9, f"recall@10 = {recall:.3f}"
+    # k-regular out-degree: every vertex carries exactly k neighbors
+    assert all(len(v) == 10 for v in got.values())

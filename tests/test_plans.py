@@ -5,20 +5,12 @@ be visible in the executed plan, not just intended.
 
 from __future__ import annotations
 
-import contextlib
-import io
 import re
 
 import pytest
 
 from tests.conftest import SMOKE_SF
-
-
-def plan_of(df, mode: str = "formatted") -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode)
-    return buf.getvalue()
+from utility_service_areas_spark.plans.registry import physical_plan
 
 
 @pytest.fixture(scope="module")
@@ -29,43 +21,43 @@ def queries():
 
 
 def test_filters_are_pushed_to_scan(spark, queries):
-    plan = plan_of(queries["filter_tag_entities"](spark, SMOKE_SF))
+    plan = physical_plan(queries["filter_tag_entities"](spark, SMOKE_SF))
     assert "PushedFilters" in plan
     assert "GreaterThan(c_acctbal" in plan  # predicate reached parquet
 
 
 def test_scan_prunes_columns(spark, queries):
-    plan = plan_of(queries["earliest_year_per_entity"](spark, SMOKE_SF))
+    plan = physical_plan(queries["earliest_year_per_entity"](spark, SMOKE_SF))
     # Only the two needed columns are read from the 6-column table.
     assert "ReadSchema: struct<o_custkey:bigint,o_orderdate:timestamp_ntz>" in plan
 
 
 def test_dim_joins_broadcast(spark, queries):
-    plan = plan_of(queries["enrich_join_dims"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["enrich_join_dims"](spark, SMOKE_SF), "simple")
     assert plan.count("BroadcastHashJoin") == 2
     assert "SortMergeJoin" not in plan
 
 
 def test_flagship_broadcasts_dims(spark, queries):
-    plan = plan_of(queries["flagship_service_area_report"](spark, SMOKE_SF))
+    plan = physical_plan(queries["flagship_service_area_report"](spark, SMOKE_SF))
     assert plan.count("BroadcastHashJoin") >= 2
     assert "CartesianProduct" not in plan
 
 
 def test_agg_is_partial(spark, queries):
-    plan = plan_of(queries["agg_stats_by_group"](spark, SMOKE_SF))
+    plan = physical_plan(queries["agg_stats_by_group"](spark, SMOKE_SF))
     # partial (map-side) + final aggregate around one exchange
     assert plan.count("HashAggregate") >= 2
     assert "PushedFilters" in plan and "l_shipdate" in plan
 
 
 def test_topk_avoids_full_sort(spark, queries):
-    plan = plan_of(queries["top_revenue_orders"](spark, SMOKE_SF))
+    plan = physical_plan(queries["top_revenue_orders"](spark, SMOKE_SF))
     assert "TakeOrderedAndProject" in plan
 
 
 def test_spatial_join_is_broadcast_not_cartesian(spark, queries):
-    plan = plan_of(queries["geo_point_in_polygon"](spark, SMOKE_SF))
+    plan = physical_plan(queries["geo_point_in_polygon"](spark, SMOKE_SF))
     # Non-equi range prefilter → broadcast nested loop over the tiny
     # polygon side; never a cartesian product of the point side.
     assert "BroadcastNestedLoopJoin" in plan
@@ -76,7 +68,7 @@ def test_quartiles_have_no_partition_sort(spark, queries):
     # VERDICT r1: ntile() would sort each event_type's entire row set
     # in one reducer. The cutoff formulation must show a broadcast
     # join and NO window/sort over the event rows.
-    plan = plan_of(queries["events_value_quartiles"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["events_value_quartiles"](spark, SMOKE_SF), "simple")
     assert "BroadcastHashJoin" in plan
     assert "Window" not in plan and "ntile(4)" not in plan
     # the only shuffle is the tiny partial-percentile state exchange;
@@ -87,31 +79,31 @@ def test_quartiles_have_no_partition_sort(spark, queries):
 
 
 def test_semi_join_for_exists(spark, queries):
-    plan = plan_of(queries["orders_with_late_items"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["orders_with_late_items"](spark, SMOKE_SF), "simple")
     assert "LeftSemi" in plan  # EXISTS decorrelates, never duplicates rows
 
 
 def test_dormant_customers_anti_join_and_pushdown(spark, queries):
-    plan = plan_of(queries["dormant_high_balance_customers"](spark, SMOKE_SF))
+    plan = physical_plan(queries["dormant_high_balance_customers"](spark, SMOKE_SF))
     assert "LeftAnti" in plan
     # recent-order date filter reaches the orders parquet scan
     assert "GreaterThanOrEqual(o_orderdate" in plan
 
 
 def test_cube_is_single_expand_pass(spark, queries):
-    plan = plan_of(queries["order_status_priority_cube"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["order_status_priority_cube"](spark, SMOKE_SF), "simple")
     assert "Expand" in plan  # grouping sets expand once
     assert plan.count("Scan parquet") == 1  # no rescan per grouping set
 
 
 def test_corpus_pipeline_single_shuffle_semi_join(spark, queries):
-    plan = plan_of(queries["corpus_clean_sample"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["corpus_clean_sample"](spark, SMOKE_SF), "simple")
     assert "LeftSemi" in plan
     assert "CartesianProduct" not in plan
 
 
 def test_overlay_pairs_broadcast_prefilter(spark, queries):
-    plan = plan_of(queries["geo_union_overlap_area"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["geo_union_overlap_area"](spark, SMOKE_SF), "simple")
     # bbox inequality join broadcasts the tiny polygon side; the
     # Arrow overlay UDF only ever sees candidate pairs
     assert "BroadcastNestedLoopJoin" in plan
@@ -119,16 +111,16 @@ def test_overlay_pairs_broadcast_prefilter(spark, queries):
 
 
 def test_q6_fully_pushed_single_scan(spark, queries):
-    plan = plan_of(queries["simple_revenue_delta"](spark, SMOKE_SF))
+    plan = physical_plan(queries["simple_revenue_delta"](spark, SMOKE_SF))
     # every predicate reaches the parquet scan; no join, no wide shuffle
     assert "PushedFilters" in plan and "LessThan(l_quantity,24.0)" in plan
     assert "Join" not in plan
-    simple = plan_of(queries["simple_revenue_delta"](spark, SMOKE_SF), "simple")
+    simple = physical_plan(queries["simple_revenue_delta"](spark, SMOKE_SF), "simple")
     assert simple.count("Scan parquet") == 1
 
 
 def test_q10_topk_and_broadcast_nation(spark, queries):
-    plan = plan_of(queries["returned_item_report"](spark, SMOKE_SF))
+    plan = physical_plan(queries["returned_item_report"](spark, SMOKE_SF))
     assert "TakeOrderedAndProject" in plan  # never a full sort for LIMIT 20
     assert "BroadcastHashJoin" in plan
     # returnflag filter reaches the lineitem scan
@@ -139,36 +131,36 @@ def test_q11_total_is_broadcast_not_window(spark, queries):
     df = queries["part_revenue_concentration"](spark, SMOKE_SF)
     # global total joins back as a one-row broadcast; the per-part agg
     # is never window-sorted in a single partition
-    plan = plan_of(df, "simple")
+    plan = physical_plan(df, "simple")
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert "Window" not in plan
     # the scalar-total branch must REUSE the per-part agg's shuffle at
     # runtime (exchange reuse), not rescan lineitem
     df.collect()
-    final = plan_of(df, "simple")
+    final = physical_plan(df, "simple")
     assert "ReusedExchange" in final
 
 
 def test_q15_scalar_max_broadcast(spark, queries):
-    plan = plan_of(queries["top_revenue_supplier"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["top_revenue_supplier"](spark, SMOKE_SF), "simple")
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert "Window" not in plan
 
 
 def test_q20_semi_join_before_agg(spark, queries):
-    plan = plan_of(queries["excess_quantity_suppliers"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["excess_quantity_suppliers"](spark, SMOKE_SF), "simple")
     assert "LeftSemi" in plan  # part-name IN(...) never duplicates fact rows
     assert "CartesianProduct" not in plan
 
 
 def test_q21_decorrelates_to_one_agg(spark, queries):
     # the EXISTS/NOT EXISTS pair must not rescan lineitem per side
-    plan = plan_of(queries["supplier_order_exclusivity"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["supplier_order_exclusivity"](spark, SMOKE_SF), "simple")
     assert plan.count("Scan parquet") <= 2
 
 
 def test_chunk_split_is_map_only(spark, queries):
-    plan = plan_of(queries["docs_chunk_split"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["docs_chunk_split"](spark, SMOKE_SF), "simple")
     # doc → chunks expands in place: no shuffle, no join, no Python
     assert "Exchange" not in plan
     assert "Join" not in plan
@@ -176,19 +168,19 @@ def test_chunk_split_is_map_only(spark, queries):
 
 
 def test_pack_sequences_single_window_pass(spark, queries):
-    plan = plan_of(queries["docs_pack_sequences"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["docs_pack_sequences"](spark, SMOKE_SF), "simple")
     # one shuffle on the shard key feeds the one window pass
     assert plan.count("Exchange hashpartitioning") == 1
     assert plan.count("Window") == 1
 
 
 def test_redact_pii_is_map_only(spark, queries):
-    plan = plan_of(queries["text_redact_pii"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["text_redact_pii"](spark, SMOKE_SF), "simple")
     assert "Exchange" not in plan and "Join" not in plan
 
 
 def test_benchmark_overlap_broadcasts_bench_side(spark, queries):
-    plan = plan_of(queries["docs_benchmark_overlap"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["docs_benchmark_overlap"](spark, SMOKE_SF), "simple")
     # the benchmark gram set builds the broadcast side; the corpus is
     # never shuffled on the gram key for the join itself
     assert "BroadcastHashJoin" in plan
@@ -197,7 +189,7 @@ def test_benchmark_overlap_broadcasts_bench_side(spark, queries):
 
 
 def test_funnel_single_fold_no_per_stage_rescan(spark, queries):
-    plan = plan_of(queries["event_funnel_conversion"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["event_funnel_conversion"](spark, SMOKE_SF), "simple")
     # one collect+fold pass, not three correlated joins: events scanned
     # at most twice (fold + distinct-users), never per funnel stage
     assert plan.count("Scan parquet") <= 2
@@ -206,7 +198,7 @@ def test_funnel_single_fold_no_per_stage_rescan(spark, queries):
 
 
 def test_fuzzy_match_is_blocked_join(spark, queries):
-    plan = plan_of(queries["fuzzy_match_part_names"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["fuzzy_match_part_names"](spark, SMOKE_SF), "simple")
     # blocking key join (equi on first char + length band), then
     # levenshtein only on candidates — never an all-pairs product
     assert "CartesianProduct" not in plan
@@ -218,7 +210,7 @@ def test_repetition_signals_no_join_single_gram_shuffle(spark, queries):
     agg) to a pure in-row run-length fold: still no Join — and now no
     aggregation or explode at all (see also the map-only pin in
     test_r17_perf.py)."""
-    plan = plan_of(queries["docs_repetition_signals"](spark, SMOKE_SF))
+    plan = physical_plan(queries["docs_repetition_signals"](spark, SMOKE_SF))
     assert "Join" not in plan
     assert "HashAggregate" not in plan
     assert "Generate" not in plan
@@ -228,7 +220,7 @@ def test_domain_quota_two_phase_windows(spark, queries):
     """The exact top-K must be the salted two-phase shape: two Window
     nodes (per-(source,salt) then per-source over survivors), never a
     single global window over raw data."""
-    plan = plan_of(queries["domain_quota_sample"](spark, SMOKE_SF))
+    plan = physical_plan(queries["domain_quota_sample"](spark, SMOKE_SF))
     assert plan.count("Window") >= 2
     assert "CartesianProduct" not in plan
 
@@ -240,7 +232,7 @@ def test_curation_funnel_quota_two_phase_salted(spark, queries):
     row_number window sorting a whole hot source's survivors on one
     reducer — and the <= n_sources*K keep-set must join back as a
     broadcast onto the lineage-cut stage frame."""
-    plan = plan_of(queries["curation_funnel_report"](spark, SMOKE_SF))
+    plan = physical_plan(queries["curation_funnel_report"](spark, SMOKE_SF))
     # phase 1 partitions by (source, salt-bucket); phase 2 by source
     assert re.search(r"windowspecdefinition\(source#\d+, sb#\d+,", plan)
     assert re.search(r"windowspecdefinition\(source#\d+, rk#\d+", plan)
@@ -258,7 +250,7 @@ def test_rfm_no_global_sort_no_ntile(spark, queries):
     """Quartiles come from a broadcast scalar-percentile aggregate —
     the plan must not contain a global (partition-less) Sort feeding a
     window, which is what ntile would require."""
-    plan = plan_of(queries["customer_rfm_segments"](spark, SMOKE_SF))
+    plan = physical_plan(queries["customer_rfm_segments"](spark, SMOKE_SF))
     # no Window node anywhere: ntile would need one (checking the
     # substring "ntile" is a trap — "percentile" contains it)
     assert "Window" not in plan
@@ -268,7 +260,7 @@ def test_rfm_no_global_sort_no_ntile(spark, queries):
 def test_hll_registers_stay_jvm_side(spark, queries):
     """The explicit sketch is codegen end-to-end: no Python evaluation
     and two aggregation levels (register max, harmonic sum)."""
-    plan = plan_of(queries["hll_registers_users"](spark, SMOKE_SF))
+    plan = physical_plan(queries["hll_registers_users"](spark, SMOKE_SF))
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert plan.count("HashAggregate") >= 2
 
@@ -277,7 +269,7 @@ def test_ivf_sqrtn_uses_arrow_kernel_not_crossjoin(spark, queries):
     """At C ≥ 64 the corpus→cell assignment must be the blocked Arrow
     kernel — ONE MapInPandas — never an n×C crossJoin row explosion
     (the interpreted fold measured ~2 h extrapolated at 1M×C=1000)."""
-    plan = plan_of(queries["ann_ivf_sqrtn_topk"](spark, SMOKE_SF))
+    plan = physical_plan(queries["ann_ivf_sqrtn_topk"](spark, SMOKE_SF))
     assert "MapInPandas" in plan
     assert "CartesianProduct" not in plan
 
@@ -294,7 +286,7 @@ def test_minhash_verified_semi_filters_before_pair_join(spark, queries):
     from utility_service_areas_spark.sources.tables import load_table
 
     docs = load_table(spark, SMOKE_SF, "documents")
-    plan = plan_of(
+    plan = physical_plan(
         minhash_verified_pairs(docs, "doc_id", "text", cut_lineage=False)
     )
     assert "LeftSemi" in plan
@@ -309,7 +301,7 @@ def test_minhash_verified_lineage_cut_truncates_recompute(spark, queries):
     the final plan reads only checkpointed RDDs — at most a couple of
     scans may remain, never the recompute explosion."""
     for key in ("dedup_minhash_verified", "minhash_estimator_quality"):
-        plan = plan_of(queries[key](spark, SMOKE_SF), "simple")
+        plan = physical_plan(queries[key](spark, SMOKE_SF), "simple")
         n_scans = plan.count("Scan parquet")
         assert n_scans <= 4, f"{key}: {n_scans} parquet scans"
         assert "ExistingRDD" in plan
@@ -319,7 +311,7 @@ def test_quantize_scales_broadcast_corpus_unshuffled(spark, queries):
     """Codes/SSE are array lambdas over a 1-row broadcast scales dim:
     the corpus side must have no hash-partition exchange (the only
     aggregation shuffles the 64-row dim stats)."""
-    plan = plan_of(queries["embedding_quantize_int8"](spark, SMOKE_SF))
+    plan = physical_plan(queries["embedding_quantize_int8"](spark, SMOKE_SF))
     assert "BroadcastExchange" in plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
@@ -328,7 +320,7 @@ def test_incremental_ingest_is_asymmetric(spark, queries):
     """New-batch × old-corpus only: the band self-join must carry the
     new/old filters (no unfiltered corpus self-join) and stay
     cartesian-free."""
-    plan = plan_of(queries["dedup_incremental_ingest"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["dedup_incremental_ingest"](spark, SMOKE_SF), "simple")
     assert "CartesianProduct" not in plan
     assert plan.count("SortMergeJoin") + plan.count("BroadcastHashJoin") >= 2
 
@@ -336,7 +328,7 @@ def test_incremental_ingest_is_asymmetric(spark, queries):
 def test_cms_counter_table_broadcasts(spark, queries):
     """The d*w=4096-row CMS counter table must broadcast to the probe
     join — never a shuffle of the token stream against it."""
-    plan = plan_of(queries["cms_token_counts"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["cms_token_counts"](spark, SMOKE_SF), "simple")
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
@@ -345,7 +337,7 @@ def test_cms_counter_table_broadcasts(spark, queries):
 def test_shard_manifest_one_row_broadcast(spark, queries):
     """The shard count is a 1-row broadcast onto the scan; assignment
     is map-side and the only real shuffle keys on the shard id."""
-    plan = plan_of(queries["docs_shard_manifest"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["docs_shard_manifest"](spark, SMOKE_SF), "simple")
     assert "BroadcastNestedLoopJoin" in plan  # the 1-row n_shards frame
     assert "SortMergeJoin" not in plan
 
@@ -354,7 +346,7 @@ def test_pq_corpus_never_shuffled_encode_is_one_pass(spark, queries):
     """PQ+refine: exactly one MapInPandas (the fused all-subspace
     encode), queries and shortlist broadcast, the corpus never enters
     a SortMergeJoin, and no row-at-a-time Python anywhere."""
-    plan = plan_of(queries["ann_pq_topk"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["ann_pq_topk"](spark, SMOKE_SF), "simple")
     assert plan.count("MapInPandas") == 1
     assert plan.count("BroadcastHashJoin") >= 2
     assert "SortMergeJoin" not in plan
@@ -367,7 +359,7 @@ def test_gapfill_ffill_window_is_calendar_bounded(spark, queries):
     (priority, day); the ffill window partitions by priority over
     calendar rows. Exactly one Window; the dense left join must not
     sort-merge (both sides are calendar-sized)."""
-    plan = plan_of(queries["orders_daily_gapfill"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["orders_daily_gapfill"](spark, SMOKE_SF), "simple")
     assert plan.count("Window") == 1
     assert "partial_sum" in plan  # map-side combine on the corpus agg
     assert "CartesianProduct" not in plan
@@ -377,7 +369,7 @@ def test_audience_overlap_is_bitmask_not_self_join(spark, queries):
     """Set intersection via per-user bit_or masks against a 10-row
     broadcast pair dim — never a fact-table self-join (no
     SortMergeJoin at all; one BroadcastNestedLoopJoin)."""
-    plan = plan_of(queries["event_audience_overlap"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["event_audience_overlap"](spark, SMOKE_SF), "simple")
     assert "SortMergeJoin" not in plan
     assert "BroadcastNestedLoopJoin" in plan
     assert plan.count("partial_bit_or") >= 1 or "bit_or" in plan
@@ -388,7 +380,7 @@ def test_bootstrap_partial_agg_before_replicate_shuffle(spark, queries):
     replicate BEFORE the exchange, so the only corpus-wide shuffle
     carries 64 x partitions rows; the CI scalars broadcast onto the
     point estimate."""
-    plan = plan_of(queries["revenue_bootstrap_ci"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["revenue_bootstrap_ci"](spark, SMOKE_SF), "simple")
     assert "partial_sum(wc" in plan
     assert "BroadcastNestedLoopJoin" in plan
     assert plan.count("Window") == 1  # the 64-row rank stage only
@@ -398,7 +390,7 @@ def test_pareto_front_two_phase_skyline(spark, queries):
     """Skyline-of-skylines: phase 1 windows partition by the 64-way
     bucket (parallel local fronts), phase 2 runs the exact window
     over survivors only. Exactly two Window nodes, first bucketed."""
-    plan = plan_of(queries["orders_pareto_front"](spark, SMOKE_SF), "formatted")
+    plan = physical_plan(queries["orders_pareto_front"](spark, SMOKE_SF), "formatted")
     assert len(re.findall(r"windowspecdefinition", plan)) == 2
     assert re.search(r"windowspecdefinition\(sb#\d+, neg#\d+", plan)
 
@@ -407,7 +399,7 @@ def test_asof_tolerance_is_one_window_no_join(spark, queries):
     """The bounded-lookback as-of keeps the union-marker shape: one
     window pass, zero join operators (the tolerance is a map-side
     post-filter, not a second inequality join)."""
-    plan = plan_of(queries["events_asof_tolerance"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["events_asof_tolerance"](spark, SMOKE_SF), "simple")
     assert plan.count("Window") == 1
     assert "Join" not in plan
 
@@ -416,7 +408,7 @@ def test_cluster_quality_one_assign_pass_broadcast_sep(spark, queries):
     """One Arrow-batched assignment pass, a k-row partial agg, and the
     k x k separation attached as a broadcast — the corpus never
     enters a shuffle join."""
-    plan = plan_of(queries["kmeans_cluster_quality"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["kmeans_cluster_quality"](spark, SMOKE_SF), "simple")
     assert plan.count("MapInPandas") == 1
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
@@ -425,7 +417,7 @@ def test_cluster_quality_one_assign_pass_broadcast_sep(spark, queries):
 def test_knn_areas_is_map_only(spark, queries):
     """k-NN against the driver-inlined dim must be ONE map pass:
     no Exchange, no join, no Window anywhere in the plan."""
-    plan = plan_of(queries["geo_knn_areas"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["geo_knn_areas"](spark, SMOKE_SF), "simple")
     assert "Exchange" not in plan
     assert "Join" not in plan and "Window" not in plan
 
@@ -433,7 +425,7 @@ def test_knn_areas_is_map_only(spark, queries):
 def test_nearest_area_is_map_only(spark, queries):
     """r9 retrofit: 1-NN against the driver-inlined dim is one map
     pass — no Exchange, no join, no aggregate shuffle."""
-    plan = plan_of(queries["geo_nearest_area"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["geo_nearest_area"](spark, SMOKE_SF), "simple")
     assert "Exchange" not in plan
     assert "Join" not in plan and "HashAggregate" not in plan
 
@@ -442,7 +434,7 @@ def test_ewma_taps_fuse_into_one_window_one_sort(spark, queries):
     """The 16 dyadic lag taps must compile into ONE Window node
     stacked on the ffill window over the same partition+sort: exactly
     two Window nodes, exactly one Sort (no re-sort between them)."""
-    plan = plan_of(queries["orders_daily_ewma"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["orders_daily_ewma"](spark, SMOKE_SF), "simple")
     assert plan.count("Window") == 2
     assert plan.count("Sort ") == 1
 
@@ -452,7 +444,7 @@ def test_dq_audit_no_duplicate_corpus_scans(spark, queries):
     their 1-row lineage-cut stats, not re-scan the facts: at most one
     orders scan (the orphan anti-join) and zero lineitem scans in the
     final plan."""
-    plan = plan_of(queries["data_quality_audit"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["data_quality_audit"](spark, SMOKE_SF), "simple")
     assert plan.count("orders.parquet") <= 1
     assert plan.count("lineitem.parquet") == 0
     assert "CartesianProduct" not in plan
@@ -461,7 +453,7 @@ def test_dq_audit_no_duplicate_corpus_scans(spark, queries):
 def test_length_drift_single_partial_shuffle(spark, queries):
     """Drift score: one partial-agged shuffle on (source, bin), one on
     source — no join, no window, map-side combine visible."""
-    plan = plan_of(queries["source_length_drift"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["source_length_drift"](spark, SMOKE_SF), "simple")
     assert "Join" not in plan and "Window" not in plan
     assert "partial_sum" in plan
     assert plan.count("Exchange") == 2
@@ -472,7 +464,7 @@ def test_abc_prefix_sum_is_two_phase(spark, queries):
     one reducer: the running sum windows partition by the digit band,
     and the only unpartitioned window is the <=19-row band-offset
     frame."""
-    plan = plan_of(queries["part_abc_classification"](spark, SMOKE_SF), "formatted")
+    plan = physical_plan(queries["part_abc_classification"](spark, SMOKE_SF), "formatted")
     specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
     assert len(specs) == 2
     # the per-decade running sum: PARTITION BY digits, ORDER BY cents
@@ -489,7 +481,57 @@ def test_collocations_in_row_pairs_no_self_join(spark, queries):
     per-doc basket, never a doc-token self-join: the only joins are
     the broadcast vocab semi-filter and the two broadcast marginal
     attaches — no SortMergeJoin anywhere."""
-    plan = plan_of(queries["token_collocations"](spark, SMOKE_SF), "simple")
+    plan = physical_plan(queries["token_collocations"](spark, SMOKE_SF), "simple")
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "Generate" in plan  # the in-row pair explode
+
+
+def test_variant_stats_uses_variant_path_and_codegen(spark):
+    """#218's claim is the PLAN, not just the values (the oracle pins
+    those): props must parse through VariantExpressionEvalUtils (the
+    binary variant encoding), stay whole-stage-codegen'd, and carry no
+    Python evaluation node. Plus a malformed-JSON posture check:
+    parse_json is strict, so a corrupt props row must fail loudly
+    rather than silently zero (the repo's fail-loud ingest posture)."""
+    from utility_service_areas_spark.plans.registry import all_queries
+    from tests.conftest import SMOKE_SF
+
+    df = all_queries()["events_variant_stats"](spark, SMOKE_SF)
+    plan = physical_plan(df)
+    assert "parseJson" in plan, "variant parse path not in the plan"
+    # JVM static_invoke expression — never a Python evaluation node
+    # (an AQE plan hides WholeStageCodegen spans until execution, so
+    # assert the absence of Python nodes rather than the span label)
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    bad = spark.createDataFrame([("{not json",)], "props string")
+    with pytest.raises(Exception):
+        bad.select(F.variant_get(F.parse_json("props"), "$.k", "long")).collect()
+
+
+def test_r12_heavy_kernels_have_no_single_partition_exchange(spark):
+    """The r12 kernels' scale claims hinge on NO stage funneling into
+    one reducer: dense ranks are banded windows (suffix LRS), top-k is
+    TakeOrdered/WindowGroupLimit (RAKE, BM25), the shortlist rank is a
+    count-greater broadcast (RRF). An `Exchange SinglePartition` in
+    any of their plans would falsify that — pin its absence.
+    (TakeOrderedAndProject does its own bounded final merge, which is
+    k-row, not data-sized.)"""
+    from utility_service_areas_spark.plans.registry import all_queries
+
+    qs = all_queries()
+    for name in (
+        "dedup_suffix_lrs",
+        "text_rake_keyphrases",
+        "search_rrf_fusion",
+        "trade_graph_lpa",
+        "embedding_knn_graph",
+        "geo_simplify_vw",
+    ):
+        df = qs[name](spark, SMOKE_SF)
+        plan = physical_plan(df)
+        assert "Exchange SinglePartition" not in plan, name

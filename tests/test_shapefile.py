@@ -12,6 +12,7 @@ import time
 
 import pytest
 
+from tests.conftest import SMOKE_SF
 from utility_service_areas_spark.sources.shapefile import (
     SHAPE_MULTIPOINT,
     SHAPE_NULL,
@@ -144,7 +145,7 @@ def test_distributed_read_joins_geometry_and_attrs(spark, tmp_path):
 def test_registered_roundtrip_query_matches_rect_arithmetic(spark):
     from utility_service_areas_spark.plans.registry import all_queries
 
-    out = all_queries()["geo_shapefile_roundtrip"](spark, "/root/testdata/sf0.001")
+    out = all_queries()["geo_shapefile_roundtrip"](spark, SMOKE_SF)
     rows = out.collect()
     assert len(rows) == 25
     for r in rows:
@@ -229,7 +230,7 @@ def test_shapefile_pip_fixture_layout(spark):
 
     from utility_service_areas_spark.plans.geo_queries import geo_shapefile_pip
 
-    sf_dir = "/root/testdata/sf0.001"
+    sf_dir = SMOKE_SF
     out1 = {r.n_nationkey: r.n_customers for r in geo_shapefile_pip(spark, sf_dir).collect()}
     assert len(out1) == 25
 

@@ -9,11 +9,12 @@ import shutil
 
 from pyspark.sql import functions as F
 
+from tests.conftest import SMOKE_SF
 from utility_service_areas_spark.sources.tables import load_table, raw_table_schema
 
 
 def _drain(spark, src_dir, ckpt, out_name):
-    schema = raw_table_schema(spark, "/root/testdata/sf0.001", "events")
+    schema = raw_table_schema(spark, SMOKE_SF, "events")
     stream = (
         spark.readStream.schema(schema)
         .parquet(src_dir)
@@ -38,11 +39,11 @@ def test_checkpoint_recovery_no_double_count(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     # batch 1: sf0.001 events arrive
-    shutil.copy("/root/testdata/sf0.001/events.parquet", src / "batch1.parquet")
+    shutil.copy(f"{SMOKE_SF}/events.parquet", src / "batch1.parquet")
     first = _drain(spark, str(src), ckpt, "t_recov1")
     base = {
         r.event_type: r.n
-        for r in load_table(spark, "/root/testdata/sf0.001", "events")
+        for r in load_table(spark, SMOKE_SF, "events")
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
@@ -51,7 +52,7 @@ def test_checkpoint_recovery_no_double_count(spark, tmp_path):
 
     # batch 2: the same data arrives again as a NEW file; restart from
     # the checkpoint → totals double exactly once (old file not re-read)
-    shutil.copy("/root/testdata/sf0.001/events.parquet", src / "batch2.parquet")
+    shutil.copy(f"{SMOKE_SF}/events.parquet", src / "batch2.parquet")
     second = _drain(spark, str(src), ckpt, "t_recov2")
     assert second == {k: 2 * v for k, v in base.items()}
 
@@ -75,9 +76,9 @@ def test_file_sink_exactly_once_after_injected_crash(spark, tmp_path):
     out = str(tmp_path / "sink_out")
     ckpt = str(tmp_path / "ckpt")
 
-    table = pq.read_table("/root/testdata/sf0.001/events.parquet")
+    table = pq.read_table(f"{SMOKE_SF}/events.parquet")
     third = table.num_rows // 3
-    t0 = int(os.path.getmtime("/root/testdata/sf0.001/events.parquet"))
+    t0 = int(os.path.getmtime(f"{SMOKE_SF}/events.parquet"))
     for i in range(3):
         lo = i * third
         hi = table.num_rows if i == 2 else (i + 1) * third
@@ -85,7 +86,7 @@ def test_file_sink_exactly_once_after_injected_crash(spark, tmp_path):
         pq.write_table(table.slice(lo, hi - lo), path)
         os.utime(path, (t0 + i, t0 + i))  # deterministic batch order
 
-    schema = raw_table_schema(spark, "/root/testdata/sf0.001", "events")
+    schema = raw_table_schema(spark, SMOKE_SF, "events")
 
     def drain():
         q = (
@@ -125,7 +126,7 @@ def test_file_sink_exactly_once_after_injected_crash(spark, tmp_path):
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sv"))
     )
     want = (
-        load_table(spark, "/root/testdata/sf0.001", "events")
+        load_table(spark, SMOKE_SF, "events")
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sv"))
     )

@@ -6,14 +6,10 @@ Usage: python tools/dump_plans.py   (writes EXPLAIN.md at repo root)
 
 from __future__ import annotations
 
-import contextlib
-import io
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-SF_DIR = "/root/testdata/sf0.001"
 
 # query key → the plan property a reviewer should check
 HEADLINE = {
@@ -446,6 +442,7 @@ HEADLINE = {
 
 def main() -> None:
     import __spark_entry__ as e
+    from utility_service_areas_spark.plans.registry import physical_plan
     from utility_service_areas_spark.session import build_session
 
     spark = build_session("dump-plans")
@@ -460,11 +457,7 @@ def main() -> None:
         "",
     ]
     for name, note in HEADLINE.items():
-        df = queries[name](spark, SF_DIR)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue().rstrip()
+        plan = physical_plan(queries[name](spark, e.SMOKE_SF_DIR)).rstrip()
         # formatted output = tree + node details; keep the tree (short)
         tree = plan.split("\n\n")[0]
         out += [f"## {name}", "", f"**Check:** {note}", "", "```", tree, "```", ""]

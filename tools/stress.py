@@ -701,6 +701,7 @@ def main() -> None:
             shutil.rmtree(args.out)
         build_substrate(args.base, args.out, args.factor)
 
+    from __spark_entry__ import SMOKE_SF_DIR
     from utility_service_areas_spark.plans.registry import all_queries
     from utility_service_areas_spark.session import build_session
 
@@ -714,7 +715,7 @@ def main() -> None:
 
     # Warm the JVM/session on the smallest SF so the first timed query
     # doesn't absorb startup cost (same convention as bench.py).
-    qs[names[0]](spark, "/root/testdata/sf0.001").count()
+    qs[names[0]](spark, SMOKE_SF_DIR).count()
 
     # count() alone lets Catalyst DROP whole subtrees — a final
     # `docs LEFT JOIN (groupBy doc_id ...)` is join-eliminated because

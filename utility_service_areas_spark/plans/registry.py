@@ -1,6 +1,8 @@
 """Query registry: every operator from SURVEY.md §2 registers a named
 (spark_fn, oracle_sql) pair here; __spark_entry__.py exposes them to
-the driver.
+the driver. ``check_query`` checks one registered query (output
+surface, banned plan nodes, values against the DuckDB oracle) for both
+the test suite and tools/check_oracle.py.
 
 Conventions (see SURVEY.md §6):
 - Every computed column is aliased identically in the Spark plan and
@@ -15,7 +17,9 @@ from __future__ import annotations
 
 import functools
 import glob
+import hashlib
 import json
+import math
 import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
@@ -126,3 +130,144 @@ def _load_all() -> None:
     for mod in _PLAN_MODULES:
         __import__(f"utility_service_areas_spark.plans.{mod}")
     _LOADED = True
+
+
+# ---------------------------------------------------------------- checks
+#
+# One checker for every registered query, shared by the test suite and
+# tools/check_oracle.py (the local mirror of the driver's correctness
+# gate): it builds the query once, checks its output surface and plan,
+# collects it, and compares the rows with the DuckDB oracle.
+
+_ORACLE_TABLES = (
+    "region nation customer supplier part orders lineitem events documents embeddings"
+).split()
+
+# Physical-plan nodes that do not survive a 100 TB cluster:
+# - ``BatchEvalPython``: row-at-a-time Python UDF eval. Every Python
+#   kernel here is Arrow-batched (ArrowEvalPython / MapInPandas /
+#   FlatMapGroupsInPandas); a row-wise UDF in a hot path is a 10-100x
+#   regression that would otherwise show only as a slow bench.
+# - ``CartesianProduct``: a non-broadcast cross join. Intentional
+#   small-dim cross joins compile to BroadcastNestedLoopJoin (bounded
+#   build side); a CartesianProduct means BOTH sides are cluster-sized.
+BANNED_PLAN_NODES = ("BatchEvalPython", "CartesianProduct")
+
+# Output-surface lint (r7 post-mortem): the driver canonicalizes through
+# pandas, where DuckDB HUGEINT/DECIMAL become float64 (hash-mismatching
+# Spark's int64) and raw list columns crash its sort. Neither failure is
+# visible to a fetchall() comparison, so the declared output surface is
+# linted mechanically instead: every oracle's schema must be free of
+# HUGEINT/UHUGEINT/DECIMAL/list/struct/map columns, and every Spark
+# result must have only atomic top-level columns.
+_BAD_DUCK = ("HUGEINT", "UHUGEINT", "DECIMAL", "STRUCT", "MAP", "[]", "UNION")
+_BAD_SPARK_PREFIX = ("array<", "struct<", "map<")
+
+
+def physical_plan(df: DataFrame, mode: str = "formatted") -> str:
+    """The text ``df.explain(mode)`` prints, without executing ``df``."""
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
+
+
+def lint_oracle_surface(con, sql: str) -> list[str]:
+    """Return ['col: TYPE', ...] for driver-hostile oracle output columns."""
+    rows = con.execute(f"DESCRIBE SELECT * FROM ({sql}) __lint__").fetchall()
+    return [
+        f"{name}: {typ}"
+        for name, typ, *_ in rows
+        if any(b in typ.upper() for b in _BAD_DUCK)
+    ]
+
+
+def lint_spark_surface(sdf: DataFrame) -> list[str]:
+    """Return ['col: type', ...] for non-atomic top-level Spark columns."""
+    return [
+        f"{name}: {typ}"
+        for name, typ in sdf.dtypes
+        if typ.startswith(_BAD_SPARK_PREFIX)
+    ]
+
+
+def _canon_cell(v) -> str:
+    if v is None:
+        return "∅"
+    if isinstance(v, float):
+        if math.isnan(v):
+            return "nan"
+        return f"{v:.9g}"
+    if isinstance(v, (list, tuple)):
+        return "[" + ",".join(_canon_cell(x) for x in v) + "]"
+    return str(v)
+
+
+def _canon_frame(cols, rows):
+    """(order-insensitive value hash, sorted canonical lines) of a result,
+    with columns taken in name order as the driver does."""
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    lines = sorted(
+        "|".join(_canon_cell(r[i]) for i in order) for r in rows
+    )
+    h = hashlib.sha256("\n".join(lines).encode()).hexdigest()[:16]
+    return h, lines
+
+
+def oracle_connection(sf_dir: str):
+    """An in-memory DuckDB connection with one view per substrate table
+    present in ``sf_dir``."""
+    import duckdb  # only the checkers need it; keep registry import light
+
+    con = duckdb.connect()
+    for t in _ORACLE_TABLES:
+        p = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return con
+
+
+@dataclass
+class QueryCheck:
+    """What ``check_query`` found for one query."""
+
+    problems: list[str]  # empty when the query passes
+    rows: int  # rows the Spark result collected
+    diff: tuple[str, str] | None = None  # first differing canonical (spark, duckdb) rows
+
+
+def check_query(spark: SparkSession, con, name: str, sf_dir: str) -> QueryCheck:
+    """Build query ``name`` once on ``sf_dir`` and check it: unique
+    atomic output columns, no banned plan node, and, when it carries an
+    oracle, a driver-safe oracle surface plus the row count, schema and
+    value hash against DuckDB on ``con`` (see ``oracle_connection``)."""
+    _load_all()
+    spec = REGISTRY[name]
+    df = spec.fn(spark, sf_dir)
+    cols = df.columns
+    problems = []
+    if len(set(cols)) != len(cols):
+        problems.append(f"duplicate column names {cols}")
+    bad = lint_spark_surface(df)
+    if bad:
+        problems.append(f"non-atomic spark output {bad}")
+    plan = physical_plan(df)
+    problems += [f"{node} in physical plan" for node in BANNED_PLAN_NODES if node in plan]
+    rows = [tuple(r) for r in df.collect()]
+    if spec.oracle is None:
+        return QueryCheck(problems, len(rows))
+    bad = lint_oracle_surface(con, spec.oracle)
+    if bad:
+        problems.append(f"driver-hostile oracle output {bad}")
+    cur = con.execute(spec.oracle)
+    d_cols = [d[0] for d in cur.description]
+    d_rows = cur.fetchall()
+    diff = None
+    if len(rows) != len(d_rows):
+        problems.append(f"rowcount spark={len(rows)} duck={len(d_rows)}")
+    if sorted(cols) != sorted(d_cols):
+        problems.append(f"schema spark={sorted(cols)} duck={sorted(d_cols)}")
+    if len(rows) == len(d_rows) and sorted(cols) == sorted(d_cols):
+        sh, sl = _canon_frame(cols, rows)
+        dh, dl = _canon_frame(d_cols, d_rows)
+        if sh != dh:
+            problems.append(f"valuehash spark={sh} duck={dh}")
+            diff = next((a, b) for a, b in zip(sl, dl) if a != b)
+    return QueryCheck(problems, len(rows), diff)

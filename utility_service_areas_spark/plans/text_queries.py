@@ -1600,7 +1600,10 @@ def _bpe_cte_sql(
     only occur for l==r runs), even-offset-within-island selection,
     then drop rows consumed by the previous position's merge. The
     Spark side implements the SAME semantics as a sequential fold —
-    two independent formulations, one contract."""
+    two independent formulations, one contract. Each round's symbol
+    table, pair frame and best pair are MATERIALIZED: DuckDB inlines a
+    plain CTE per reference, so every round would otherwise replay the
+    whole prior chain (measured 63 s -> 0.3 s at sf0.001)."""
     parts = [
         "WITH w AS (",
         "  SELECT word, CAST(count(*) AS BIGINT) AS freq",
@@ -1615,11 +1618,11 @@ def _bpe_cte_sql(
     ]
     for i in range(n_merges):
         parts += [
-            f"p{i} AS (",
+            f"p{i} AS MATERIALIZED (",
             "  SELECT word, freq, pos, sym,",
             "         lead(sym) OVER (PARTITION BY word ORDER BY pos) AS nxt",
             f"  FROM s{i}),",
-            f"b{i} AS (",
+            f"b{i} AS MATERIALIZED (",
             "  SELECT l, r, c FROM (",
             "    SELECT sym AS l, nxt AS r, CAST(sum(freq) AS BIGINT) AS c",
             f"    FROM p{i} WHERE nxt IS NOT NULL GROUP BY sym, nxt)",
@@ -1637,7 +1640,7 @@ def _bpe_cte_sql(
             "  SELECT word, freq, pos, sym,",
             "         m AND ((pos - min(pos) OVER (PARTITION BY word, isl)) % 2 = 0) AS sel",
             f"  FROM i{i}),",
-            f"s{i + 1} AS (",
+            f"s{i + 1} AS MATERIALIZED (",
             "  SELECT n.word, n.freq,",
             "         CAST(row_number() OVER (PARTITION BY n.word ORDER BY n.pos) AS BIGINT) AS pos,",
             "         CASE WHEN n.sel THEN n.sym || b.r ELSE n.sym END AS sym",
