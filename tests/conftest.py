@@ -72,6 +72,28 @@ def spark():
     yield s
 
 
+@pytest.fixture(scope="session")
+def oracle_con():
+    """DuckDB over the smoke substrate, for ``plans.registry.check_query``."""
+    if not os.path.isdir(SMOKE_SF):
+        pytest.skip(f"{SMOKE_SF} is absent; the registry sweep needs the smoke substrate")
+    from utility_service_areas_spark.plans.registry import oracle_connection
+
+    con = oracle_connection(SMOKE_SF)
+    yield con
+    con.close()
+
+
+@pytest.fixture(scope="session")
+def registry_checks(oracle_con):
+    """``check_query`` results by registry key for this session. The
+    registry sweep (test_entry.py) fills it; the plan-invariant sweep
+    (test_plan_invariants.py) reads a key's plan problems from it and
+    builds the query itself only when the key was not checked, so one
+    run builds each query once."""
+    return {}
+
+
 @pytest.fixture
 def versioned_table(spark):
     """Registers format("versioned_table") on the shared session, as any
@@ -94,7 +116,7 @@ def pytest_collection_modifyitems(config, items):
     """Mark the node IDs listed in tests/slow_tests.txt as `slow`.
 
     A committed manifest (exact node IDs, so parametrized cases split
-    per-param — e.g. test_registered_query[dedup_suffix_splice] is slow
+    per-param — e.g. test_query_runs_smoke[dedup_suffix_splice] is slow
     while the other 250+ params stay in the default run) instead of
     per-function decorators: the split is duration-data-driven and
     regenerable, and no test is deleted from coverage."""

@@ -355,151 +355,3 @@ def test_poisson_ci_brackets_rate_and_scales(spark, tmp_path):
     assert abs(got["hot"].rate_milli_per_hour - 4 * got["cold"].rate_milli_per_hour) <= 3
     for r in got.values():
         assert r.ci_lo_milli < r.rate_milli_per_hour < r.ci_hi_milli
-
-
-def test_autocorr_components_match_numpy(spark, tmp_path):
-    """Semantics pin the mirrored SQL can't give: the integer
-    components, divided offline, must produce the true Pearson
-    autocorrelation of a hand-built series with a known period —
-    including a GAP hour that densification must zero-fill (the r9
-    burst lesson: a row-offset lag would silently skip it)."""
-    import datetime as dt
-
-    import numpy as np
-
-    from utility_service_areas_spark.plans.analytics_queries import _ACF_LAGS
-    from utility_service_areas_spark.plans.registry import all_queries
-
-    # 72 hours of a period-24 pattern; hour 10 left EMPTY (gap).
-    base = dt.datetime(2024, 3, 1)
-    rows = []
-    eid = 0
-    counts = {}
-    for h in range(72):
-        n = 1 + (h % 24) % 5  # periodic, nonconstant
-        if h == 10:
-            n = 0  # the densification gap
-        counts[h] = n
-        for _ in range(n):
-            rows.append((eid, base + dt.timedelta(hours=h, minutes=7)))
-            eid += 1
-    spark.createDataFrame(rows, "event_id long, ts timestamp").coalesce(
-        1
-    ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-
-    x = np.array([counts[h] for h in range(72)], dtype=np.float64)
-    got = {
-        r.lag: r
-        for r in all_queries()["events_hourly_autocorr"](
-            spark, str(tmp_path)
-        ).collect()
-    }
-    assert set(got) == set(_ACF_LAGS)
-    for L in _ACF_LAGS:
-        a, b = x[:-L], x[L:]
-        r = got[L]
-        assert r.n_pairs == len(a)
-        assert r.sum_x == int(a.sum()) and r.sum_y == int(b.sum())
-        assert r.sum_xy == int((a * b).sum())
-        assert r.sum_x2 == int((a * a).sum()) and r.sum_y2 == int((b * b).sum())
-        # offline fold == numpy corrcoef
-        n = r.n_pairs
-        num = n * r.sum_xy - r.sum_x * r.sum_y
-        den = (n * r.sum_x2 - r.sum_x**2) ** 0.5 * (
-            n * r.sum_y2 - r.sum_y**2
-        ) ** 0.5
-        assert abs(num / den - np.corrcoef(a, b)[0, 1]) < 1e-9
-    # the period-24 series must autocorrelate near 1 at lag 24 and the
-    # gap must NOT shift the phase
-    r24 = got[24]
-    n = r24.n_pairs
-    num = n * r24.sum_xy - r24.sum_x * r24.sum_y
-    den = (n * r24.sum_x2 - r24.sum_x**2) ** 0.5 * (
-        n * r24.sum_y2 - r24.sum_y**2
-    ) ** 0.5
-    assert num / den > 0.9
-
-
-def test_ohlc_matches_brute_python(spark, tmp_path):
-    """Positional-aggregate semantics pin: open/close must be the
-    value at the MIN/MAX o_orderkey within the day — including when
-    the extreme values sit in the middle of the day (inputs a mirrored
-    arg_min/arg_max pair can't distinguish from first/last if both
-    engines inverted the same way)."""
-    import datetime as dt
-
-    from utility_service_areas_spark.plans.registry import all_queries
-
-    d = dt.date(2024, 5, 1)
-    # (orderkey, price): open=7.00 (k=1), close=3.00 (k=9),
-    # high=99.00 / low=0.50 strictly inside the day.
-    rows = [
-        (1, d, 7.00),
-        (3, d, 99.00),
-        (5, d, 0.50),
-        (9, d, 3.00),
-        (2, dt.date(2024, 5, 2), 11.00),
-    ]
-    spark.createDataFrame(
-        rows, "o_orderkey long, o_orderdate date, o_totalprice double"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "orders.parquet")
-    )
-    got = {
-        r.day: r
-        for r in all_queries()["orders_daily_ohlc"](spark, str(tmp_path)).collect()
-    }
-    r = got[d]
-    assert (r.open_cents, r.high_cents, r.low_cents, r.close_cents) == (
-        700,
-        9900,
-        50,
-        300,
-    )
-    assert r.n_orders == 4 and r.volume_cents == 700 + 9900 + 50 + 300
-    r2 = got[dt.date(2024, 5, 2)]
-    assert (r2.open_cents, r2.close_cents, r2.n_orders) == (1100, 1100, 1)
-
-
-def test_weekly_ohlc_folds_daily_bars(spark, tmp_path):
-    """Bar-algebra pin: the weekly bar must take open from the week's
-    FIRST day and close from its LAST day — with the week's high/low
-    strictly inside — and a day in the NEXT ISO week must start a new
-    bar (date_trunc('week') Monday convention on both engines)."""
-    import datetime as dt
-
-    from utility_service_areas_spark.plans.registry import all_queries
-
-    mon = dt.date(2024, 5, 6)  # a Monday
-    rows = [
-        # Monday: open 7.00 (k=1) ... close 3.00 (k=4)
-        (1, mon, 7.00),
-        (4, mon, 3.00),
-        # Wednesday: the week's high and low, strictly inside
-        (5, mon + dt.timedelta(days=2), 99.00),
-        (6, mon + dt.timedelta(days=2), 0.50),
-        # Friday: close of the week = 8.00 (k=9, last key of last day)
-        (9, mon + dt.timedelta(days=4), 8.00),
-        # next Monday: its own bar
-        (2, mon + dt.timedelta(days=7), 11.00),
-    ]
-    spark.createDataFrame(
-        rows, "o_orderkey long, o_orderdate date, o_totalprice double"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "orders.parquet")
-    )
-    got = {
-        r.week: r
-        for r in all_queries()["orders_weekly_ohlc"](spark, str(tmp_path)).collect()
-    }
-    w1 = got[mon]
-    assert (w1.open_cents, w1.high_cents, w1.low_cents, w1.close_cents) == (
-        700,
-        9900,
-        50,
-        800,
-    )
-    assert w1.n_days == 3 and w1.n_orders == 5
-    assert w1.volume_cents == 700 + 300 + 9900 + 50 + 800
-    w2 = got[mon + dt.timedelta(days=7)]
-    assert (w2.open_cents, w2.close_cents, w2.n_days) == (1100, 1100, 1)

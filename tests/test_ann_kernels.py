@@ -370,43 +370,3 @@ def test_pq_encode_drops_malformed_vectors(spark):
     )
     assert books_ed == books_clean
     assert {r.id for r in codes_ed.collect()} == want
-
-
-def test_knn_graph_recall_on_clustered_substrate(spark, tmp_path):
-    """NN-descent's design premise is locality: on a 12-cluster
-    substrate the 3-round graph must reach recall@10 >= 0.9 vs brute
-    force (measured 0.999 offline; the uniform-random driver substrate
-    plateaus ~0.5-0.6 and is documented, not pinned — the
-    PQ-on-random-embeddings precedent)."""
-    import numpy as np
-
-    from utility_service_areas_spark.plans.registry import all_queries
-
-    rng = np.random.default_rng(7)
-    n, d, c = 600, 64, 12
-    cent = rng.normal(size=(c, d)) * 3
-    labels = rng.integers(0, c, n)
-    X = cent[labels] + rng.normal(size=(n, d))
-    spark.createDataFrame(
-        [
-            (int(i), [float(x) for x in X[i]], int(labels[i]))
-            for i in range(n)
-        ],
-        "vec_id long, embedding array<float>, label int",
-    ).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
-
-    got = {}
-    for r in all_queries()["embedding_knn_graph"](spark, str(tmp_path)).collect():
-        got.setdefault(r.vec_id, set()).add(r.neighbor_id)
-
-    Xf = X.astype(np.float32).astype(np.float64)  # parquet stores f32
-    Xn = Xf / np.linalg.norm(Xf, axis=1, keepdims=True)
-    S = Xn @ Xn.T
-    np.fill_diagonal(S, -2.0)
-    true_top = np.argsort(-S, axis=1)[:, :10]
-    recall = np.mean(
-        [len(got.get(i, set()) & set(true_top[i])) / 10 for i in range(n)]
-    )
-    assert recall >= 0.9, f"recall@10 = {recall:.3f}"
-    # k-regular out-degree: every vertex carries exactly k neighbors
-    assert all(len(v) == 10 for v in got.values())

@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SMOKE_SF, write_docs
+from tests.conftest import SMOKE_SF
 from utility_service_areas_spark.functions.hashing import (
     simhash64_py,
     winnow_fingerprints_py,
@@ -388,100 +388,3 @@ def test_suffix_lrs_saturation_production_direction(spark, tmp_path):
     assert at_k8[1] == at_k8[2] == 80
     # repeats shorter than the resolution are exact at BOTH K
     assert at_k6[3] == at_k6[4] == at_k8[3] == at_k8[4] == 10
-
-
-def _brute_maxrep(docs):
-    """Brute-force per-doc LRS stats: maxrep(p) = longest prefix of
-    the suffix at p equal to the prefix of ANY other position's suffix
-    (overlaps allowed). O(n^2 * L) — test-scale only."""
-    toks = {d: t.split() for d, t in docs}
-    pos = [(d, i) for d, tk in toks.items() for i in range(len(tk))]
-    out = {}
-    for d, i in pos:
-        a = toks[d][i:]
-        best = 0
-        for e, j in pos:
-            if (d, i) == (e, j):
-                continue
-            b = toks[e][j:]
-            l = 0
-            while l < len(a) and l < len(b) and a[l] == b[l]:
-                l += 1
-            best = max(best, l)
-        out.setdefault(d, []).append(best)
-    return {
-        d: (len(v), max(v), sum(1 for x in v if x >= 8))
-        for d, v in out.items()
-    }
-
-
-def test_suffix_lrs_planted_long_repeat(spark, tmp_path):
-    """The capability #129's fixed window can't deliver: two docs share
-    a 37-token verbatim passage — max_rep_len must be exactly 37, and
-    a doc made of a repeated token run must report its self-overlap
-    repeat (run length - 1)."""
-    from utility_service_areas_spark.plans.registry import all_queries
-
-    passage = " ".join(f"p{j}" for j in range(37))
-    docs = [
-        (1, "a1 b1 c1 " + passage + " d1 e1"),
-        (2, "x2 y2 " + passage + " z2"),
-        (3, " ".join(["loop"] * 20)),
-        (4, "only unique tokens here nothing repeats at all"),
-    ]
-    write_docs(spark, str(tmp_path), docs)
-    got = {
-        r.doc_id: (r.n_positions, r.max_rep_len, r.n_pos_rep_ge8)
-        for r in all_queries()["dedup_suffix_lrs"](spark, str(tmp_path)).collect()
-    }
-    assert got[1][1] == 37 and got[2][1] == 37
-    assert got[3][1] == 19  # overlap-allowed self-repeat of a 20-run
-    assert got[4][1] <= 1  # singleton tokens ('at'/'all' share no pair)
-    assert got == _brute_maxrep(docs)
-
-
-def test_suffix_lrs_matches_brute_on_mixed_corpus(spark, tmp_path):
-    """Randomized-shape corpus (fixed seed, ~35 docs over a 12-token
-    vocabulary so repeats of every length arise naturally) vs the
-    brute-force reference — pins the full semantics: cross-doc,
-    intra-doc, overlapping, and boundary-truncated repeats."""
-    import random
-
-    from utility_service_areas_spark.plans.registry import all_queries
-
-    rng = random.Random(12)
-    vocab = [f"w{j}" for j in range(12)]
-    docs = [
-        (d, " ".join(rng.choice(vocab) for _ in range(rng.randint(1, 24))))
-        for d in range(35)
-    ]
-    write_docs(spark, str(tmp_path), docs)
-    got = {
-        r.doc_id: (r.n_positions, r.max_rep_len, r.n_pos_rep_ge8)
-        for r in all_queries()["dedup_suffix_lrs"](spark, str(tmp_path)).collect()
-    }
-    assert got == _brute_maxrep(docs)
-
-
-def test_suffix_lrs_saturates_at_rank_resolution(spark, tmp_path):
-    """Code-review r12: rank_K equality certifies only the first 2^K
-    tokens, so the equal-rank branch must CAP at 2^K instead of
-    claiming the whole remaining suffix. With k_levels=4 (resolution
-    16), two 24-token docs sharing their first 20 tokens report
-    max_rep_len == 16 (saturated) — never the uncapped 24."""
-    from utility_service_areas_spark.operators.suffix import doc_repeat_stats
-    from utility_service_areas_spark.sources.tables import load_table
-
-    shared = " ".join(f"s{j}" for j in range(20))
-    docs = [
-        (1, shared + " x1 x2 x3 x4"),
-        (2, shared + " y1 y2 y3 y4"),
-    ]
-    write_docs(spark, str(tmp_path), docs)
-    out = {
-        r.doc_id: r.max_rep_len
-        for r in doc_repeat_stats(
-            load_table(spark, str(tmp_path), "documents"), k_levels=4
-        ).collect()
-    }
-    assert out == {1: 16, 2: 16}

@@ -272,37 +272,3 @@ def test_hits_planted_authority_ranking(spark):
     assert got[("hub", 1)] == 1_000_000  # points at both
     assert got[("hub", 2)] == got[("hub", 3)]  # symmetric hubs tie
     assert 0 < got[("hub", 2)] < got[("hub", 1)]
-
-
-def test_lpa_never_mixes_disconnected_components(spark, tmp_path):
-    """Label propagation soundness on a hand-built graph: two
-    DISCONNECTED customer<->supplier bicliques must land in disjoint
-    community label sets (synchronous LPA may oscillate WITHIN a
-    bipartite component — fixed rounds make that deterministic — but
-    a label can never cross a cut)."""
-    from utility_service_areas_spark.plans.registry import all_queries
-
-    # component 1: customers 1-3 x suppliers 1-2 (orders 10-12)
-    # component 2: customers 101-102 x suppliers 11-13 (orders 20-21)
-    orders = [(10, 1), (11, 2), (12, 3), (20, 101), (21, 102)]
-    lines = [
-        (10, 1), (10, 2), (11, 1), (11, 2), (12, 1), (12, 2),
-        (20, 11), (20, 12), (20, 13), (21, 11), (21, 12), (21, 13),
-    ]
-    spark.createDataFrame(
-        orders, "o_orderkey long, o_custkey long"
-    ).write.mode("overwrite").parquet(f"{tmp_path}/orders.parquet")
-    spark.createDataFrame(
-        lines, "l_orderkey long, l_suppkey long"
-    ).write.mode("overwrite").parquet(f"{tmp_path}/lineitem.parquet")
-
-    out = all_queries()["trade_graph_lpa"](spark, str(tmp_path)).collect()
-    comp1_nodes = {1, 2, 3, 10_000_001, 10_000_002}
-    comp2_nodes = {101, 102, 10_000_011, 10_000_012, 10_000_013}
-    comm1 = {r.community for r in out if r.min_node in comp1_nodes}
-    comm2 = {r.community for r in out if r.min_node in comp2_nodes}
-    assert comm1 and comm2 and not (comm1 & comm2)
-    assert sum(r.n_nodes for r in out) == len(comp1_nodes) + len(comp2_nodes)
-    # community ids are themselves node ids of the right component
-    assert all(c in comp1_nodes for c in comm1)
-    assert all(c in comp2_nodes for c in comm2)

@@ -1,16 +1,12 @@
-"""Registry-wide mechanical scale-lint: build EVERY registered
-query's physical plan at sf0.001 and assert the two structures that
-do not survive a 100 TB cluster never appear:
+"""Registry-wide scale-lint: no registered query's physical plan at the
+smoke scale holds a node in ``plans.registry.BANNED_PLAN_NODES``
+(row-at-a-time Python eval, a non-broadcast cross join; the reasons are
+at that list), and its output columns are unique and atomic.
 
-- ``BatchEvalPython`` — row-at-a-time Python UDF eval. Every Python
-  kernel in this repo is Arrow-batched (ArrowEvalPython / MapInPandas
-  / FlatMapGroupsInPandas); a row-wise UDF sneaking into a hot path
-  is a 10-100x regression the test suite would otherwise only catch
-  as a slow bench.
-- ``CartesianProduct`` — a non-broadcast cross join. Intentional
-  small-dim cross joins compile to BroadcastNestedLoopJoin (bounded
-  build side); a CartesianProduct means BOTH sides are cluster-sized,
-  which is never survivable.
+The registry sweep in test_entry.py already found these plan problems
+while it checked the query, so a key it checked is not built again;
+a key it did not check (deselected as slow, or run alone) is built here
+and its plan checked without executing it.
 
 This complements tests/test_plans.py (which pins the SHAPE of chosen
 headline plans) with a cheap invariant over the whole surface, so
@@ -21,26 +17,14 @@ from __future__ import annotations
 
 import pytest
 
-SF_DIR = "/root/testdata/sf0.001"
-
-_BANNED = ("BatchEvalPython", "CartesianProduct")
-
-
-def _all_query_names():
-    from utility_service_areas_spark.plans.registry import all_queries
-
-    return sorted(all_queries())
+from tests.conftest import SMOKE_SF
+from utility_service_areas_spark.plans.registry import all_queries, plan_problems
 
 
-@pytest.mark.parametrize("name", _all_query_names())
-def test_no_rowwise_python_or_cartesian(spark, name):
-    from utility_service_areas_spark.plans.registry import all_queries
-
-    df = all_queries()[name](spark, SF_DIR)
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    for banned in _BANNED:
-        assert banned not in plan, f"{name}: {banned} in physical plan"
+@pytest.mark.parametrize("name", sorted(all_queries()))
+def test_no_rowwise_python_or_cartesian(spark, registry_checks, name):
+    if name in registry_checks:
+        problems = registry_checks[name].plan
+    else:
+        problems = plan_problems(all_queries()[name](spark, SMOKE_SF))
+    assert not problems, f"{name}: " + "; ".join(problems)

@@ -485,53 +485,3 @@ def test_collocations_in_row_pairs_no_self_join(spark, queries):
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "Generate" in plan  # the in-row pair explode
-
-
-def test_variant_stats_uses_variant_path_and_codegen(spark):
-    """#218's claim is the PLAN, not just the values (the oracle pins
-    those): props must parse through VariantExpressionEvalUtils (the
-    binary variant encoding), stay whole-stage-codegen'd, and carry no
-    Python evaluation node. Plus a malformed-JSON posture check:
-    parse_json is strict, so a corrupt props row must fail loudly
-    rather than silently zero (the repo's fail-loud ingest posture)."""
-    from utility_service_areas_spark.plans.registry import all_queries
-    from tests.conftest import SMOKE_SF
-
-    df = all_queries()["events_variant_stats"](spark, SMOKE_SF)
-    plan = physical_plan(df)
-    assert "parseJson" in plan, "variant parse path not in the plan"
-    # JVM static_invoke expression — never a Python evaluation node
-    # (an AQE plan hides WholeStageCodegen spans until execution, so
-    # assert the absence of Python nodes rather than the span label)
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    bad = spark.createDataFrame([("{not json",)], "props string")
-    with pytest.raises(Exception):
-        bad.select(F.variant_get(F.parse_json("props"), "$.k", "long")).collect()
-
-
-def test_r12_heavy_kernels_have_no_single_partition_exchange(spark):
-    """The r12 kernels' scale claims hinge on NO stage funneling into
-    one reducer: dense ranks are banded windows (suffix LRS), top-k is
-    TakeOrdered/WindowGroupLimit (RAKE, BM25), the shortlist rank is a
-    count-greater broadcast (RRF). An `Exchange SinglePartition` in
-    any of their plans would falsify that — pin its absence.
-    (TakeOrderedAndProject does its own bounded final merge, which is
-    k-row, not data-sized.)"""
-    from utility_service_areas_spark.plans.registry import all_queries
-
-    qs = all_queries()
-    for name in (
-        "dedup_suffix_lrs",
-        "text_rake_keyphrases",
-        "search_rrf_fusion",
-        "trade_graph_lpa",
-        "embedding_knn_graph",
-        "geo_simplify_vw",
-    ):
-        df = qs[name](spark, SMOKE_SF)
-        plan = physical_plan(df)
-        assert "Exchange SinglePartition" not in plan, name

@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 
 from tests.conftest import SMOKE_SF
+from utility_service_areas_spark.plans.registry import physical_plan
 
 # Measured at sf0.001 (k=64): distinct estimates within ~10% of truth,
 # intersection estimates within ~15%. KMV RSE at k=64 is ~13%, so 30%
@@ -379,9 +380,7 @@ def test_variant_stats_uses_variant_path_and_codegen(spark):
     from tests.conftest import SMOKE_SF
 
     df = all_queries()["events_variant_stats"](spark, SMOKE_SF)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    plan = physical_plan(df)
     assert "parseJson" in plan, "variant parse path not in the plan"
     # JVM static_invoke expression — never a Python evaluation node
     # (an AQE plan hides WholeStageCodegen spans until execution, so

@@ -11,29 +11,15 @@ import math
 
 import pyspark.sql.functions as F  # noqa: F401 (used by some pins)
 
-from tests.conftest import SMOKE_SF
-
-
-def _plan(df):
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
-def _write_docs(spark, path, rows):
-    """rows: list of (doc_id, text). Writes the documents schema the
-    loaders expect (lang/source/n_chars present but incidental)."""
-    spark.createDataFrame(
-        [(i, t, "en", "srcT", len(t)) for i, t in rows],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).write.mode("overwrite").parquet(f"{path}/documents.parquet")
+from tests.conftest import SMOKE_SF, write_docs
+from utility_service_areas_spark.plans.registry import physical_plan
 
 
 def test_bm25_plan_has_topk_pushdown_and_no_python(spark):
     from utility_service_areas_spark.plans.registry import all_queries
 
     df = all_queries()["text_bm25_topk"](spark, SMOKE_SF)
-    plan = _plan(df)
+    plan = physical_plan(df)
     assert "WindowGroupLimit" in plan, "per-query top-k must push down"
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan
@@ -55,7 +41,7 @@ def test_bm25_scores_match_float_reference(spark, tmp_path):
         (5, "hash the the the the the the the the the"),
         (6, "sort"),
     ]
-    _write_docs(spark, str(tmp_path), corpus)
+    write_docs(spark, str(tmp_path), corpus)
 
     got = {
         (r.query_id, r.doc_id): (r.rk, r.score_millibits, r.n_terms_matched)
@@ -132,7 +118,7 @@ def test_suffix_lrs_planted_long_repeat(spark, tmp_path):
         (3, " ".join(["loop"] * 20)),
         (4, "only unique tokens here nothing repeats at all"),
     ]
-    _write_docs(spark, str(tmp_path), docs)
+    write_docs(spark, str(tmp_path), docs)
     got = {
         r.doc_id: (r.n_positions, r.max_rep_len, r.n_pos_rep_ge8)
         for r in all_queries()["dedup_suffix_lrs"](spark, str(tmp_path)).collect()
@@ -158,7 +144,7 @@ def test_suffix_lrs_matches_brute_on_mixed_corpus(spark, tmp_path):
         (d, " ".join(rng.choice(vocab) for _ in range(rng.randint(1, 24))))
         for d in range(35)
     ]
-    _write_docs(spark, str(tmp_path), docs)
+    write_docs(spark, str(tmp_path), docs)
     got = {
         r.doc_id: (r.n_positions, r.max_rep_len, r.n_pos_rep_ge8)
         for r in all_queries()["dedup_suffix_lrs"](spark, str(tmp_path)).collect()
@@ -226,7 +212,7 @@ def test_r12_heavy_kernels_have_no_single_partition_exchange(spark):
         "geo_simplify_vw",
     ):
         df = qs[name](spark, SMOKE_SF)
-        plan = _plan(df)
+        plan = physical_plan(df)
         assert "Exchange SinglePartition" not in plan, name
 
 
@@ -305,7 +291,7 @@ def test_rake_matches_brute_reference(spark, tmp_path):
             for _ in range(rng.randint(3, 20))
         ]
         docs.append((d, " ".join(words)))
-    _write_docs(spark, str(tmp_path), docs)
+    write_docs(spark, str(tmp_path), docs)
 
     got = {
         r.phrase: (r.n_occurrences, r.score_micros)
@@ -391,7 +377,7 @@ def test_suffix_lrs_saturates_at_rank_resolution(spark, tmp_path):
         (1, shared + " x1 x2 x3 x4"),
         (2, shared + " y1 y2 y3 y4"),
     ]
-    _write_docs(spark, str(tmp_path), docs)
+    write_docs(spark, str(tmp_path), docs)
     out = {
         r.doc_id: r.max_rep_len
         for r in doc_repeat_stats(

@@ -186,26 +186,3 @@ def test_pii_redaction_seam(spark, rows):
         f" '{_RE_PHONE}', '<PHONE>', 'g')",
     )
     assert got == want
-
-
-def test_variant_oracle_regex_seam_matches_variant_on_substrate(spark):
-    """ADVICE r11: the #218/#40 oracle regex ('"k":\\s*(\\d+)') matches
-    the FIRST occurrence anywhere (nested objects included) and only
-    non-negative integers, while variant_get navigates top-level $.k —
-    the seam is only sound on flat props. Pin the invariant directly:
-    on the substrate, the regex extraction and the variant path must
-    agree ROW-WISE (NULL-safe), so any future substrate change that
-    nests props or emits negative/missing k fails here, not in a
-    silent oracle divergence."""
-    from pyspark.sql import functions as F
-
-    from tests.conftest import SMOKE_SF
-    from utility_service_areas_spark.sources.tables import load_table
-
-    ev = load_table(spark, SMOKE_SF, "events")
-    regex_k = F.nullif(
-        F.regexp_extract("props", r'"k":[ \t\n\x0b\f\r]*(\d+)', 1), F.lit("")
-    ).cast("long")
-    variant_k = F.variant_get(F.parse_json("props"), "$.k", "long")
-    n_diverge = ev.where(~regex_k.eqNullSafe(variant_k)).count()
-    assert n_diverge == 0

@@ -1,44 +1,16 @@
-"""Registry integrity and the one registry-wide query check.
+"""Registry integrity.
 
-- ``test_registered_query`` runs ``plans.registry.check_query`` on every
-  registered query at the smoke scale: one build per query, checked for
-  unique atomic output columns and banned plan nodes, then collected and,
-  when it carries a SQL oracle, compared with DuckDB (row count, schema,
-  value hash). ``tools/check_oracle.py`` runs the same checker.
 - SURVEY.md §2 and the registry must list the same keys, so a dropped
   registration (a lost key leaves an orphan §2 row) or an undocumented
   new query (a missing row) fails the suite; a broken plan-module import
   raises instead of silently shrinking the registry.
 - The driver rotation is derived from the committed CORRECTNESS files.
+
+Every registered query is built and checked by
+tests/test_entry.py::test_query_runs_smoke.
 """
 
 from __future__ import annotations
-
-import os
-
-import pytest
-
-from tests.conftest import SMOKE_SF
-from utility_service_areas_spark.plans.registry import (
-    all_queries,
-    check_query,
-    oracle_connection,
-)
-
-
-@pytest.fixture(scope="module")
-def oracle_con():
-    if not os.path.isdir(SMOKE_SF):
-        pytest.skip(f"{SMOKE_SF} is absent; the registry sweep needs the smoke substrate")
-    con = oracle_connection(SMOKE_SF)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", sorted(all_queries()))
-def test_registered_query(spark, oracle_con, name):
-    problems = check_query(spark, oracle_con, name, SMOKE_SF).problems
-    assert not problems, "; ".join(problems)
 
 
 def test_survey_section2_matches_registry():

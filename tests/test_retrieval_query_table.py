@@ -111,58 +111,3 @@ def test_bm25_rrf_mmr_on_50_query_table(spark):
         assert len({p.neighbor_id for p in picks}) == len(picks)
         # rank-1 pick is the highest-rel candidate (MMR round 1 = rel)
         assert picks[0].query_id == q
-
-
-def test_mmr_rerank_spends_one_slot_on_a_dup_cluster(spark, tmp_path):
-    """MMR's point: a near-duplicate cluster that floods the cosine
-    top-k collapses to (at most) one early MMR pick. Planted substrate:
-    query vec_id=0; vecs 10-12 are near-identical and most-relevant
-    (plain top-3 = the whole cluster); vecs 20+ are distinct mid-
-    relevance. The 5 MMR picks must not contain more than one cluster
-    member among ranks 1-3, and the plain top-3 must contain all
-    three (proving MMR actually changed the outcome)."""
-    import numpy as np
-
-    from utility_service_areas_spark.plans.registry import all_queries
-
-    rng = np.random.default_rng(3)
-    d = 64
-
-    def e(i):
-        v = np.zeros(d)
-        v[i] = 1.0
-        return v
-
-    # Standard-basis construction so every pairwise cosine is chosen:
-    # cluster at cos 0.95 to the query along a SHARED off-axis (their
-    # mutual sim ~1.0), mids at cos 0.94 along DISTINCT axes (mutual
-    # sim ~0.88, sim to cluster ~0.89). With lambda=0.7 the second
-    # cluster member scores 7*.95 - 3*1.0 = 3.65 while a mid scores
-    # 7*.94 - 3*.89 = 3.91 — diversity must win rounds 2+.
-    q = e(0)
-    vecs = {0: q}
-    for i in (1, 2, 3, 4):  # other queries, far away
-        vecs[i] = -q + rng.normal(size=d) * 0.05
-    off = np.sqrt(1 - 0.95**2)
-    for k, i in enumerate((10, 11, 12)):  # the dup cluster
-        vecs[i] = 0.95 * q + off * e(1) + rng.normal(size=d) * 1e-4
-    for j, i in enumerate(range(20, 28)):  # distinct mid-relevance
-        vecs[i] = 0.94 * q + 0.34 * e(j + 2)
-    spark.createDataFrame(
-        [(int(i), [float(x) for x in v], 0) for i, v in vecs.items()],
-        "vec_id long, embedding array<float>, label int",
-    ).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
-
-    out = all_queries()["ann_mmr_rerank"](spark, str(tmp_path)).collect()
-    q0 = sorted(
-        ((r.mmr_rank, r.neighbor_id) for r in out if r.query_id == 0)
-    )
-    cluster = {10, 11, 12}
-    top3_mmr = {n for rk, n in q0 if rk <= 3}
-    assert len(top3_mmr & cluster) <= 1, q0
-
-    brute = all_queries()["ann_cosine_topk"](spark, str(tmp_path)).collect()
-    top3_plain = {
-        r.neighbor_id for r in brute if r.query_id == 0 and r.rank <= 3
-    }
-    assert top3_plain == cluster, top3_plain

@@ -3,8 +3,6 @@ determinism, and plan shape."""
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pytest
 
@@ -203,157 +201,3 @@ def test_histogram_quantiles_bounded_by_bin_width(spark):
             diff = est_cents - x_p * 100
             assert -1.0 <= diff <= width_cents + 1.0, (et, diff, width_cents)
     assert math.isfinite(width_cents)
-
-
-# Measured at sf0.001 (k=64): distinct estimates within ~10% of truth,
-# intersection estimates within ~15%. KMV RSE at k=64 is ~13%, so 30%
-# (~2.3 sigma) is a real pin — a broken threshold/scale seam is off by
-# multiples, not percent.
-_REL_TOL = 0.30
-
-
-def _exact_truth(spark, sf_dir):
-    from utility_service_areas_spark.sources.tables import load_table
-
-    pairs = (
-        load_table(spark, sf_dir, "orders")
-        .select("o_orderpriority", "o_custkey")
-        .distinct()
-        .collect()
-    )
-    by_prio: dict[str, set] = {}
-    for r in pairs:
-        by_prio.setdefault(r.o_orderpriority, set()).add(r.o_custkey)
-    return by_prio
-
-
-def test_kmv_distinct_within_error_bound(spark):
-    from utility_service_areas_spark.plans.registry import all_queries
-
-    truth = _exact_truth(spark, SMOKE_SF)
-    got = all_queries()["kmv_distinct_customers"](spark, SMOKE_SF).collect()
-    assert {r.o_orderpriority for r in got} == set(truth)
-    for r in got:
-        exact = len(truth[r.o_orderpriority])
-        assert abs(r.kmv_estimate - exact) <= _REL_TOL * exact, (
-            r.o_orderpriority,
-            r.kmv_estimate,
-            exact,
-        )
-
-
-def test_kmv_overlap_within_error_bound(spark):
-    from utility_service_areas_spark.plans.registry import all_queries
-
-    truth = _exact_truth(spark, SMOKE_SF)
-    got = all_queries()["kmv_customer_overlap"](spark, SMOKE_SF).collect()
-    prios = sorted(truth)
-    want_pairs = {(a, b) for a in prios for b in prios if a < b}
-    assert {(r.prio_a, r.prio_b) for r in got} == want_pairs
-    for r in got:
-        exact = len(truth[r.prio_a] & truth[r.prio_b])
-        assert abs(r.intersection_estimate - exact) <= _REL_TOL * exact, (
-            r.prio_a,
-            r.prio_b,
-            r.intersection_estimate,
-            exact,
-        )
-
-
-def test_kmv_exact_when_sketch_not_full(spark, tmp_path):
-    """A group with fewer than k distinct values stores its WHOLE set:
-    the distinct estimate must be exact, and the overlap theta must be
-    the full hash domain so the intersection estimate is exact too."""
-    from utility_service_areas_spark.plans.analytics_queries import (
-        _KMV_K,
-        _KMV_SCALE,
-    )
-    from utility_service_areas_spark.plans.registry import all_queries
-
-    # prio A: custkeys 0..9; prio B: custkeys 5..14 -> |A&B| = 5.
-    rows = [("A", c) for c in range(10)] + [("B", c) for c in range(5, 15)]
-    assert len(rows) < _KMV_K
-    spark.createDataFrame(
-        rows, "o_orderpriority string, o_custkey long"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(str(tmp_path), "orders.parquet")
-    )
-
-    dist = {
-        r.o_orderpriority: r
-        for r in all_queries()["kmv_distinct_customers"](
-            spark, str(tmp_path)
-        ).collect()
-    }
-    assert dist["A"].kmv_estimate == 10 and dist["A"].n_sketch == 10
-    assert dist["B"].kmv_estimate == 10 and dist["B"].n_sketch == 10
-
-    ov = all_queries()["kmv_customer_overlap"](spark, str(tmp_path)).collect()
-    assert len(ov) == 1
-    r = ov[0]
-    assert (r.prio_a, r.prio_b) == ("A", "B")
-    assert r.theta == _KMV_SCALE  # non-full sketches keep the full domain
-    assert r.n_common == 5 and r.intersection_estimate == 5
-
-
-def test_kmv_sketch_is_mergeable(spark):
-    """min-k over partial min-k sets == min-k of the union — the
-    mergeability contract that makes the sketch a distributed
-    aggregate. Verified by splitting orders into two halves, sketching
-    each, merging, and comparing to the single-pass sketch."""
-    from utility_service_areas_spark.plans.analytics_queries import (
-        _KMV_K,
-        _kmv_sketch,
-    )
-    from utility_service_areas_spark.sources.tables import load_table
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    orders = load_table(spark, SMOKE_SF, "orders")
-    whole = {
-        (r.o_orderpriority, r.hv)
-        for r in _kmv_sketch(orders, "o_orderpriority", "o_custkey").collect()
-    }
-    half_a = _kmv_sketch(
-        orders.filter(F.col("o_orderkey") % 2 == 0),
-        "o_orderpriority",
-        "o_custkey",
-    )
-    half_b = _kmv_sketch(
-        orders.filter(F.col("o_orderkey") % 2 == 1),
-        "o_orderpriority",
-        "o_custkey",
-    )
-    w = Window.partitionBy("o_orderpriority").orderBy("hv")
-    merged = {
-        (r.o_orderpriority, r.hv)
-        for r in half_a.unionByName(half_b)
-        .select("o_orderpriority", "hv")
-        .distinct()
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _KMV_K)
-        .collect()
-    }
-    assert merged == whole
-
-
-def test_kmv_union_within_bound_and_exact_path(spark, tmp_path):
-    from utility_service_areas_spark.plans.analytics_queries import _KMV_K
-    from utility_service_areas_spark.plans.registry import all_queries
-
-    # error bound on the real substrate
-    truth = _exact_truth(spark, SMOKE_SF)
-    exact_union = len(set().union(*truth.values()))
-    got = all_queries()["kmv_union_distinct"](spark, SMOKE_SF).collect()[0]
-    assert abs(got.kmv_union_estimate - exact_union) <= _REL_TOL * exact_union
-
-    # exact degradation: all group sketches complete -> union exact
-    rows = [("A", c) for c in range(10)] + [("B", c) for c in range(5, 15)]
-    assert len(rows) < _KMV_K
-    spark.createDataFrame(
-        rows, "o_orderpriority string, o_custkey long"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(str(tmp_path), "orders.parquet")
-    )
-    small = all_queries()["kmv_union_distinct"](spark, str(tmp_path)).collect()[0]
-    assert small.n_sketch == 15 and small.kmv_union_estimate == 15

@@ -14,7 +14,6 @@ into tmp_path and call the REGISTERED query.
 
 from __future__ import annotations
 
-import math
 import os
 
 from hypothesis import HealthCheck, given, settings
@@ -434,178 +433,3 @@ def test_heaps_fit_recovers_planted_exponent(spark, tmp_path):
     corpus("full", beta_one=True)
     got = corpus_heaps_fit(spark, f"{tmp_path}/full").collect()[0]
     assert 990_000 <= got.beta_micros <= 1_010_000
-
-
-def test_zonemap_prune_invariants(spark):
-    """Pruning-rule pins the mirrored SQL can't independently give
-    (both sides could invert the overlap test together): a pruned
-    shard must contain NO matching rows — so scanned rows >= matched
-    rows under EVERY layout; the hash layout must scan everything
-    (content-independent shards span the full value range); the range
-    layout must scan strictly less than hash on at least one selective
-    predicate."""
-    from utility_service_areas_spark.plans.registry import all_queries
-    from utility_service_areas_spark.sources.tables import load_table
-
-    n_docs = load_table(spark, SMOKE_SF, "documents").count()
-    rows = all_queries()["shard_zonemap_prune"](spark, SMOKE_SF).collect()
-    by = {(r.layout, r.pred_id): r for r in rows}
-    assert len(by) == len(rows)
-    layouts = {r.layout for r in rows}
-    assert layouts == {"hash", "range"}
-    for r in rows:
-        assert r.n_docs_scanned >= r.n_docs_matched, r
-        assert r.n_shards_scanned <= r.n_shards, r
-        # both layouts see the same truth
-        assert r.n_docs_matched == by[("hash", r.pred_id)].n_docs_matched
-    for r in rows:
-        # hash shards span the global value range, so hash can only
-        # prune a predicate DISJOINT from it (which implies 0 matches)
-        if r.layout == "hash" and r.n_docs_matched > 0:
-            assert r.n_docs_scanned == n_docs, r
-    assert any(
-        r.n_docs_scanned < n_docs for r in rows if r.layout == "range"
-    ), "range layout pruned nothing — zone maps are broken"
-
-
-def test_dataset_split_partitions_corpus(spark):
-    """The three splits must PARTITION the corpus (doc and char totals
-    conserved) and the train share must sit near its 80% design point
-    — a broken bucket boundary or a non-uniform hash shifts it far
-    outside the binomial band."""
-    from utility_service_areas_spark.plans.registry import all_queries
-    from utility_service_areas_spark.sources.tables import load_table
-
-    docs = load_table(spark, SMOKE_SF, "documents")
-    total = docs.count()
-    rows = all_queries()["dataset_split_assign"](spark, SMOKE_SF).collect()
-    assert {r.split for r in rows} <= {"train", "valid", "test"}
-    assert sum(r.n_docs for r in rows) == total
-    from pyspark.sql import functions as F
-
-    total_chars = docs.agg(F.sum("n_chars")).collect()[0][0]
-    assert sum(r.sum_chars for r in rows) == total_chars
-    train = sum(r.n_docs for r in rows if r.split == "train")
-    assert 0.72 * total <= train <= 0.88 * total  # ~4 sigma at n=500
-
-
-def test_bm25_plan_has_topk_pushdown_and_no_python(spark):
-    from utility_service_areas_spark.plans.registry import all_queries
-
-    df = all_queries()["text_bm25_topk"](spark, SMOKE_SF)
-    plan = physical_plan(df)
-    assert "WindowGroupLimit" in plan, "per-query top-k must push down"
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_bm25_scores_match_float_reference(spark, tmp_path):
-    """The registered millibit-integer BM25 must rank identically to —
-    and sit within 1 millibit of — a plain float BM25 (Robertson
-    idf = ln((N-df+0.5)/(df+0.5)+1) in log2 form, k1=1.2, b=0.75)
-    computed by an independent Python loop over the same toy corpus."""
-    from utility_service_areas_spark.plans.registry import all_queries
-    from utility_service_areas_spark.plans.text_queries import _BM25_QUERIES
-
-    corpus = [
-        (1, "hash join merge hash hash"),
-        (2, "join merge"),
-        (3, "scan filter sort scan the a"),
-        (4, "stream window batch stream stream window"),
-        (5, "hash the the the the the the the the the"),
-        (6, "sort"),
-    ]
-    write_docs(spark, str(tmp_path), corpus)
-
-    got = {
-        (r.query_id, r.doc_id): (r.rk, r.score_millibits, r.n_terms_matched)
-        for r in all_queries()["text_bm25_topk"](spark, str(tmp_path)).collect()
-    }
-
-    toks = {d: t.split() for d, t in corpus}
-    n_docs = len(corpus)
-    l_total = sum(len(v) for v in toks.values())
-    ref = {}
-    for qid, qs in _BM25_QUERIES:
-        scores = {}
-        for term in qs.split():
-            df_t = sum(1 for v in toks.values() if term in v)
-            if df_t == 0:
-                continue
-            idf = math.log2(2 * n_docs + 2) - math.log2(2 * df_t + 1)
-            for d, v in toks.items():
-                tf = v.count(term)
-                if tf == 0:
-                    continue
-                norm = (22 * l_total * tf) / (
-                    10 * l_total * tf + 3 * l_total + 9 * len(v) * n_docs
-                )
-                milli, nm = scores.get(d, (0, 0))
-                scores[d] = (milli + round(idf * norm * 1000), nm + 1)
-        ranked = sorted(scores.items(), key=lambda kv: (-kv[1][0], kv[0]))
-        for rk, (d, (milli, nm)) in enumerate(ranked[:10], start=1):
-            ref[(qid, d)] = (rk, milli, nm)
-
-    assert set(got) == set(ref)
-    for key, (rk, milli, nm) in ref.items():
-        grk, gmilli, gnm = got[key]
-        assert (grk, gnm) == (rk, nm), f"rank/match drift at {key}"
-        assert abs(gmilli - milli) <= 1, f"score drift at {key}"
-
-
-def test_rake_matches_brute_reference(spark, tmp_path):
-    """RAKE semantics vs an independent Python implementation (same
-    spec: stopword-free runs capped at 4 tokens, word score =
-    degree/frequency as (deg*1e6)//freq, phrase score = sum of member
-    word scores, top-20 by (score DESC, phrase ASC))."""
-    import random
-
-    from utility_service_areas_spark.functions.textops import STOPWORDS
-    from utility_service_areas_spark.plans.registry import all_queries
-
-    rng = random.Random(5)
-    vocab = ["red", "apple", "green", "banana", "fast", "query", "plan"]
-    stops = list(STOPWORDS)
-    docs = []
-    for d in range(30):
-        words = [
-            rng.choice(stops) if rng.random() < 0.35 else rng.choice(vocab)
-            for _ in range(rng.randint(3, 20))
-        ]
-        docs.append((d, " ".join(words)))
-    write_docs(spark, str(tmp_path), docs)
-
-    got = {
-        r.phrase: (r.n_occurrences, r.score_micros)
-        for r in all_queries()["text_rake_keyphrases"](spark, str(tmp_path)).collect()
-    }
-
-    # brute reference
-    stopset = set(stops)
-    instances = []  # (phrase tuple)
-    for _, text in docs:
-        run = []
-        for t in text.split() + ["the"]:  # sentinel flush
-            if t in stopset:
-                if run:
-                    instances.append(tuple(run))
-                run = []
-            else:
-                run.append(t)
-    short = [p for p in instances if len(p) <= 4]
-    freq, deg = {}, {}
-    for p in short:
-        for w in p:
-            freq[w] = freq.get(w, 0) + 1
-            deg[w] = deg.get(w, 0) + len(p)
-    wscore = {w: (deg[w] * 1_000_000) // freq[w] for w in freq}
-    byphrase = {}
-    for p in short:
-        s = sum(wscore[w] for w in p)
-        key = " ".join(p)
-        n, _ = byphrase.get(key, (0, s))
-        byphrase[key] = (n + 1, s)
-    want = dict(
-        sorted(byphrase.items(), key=lambda kv: (-kv[1][1], kv[0]))[:20]
-    )
-    assert got == want

@@ -229,18 +229,14 @@ class QueryCheck:
     """What ``check_query`` found for one query."""
 
     problems: list[str]  # empty when the query passes
+    plan: list[str]  # the part of ``problems`` found before execution
     rows: int  # rows the Spark result collected
     diff: tuple[str, str] | None = None  # first differing canonical (spark, duckdb) rows
 
 
-def check_query(spark: SparkSession, con, name: str, sf_dir: str) -> QueryCheck:
-    """Build query ``name`` once on ``sf_dir`` and check it: unique
-    atomic output columns, no banned plan node, and, when it carries an
-    oracle, a driver-safe oracle surface plus the row count, schema and
-    value hash against DuckDB on ``con`` (see ``oracle_connection``)."""
-    _load_all()
-    spec = REGISTRY[name]
-    df = spec.fn(spark, sf_dir)
+def plan_problems(df: DataFrame) -> list[str]:
+    """The checks that need no execution: unique atomic output columns
+    and no banned physical-plan node."""
     cols = df.columns
     problems = []
     if len(set(cols)) != len(cols):
@@ -250,9 +246,23 @@ def check_query(spark: SparkSession, con, name: str, sf_dir: str) -> QueryCheck:
         problems.append(f"non-atomic spark output {bad}")
     plan = physical_plan(df)
     problems += [f"{node} in physical plan" for node in BANNED_PLAN_NODES if node in plan]
+    return problems
+
+
+def check_query(spark: SparkSession, con, name: str, sf_dir: str) -> QueryCheck:
+    """Build query ``name`` once on ``sf_dir`` and check it: the
+    ``plan_problems``, then collect it and, when it carries an oracle,
+    check a driver-safe oracle surface plus the row count, schema and
+    value hash against DuckDB on ``con`` (see ``oracle_connection``)."""
+    _load_all()
+    spec = REGISTRY[name]
+    df = spec.fn(spark, sf_dir)
+    cols = df.columns
+    plan = plan_problems(df)
+    problems = list(plan)
     rows = [tuple(r) for r in df.collect()]
     if spec.oracle is None:
-        return QueryCheck(problems, len(rows))
+        return QueryCheck(problems, plan, len(rows))
     bad = lint_oracle_surface(con, spec.oracle)
     if bad:
         problems.append(f"driver-hostile oracle output {bad}")
@@ -270,4 +280,4 @@ def check_query(spark: SparkSession, con, name: str, sf_dir: str) -> QueryCheck:
         if sh != dh:
             problems.append(f"valuehash spark={sh} duck={dh}")
             diff = next((a, b) for a, b in zip(sl, dl) if a != b)
-    return QueryCheck(problems, len(rows), diff)
+    return QueryCheck(problems, plan, len(rows), diff)
