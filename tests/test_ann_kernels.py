@@ -61,7 +61,7 @@ def test_pagerank_micros_properties(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 1), (2, 3), (3, 2)], ["src", "dst"]
     )
-    ranks = {r.node: r.rank_micros for r in pagerank_micros(edges, n_iter=5).collect()}
+    ranks = {r.node: r.rank_micros for r in pagerank_micros(edges).collect()}
     assert set(ranks) == {1, 2, 3}
     assert ranks[1] == ranks[3]  # symmetry
     assert ranks[2] > ranks[1]  # the hub dominates
@@ -70,7 +70,7 @@ def test_pagerank_micros_properties(spark):
 
     again = {
         r.node: r.rank_micros
-        for r in pagerank_micros(edges.repartition(5), n_iter=5).collect()
+        for r in pagerank_micros(edges.repartition(5)).collect()
     }
     assert again == ranks
 

@@ -21,6 +21,7 @@ from utility_service_areas_spark.operators.dedup import (
     minhash_signatures,
     ngram_jaccard_pairs,
 )
+from utility_service_areas_spark.plans.registry import physical_plan
 
 BASE = "the quick brown fox jumps over the lazy dog near the old river bank every day"
 NEAR = BASE.replace("lazy", "sleepy")  # one token changed → high Jaccard
@@ -220,11 +221,12 @@ def test_df_cap_filters_hot_shingles_before_collect(spark):
     assert all(r["count"] <= 4 for r in freqs)
     assert not any(r.s == "alpha beta gamma" for r in freqs)
 
-    plan = ngram_jaccard_pairs(df, "doc_id", "text", df_cap=4)._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(ngram_jaccard_pairs(df, "doc_id", "text", df_cap=4), "simple")
     i_collect = plan.index("collect_list")
     i_anti = plan.index("LeftAnti")
-    # top-down plan print: the consumer (collect_list) appears above
-    # the anti-join that protects it.
+    # top-down plan print with expressions (the formatted mode lists
+    # node details bottom-up): the consumer (collect_list) appears
+    # above the anti-join that protects it.
     assert i_collect < i_anti
     assert "CartesianProduct" not in plan
 
@@ -259,7 +261,7 @@ def test_lsh_band_bucket_cap_star_pairs(spark):
     # a CASE over the aggregated row, so there is no second scan, no
     # union branch, and no join in the pair-generation plan (the only
     # joins are the signature rejoins above the pairs).
-    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(pairs)
     assert "CartesianProduct" not in plan
     final_plan = plan.split("== Initial Plan ==")[0]  # AQE prints both
     assert final_plan.count("ObjectHashAggregate") <= 2  # partial + final
@@ -388,3 +390,159 @@ def test_suffix_lrs_saturation_production_direction(spark, tmp_path):
     assert at_k8[1] == at_k8[2] == 80
     # repeats shorter than the resolution are exact at BOTH K
     assert at_k6[3] == at_k6[4] == at_k8[3] == at_k8[4] == 10
+
+
+def test_exact_substring_planted_duplicate(spark):
+    """Two synthetic docs sharing one 8-token span (and nothing else
+    8 tokens long in common) must each report exactly one shared span."""
+    from utility_service_areas_spark.plans.pipeline_queries import (
+        dedup_exact_substring,
+    )
+    import os
+    import tempfile
+
+    span = "alpha bravo charlie delta echo foxtrot golf hotel"
+    rows = [
+        (1, f"one two three {span} four five six"),
+        (2, f"seven eight nine ten {span} eleven"),
+        (3, "totally unrelated words that never repeat anything at all here"),
+    ]
+    with tempfile.TemporaryDirectory() as td:
+        spark.createDataFrame(rows, ["doc_id", "text"]).write.parquet(
+            os.path.join(td, "documents.parquet")
+        )
+        out = {r.doc_id: r for r in dedup_exact_substring(spark, td).collect()}
+    assert out[1].n_shared_spans == 1
+    assert out[2].n_shared_spans == 1
+    assert out[3].n_shared_spans == 0
+    # doc 3 has 10 tokens -> 3 distinct spans
+    assert out[3].n_spans == 3
+
+
+def test_keep_best_picks_most_complete_member(spark):
+    from utility_service_areas_spark.plans.dedup_queries import dedup_keep_best
+
+    rows = dedup_keep_best(spark, SMOKE_SF).collect()
+    docs = {
+        r.doc_id: r.n_chars
+        for r in spark.read.parquet(SMOKE_SF + "/documents.parquet").collect()
+    }
+    assert {r.doc_id for r in rows} == set(docs)
+    by_cluster: dict[int, list] = {}
+    for r in rows:
+        by_cluster.setdefault(r.cluster_id, []).append(r)
+    for cid, members in by_cluster.items():
+        best = [r for r in members if r.kept == 1]
+        assert len(best) == 1  # exactly one survivor per cluster
+        b = best[0]
+        assert all(r.best_id == b.doc_id for r in members)
+        # the survivor is the longest member, min doc_id on ties
+        want = min(members, key=lambda r: (-docs[r.doc_id], r.doc_id))
+        assert b.doc_id == want.doc_id
+
+
+def test_cdc_chunks_realign_after_insertion(spark):
+    """The CDC property itself: doc B = doc A with one token inserted
+    up front. Content-defined boundaries re-align after the insertion,
+    so most of A's chunks reappear verbatim in B — which non-
+    overlapping FIXED chunking (position mod 16) structurally loses."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from utility_service_areas_spark.plans.pipeline_queries import _CDC_MOD
+
+    base = " ".join(f"tok{i}" for i in range(400))
+    shifted = "INSERTED " + base
+    docs = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [1, 2], "text": [base, shifted]})
+    )
+
+    toks = F.split(F.trim(F.col("text")), r"[ \t\n\x0b\f\r]+")
+    pos = docs.select("doc_id", F.posexplode(toks).alias("i0", "tok")).select(
+        "doc_id", (F.col("i0") + 1).alias("i"), "tok"
+    )
+    flag = (
+        F.conv(F.substring(F.md5(F.col("tok")), 1, 15), 16, 10).cast("long")
+        % _CDC_MOD
+        == 0
+    ).cast("int")
+    from pyspark.sql.window import Window
+
+    w = (
+        Window.partitionBy("doc_id")
+        .orderBy("i")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    cid = pos.withColumn("f", flag).withColumn(
+        "chunk_id", F.coalesce(F.sum("f").over(w), F.lit(0))
+    )
+    chunk_text = F.array_join(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("i", "tok"))), lambda x: x["tok"]
+        ),
+        " ",
+    )
+    hashes = {
+        d: {
+            r.h
+            for r in cid.filter(F.col("doc_id") == d)
+            .groupBy("chunk_id")
+            .agg(F.md5(chunk_text).alias("h"))
+            .collect()
+        }
+        for d in (1, 2)
+    }
+    cdc_shared = len(hashes[1] & hashes[2]) / len(hashes[1])
+    assert cdc_shared >= 0.8, cdc_shared  # only the first chunk differs
+
+    # fixed non-overlapping 16-token chunking on the same pair: the
+    # 1-token shift de-aligns every chunk
+    def fixed_chunks(text):
+        t = text.split()
+        return {" ".join(t[i : i + 16]) for i in range(0, len(t), 16)}
+
+    fixed_shared = len(fixed_chunks(base) & fixed_chunks(shifted)) / len(
+        fixed_chunks(base)
+    )
+    assert fixed_shared <= 0.1, fixed_shared
+
+
+def test_cdc_cluster_guards(spark, tmp_path):
+    """dedup_cdc_clusters' two eligibility guards, pinned end-to-end:
+    a chunk is a cluster edge only if it has >= 2 tokens (single-token
+    chunks are stopword boilerplate) AND is shared by <= 16 docs
+    (hotter chunks are template boilerplate). Identical docs that
+    share only guarded chunks stay singletons."""
+    import pandas as pd
+
+    from utility_service_areas_spark.plans.pipeline_queries import (
+        dedup_cdc_clusters,
+    )
+
+    long_text = " ".join(f"word{i}" for i in range(64))
+    rows = [
+        # a genuine near-dup pair: every multi-token chunk shared
+        {"doc_id": 1, "text": long_text},
+        {"doc_id": 2, "text": long_text},
+        # 21 identical docs: every shared chunk is hotter than the
+        # 16-doc cap, so NO edges despite being exact duplicates
+        *[{"doc_id": 100 + i, "text": "alpha beta gamma delta"} for i in range(21)],
+        # an identical pair whose only chunk is a single token:
+        # ineligible by the min-token guard
+        {"doc_id": 300, "text": "merge"},
+        {"doc_id": 301, "text": "merge"},
+    ]
+    pdf = pd.DataFrame(rows)
+    spark.createDataFrame(pdf).select("doc_id", "text").write.mode(
+        "overwrite"
+    ).parquet(str(tmp_path / "documents.parquet"))
+
+    out = {
+        r.doc_id: (r.keeper_id, r.cluster_size)
+        for r in dedup_cdc_clusters(spark, str(tmp_path)).collect()
+    }
+    assert len(out) == 25
+    assert out[1] == (1, 2) and out[2] == (1, 2)  # pair clustered
+    for i in range(21):  # hot cap: 21 exact dups stay singletons
+        assert out[100 + i] == (100 + i, 1)
+    assert out[300] == (300, 1) and out[301] == (301, 1)  # min-token

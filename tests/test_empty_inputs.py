@@ -169,3 +169,70 @@ def test_suffix_lrs_on_empty(spark):
     assert out.columns == [
         "doc_id", "n_positions", "max_rep_len", "n_pos_rep_ge8",
     ]
+
+
+def test_r6_queries_on_empty_substrate(spark, tmp_path):
+    """Cluster-scale routine: empty filter results / empty partitions.
+    Every r6 plan query must return an empty, correctly-typed frame on
+    an empty substrate — not raise (null percentile bounds, null
+    max(vec_id), empty recursive closure are all on this path)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as e
+
+    schemas = {
+        "documents": pa.schema(
+            [
+                ("doc_id", pa.int64()),
+                ("text", pa.string()),
+                ("lang", pa.string()),
+                ("source", pa.string()),
+                ("n_chars", pa.int64()),
+            ]
+        ),
+        "events": pa.schema(
+            [
+                ("event_id", pa.int64()),
+                ("ts", pa.timestamp("us")),
+                ("user_id", pa.int64()),
+                ("event_type", pa.string()),
+                ("value", pa.float64()),
+                ("props", pa.string()),
+            ]
+        ),
+        "orders": pa.schema(
+            [
+                ("o_orderkey", pa.int64()),
+                ("o_custkey", pa.int64()),
+                ("o_orderstatus", pa.string()),
+                ("o_totalprice", pa.float64()),
+                ("o_orderdate", pa.timestamp("us")),
+                ("o_orderpriority", pa.string()),
+            ]
+        ),
+        "embeddings": pa.schema(
+            [
+                ("vec_id", pa.int64()),
+                ("embedding", pa.list_(pa.float32())),
+                ("label", pa.int32()),
+            ]
+        ),
+    }
+    for name, schema in schemas.items():
+        pq.write_table(
+            pa.Table.from_arrays(
+                [pa.array([], type=f.type) for f in schema], schema=schema
+            ),
+            str(tmp_path / f"{name}.parquet"),
+        )
+    for key in (
+        "docs_repetition_signals",
+        "domain_quota_sample",
+        "dedup_exact_substring",
+        "event_anomaly_zscore",
+        "customer_rfm_segments",
+        "embedding_pair_histogram",
+        "dedup_keep_best",
+    ):
+        assert e.queries()[key](spark, str(tmp_path)).count() == 0, key

@@ -18,6 +18,7 @@ from utility_service_areas_spark.operators.geo import (
     polygon_overlap_pairs,
     rect_geometry,
 )
+from utility_service_areas_spark.plans.registry import physical_plan
 
 
 def _rects(spark, rows):
@@ -181,7 +182,7 @@ def test_salted_grid_path_equals_unsalted_under_pathological_skew(spark):
     salted_df = points_in_polygons(
         pts, polys, id_col="pid", grid_cell=2.0, salt=8
     )
-    plan = salted_df._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(salted_df)
     assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
     assert "__salt" in plan  # the salt key made it into the join
     salted = {(r.point_id, r.pid) for r in salted_df.collect()}
@@ -208,7 +209,7 @@ def test_grid_path_plans_equi_join_no_bnlj(spark):
         ((F.col("id") / 500) + 0.25).alias("py"),
     )
     joined = points_in_polygons(pts, polys, id_col="pid", grid_cell=2.0)
-    plan = joined._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(joined)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     # spot-check containment: point k sits in polygon (py row band)

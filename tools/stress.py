@@ -136,6 +136,7 @@ def run_geo_grid(spark, factor: int) -> tuple[dict[str, float], dict[str, int]]:
         polygon_overlap_pairs,
         rect_geometry,
     )
+    from utility_service_areas_spark.plans.registry import physical_plan
 
     ncols = 1000
     n_polys = 10_000 * factor
@@ -229,13 +230,13 @@ def run_geo_grid(spark, factor: int) -> tuple[dict[str, float], dict[str, int]]:
             spark.conf.set(bcast_key, "-1")
         try:
             df = build()
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            plan = physical_plan(df)
             assert "BroadcastNestedLoopJoin" not in plan, f"{name}: BNLJ in plan"
             assert "CartesianProduct" not in plan, f"{name}: cartesian in plan"
             t0 = time.time()
             rows[name] = df.count()
             timings[name] = round(time.time() - t0, 2)
-            skew[name] = "skew=true" in df._jdf.queryExecution().executedPlan().toString()
+            skew[name] = "skew=true" in physical_plan(df)
         finally:
             spark.conf.set(bcast_key, old)
     return timings, rows, skew

@@ -92,14 +92,17 @@ def hamming64(a: pd.Series, b: pd.Series) -> pd.Series:
 
 
 _KR_BASE = np.uint64(1_000_003)  # Karp-Rabin base; hash space = mod 2^64
+_WINNOW_K = 8  # chars per k-gram
+_WINNOW_W = 4  # hashes per winnowing window
 
 
-def winnow_fingerprints_py(text: str, k: int = 8, w: int = 4) -> list[int]:
+def winnow_fingerprints_py(text: str) -> list[int]:
     """Winnowing document fingerprints (Schleimer et al., SIGMOD 2003):
     Karp-Rabin rolling hashes of char k-grams (vectorized: a
     sliding-window dot product in uint64, wraparound = mod 2^64), keep
     the min of each w-window, dedupe. Returns sorted signed int64s.
     """
+    k, w = _WINNOW_K, _WINNOW_W
     s = " ".join((text or "").lower().split())
     if len(s) < k:
         return []

@@ -140,66 +140,3 @@ def bloom_anti_join(
     )
     return definite_new.unionByName(confirmed_new)
 
-
-def repeated_key_prefilter(
-    df: DataFrame,
-    key_col: str,
-    m: int = 1 << 22,
-    k: int = 2,
-) -> DataFrame:
-    """Drop rows whose key provably occurs exactly ONCE across ``df``
-    — the map-side prune for frequency-style aggregations where
-    singleton keys dominate (e.g. 99% of 8-token spans in a real web
-    corpus are globally unique and can never be "shared").
-
-    Counting-bloom shape, exact by construction:
-
-    - build: explode each row's k hash positions and count occurrences
-      per position; keep positions hit >= 2 times. The agg key space is
-      bounded by ``m``, so the build shuffle is capped at min(k*|df|,
-      m) rows per partition by the map-side combine — independent of
-      key cardinality (the property a raw groupBy(key) count lacks).
-    - probe: k BROADCAST left joins on the position expressions —
-      entirely map-side, the probed stream never shuffles.
-
-    A surviving row has ALL k positions hot; a dropped row had some
-    position hit exactly once, which is proof its key occurred exactly
-    once (bloom false-negative-freedom). Survivors = every repeated
-    key + ~fpp singletons, so any downstream EXACT count over the
-    survivors equals the count over ``df`` for every key with count
-    >= 2 — results are bit-identical wherever count==1 keys are
-    discarded anyway.
-
-    Sizing: m ≈ 8-16× expected distinct keys keeps the collision FP
-    rate low; the hot-position broadcast is small exactly in the
-    high-singleton regime where the prune pays (hot ≈ 2k× repeated
-    keys), and approaches min(m, k·n) when everything repeats — in
-    that regime skip the prefilter (nothing to prune).
-    """
-    pos = [
-        F.pmod(F.hash(F.col(key_col), F.lit(i)), F.lit(m)) for i in range(k)
-    ]
-    occ = df.select(F.explode(F.array(*pos)).alias("__p"))
-    hot = (
-        occ.groupBy("__p")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .filter(F.col("__c") >= 2)
-        .select("__p")
-    )
-    # ``hot`` is bounded by m rows (one int each) — m is a HARD ceiling
-    # on the broadcast size. Force the broadcast only while that
-    # ceiling is clearly inside executor/driver memory (~8 B a row →
-    # ≤ ~64 MB at the default 2^22); for larger filters, or when most
-    # keys repeat (hot → min(m, k·n)), let AQE pick the join from the
-    # measured size instead of blowing the broadcast limit.
-    maybe_broadcast = F.broadcast if m <= (1 << 23) else (lambda d: d)
-    out = df
-    for i in range(k):
-        hp = hot.select(
-            F.col("__p").alias(f"__p{i}"), F.lit(True).alias(f"__hot{i}")
-        )
-        out = out.join(maybe_broadcast(hp), pos[i] == F.col(f"__p{i}"), "left")
-    keep = out
-    for i in range(k):
-        keep = keep.filter(F.col(f"__hot{i}"))
-    return keep.drop(*[c for i in range(k) for c in (f"__p{i}", f"__hot{i}")])

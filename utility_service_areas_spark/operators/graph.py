@@ -102,23 +102,20 @@ def connected_components(
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iter: int = 20,
-    symmetric: bool = False,
     pre_materialized: bool = False,
     width: int | None = None,
 ) -> DataFrame:
     """Edge list → (node, component) where component = min node id of
     the connected component. Nodes only in no pair are absent (callers
-    union isolated ids if needed). ``symmetric=True`` promises the
-    input already holds BOTH directions of every edge, deduplicated
-    (e.g. cluster_density's checkpointed `und`) — the union+distinct
-    shuffle is skipped. ``pre_materialized=True`` (implies symmetric)
-    additionally promises the caller already checkpointed the edge
-    frame — the repartition + second checkpoint pass is skipped too
-    (the lineage cut is the load-bearing part; the co-partitioning
-    was only a ~6%-warm win, see below).
+    union isolated ids if needed). ``pre_materialized=True`` promises
+    the input already holds BOTH directions of every edge, deduplicated
+    and checkpointed (cluster_density's `und`) — the union+distinct
+    shuffle, the repartition and the second checkpoint pass are all
+    skipped (the lineage cut is the load-bearing part; the
+    co-partitioning was only a ~6%-warm win, see below).
     """
     edges = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-    if not (symmetric or pre_materialized):
+    if not pre_materialized:
         edges = edges.union(
             pairs.select(F.col(b_col).alias("u"), F.col(a_col).alias("v"))
         ).distinct()
@@ -254,11 +251,16 @@ def dedup_clusters(
     return resolved.join(sizes, "keeper_id").select(id_col, "keeper_id", "cluster_size")
 
 
+# Fixed round counts of the two integer-micros link analyses; their
+# unrolled DuckDB oracles replay the same number of rounds.
+PAGERANK_ROUNDS = 5
+HITS_ROUNDS = 4
+
+
 def pagerank_micros(
     edges: DataFrame,
     src_col: str = "src",
     dst_col: str = "dst",
-    n_iter: int = 5,
     damping: float = 0.85,
 ) -> DataFrame:
     """Fixed-iteration PageRank with INTEGER-micros ranks — the classic
@@ -294,7 +296,7 @@ def pagerank_micros(
     )
     ranks = nodes.withColumn("rank_micros", F.lit(1_000_000).cast("long"))
     base = int((1.0 - damping) * 1_000_000)
-    for i in range(n_iter):
+    for i in range(PAGERANK_ROUNDS):
         contribs = (
             e.join(ranks.withColumnRenamed("node", "src"), "src")
             .select(
@@ -319,7 +321,7 @@ def pagerank_micros(
         # Lineage cut every other round: a FIXED small iteration count
         # doesn't need the per-round materialization CC's unbounded
         # loop does — each eager checkpoint costs a full job.
-        if i % 2 == 1 or i == n_iter - 1:
+        if i % 2 == 1 or i == PAGERANK_ROUNDS - 1:
             ranks = lineage_cut(ranks)
     return ranks
 
@@ -611,7 +613,6 @@ def hits_micros(
     edges: DataFrame,
     src_col: str = "src",
     dst_col: str = "dst",
-    n_iter: int = 4,
 ) -> DataFrame:
     """Fixed-iteration HITS (Kleinberg 1999) with INTEGER-micros
     scores — hubs on the source side, authorities on the destination
@@ -643,7 +644,7 @@ def hits_micros(
     hubs = (
         e.select("src").distinct().withColumn("h", F.lit(1_000_000).cast("long"))
     )
-    for i in range(n_iter):
+    for i in range(HITS_ROUNDS):
         a_raw = (
             e.join(hubs, "src")
             .groupBy("dst")
@@ -662,7 +663,7 @@ def hits_micros(
         hubs = h_raw.crossJoin(F.broadcast(h_max)).select(
             "src", F.expr("(h_raw * 1000000) div mx").alias("h")
         )
-        if i % 2 == 1 or i == n_iter - 1:
+        if i % 2 == 1 or i == HITS_ROUNDS - 1:
             hubs = lineage_cut(hubs)
             auths = lineage_cut(auths)
     return hubs.select(

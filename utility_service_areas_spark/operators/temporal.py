@@ -25,20 +25,16 @@ def asof_join(
     ts_col: str,
     right_value_cols: Sequence[str],
     prefix: str = "asof_",
-    seq_col: str | None = None,
 ) -> DataFrame:
     """For each left row, the latest right row with
     right.ts <= left.ts on the same keys (inclusive, like DuckDB
     ASOF JOIN); unmatched left rows keep nulls.
 
-    Tie semantics when several right rows share (key, ts): with
-    ``seq_col`` (a right-side ordering column, e.g. an ingest sequence
-    number) the row with the LARGEST sequence wins — the standard
-    "latest record wins" rule. Without it the winner is the row with
-    the largest value-struct hash: arbitrary but deterministic and
-    partitioning-independent (documented divergence — engines with an
-    implicit row order, like DuckDB over an ordered file, may pick a
-    different tied row).
+    Tie semantics when several right rows share (key, ts): the winner
+    is the row with the largest value-struct hash — arbitrary but
+    deterministic and partitioning-independent (documented divergence
+    — engines with an implicit row order, like DuckDB over an ordered
+    file, may pick a different tied row).
 
     Returns left columns + prefixed right value columns.
     """
@@ -62,25 +58,13 @@ def asof_join(
     unioned = l2.unionByName(r2)
     # Right rows sort before left rows at equal ts → inclusive match.
     # __tie makes the window ordering a TOTAL order even when two right
-    # rows share (key, ts): last-in-order wins, so the caller's seq_col
-    # (largest sequence = latest record) if given, else the largest
-    # value-hash — arbitrary but deterministic run-to-run (and
+    # rows share (key, ts): last-in-order wins, so the largest
+    # value-hash wins — arbitrary but deterministic run-to-run (and
     # partitioning-independent, unlike monotonically_increasing_id).
-    ties = []
-    if seq_col is not None:
-        if seq_col not in right_value_cols:
-            raise ValueError(
-                f"seq_col {seq_col!r} must be one of right_value_cols"
-            )
-        # null for left rows (and null-seq right rows): sorts first,
-        # so the largest sequence is last-in-window and wins the tie.
-        ties.append(F.when(F.col("__src") == 0, F.col("__rval").getField(seq_col)))
-    ties.append(
-        F.when(F.col("__src") == 0, F.xxhash64(F.col("__rval"))).otherwise(F.lit(0))
-    )
+    tie = F.when(F.col("__src") == 0, F.xxhash64(F.col("__rval"))).otherwise(F.lit(0))
     w = (
         Window.partitionBy(*keys)
-        .orderBy("__ts", "__src", *ties)
+        .orderBy("__ts", "__src", tie)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     filled = unioned.withColumn("__asof", F.last("__rval", ignorenulls=True).over(w))

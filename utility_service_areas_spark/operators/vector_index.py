@@ -30,8 +30,7 @@ next generation first (``_gen-N`` O_EXCL markers) — exactly one writer
 commits each generation; a loser re-reads the winner's manifest and
 re-applies its delta (``fsutil.commit_attempts``), so two concurrent
 adds BOTH land (neither's segment is dropped by a last-replace-wins
-overwrite) and a compaction racing an add refolds instead of losing
-the new segment. A crashed claimer's marker is stolen after
+overwrite). A crashed claimer's marker is stolen after
 ``fsutil.GEN_STEAL_SECONDS``.
 
 JSON floats round-trip IEEE doubles
@@ -162,7 +161,6 @@ def build_ivfpq_index(
         "segments": [seg] if seg else [],
         "n_vectors": seg["n_vectors"] if seg else 0,
         "n_adds": 0,
-        "n_compactions": 0,
         "txn_ids": [],
     }
     # commit marker, LAST
@@ -205,7 +203,6 @@ def add_to_ivfpq_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     txn_id: str | None = None,
-    compact_every: int | None = None,
 ) -> dict:
     """FAISS ``add()``: encode a new vector batch against the FROZEN
     coarse centroids and codebooks (no refit — the codebooks' geometry
@@ -219,8 +216,7 @@ def add_to_ivfpq_index(
     dedup horizon = manifest lifetime). A crash between the segment
     rename and the manifest commit leaves an UNLISTED (invisible)
     segment, so the retry lands the batch exactly once; the orphan is
-    reclaimed later by ``fsutil.vacuum_index``. ``compact_every=N``
-    folds segments whenever their count reaches N."""
+    reclaimed later by ``fsutil.vacuum_index``."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
@@ -301,37 +297,7 @@ def add_to_ivfpq_index(
         if txn_id is not None:
             manifest.setdefault("txn_ids", []).append(txn_id)
         if fsutil.commit_manifest(index_dir, manifest):
-            break
-    if compact_every and len(manifest["segments"]) >= compact_every:
-        manifest = compact_ivfpq_index(spark, index_dir)
-    return manifest
-
-
-def compact_ivfpq_index(spark: SparkSession, index_dir: str) -> dict:
-    """Fold every committed segment into ONE new segment and commit a
-    manifest listing only it. Retired segment dirs are NOT deleted —
-    a reader that loaded the pre-compaction manifest keeps reading
-    them (the Delta OPTIMIZE posture); ``fsutil.vacuum_index`` reclaims
-    them behind the age gate. Codes are immutable rows, so union ==
-    concatenation and search results are unchanged (pinned)."""
-    for _attempt in fsutil.commit_attempts(index_dir, "compaction"):
-        manifest, _cents, codes = load_ivfpq_index(spark, index_dir)
-        if len(manifest["segments"]) <= 1:
             return manifest
-        retired = [s["name"] for s in manifest["segments"]]
-        seg = _write_codes_segment(spark, index_dir, codes, manifest["m"])
-        if seg is None or seg["n_vectors"] != manifest["n_vectors"]:
-            raise RuntimeError(
-                "compaction lost vectors: "
-                f"{seg['n_vectors'] if seg else 0} != {manifest['n_vectors']}"
-            )
-        manifest["segments"] = [seg]
-        manifest["n_compactions"] = manifest.get("n_compactions", 0) + 1
-        if fsutil.commit_manifest(index_dir, manifest):
-            fsutil.stamp_retired(index_dir, retired)
-            return manifest
-        # lost to a concurrent add: the fold misses its segment — the
-        # staged fold stays an unlisted orphan (vacuumed later), refold
 
 
 def search_ivfpq_index(
@@ -346,7 +312,6 @@ def search_ivfpq_index(
     n_probe: int = 4,
     shortlist: int = 50,
     top_k: int = 10,
-    exclude_self: bool = True,
 ) -> DataFrame:
     """Answer a query batch from the persisted artifacts. Expression-
     for-expression the scoring path of ann_ivfpq_residual_topk
@@ -405,12 +370,12 @@ def search_ivfpq_index(
         .withColumn("d_n", F.sqrt(dot_expr(F.col("dvec"), F.col("dvec"))))
     )
 
-    cand = codes.select("neighbor_id", "cell").join(
-        F.broadcast(q_asg), "cell"
+    cand = (
+        codes.select("neighbor_id", "cell")
+        .join(F.broadcast(q_asg), "cell")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id")
     )
-    if exclude_self:
-        cand = cand.filter(F.col("query_id") != F.col("neighbor_id"))
-    cand = cand.select("query_id", "neighbor_id")
 
     adc = (
         rec.join(F.broadcast(cand), "neighbor_id")

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from utility_service_areas_spark.operators.graph import HITS_ROUNDS, PAGERANK_ROUNDS
 from utility_service_areas_spark.operators.temporal import asof_join, range_join
 from utility_service_areas_spark.plans.registry import query
 from utility_service_areas_spark.sources.tables import load_table
@@ -878,7 +879,7 @@ def order_backlog_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PR_SUPP_OFFSET = 10_000_000  # supplier node id = offset + suppkey
 
 
-def _pagerank_oracle_sql(n_iter: int = 5, damping: float = 0.85) -> str:
+def _pagerank_oracle_sql(damping: float = 0.85) -> str:
     """Unrolled SQL replay of pagerank_micros over the trade graph —
     same discipline as the k-means oracle: every double expression is
     operand-order-identical to the Spark side, rank state is integer
@@ -896,7 +897,7 @@ def _pagerank_oracle_sql(n_iter: int = 5, damping: float = 0.85) -> str:
               UNION SELECT DISTINCT dst AS node FROM e),
     r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS rank_micros FROM nodes)"""
     ]
-    for i in range(1, n_iter + 1):
+    for i in range(1, PAGERANK_ROUNDS + 1):
         parts.append(
             f""",
     c{i} AS (
@@ -910,7 +911,7 @@ def _pagerank_oracle_sql(n_iter: int = 5, damping: float = 0.85) -> str:
                  AS rank_micros
       FROM nodes n LEFT JOIN c{i} USING (node))"""
         )
-    parts.append(f"\n    SELECT node, rank_micros FROM r{n_iter}")
+    parts.append(f"\n    SELECT node, rank_micros FROM r{PAGERANK_ROUNDS}")
     return "".join(parts)
 
 
@@ -943,7 +944,7 @@ def trade_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = eb.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionAll(
         eb.select(F.col("s").alias("src"), F.col("c").alias("dst"))
     )
-    return pagerank_micros(edges, n_iter=5)
+    return pagerank_micros(edges)
 
 
 @query(
@@ -3068,7 +3069,7 @@ def abtest_two_proportion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hits_oracle_sql(n_iter: int = 4) -> str:
+def _hits_oracle_sql() -> str:
     """Unrolled SQL replay of hits_micros over the DIRECTED trade
     graph. Stricter than the pagerank oracle: the HITS trajectory is
     ALL-INTEGER (sums + exact integer division for the max-rescale),
@@ -3085,7 +3086,7 @@ def _hits_oracle_sql(n_iter: int = 4) -> str:
     # Every per-round CTE is MATERIALIZED: DuckDB inlines plain CTEs
     # per reference, and the max() scalar subqueries would otherwise
     # re-instantiate the whole prior-round chain exponentially.
-    for i in range(1, n_iter + 1):
+    for i in range(1, HITS_ROUNDS + 1):
         parts.append(
             f""",
     ar{i} AS MATERIALIZED (
@@ -3105,9 +3106,9 @@ def _hits_oracle_sql(n_iter: int = 4) -> str:
         )
     parts.append(
         f"""
-    SELECT src AS node, 'hub' AS side, h AS score_micros FROM h{n_iter}
+    SELECT src AS node, 'hub' AS side, h AS score_micros FROM h{HITS_ROUNDS}
     UNION ALL
-    SELECT dst AS node, 'auth' AS side, a AS score_micros FROM a{n_iter}"""
+    SELECT dst AS node, 'auth' AS side, a AS score_micros FROM a{HITS_ROUNDS}"""
     )
     return "".join(parts)
 
@@ -3143,7 +3144,7 @@ def trade_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    return hits_micros(edges, n_iter=4)
+    return hits_micros(edges)
 
 
 # CUPED experiment readout (#245): pre-period covariate window.

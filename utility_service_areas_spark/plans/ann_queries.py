@@ -264,6 +264,11 @@ def _kmeans_cte_sql(
     ``base_from``/``base_col`` re-point the chain at another CTE's
     (vec_id, vector) pair — e.g. residual vectors for true-FAISS
     IVFPQ (the referenced CTE must already hold DOUBLE lists).
+
+    ``base``, every centroid table ``c{i}`` and ``fin`` are MATERIALIZED:
+    DuckDB inlines a plain CTE at each reference, and ``c{i}`` feeds
+    both ``a{i}`` and ``c{i+1}``, so an inlined chain replays the
+    earlier rounds 2^n_iter times.
     """
     p = prefix
 
@@ -282,10 +287,10 @@ def _kmeans_cte_sql(
             f"j -> {base_col}[j]{cast})"
         )
     parts = [
-        f"WITH {p}base AS (",
+        f"WITH {p}base AS MATERIALIZED (",
         f"  SELECT vec_id, {base_vec} AS vec",
         f"  FROM {base_from}),",
-        f"{p}c0 AS (",
+        f"{p}c0 AS MATERIALIZED (",
         "  SELECT CAST(row_number() OVER (ORDER BY h) - 1 AS BIGINT) AS cluster,",
         "         vec AS cvec",
         f"  FROM (SELECT md5(CAST(vec_id AS VARCHAR)) AS h, vec FROM {p}base",
@@ -307,12 +312,12 @@ def _kmeans_cte_sql(
             "           count(*) AS n",
             f"    FROM {p}a{i}, unnest(generate_series(1, {dim})) AS t(j)",
             "    GROUP BY 1, 2) GROUP BY cluster),",
-            f"{p}c{i + 1} AS (",
+            f"{p}c{i + 1} AS MATERIALIZED (",
             "  SELECT c.cluster, coalesce(u.cvec, c.cvec) AS cvec",
             f"  FROM {p}c{i} c LEFT JOIN {p}u{i} u USING (cluster)),",
         ]
     parts += [
-        f"{p}fin AS (",
+        f"{p}fin AS MATERIALIZED (",
         "  SELECT vec_id, cluster, d FROM (",
         f"    SELECT b.vec_id, c.cluster, {d2('b', 'c')} AS d,",
         "           row_number() OVER (PARTITION BY b.vec_id ORDER BY",
@@ -2467,9 +2472,7 @@ def ann_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mmr_rerank_frame(emb, cand)
 
 
-def mmr_rerank_frame(
-    emb: DataFrame, cand: DataFrame, n_select: int = None
-) -> DataFrame:
+def mmr_rerank_frame(emb: DataFrame, cand: DataFrame) -> DataFrame:
     """MMR diverse rerank over an arbitrary CANDIDATES frame (r13,
     VERDICT task #5): ``cand`` is (query_id, neighbor_id, rel, rank)
     from any retrieval stage over any queries table — the registered
@@ -2482,8 +2485,6 @@ def mmr_rerank_frame(
     from utility_service_areas_spark.operators.ann import cosine_micros
     from utility_service_areas_spark.operators.dedup import lineage_cut
 
-    if n_select is None:
-        n_select = _MMR_SELECT
     ea = emb.select(F.col("vec_id").alias("na"), F.col("embedding").alias("va"))
     eb = emb.select(F.col("vec_id").alias("nb"), F.col("embedding").alias("vb"))
     pair = lineage_cut(
@@ -2514,7 +2515,7 @@ def mmr_rerank_frame(
         F.lit(1).cast("long").alias("mmr_rank"),
         F.col("rel").cast("long").alias("mmr10"),
     )
-    for r in range(2, n_select + 1):
+    for r in range(2, _MMR_SELECT + 1):
         sel = lineage_cut(sel)
         picked = sel.select(
             F.col("query_id").alias("s_q"), F.col("neighbor_id").alias("s_n")

@@ -431,17 +431,14 @@ _SPAN = 8  # tokens per span (exact-substring dedup granularity)
     "array_distinct(transform(... md5 ...)) — higher-order-function "
     "lambdas evaluate interpreted, vs whole-stage codegen for the "
     "explode+md5 stream (4.8 -> 12.0 s base, 9.9 -> 87.9 s at 10x) — "
-    "and the counting-bloom singleton prune "
-    "(operators/bloom.py:repeated_key_prefilter, prune_singletons="
-    "True): exact and shuffle-capped by construction, but the extra "
-    "span pass outweighs the pruned shuffle at every measured scale "
-    "(base substrate 91% singleton spans, 10x replica substrate 1.7%).",
+    "and a counting-bloom singleton prune before the frequency "
+    "shuffle, exact but slower at every measured scale because its "
+    "extra span pass outweighs the pruned shuffle (base substrate 91% "
+    "singleton spans, 10x replica substrate 1.7%).",
     tags=("pipeline", "dedup"),
 )
-def dedup_exact_substring(
-    spark: SparkSession, sf_dir: str, prune_singletons: bool = False
-) -> DataFrame:
-    from utility_service_areas_spark.operators.bloom import repeated_key_prefilter
+def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from utility_service_areas_spark.operators.dedup import lineage_cut
 
     docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.trim(F.col("text")), r"[ \t\n\x0b\f\r]+")
@@ -459,56 +456,29 @@ def dedup_exact_substring(
         )
         .distinct()
     )
-    if prune_singletons:
-        # Exact-by-construction singleton prune before the frequency
-        # shuffle; kept as the 100 TB lever (the position-count agg is
-        # capped at m rows per partition regardless of span
-        # cardinality), measured a local loss — see the query doc.
-        counted = repeated_key_prefilter(spans, "h", m=1 << 21, k=2)
-        rep = (
-            counted.groupBy("h")
-            .agg(F.count(F.lit(1)).alias("nd"))
-            .filter(F.col("nd") >= 2)
-            .select("h")
+    # The distinct span frame feeds BOTH the frequency count and the
+    # per-doc rollup; Catalyst does not reuse the subtree, so without
+    # the cut the span Generate AND its distinct shuffle ran twice (r17
+    # — executed plan had 2 Generates + 2 full span-stream Exchanges).
+    # Joining against only the REPEATED spans (nd >= 2) instead of
+    # every distinct span's count also shrinks the build side ~10x (91%
+    # of spans are singletons on the base substrate): membership is the
+    # only thing the rollup needs, so nsh = count of spans with a match.
+    spans = lineage_cut(spans)
+    rep = (
+        spans.groupBy("h")
+        .agg(F.count(F.lit(1)).alias("nd"))
+        .filter(F.col("nd") >= 2)
+        .select("h", F.lit(1).alias("shared"))
+    )
+    per = (
+        spans.join(rep, "h", "left")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("ns"),
+            F.sum(F.coalesce(F.col("shared"), F.lit(0))).alias("nsh"),
         )
-        per = (
-            spans.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("ns"))
-            .join(
-                counted.join(rep, "h", "left_semi")
-                .groupBy("doc_id")
-                .agg(F.count(F.lit(1)).alias("nsh")),
-                "doc_id",
-                "left",
-            )
-        )
-    else:
-        from utility_service_areas_spark.operators.dedup import lineage_cut
-
-        # The distinct span frame feeds BOTH the frequency count and
-        # the per-doc rollup; Catalyst does not reuse the subtree, so
-        # without the cut the span Generate AND its distinct shuffle
-        # ran twice (r17 — executed plan had 2 Generates + 2 full
-        # span-stream Exchanges). Joining against only the REPEATED
-        # spans (nd >= 2) instead of every distinct span's count also
-        # shrinks the build side ~10x (91% of spans are singletons on
-        # the base substrate): membership is the only thing the rollup
-        # needs, so nsh = count of spans with a match.
-        spans = lineage_cut(spans)
-        rep = (
-            spans.groupBy("h")
-            .agg(F.count(F.lit(1)).alias("nd"))
-            .filter(F.col("nd") >= 2)
-            .select("h", F.lit(1).alias("shared"))
-        )
-        per = (
-            spans.join(rep, "h", "left")
-            .groupBy("doc_id")
-            .agg(
-                F.count(F.lit(1)).alias("ns"),
-                F.sum(F.coalesce(F.col("shared"), F.lit(0))).alias("nsh"),
-            )
-        )
+    )
     return (
         docs.select("doc_id")
         .join(per, "doc_id", "left")

@@ -2270,9 +2270,7 @@ def search_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rrf_fusion_frame(docs, bm25)
 
 
-def rrf_fusion_frame(
-    docs: DataFrame, bm25: DataFrame, top: int = None
-) -> DataFrame:
+def rrf_fusion_frame(docs: DataFrame, bm25: DataFrame) -> DataFrame:
     """RRF fusion over an arbitrary BM25 result frame (r13, VERDICT
     task #5): ``bm25`` is any (query_id, rk, doc_id, ...) ranking —
     the registered #227 passes the oracled 3-literal workload's; a
@@ -2281,8 +2279,6 @@ def rrf_fusion_frame(
     corpus-sized."""
     from pyspark.sql.window import Window
 
-    if top is None:
-        top = _RRF_TOP
     qual = docs.select(
         "doc_id", quality_score_micros(F.col("text")).alias("quality_micros")
     )
@@ -2327,7 +2323,7 @@ def rrf_fusion_frame(
     )
     return (
         fused.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= top)
+        .filter(F.col("rank") <= _RRF_TOP)
         .select(
             "query_id", "rank", "doc_id", "rank_bm25", "rank_quality", "rrf_micros"
         )

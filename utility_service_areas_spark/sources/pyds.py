@@ -101,19 +101,11 @@ def _zone_allows(mn, mx, filt: Filter) -> bool:
 def _prunable_row_groups(pf, filters: list[Filter]) -> list[int] | None:
     """Row-group indices of ``pf`` (a pyarrow ParquetFile) that survive
     zone pruning under the AND of ``filters`` — or None when every
-    group survives (read-whole-file fast path). A filter on a column
-    the file LACKS (pre-evolution file on a merge_schema lineage) is
-    false for every row — those rows read as NULL — so the whole file
-    prunes to []."""
+    group survives (read-whole-file fast path)."""
     from utility_service_areas_spark.sources.versioned import exact_stat_bounds
 
     names = pf.schema_arrow.names
-    col_idx: dict[str, int] = {}
-    for f in filters:
-        col = f.attribute[0]
-        if col not in names:
-            return []
-        col_idx[col] = names.index(col)
+    col_idx = {f.attribute[0]: names.index(f.attribute[0]) for f in filters}
     keep = []
     for rg in range(pf.num_row_groups):
         meta = pf.metadata.row_group(rg)
@@ -341,19 +333,13 @@ class VersionedTableReader(DataSourceReader):
             if groups == []:
                 return
             partition = VersionedTablePartition(partition.file_path, groups)
-        yield from _arrow_scan_file(partition, self._columns, self._schema)
+        yield from _arrow_scan_file(partition, self._columns)
 
 
-def _arrow_scan_file(
-    partition: VersionedTablePartition,
-    columns: list[str],
-    schema: "StructType",
-):
+def _arrow_scan_file(partition: VersionedTablePartition, columns: list[str]):
     """Executor-side Arrow scan of one committed parquet file — shared
     by the batch and streaming versioned-table readers."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
 
     pf = pq.ParquetFile(partition.file_path)
     # Zone-pruned partitions carry the row groups that survived
@@ -366,36 +352,14 @@ def _arrow_scan_file(
     # batch is re-projected to the reader's schema order. Without
     # this, a reordered-append table crashed on type mismatch or
     # silently swapped same-typed columns (r13 code review #1).
-    file_cols = set(pf.schema_arrow.names)
-    missing = [c for c in columns if c not in file_cols]
     # Decode ONLY the announced columns' pages (VERDICT r16 task #2):
     # `columns=` reaches the parquet column-chunk reader, so a
     # projected read — schema narrowed by the `columns` option — pays
     # one column's I/O, not full row width. (iter_batches returns
     # file order; the .select re-projects to announced order, a
     # zero-copy shuffle of array pointers.)
-    present = [c for c in columns if c in file_cols]
-    if not missing:
-        for batch in pf.iter_batches(row_groups=row_groups, columns=present):
-            yield batch.select(columns)
-        return
-    # evolved lineage (S33 merge_schema, r15): this file predates
-    # an added column — surface it as NULLs of the announced type,
-    # exactly like read_version's explicit-schema scan
-    arrow_schema = to_arrow_schema(schema)
-    for batch in pf.iter_batches(row_groups=row_groups, columns=present):
-        arrays = []
-        for name in columns:
-            if name in file_cols:
-                arrays.append(batch.column(name))
-            else:
-                arrays.append(
-                    pa.nulls(
-                        batch.num_rows,
-                        type=arrow_schema.field(name).type,
-                    )
-                )
-        yield pa.RecordBatch.from_arrays(arrays, names=columns)
+    for batch in pf.iter_batches(row_groups=row_groups, columns=columns):
+        yield batch.select(columns)
 
 
 class VersionedTableStreamReader(DataSourceStreamReader):
@@ -420,14 +384,12 @@ class VersionedTableStreamReader(DataSourceStreamReader):
     dirs anyway (Delta ignoreChanges: rewritten rows reappear,
     downstream must dedup — documented caveat, same name semantics).
 
-    Schema is fixed at stream start (the latest manifest). Files from
-    later versions that EVOLVED extra columns project down to it;
-    pre-evolution files null-fill through the same Arrow path as the
-    batch reader."""
+    Schema is fixed at stream start (the latest manifest); every file
+    is projected to it through the same Arrow path as the batch
+    reader."""
 
     def __init__(self, options: dict, schema: StructType):
         self._table_dir = _path_option(options)
-        self._schema = schema
         self._columns = [f.name for f in schema.fields]
         self._ignore_changes = str(
             options.get("ignore_changes", "false")
@@ -509,9 +471,9 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         return out
 
     def read(self, partition: VersionedTablePartition):
-        # same Arrow fast path (projection + null-fill) as the batch
-        # reader — one implementation of the file scan
-        yield from _arrow_scan_file(partition, self._columns, self._schema)
+        # same Arrow fast path as the batch reader — one
+        # implementation of the file scan
+        yield from _arrow_scan_file(partition, self._columns)
 
     def commit(self, end: dict) -> None:
         pass  # offsets are version numbers; manifests are immutable
@@ -550,7 +512,7 @@ class VersionedTableDataSource(DataSource):
         table_dir, manifest = _versioned_manifest(self.options)
         want = _columns_option(self.options)
         files = _files_in_dirs(table_dir, manifest["data_dirs"])
-        if files and not manifest.get("schema_evolved"):
+        if files:
             full = from_arrow_schema(pq.ParquetFile(files[0]).schema_arrow)
             if want is None:
                 return full
@@ -559,9 +521,8 @@ class VersionedTableDataSource(DataSource):
             # announced schema IS the projection: the reader scans
             # only these columns' pages (VERDICT r16 task #2)
             return StructType([by_name[c] for c in want])
-        # empty snapshot OR evolved lineage (a single file's schema
-        # may predate added columns): the manifest signature is the
-        # source of truth. Returned as a DDL STRING — the DataSource
+        # empty snapshot: the manifest signature is the source of
+        # truth. Returned as a DDL STRING — the DataSource
         # API parses it JVM-side, which works in the session-less
         # Python subprocess where _parse_datatype_string cannot.
         pairs = manifest["schema"]

@@ -35,8 +35,8 @@ both merge paths — claims its version through one helper,
 3. a writer that lost version N reacts in its own way: an append,
    overwrite, bucketed write or restore recomputes against the winner
    and retries at N+1 (the optimistic-concurrency loop every table
-   format runs); a plain-table merge aborts loudly; a bucketed merge
-   rebases onto a winner that touched other buckets (``merge_version``).
+   format runs); a merge rebases onto a winner that touched other
+   buckets and aborts loudly otherwise (``merge_version``).
 
 Every retry — at N+1, by rebase, or of a swept temp — is bounded by
 the one budget ``CLAIM_ATTEMPTS``.
@@ -157,28 +157,6 @@ def txn_version(table_dir: str, txn_id: str) -> int | None:
     return None
 
 
-def _merged_schema_key(
-    old: list[list[str]], new: list[list[str]]
-) -> list[list[str]]:
-    """Delta's mergeSchema contract (r15, VERDICT r14 task #4):
-    columns present on BOTH sides must keep their exact type (a type
-    CHANGE stays loud — silent widening corrupts every old reader);
-    columns on either side alone join the union. Old files simply
-    lack the added columns and read as NULL, so additions are
-    nullable by construction."""
-    old_types = {n: t for n, t in old}
-    for n, t in new:
-        if n in old_types and old_types[n] != t:
-            raise ValueError(
-                f"merge_schema cannot CHANGE column {n!r}: "
-                f"{old_types[n]} -> {t} (type changes require an "
-                "overwrite, which starts a new lineage)"
-            )
-    merged = dict(old_types)
-    merged.update({n: t for n, t in new})
-    return sorted([n, t] for n, t in merged.items())
-
-
 def exact_stat_bounds(st) -> tuple:
     """(min, max) of a parquet Statistics object, each bound kept only
     when the footer marks it EXACT. Parquet writers may truncate long
@@ -263,7 +241,6 @@ def write_version(
     table_dir: str,
     mode: str = "append",
     txn_id: str | None = None,
-    merge_schema: bool = False,
     extra_manifest: dict | None = None,
     expect_rows: int | None = None,
     stats_columns: list[str] | None = None,
@@ -282,15 +259,6 @@ def write_version(
     as txn_id is exactly-once across micro-batch retries. The check
     runs again INSIDE the claim loop, so two racing writers with the
     same txn_id cannot both commit.
-
-    ``merge_schema=True`` (append only) allows ADDITIVE evolution on
-    the lineage — the Delta mergeSchema posture: new columns join the
-    manifest's union schema, rows in older data dirs read them as
-    NULL (the manifest schema is handed to the reader explicitly once
-    a lineage has evolved, so parquet's pick-a-file schema resolution
-    can never drop the added column); a commit may also OMIT evolved
-    columns (its rows read NULL there). Type CHANGES stay loud in
-    either direction.
 
     ``expect_rows`` verifies the STAGED parquet's row count BEFORE the
     claim (ADVICE r15: a transform like optimize_version promises a
@@ -335,23 +303,15 @@ def write_version(
     for _attempt in range(CLAIM_ATTEMPTS):
         versions = list_versions(table_dir)
         nxt = (versions[-1] + 1) if versions else 0
-        evolved = False
         schema_out = _schema_key(df)
         if mode == "append" and versions:
             prev = _read_manifest(table_dir, versions[-1])
-            evolved = bool(prev.get("schema_evolved"))
             if prev["schema"] != schema_out:
-                if not merge_schema:
-                    raise ValueError(
-                        "append schema mismatch vs latest version: "
-                        f"{prev['schema']} != {_schema_key(df)} — pass "
-                        "merge_schema=True for additive columns, or "
-                        "overwrite to change schema"
-                    )
-                schema_out = _merged_schema_key(prev["schema"], schema_out)
-                evolved = True
-            else:
-                schema_out = prev["schema"]
+                raise ValueError(
+                    "append schema mismatch vs latest version: "
+                    f"{prev['schema']} != {schema_out} — overwrite to "
+                    "change schema"
+                )
             dirs = list(prev["data_dirs"]) + [rel_dir]
             total = prev["n_rows"] + n_rows
         else:
@@ -379,10 +339,6 @@ def write_version(
             # recorded so later merges/appends know which columns this
             # lineage keeps zone maps for
             manifest["stats_columns"] = stat_cols_out
-        if evolved:
-            # sticky per lineage: readers must take the schema from
-            # the manifest, not from an arbitrary parquet file
-            manifest["schema_evolved"] = True
         if extra_manifest:
             for k, v in extra_manifest.items():
                 manifest.setdefault(k, v)  # never clobber core fields
@@ -414,7 +370,6 @@ def read_version(
     spark: SparkSession,
     table_dir: str,
     version: int | None = None,
-    columns: list[str] | None = None,
 ) -> DataFrame:
     """Time-travel read: the exact row set of ``version`` (default:
     latest). Reads only the manifest's data dirs — orphans from
@@ -423,41 +378,19 @@ def read_version(
     snapshot: returns a zero-row frame reconstructed from the
     manifest's schema signature, mirroring the versioned_table
     DataSource (ADVICE r13 #2 — this used to raise from a zero-path
-    parquet read).
-
-    ``columns`` projects the read (VERDICT r16 task #2). Declared as a
-    .select on the scan, so Catalyst's native parquet column pruning
-    does the I/O reduction (ReadSchema carries only these columns);
-    unknown names raise, matching the DataSource's columns option."""
-    v, man = _resolve_version(table_dir, version)
-    df = _read_snapshot(spark, table_dir, man)
-    if columns is not None:
-        have = set(df.columns)
-        unknown = [c for c in columns if c not in have]
-        if unknown:
-            raise ValueError(
-                f"read_version: unknown column(s) {unknown}; "
-                f"version {v} has {sorted(have)}"
-            )
-        df = df.select(*columns)
-    return df
+    parquet read). Project with ``.select``: Catalyst's parquet column
+    pruning then reads only the selected columns."""
+    _, man = _resolve_version(table_dir, version)
+    return _read_snapshot(spark, table_dir, man)
 
 
 def _read_snapshot(
     spark: SparkSession, table_dir: str, man: dict
 ) -> DataFrame:
-    """Read one manifest's row set. An EVOLVED lineage (mergeSchema
-    additions) reads with the manifest's union schema handed to the
-    scan explicitly — rows from data dirs that predate an added
-    column surface NULL there; without this, parquet resolves the
-    schema from an arbitrary file and the added column can vanish."""
+    """Read one manifest's row set."""
     if not man["data_dirs"]:
         return _empty_frame_from_manifest(spark, man)
-    paths = [os.path.join(table_dir, d) for d in man["data_dirs"]]
-    if man.get("schema_evolved"):
-        fields = ", ".join(f"{n} {t}" for n, t in man["schema"])
-        return spark.read.schema(fields).parquet(*paths)
-    return spark.read.parquet(*paths)
+    return spark.read.parquet(*(os.path.join(table_dir, d) for d in man["data_dirs"]))
 
 
 def restore_version(table_dir: str, version: int) -> int:
@@ -468,7 +401,7 @@ def restore_version(table_dir: str, version: int) -> int:
     intact: the bad versions remain readable for forensics until
     vacuum, and the restore itself is one more auditable commit (the
     manifest records ``restored_from``), never a rollback-by-deletion.
-    Works for every lineage shape — plain, evolved, bucketed (the
+    Works for every lineage shape — plain or bucketed (the
     bucket map is carried verbatim so later merges keep their COW
     scope) — and an empty snapshot restores to empty. Claim-loop
     commit like every writer; pure stdlib (no SparkSession needed)."""
@@ -490,8 +423,8 @@ def restore_version(table_dir: str, version: int) -> int:
             "n_rows_commit": 0,  # nothing written: pure re-reference
             "schema": src["schema"],
         }
-        for key in ("schema_evolved", "bucket_cols", "n_buckets", "buckets",
-                    "bucket_rows", "file_stats", "stats_columns"):
+        for key in ("bucket_cols", "n_buckets", "buckets", "bucket_rows",
+                    "file_stats", "stats_columns"):
             # file_stats included (ADVICE r16 #3): the source version's
             # zone maps are still exact for its immutable dirs —
             # dropping them on restore would silently un-optimize every
@@ -549,7 +482,6 @@ def write_version_bucketed(
     table_dir: str,
     bucket_cols: list[str],
     n_buckets: int = 16,
-    stats_columns: list[str] | None = None,
 ) -> int:
     """Commit ``df`` as a new OVERWRITE-lineage version laid out in
     ``n_buckets`` hash buckets of ``bucket_cols`` — the layout
@@ -559,16 +491,10 @@ def write_version_bucketed(
     rewriting a byte. Same manifest-claim commit protocol as
     ``write_version``.
 
-    ``stats_columns`` defaults to the BUCKET KEY (VERDICT r16 task
-    #5): every bucketed lineage gets manifest zone maps — zero-footer
-    plan-time file skipping — without the caller knowing the option
-    exists; pass ``stats_columns=[]`` to opt out, or name other
-    columns. The columns are recorded in the manifest so merges can
-    re-collect stats for the buckets they rewrite."""
-    from pyspark.sql import functions as F
-
-    if stats_columns is None:
-        stats_columns = list(bucket_cols)
+    Every bucketed lineage records manifest zone maps on the BUCKET
+    KEY (VERDICT r16 task #5) — zero-footer plan-time file skipping;
+    the columns are recorded in the manifest so merges can re-collect
+    stats for the buckets they rewrite."""
     os.makedirs(table_dir, exist_ok=True)
     token = uuid.uuid4().hex[:12]
     rel_base = os.path.join("data", f"commit-{token}")
@@ -592,10 +518,7 @@ def write_version_bucketed(
         c = spark.read.parquet(os.path.join(table_dir, rel)).count()
         bucket_rows[b] = c
         n_rows += c
-        if stats_columns:
-            file_stats.update(
-                _collect_file_stats(table_dir, rel, list(stats_columns))
-            )
+        file_stats.update(_collect_file_stats(table_dir, rel, list(bucket_cols)))
 
     for _attempt in range(CLAIM_ATTEMPTS):
         versions = list_versions(table_dir)
@@ -614,7 +537,7 @@ def write_version_bucketed(
         }
         if file_stats:
             manifest["file_stats"] = file_stats
-            manifest["stats_columns"] = sorted(stats_columns)
+            manifest["stats_columns"] = sorted(bucket_cols)
         if _claim_version(table_dir, nxt, manifest, token):
             return nxt
         # lost the race: recompute against the winner
@@ -624,81 +547,24 @@ def write_version_bucketed(
     )
 
 
-def _merge_full_rewrite(
-    spark: SparkSession,
-    table_dir: str,
-    changes: DataFrame,
-    op_col: str,
-    merge_keys: list[str],
-    base_v: int,
-    man: dict,
-) -> int:
-    """merge_version's fallback for plain (non-bucketed) lineages:
-    read the whole base snapshot, drop every changed key, union the
-    upserts, write ONE new data dir, commit a manifest referencing
-    only it. O(table) commit cost by design; same abort-on-conflict
-    claim posture as the bucketed path. An all-deleted result commits
-    with empty data_dirs (the valid-empty-snapshot shape read_version
-    reconstructs from the schema signature)."""
-    from pyspark.sql import functions as F
-
-    data_cols = [c for c in changes.columns if c != op_col]
-    base = _read_snapshot(spark, table_dir, man)
-    keys = changes.select(*merge_keys).distinct()
-    survivors = base.join(keys, merge_keys, "left_anti")
-    upserts = changes.filter(F.col(op_col) == "U").select(*data_cols)
-    merged = survivors.unionByName(upserts)
-
-    token = uuid.uuid4().hex[:12]
-    rel_dir = os.path.join("data", f"commit-{token}")
-    merged.write.mode("overwrite").parquet(os.path.join(table_dir, rel_dir))
-    n_rows = spark.read.parquet(os.path.join(table_dir, rel_dir)).count()
-
-    manifest = {
-        "version": base_v + 1,
-        "mode": "merge",
-        "merge_base": base_v,
-        "data_dirs": [rel_dir] if n_rows else [],
-        "n_rows": n_rows,
-        "n_rows_commit": n_rows,
-        "schema": man["schema"],
-    }
-    if not _claim_version(table_dir, base_v + 1, manifest, token):
-        raise RuntimeError(
-            f"concurrent commit detected at {table_dir} (version "
-            f"{base_v + 1} claimed while merging against {base_v}) — "
-            "re-run the merge against the new latest version"
-        )
-    return base_v + 1
-
-
 def merge_version(
     spark: SparkSession,
     table_dir: str,
     changes: DataFrame,
     op_col: str = "op",
-    key_cols: list[str] | None = None,
 ) -> int:
     """MERGE a changeset into the latest version.
 
     ``changes`` = full-schema rows + an ``op`` column: 'U' upserts the
     row (insert-or-replace by the merge key), 'D' deletes its key.
 
-    On a BUCKETED table (write_version_bucketed) the merge key is the
-    bucket key and the commit is bucket-level copy-on-write: buckets
-    containing no changed key are carried into the new manifest BY
-    REFERENCE (their data dirs are not read, copied, or rewritten);
-    only touched buckets are read, merged, and rewritten.
-
-    On a PLAIN table (write_version lineage — VERDICT r13 task #6) the
-    caller must pass ``key_cols`` and the merge is a FULL REWRITE: the
-    whole base snapshot is read, surviving rows + upserts are written
-    as one new data dir, and the new manifest references only it. Same
-    semantics, O(table) commit cost — the honest fallback when no
-    bucket layout exists to scope the copy-on-write (a table format
-    without partition/file pruning on the merge key does the same).
-    Pinned row-identical to the bucketed merge and to the relational
-    replay in tests/test_r14_operators.py.
+    The table must be BUCKETED (write_version_bucketed); a plain
+    lineage raises. The merge key is the bucket key and the commit is
+    bucket-level copy-on-write: buckets containing no changed key are
+    carried into the new manifest BY REFERENCE (their data dirs are not
+    read, copied, or rewritten); only touched buckets are read, merged,
+    and rewritten. Pinned row-identical to the relational reference in
+    tests/test_versioned_sink.py.
 
     Concurrency (VERDICT r15 task #4 — the Delta rebase posture): the
     merge is computed against the latest version at read time; if
@@ -708,37 +574,27 @@ def merge_version(
     this merge rewrote is byte-identical between its read-time base
     and the winner) — REBASES its bucket overlay onto the winner and
     retries, so both merges commit with the union of their effects
-    and no lost update. Overlapping buckets, a lineage change, or a
-    plain-table merge keep the loud abort (retrying those against a
+    and no lost update. Overlapping buckets or a lineage change keep
+    the loud abort (retrying those against a
     stale base would silently lose the winner's update; the caller
     re-runs against the new latest). A crash before the claim leaves
     only invisible orphans, as everywhere else."""
     from pyspark.sql import functions as F
 
     base_v, man = _resolve_version(table_dir)
-    bucketed = "buckets" in man
-    if bucketed:
-        merge_keys = list(man["bucket_cols"])
-        if key_cols is not None and list(key_cols) != merge_keys:
-            raise ValueError(
-                f"key_cols {list(key_cols)} != the table's bucket key "
-                f"{merge_keys} — a bucketed table merges on its bucket key"
-            )
-    else:
-        if key_cols is None:
-            raise ValueError(
-                "merge on a non-bucketed table requires key_cols= (the "
-                "upsert/delete key); bucketed tables take it from the "
-                "manifest"
-            )
-        merge_keys = list(key_cols)
+    if "buckets" not in man:
+        raise ValueError(
+            f"merge_version needs a bucketed table; {table_dir} is a plain "
+            "lineage — rewrite it with write_version_bucketed first"
+        )
+    bucket_cols = list(man["bucket_cols"])
 
     # Delta's multiple-source-matches posture: a changeset with two
     # rows for one key is ambiguous (a same-key D+U pair would lose
     # the delete; two U rows would break key uniqueness) — refuse
     # loudly instead of committing either wrong answer (r13 review #3).
     dup = (
-        changes.groupBy(*merge_keys)
+        changes.groupBy(*bucket_cols)
         .count()
         .filter("count > 1")
         .limit(5)
@@ -759,7 +615,7 @@ def merge_version(
         changes.filter(
             ~F.col(op_col).isin("U", "D") | F.col(op_col).isNull()
         )
-        .select(op_col, *merge_keys)
+        .select(op_col, *bucket_cols)
         .limit(5)
         .collect()
     )
@@ -769,12 +625,6 @@ def merge_version(
             f"offending rows (op, key...): {[tuple(r) for r in bad_ops]}"
         )
 
-    if not bucketed:
-        return _merge_full_rewrite(
-            spark, table_dir, changes, op_col, merge_keys, base_v, man
-        )
-
-    bucket_cols = merge_keys
     n_buckets = man["n_buckets"]
     ch = changes.withColumn(
         "__bucket", _bucket_of(changes, bucket_cols, n_buckets)
@@ -1237,23 +1087,6 @@ def zone_map_audit(
             if not name.endswith(".parquet"):
                 continue
             pf = pq.ParquetFile(os.path.join(d, name))
-            if column not in pf.schema_arrow.names:
-                # pre-evolution file on a merge_schema lineage: its
-                # rows read NULL for this column, so report a NULL
-                # zone — always scanned (ADVICE r15)
-                rows = sum(
-                    pf.metadata.row_group(rg).num_rows
-                    for rg in range(pf.num_row_groups)
-                )
-                out.append(
-                    {
-                        "file": os.path.join(rel, name),
-                        "min": None,
-                        "max": None,
-                        "rows": rows,
-                    }
-                )
-                continue
             idx = pf.schema_arrow.names.index(column)
             mn = mx = None
             rows = 0
