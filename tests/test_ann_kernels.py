@@ -285,16 +285,13 @@ def test_power_iteration_two_pc_recovers_plane(spark):
 
 def test_fused_multi_subspace_fit_bit_identical(spark):
     """fit_centroids_np_multi must reproduce m independent
-    fit_centroids_np calls over the sliced frames EXACTLY — same
+    single-subspace (m=1) fits over the sliced frames EXACTLY — same
     md5-seed rows, same per-batch numpy arithmetic per subspace, same
     integer micros sums — so the per-subspace SQL replay chains keep
     verifying the fused path."""
     from pyspark.sql import functions as F
 
-    from utility_service_areas_spark.operators.kmeans import (
-        fit_centroids_np,
-        fit_centroids_np_multi,
-    )
+    from utility_service_areas_spark.operators.kmeans import fit_centroids_np_multi
     from utility_service_areas_spark.sources.tables import load_table
 
     emb = load_table(spark, SMOKE_SF, "embeddings")
@@ -305,11 +302,12 @@ def test_fused_multi_subspace_fit_bit_identical(spark):
     m, k, n_iter = 4, 16, 2
     sub = 64 // m
     separate = [
-        fit_centroids_np(
+        fit_centroids_np_multi(
             base.select("id", F.slice("vec", si * sub + 1, sub).alias("vec")),
             k,
             n_iter,
-        )
+            1,
+        )[0]
         for si in range(m)
     ]
     fused = fit_centroids_np_multi(base, k, n_iter, m)

@@ -104,9 +104,6 @@ def _chain_and_clique(spark, a="doc_a", b="doc_b"):
 
 _GRAPH_OPS = {
     "connected_components": lambda s: graph.connected_components(_chain_and_clique(s)),
-    "connected_components_twostar": lambda s: graph.connected_components_twostar(
-        _chain_and_clique(s)
-    ),
     "pagerank_micros": lambda s: graph.pagerank_micros(_chain_and_clique(s, "src", "dst")),
     "hits_micros": lambda s: graph.hits_micros(_chain_and_clique(s, "src", "dst")),
     "triangle_counts": lambda s: graph.triangle_counts(_chain_and_clique(s)),
@@ -144,7 +141,6 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path, monkeypatch, 
 _LAZY_CUT_JOBS = {
     "cluster_density": 5,
     "connected_components": 5,
-    "connected_components_twostar": 6,
     "hits_micros": 30,
     "pagerank_micros": 1,
     "triangle_counts": 1,
@@ -157,8 +153,10 @@ def test_local_cut_is_lazy(spark, monkeypatch, op):
     materialized by the job that first consumes them; an eager cut
     adds one job per cut. AQE is off while counting: it submits each
     query stage as its own job, and how many it submits depends on
-    which stage finishes first (42-47 jobs for one CC call)."""
-    monkeypatch.setattr(graph, "_LOCAL_CC_EDGES", 0)
+    which stage finishes first (42-47 jobs for one CC call). The
+    fast path is stubbed out rather than capped at 0: a 0 cap still
+    runs its one-row limit job, which is no lineage cut."""
+    monkeypatch.setattr(graph, "_local_cc_fastpath", lambda edges: None)
     sc = spark.sparkContext
     assert sc.getCheckpointDir() is None
     group = f"lazy-cut-{op}"
@@ -174,17 +172,12 @@ def test_local_cut_is_lazy(spark, monkeypatch, op):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == _LAZY_CUT_JOBS[op]
 
 
-def test_twostar_cc_label_identical_to_minlabel(spark):
-    """The algorithm-equivalence pin: two-star CC and min-label
-    propagation produce IDENTICAL (node, comp) labels on every
-    adversarial topology — 20-deep chain (propagation's worst case),
-    clique (two-star's best case), star, two disjoint components,
-    and a lollipop (clique + tail)."""
-    from utility_service_areas_spark.operators.graph import (
-        connected_components,
-        connected_components_twostar,
-    )
-
+def test_cc_loop_label_identical_to_fastpath(spark, monkeypatch):
+    """The propagation loop and the driver union-find fast path give
+    IDENTICAL (node, comp) labels on adversarial topologies — 20-deep
+    chain (propagation's worst case), clique, star, two disjoint
+    components, and a lollipop (clique + tail) — and every label is
+    its component's minimum member."""
     graphs = {
         "chain": [(i, i + 1) for i in range(100, 120)],
         "clique": [(i, j) for i in range(200, 210) for j in range(200, 210) if i < j],
@@ -193,17 +186,18 @@ def test_twostar_cc_label_identical_to_minlabel(spark):
         "lollipop": [(i, j) for i in range(400, 406) for j in range(400, 406) if i < j]
         + [(405, 406), (406, 407), (407, 408)],
     }
-    for name, edges in graphs.items():
-        pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        want = {
-            (r.node, r.comp) for r in connected_components(pairs).collect()
-        }
-        got = {
-            (r.node, r.comp)
-            for r in connected_components_twostar(pairs).collect()
-        }
-        assert got == want, name
-        # every component's label is its minimum member
+    frames = {
+        name: spark.createDataFrame(edges, "doc_a long, doc_b long")
+        for name, edges in graphs.items()
+    }
+    want = {
+        name: {(r.node, r.comp) for r in graph.connected_components(f).collect()}
+        for name, f in frames.items()
+    }
+    monkeypatch.setattr(graph, "_LOCAL_CC_EDGES", 0)
+    for name, pairs in frames.items():
+        got = {(r.node, r.comp) for r in graph.connected_components(pairs).collect()}
+        assert got == want[name], name
         comp_members = {}
         for node, comp in got:
             comp_members.setdefault(comp, []).append(node)
@@ -211,45 +205,31 @@ def test_twostar_cc_label_identical_to_minlabel(spark):
             assert comp == min(members + [comp]), name
 
 
-def test_twostar_cc_matches_on_substrate_pairs(spark):
-    """Same equivalence on the REAL LSH pair graph (the #50/#243
-    input) at the smoke SF."""
-    from tests.conftest import SMOKE_SF
-    from utility_service_areas_spark.plans.dedup_queries import (
-        dedup_cc_twostar,
-        dedup_clusters_q,
-    )
-
-    got = sorted(map(tuple, dedup_cc_twostar(spark, SMOKE_SF).collect()))
-    want = sorted(map(tuple, dedup_clusters_q(spark, SMOKE_SF).collect()))
-    assert got == want
-
-
-def test_twostar_converging_exactly_at_max_iter_returns_labels(spark):
-    # A single edge reaches the star fixpoint in round 1; fingerprint
-    # EQUALITY would only be observed in round 2, so max_iter=1 used
-    # to raise despite correct labels. The exhaustion path now runs
-    # one verify round and accepts the fixpoint.
+def test_cc_converging_exactly_at_max_iter_returns_labels(spark, monkeypatch):
+    # A single edge reaches the fixpoint in round 1; fingerprint
+    # EQUALITY would only be observed in round 2, so max_iter=1 must
+    # run one verify round and accept the fixpoint, not raise.
+    monkeypatch.setattr(graph, "_LOCAL_CC_EDGES", 0)
     pairs = spark.createDataFrame([(2, 1)], "doc_a long, doc_b long")
     got = {
         (r.node, r.comp)
-        for r in graph.connected_components_twostar(pairs, max_iter=1).collect()
+        for r in graph.connected_components(pairs, max_iter=1).collect()
     }
     assert got == {(1, 1), (2, 1)}
 
 
-def test_twostar_still_raises_when_genuinely_unconverged(spark, monkeypatch):
-    # r17: the driver union-find fast path solves a 63-edge chain
-    # exactly without iterating — disable it so this still pins the
-    # LOOP's exhaustion contract.
+def test_cc_still_raises_when_genuinely_unconverged(spark, monkeypatch):
+    # The driver union-find fast path solves a 63-edge chain exactly
+    # without iterating — disable it so this pins the LOOP's
+    # exhaustion contract.
     monkeypatch.setattr(graph, "_LOCAL_CC_EDGES", 0)
     # a 64-node path needs several rounds; max_iter=1 + one verify
     # round cannot reach the fixpoint -> loud failure, never wrong labels
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "doc_a long, doc_b long"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        graph.connected_components_twostar(pairs, max_iter=1)
+    with pytest.raises(RuntimeError, match="did not converge within max_iter=1"):
+        graph.connected_components(pairs, max_iter=1)
 
 
 def test_hits_planted_authority_ranking(spark):

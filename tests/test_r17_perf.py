@@ -359,22 +359,6 @@ def test_local_cc_fastpath_matches_distributed_loop(spark, monkeypatch):
     assert fast  # non-empty sanity
 
 
-def test_local_cc_fastpath_matches_twostar_loop(spark, monkeypatch):
-    from utility_service_areas_spark.operators import graph
-
-    pairs = _cc_ref_pairs(spark)
-    fast = {
-        (r.node, r.comp)
-        for r in graph.connected_components_twostar(pairs).collect()
-    }
-    monkeypatch.setattr(graph, "_LOCAL_CC_EDGES", 0)
-    loop = {
-        (r.node, r.comp)
-        for r in graph.connected_components_twostar(pairs).collect()
-    }
-    assert fast == loop
-
-
 def test_local_cc_fastpath_taken_for_small_graphs(spark, monkeypatch):
     from utility_service_areas_spark.operators import graph
 

@@ -507,3 +507,53 @@ def test_bm25_vacuum_spares_segment_with_fresh_inner_file(spark, tmp_path):
     plan = vacuum_index(d, grace_seconds=3600)
     assert "_tmp-seg-inflight" in plan["dirs"]
     assert not os.path.exists(inflight)
+
+
+def test_textindex_cli_lifecycle(spark, tmp_path, capsys):
+    """The `textindex` CLI drives the S34 v2 lifecycle end-to-end:
+    build over half the corpus -> add the other half (atomic segment)
+    -> compact to one segment -> repair recount -> ranked search —
+    all through main(argv), the user-facing surface."""
+    from utility_service_areas_spark.__main__ import main
+    from utility_service_areas_spark.operators.text_index import (
+        load_bm25_index,
+    )
+
+    d = str(tmp_path / "bmidx")
+    sf = SMOKE_SF
+    assert main(["textindex", "build", "--sf-dir", sf, "--index-dir", d,
+                 "--where", "doc_id < 250"]) == 0
+    out = capsys.readouterr().out
+    assert "built" in out and "1 segment(s)" in out
+
+    assert main(["textindex", "add", "--sf-dir", sf, "--index-dir", d,
+                 "--where", "doc_id >= 250"]) == 0
+    out = capsys.readouterr().out
+    assert "2 segment(s)" in out and "1 add batches" in out
+
+    assert main(["textindex", "compact", "--index-dir", d]) == 0
+    assert "1 segment(s)" in capsys.readouterr().out
+
+    # retired dirs survive compaction (readers keep working) until an
+    # aged vacuum; dry run reports, grace 0 sweeps
+    assert main(["textindex", "vacuum", "--index-dir", d, "--dry-run",
+                 "--grace-seconds", "0"]) == 0
+    assert "would remove 2" in capsys.readouterr().out
+    assert main(["textindex", "vacuum", "--index-dir", d,
+                 "--grace-seconds", "0"]) == 0
+    assert "removed 2" in capsys.readouterr().out
+    assert len(os.listdir(os.path.join(d, "segments"))) == 1
+
+    assert main(["textindex", "repair", "--index-dir", d]) == 0
+    assert "recounted 1 segment(s)" in capsys.readouterr().out
+
+    assert main(["textindex", "search", "--index-dir", d,
+                 "--terms", "spark join", "--top-k", "3"]) == 0
+    out = capsys.readouterr().out
+    assert "q0" in out and "score_millibits" in out
+
+    m, _p, doclens = load_bm25_index(spark, d)
+    from utility_service_areas_spark.sources.tables import load_table
+
+    assert m["n_docs"] == load_table(spark, sf, "documents").count()
+    assert doclens.count() == m["n_docs"]

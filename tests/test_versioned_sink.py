@@ -1142,3 +1142,127 @@ def test_claim_rewrites_a_swept_temp(spark, tmp_path, monkeypatch, setup, commit
     assert list_versions(t) == before + [before[-1] + 1] and v == before[-1] + 1
     assert {(r.k, r.v) for r in read_version(spark, t).collect()} == want
     assert not [n for n in os.listdir(t) if n.startswith("_tmp-")]
+
+
+# ---------------------------------------------------------------------------
+# Empty snapshots and vacuum: dry-run plan, commit-temp and orphan-dir grace
+# ---------------------------------------------------------------------------
+
+
+def _rows(spark, t, v=None):
+    return {(r.k, r.v) for r in read_version(spark, t, v).collect()}
+
+
+BASE = [(k, f"base{k}") for k in range(20)]
+
+
+def test_all_deleted_snapshot_reads_empty_with_schema(spark, tmp_path):
+    """ADVICE r13 #2: a version whose every row was deleted is a VALID
+    empty snapshot — read_version returns a zero-row frame with the
+    manifest's schema instead of raising from a zero-path parquet
+    read; diff_versions across it works."""
+    t = str(tmp_path / "bucketed")
+    write_version_bucketed(_kv(spark, [(1, "a"), (2, "b")]), t, ["k"], 2)
+    v = merge_version(spark, t, _ch(spark, [(1, "", "D"), (2, "", "D")]))
+    empty = read_version(spark, t, v)
+    assert empty.count() == 0
+    assert sorted(
+        (f.name, f.dataType.simpleString()) for f in empty.schema.fields
+    ) == [("k", "bigint"), ("v", "string")]
+    d = diff_versions(spark, t, 0, v)
+    assert d["removed"] == 2 and d["n_rows_new"] == 0
+    # and the table accepts a fresh merge after total deletion
+    v2 = merge_version(spark, t, _ch(spark, [(5, "back", "U")]))
+    assert _rows(spark, t, v2) == {(5, "back")}
+
+
+def test_vacuum_dry_run_plans_without_deleting(spark, tmp_path):
+    """VERDICT r13 task #6: dry_run returns the exact would-delete set
+    (manifests + dirs by name) and touches NOTHING; the real vacuum
+    then deletes exactly that plan."""
+    t = str(tmp_path / "tbl")
+    write_version_bucketed(_kv(spark, BASE), t, ["k"], 4)
+    merge_version(spark, t, _ch(spark, [(1, "m1", "U")]))
+    merge_version(spark, t, _ch(spark, [(2, "m2", "U")]))
+    all_rows = _rows(spark, t)
+    files_before = sorted(
+        os.path.join(r, x)
+        for r, _d, fs in os.walk(t)
+        for x in fs
+    )
+
+    plan = vacuum(t, keep_last=1, dry_run=True)
+    assert plan["dry_run"] is True
+    assert plan["manifests"] == ["_v0.json", "_v1.json"]
+    assert plan["manifests_removed"] == 2
+    assert plan["dirs_removed"] == len(plan["dirs"]) > 0
+    # nothing touched: every file still present, all versions readable
+    files_after = sorted(
+        os.path.join(r, x)
+        for r, _d, fs in os.walk(t)
+        for x in fs
+    )
+    assert files_after == files_before
+    assert list_versions(t) == [0, 1, 2]
+
+    real = vacuum(t, keep_last=1)
+    assert real["manifests"] == plan["manifests"]
+    assert real["dirs"] == plan["dirs"]
+    assert list_versions(t) == [2]
+    assert _rows(spark, t) == all_rows
+
+
+def test_vacuum_spares_young_commit_temps(spark, tmp_path):
+    """ADVICE r13 #3: a temp younger than the grace window (a writer
+    mid-claim) SURVIVES vacuum; a stale temp (backdated mtime) is
+    swept. The claim loops additionally retry on FileNotFoundError."""
+    t = str(tmp_path / "tbl")
+    write_version(_kv(spark, [(1, "a")]), t)
+    young = os.path.join(t, "_tmp-v9-young.json")
+    stale = os.path.join(t, "_tmp-v9-stale.json")
+    for p in (young, stale):
+        with open(p, "w") as f:
+            f.write("{}")
+    os.utime(stale, (0, 0))  # ancient
+
+    plan = vacuum(t, keep_last=1, dry_run=True)
+    assert plan["tmps"] == ["_tmp-v9-stale.json"]
+    vacuum(t, keep_last=1)
+    assert os.path.exists(young) and not os.path.exists(stale)
+    # tmp_grace_seconds=0 restores the sweep-everything behavior
+    vacuum(t, keep_last=1, tmp_grace_seconds=0)
+    assert not os.path.exists(young)
+
+
+def test_vacuum_spares_young_orphan_data_dirs(spark, tmp_path):
+    """r14 review #3: a data dir referenced by NO manifest may be an
+    IN-FLIGHT commit (parquet lands seconds before the manifest claim)
+    — vacuum must spare it until it ages past the grace window, else a
+    writer can commit a readable manifest pointing at deleted data.
+    Dirs referenced by EXPIRED manifests were durably committed and go
+    regardless of age."""
+    t = str(tmp_path / "tbl")
+    write_version(_kv(spark, [(1, "a")]), t)
+    write_version(_kv(spark, [(2, "b")]), t, mode="overwrite")  # v0 expires
+
+    young = os.path.join(t, "data", "commit-inflight")
+    stale = os.path.join(t, "data", "commit-crashedlongago")
+    for p in (young, stale):
+        os.makedirs(p)
+        with open(os.path.join(p, "part.parquet"), "w") as f:
+            f.write("x")
+    from tests.conftest import backdate_tree
+
+    backdate_tree(stale)
+
+    plan = vacuum(t, keep_last=1, dry_run=True)
+    dirs = set(plan["dirs"])
+    # v0's expired-committed dir is reclaimed regardless of age...
+    assert any(d.startswith(os.path.join("data", "commit-")) for d in dirs)
+    # ...the stale orphan too, but the fresh (in-flight) one is spared
+    assert os.path.join("data", "commit-crashedlongago") in dirs
+    assert os.path.join("data", "commit-inflight") not in dirs
+
+    vacuum(t, keep_last=1)
+    assert os.path.exists(young) and not os.path.exists(stale)
+    assert _rows(spark, t) == {(2, "b")}

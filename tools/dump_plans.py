@@ -402,11 +402,6 @@ HEADLINE = {
         "four of five rule features map-side from the token array; "
         "only top-token share pays the (doc, t) partial-agg shuffle"
     ),
-    "dedup_cc_twostar": (
-        "per round: two groupBy-min partial aggs + two node-keyed "
-        "joins; edge frame localCheckpointed (lineage cut) — no "
-        "cartesian, no full-edge re-shuffle after round 0"
-    ),
     "trade_graph_hits": (
         "per half-round: edge BHJ against node-sized score frame + "
         "partial-agg groupBy + 1-row max broadcast; all-integer state"

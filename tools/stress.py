@@ -233,10 +233,14 @@ def run_geo_grid(spark, factor: int) -> tuple[dict[str, float], dict[str, int]]:
             plan = physical_plan(df)
             assert "BroadcastNestedLoopJoin" not in plan, f"{name}: BNLJ in plan"
             assert "CartesianProduct" not in plan, f"{name}: cartesian in plan"
+            # df.count() would run a new Dataset and leave df's own
+            # adaptive plan unfinalized; count through a frame whose
+            # executed plan is then the one that ran.
+            counted = df.groupBy().count()
             t0 = time.time()
-            rows[name] = df.count()
+            rows[name] = counted.collect()[0][0]
             timings[name] = round(time.time() - t0, 2)
-            skew[name] = "skew=true" in physical_plan(df)
+            skew[name] = "skew=true" in physical_plan(counted)
         finally:
             spark.conf.set(bcast_key, old)
     return timings, rows, skew

@@ -2,9 +2,9 @@
 pairs — the endgame of every dedup family (pairs → clusters →
 canonical keeper per cluster).
 
-Implementation is large-star/small-star-style min-label propagation:
-each iteration joins the current labels across the edge list and
-takes the min neighbor label, until a fixpoint. Iterations are
+Implementation is min-label propagation with pointer jumping: each
+iteration joins the current labels across the edge list and takes the
+min neighbor label, until a fixpoint. Iterations are
 O(diameter); dedup graphs are near-clique clusters, so 2-4 rounds
 converge. Each round is one shuffle; intermediate frames go through
 ``lineage_cut`` to cut the growing lineage — the standard Spark
@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from utility_service_areas_spark.operators.dedup import lineage_cut
+from utility_service_areas_spark.operators.localrel import local_df
 from utility_service_areas_spark.operators.spread import cpu_spread_width
 
 # Small-graph fast path (r17): a pair graph that fits comfortably on
@@ -42,8 +43,6 @@ def _local_cc_fastpath(edges: DataFrame) -> DataFrame | None:
     across engines — only numeric ids take the fast path; Python and
     SQL string collation subtleties stay out of scope)."""
     cap = _LOCAL_CC_EDGES
-    if cap <= 0:
-        return None
     u_type, v_type = (f.dataType.typeName() for f in edges.schema.fields[:2])
     numeric = {"byte", "short", "integer", "long"}
     if u_type not in numeric or u_type != v_type:
@@ -69,57 +68,28 @@ def _local_cc_fastpath(edges: DataFrame) -> DataFrame | None:
         ru, rv = find(u), find(v)
         if ru != rv:
             parent[max(ru, rv)] = min(ru, rv)
-    labels = [(n, find(n)) for n in parent]
-    # Hand the labels back through pandas/Arrow: createDataFrame on a
-    # pandas frame plans as a LocalTableScan — no RDD, no job, and
-    # crucially no PythonRDD pickle stage (the list overload
-    # parallelizes to defaultParallelism pickle tasks, whose worker
-    # pool has its OWN PythonWorkerFactory key — measured in-bench as
-    # a fresh Python daemon + preload-import storm blocking all 32
-    # task slots for ~7 s the first time a query hit it).
-    import numpy as np
-    import pandas as pd
-
-    np_type = {
-        "byte": "int8",
-        "short": "int16",
-        "integer": "int32",
-        "long": "int64",
-    }[u_type]
-    pdf = pd.DataFrame(
-        {
-            "node": np.fromiter((n for n, _ in labels), dtype=np_type),
-            "comp": np.fromiter((c for _, c in labels), dtype=np_type),
-        }
-    )
-    return edges.sparkSession.createDataFrame(
-        pdf, f"node {u_type}, comp {u_type}"
+    return local_df(
+        edges.sparkSession,
+        [(n, find(n)) for n in parent],
+        f"node {u_type}, comp {u_type}",
     )
 
 
-def connected_components(
+def symmetric_edges(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    max_iter: int = 20,
-    pre_materialized: bool = False,
     width: int | None = None,
 ) -> DataFrame:
-    """Edge list → (node, component) where component = min node id of
-    the connected component. Nodes only in no pair are absent (callers
-    union isolated ids if needed). ``pre_materialized=True`` promises
-    the input already holds BOTH directions of every edge, deduplicated
-    and checkpointed (cluster_density's `und`) — the union+distinct
-    shuffle, the repartition and the second checkpoint pass are all
-    skipped (the lineage cut is the load-bearing part; the
-    co-partitioning was only a ~6%-warm win, see below).
-    """
-    edges = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-    if not pre_materialized:
-        edges = edges.union(
-            pairs.select(F.col(b_col).alias("u"), F.col(a_col).alias("v"))
-        ).distinct()
-    spark = pairs.sparkSession
+    """Edge list → (u, v) holding BOTH directions of every edge,
+    deduplicated, partitioned on ``v`` and lineage-cut: the edge frame
+    `component_labels` iterates over (and `cluster_density` also
+    counts triangles on)."""
+    edges = (
+        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
+        .union(pairs.select(F.col(b_col).alias("u"), F.col(a_col).alias("v")))
+        .distinct()
+    )
     # Materialize the edge list ONCE, PRE-PARTITIONED on the join key
     # (r8): checkpoint preserves outputPartitioning, so every round's
     # edge⋈label join shuffles only the node-sized label frame — the
@@ -127,37 +97,42 @@ def connected_components(
     # Measured at 30× (2.56M pairs), interleaved A/B in one session:
     # dedup_clusters 20.5 → 19.2 s warm (−6%; the first cold run shows
     # 29.3 → 19.9 s but that gap is JIT/page-cache bias, quoted so
-    # nobody re-reports it as the win). (The half-lineage-cut that won
-    # for PageRank was ALSO tried and rejected: neutral alone —
-    # 26.4 s — and a 28.0 s regression combined, because three
-    # consumers re-derive the uncut round.)
+    # nobody re-reports it as the win), and cluster_density 27.5 →
+    # 23.5 s. (The half-lineage-cut that won for PageRank was ALSO
+    # tried and rejected: neutral alone — 26.4 s — and a 28.0 s
+    # regression combined, because three consumers re-derive the
+    # uncut round.)
     # Without the cut each iteration would re-run the entire upstream
     # pair-generation pipeline (LSH bucketing, signature UDFs, ...).
     # ADVICE r8: shuffle.partitions can be non-numeric ("auto" on some
     # platforms) — fall back to defaultParallelism instead of raising,
     # and skip the explicit repartition entirely in that case (the
-    # measured win of the pre-partitioned checkpoint was only ~6% warm;
-    # the checkpoint's lineage cut is the load-bearing part).
-    if not pre_materialized:
-        try:
-            n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            n_shuffle = None
-        if n_shuffle:
-            # r17: bound the width by the source corpus size (one
-            # partition per ~128 KiB of leaf-scan bytes, capped at
-            # n_shuffle) — a bench-scale pair graph no longer fans
-            # every CC round into shuffle.partitions near-empty tasks,
-            # while an input big enough to need the full width still
-            # gets it. ``width`` lets a caller whose pair frame sits
-            # on a cached relation (no visible leaf files) pass the
-            # corpus-derived width instead; unknown sizes keep the
-            # old n_shuffle.
-            w = min(width, n_shuffle) if width else cpu_spread_width(pairs, n_shuffle)
-            edges = edges.repartition(w, "v")
-        # The local cut is lazy (r17): round 1's fingerprint action
-        # materializes it, saving one standalone job per CC call.
-        edges = lineage_cut(edges)
+    # checkpoint's lineage cut is the load-bearing part).
+    try:
+        n_shuffle = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        n_shuffle = None
+    if n_shuffle:
+        # r17: bound the width by the source corpus size (one
+        # partition per ~128 KiB of leaf-scan bytes, capped at
+        # n_shuffle) — a bench-scale pair graph no longer fans every
+        # CC round into shuffle.partitions near-empty tasks, while an
+        # input big enough to need the full width still gets it.
+        # ``width`` lets a caller whose pair frame sits on a cached
+        # relation (no visible leaf files) pass the corpus-derived
+        # width instead; unknown sizes keep the old n_shuffle.
+        w = min(width, n_shuffle) if width else cpu_spread_width(pairs, n_shuffle)
+        edges = edges.repartition(w, "v")
+    # The local cut is lazy (r17): its first consumer's job
+    # materializes it, saving one standalone job per call.
+    return lineage_cut(edges)
+
+
+def component_labels(edges: DataFrame, max_iter: int = 20) -> DataFrame:
+    """`symmetric_edges` frame → (node, comp), comp = min node id of
+    the connected component: the driver fast path for a small graph,
+    else min-label propagation to a fixpoint. Raises RuntimeError when
+    the labels still move after ``max_iter`` rounds."""
     fast = _local_cc_fastpath(edges)
     if fast is not None:
         return fast
@@ -166,8 +141,8 @@ def connected_components(
         .distinct()
         .withColumn("comp", F.col("node"))
     )
-    prev_fp = None
-    for _ in range(max_iter):
+
+    def _round(labels: DataFrame) -> DataFrame:
         # candidate label for each node: min over (own, neighbors')
         neigh = (
             edges.join(labels, edges.v == labels.node)
@@ -190,24 +165,54 @@ def connected_components(
         new_labels = new_labels.join(jump, "comp", "left").select(
             "node", F.coalesce("comp2", "comp").alias("comp")
         )
-        new_labels = lineage_cut(new_labels)
+        return lineage_cut(new_labels)
+
+    def _fingerprint(labels: DataFrame) -> int:
         # Convergence = labels identical to last round. Min-label
         # propagation is monotone (labels only decrease), so a 64-bit
         # XOR fingerprint being unchanged means fixpoint (bit_xor is
         # order-independent and can't overflow under ANSI mode). One
         # tiny partial-agg scan of the checkpointed frame — no join,
-        # no extra shuffle (the old per-round join+count was a full
-        # driver action with a shuffle at cluster scale). r17: the
-        # local cut above is lazy, so THIS action materializes it —
-        # one job per round instead of two.
-        fp = new_labels.agg(
+        # no extra shuffle. r17: the edge frame's cut is lazy, so the
+        # first round's fingerprint materializes it.
+        return labels.agg(
             F.expr("bit_xor(xxhash64(node, comp))").alias("fp")
         ).collect()[0][0]
-        labels = new_labels
+
+    prev_fp = None
+    for _ in range(max_iter):
+        labels = _round(labels)
+        fp = _fingerprint(labels)
         if fp == prev_fp:
-            break
+            return labels
         prev_fp = fp
-    return labels.select("node", "comp")
+    # Fingerprint equality trails the fixpoint by one round (the round
+    # that REACHES it still changes the labels), so a graph that
+    # converges exactly at max_iter looks unconverged: verify with one
+    # more round. If the labels still move, the loop exited by
+    # exhaustion and its labels are not the components — fail loudly
+    # rather than return them.
+    labels = _round(labels)
+    if _fingerprint(labels) != prev_fp:
+        raise RuntimeError(
+            f"connected components did not converge within "
+            f"max_iter={max_iter} rounds (label fingerprint still "
+            "moving); raise max_iter"
+        )
+    return labels
+
+
+def connected_components(
+    pairs: DataFrame,
+    a_col: str = "doc_a",
+    b_col: str = "doc_b",
+    max_iter: int = 20,
+    width: int | None = None,
+) -> DataFrame:
+    """Edge list → (node, component) where component = min node id of
+    the connected component. Nodes only in no pair are absent (callers
+    union isolated ids if needed)."""
+    return component_labels(symmetric_edges(pairs, a_col, b_col, width), max_iter)
 
 
 def dedup_clusters(
@@ -425,39 +430,20 @@ def cluster_density(
     component's min node id (the CC label), n_docs >= 2 always —
     isolated docs have no edges and no cluster.
     """
-    spark = pairs.sparkSession
-    sym = (
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .union(pairs.select(F.col(b_col).alias("u"), F.col(a_col).alias("v")))
-        .distinct()
-        .filter(F.col("u") != F.col("v"))
+    # Self-pairs carry no edge; dropping them before symmetrizing
+    # drops exactly the (x, x) rows afterwards.
+    und = symmetric_edges(
+        pairs.filter(F.col(a_col) != F.col(b_col)), a_col, b_col, width
     )
-    # Checkpoint PRE-PARTITIONED on v (checkpoint preserves
-    # outputPartitioning): CC's per-round edge⋈label join then
-    # shuffles only the node-sized label frame — skipping this and
-    # letting CC take the edges unpartitioned re-shuffles the whole
-    # edge list EVERY round (measured 23.5 → 27.5 s at 30× when the
-    # repartition was dropped).
-    try:
-        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        n_shuffle = None
-    if n_shuffle:
-        # Same source-size width bound as connected_components (r17).
-        w = min(width, n_shuffle) if width else cpu_spread_width(pairs, n_shuffle)
-        sym = sym.repartition(w, "v")
-    und = lineage_cut(sym)
     # Degree frame computed ONCE (node-sized, cut) and shared by the
-    # orientation and the per-cluster stats; `und` is already
-    # symmetric+distinct+partitioned+materialized, so CC adds no
-    # edge-frame pass of its own (pre_materialized=True).
+    # orientation and the per-cluster stats.
     deg = lineage_cut(
         und.groupBy("u").agg(F.count(F.lit(1)).alias("d")).withColumnRenamed(
             "u", "node"
         )
     )
     tri = _oriented_triangles(und, deg)
-    comp = connected_components(und, "u", "v", pre_materialized=True)
+    comp = component_labels(und)
     per_node = comp.join(deg, "node")
     base = per_node.groupBy("comp").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -487,125 +473,6 @@ def cluster_density(
             dens.alias("edge_density_micros"),
             trans.alias("transitivity_micros"),
         )
-    )
-
-
-def connected_components_twostar(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Connected components via alternating LARGE-STAR / SMALL-STAR
-    (Kiveris et al. 2014, 'Connected Components in MapReduce and
-    Beyond') — the hub-safe alternative to min-label propagation
-    (``connected_components``): label propagation's per-round work is
-    O(edges) for O(log d) rounds after pointer-jumping, but every
-    round re-joins the FULL edge list; two-star provably SHRINKS the
-    edge multiset toward stars in O(log^2 n) rounds, and on the
-    high-degree near-clique graphs dedup produces, large-star
-    collapses a clique to a star in ONE round — the remaining rounds
-    join star-sized (node-sized) frames, not clique-edge-sized ones.
-
-    Semantics are identical by construction — at the fixpoint every
-    node is adjacent to its component minimum — and pinned
-    label-identical to ``connected_components`` on chains, cliques,
-    stars, and the substrate's LSH pair graph
-    (tests/test_graph_skew.py).
-
-    Each round: two groupBy-min aggregations + two node-keyed joins
-    (all partial-agged, no global structure), ``lineage_cut`` per
-    round, bit_xor(xxhash64) fingerprint for the
-    fixpoint test (order-independent, one tiny scan).
-
-    Returns (node, comp) for every node appearing in pairs.
-    """
-    def _sym(e: DataFrame) -> DataFrame:
-        return (
-            e.filter(F.col("u") != F.col("v"))
-            .union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def _center_mins(e: DataFrame) -> DataFrame:
-        return e.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-
-    edges = lineage_cut(
-        _sym(pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")))
-    )
-    # Same size-bounded driver fast path as connected_components —
-    # two-star's labels are pinned identical to min-label propagation,
-    # so the union-find answer is identical to both.
-    fast = _local_cc_fastpath(edges)
-    if fast is not None:
-        return fast
-
-    def _star_round(e: DataFrame) -> DataFrame:
-        # LARGE-STAR: every neighbor LARGER than the center re-attaches
-        # to the center's minimum (min over neighborhood + self).
-        mins = _center_mins(e)
-        large = (
-            e.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        e = lineage_cut(_sym(large))
-        # SMALL-STAR: every neighbor <= the center, plus the center
-        # itself, re-attaches to the center's minimum.
-        mins = _center_mins(e)
-        small = (
-            e.join(mins, "u")
-            .filter(F.col("v") <= F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mins.select(F.col("u"), F.col("m").alias("v")))
-        )
-        return lineage_cut(_sym(small))
-
-    def _fingerprint(e: DataFrame) -> int:
-        return e.agg(
-            F.expr("bit_xor(xxhash64(u, v))").alias("fp")
-        ).collect()[0][0]
-
-    prev_fp = None
-    converged = False
-    for _ in range(max_iter):
-        edges = _star_round(edges)
-        fp = _fingerprint(edges)
-        if fp == prev_fp:
-            converged = True
-            break
-        prev_fp = fp
-    if not converged:
-        # Fingerprint equality trails the fixpoint by one round (the
-        # round that REACHES it still changes the set), so a graph that
-        # converges exactly at max_iter would look unconverged. Verify
-        # directly with one extra round before raising — its cost is
-        # one round we were about to charge to an exception anyway
-        # (ADVICE r14 #3).
-        edges = _star_round(edges)
-        converged = _fingerprint(edges) == prev_fp
-    if not converged:
-        # ADVICE r13 #4: exiting by exhaustion means the edge set never
-        # reached the star fixpoint — the labels below could be WRONG
-        # components. This operator is sold as the trillion-edge path
-        # where hitting the cap is likelier, so an unconverged result
-        # must never be mistakable for a fixpoint: fail loudly and tell
-        # the caller the lever.
-        raise RuntimeError(
-            f"connected_components_twostar did not converge within "
-            f"max_iter={max_iter} rounds (edge-set fingerprint still "
-            "moving) — labels would be unreliable; raise max_iter "
-            "(rounds needed grow O(log^2 n))"
-        )
-    # Fixpoint = disjoint stars centered at component minima: each
-    # node's label is min(self, min neighbor).
-    return (
-        edges.groupBy("u")
-        .agg(F.least(F.min("v"), F.first("u")).alias("comp"))
-        .select(F.col("u").alias("node"), "comp")
     )
 
 

@@ -143,51 +143,6 @@ def _np_assign(vec_batch, centroids):
     return np.argmin(acc, axis=1), acc
 
 
-def _np_iter_stats(base: DataFrame, centroids: list[list[float]]):
-    """One Lloyd round's sufficient statistics via a single blocked
-    numpy pass: per-(cluster, dim) micros-bigint sums and per-cluster
-    counts — the posexplode + 1.28M-row shuffle per iteration becomes
-    k×d partial rows per Arrow batch. Element micros are
-    round-half-away (the same value Spark's F.round produces on this
-    substrate — see _np_half_away on the .5-boundary caveat), and
-    integer sums are order-independent, so the next centroid matches
-    the JVM path's (pinned empirically: tests/test_ann_kernels.py).
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    k, d = len(centroids), len(centroids[0])
-    schema = StructType(
-        [
-            StructField("cluster", LongType()),
-            StructField("dim", LongType()),  # -1 row carries the count
-            StructField("s", LongType()),
-        ]
-    )
-
-    def stats_batches(batches):
-        for pdf in batches:
-            X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-            if not len(X):
-                continue
-            cl, _ = _np_assign(X, centroids)
-            micros = _np_half_away(X * 1_000_000.0).astype(np.int64)
-            out_c, out_d, out_s = [], [], []
-            for ci in range(k):
-                m = cl == ci
-                n = int(m.sum())
-                if not n:
-                    continue
-                sums = micros[m].sum(axis=0)
-                out_c.extend([ci] * (d + 1))
-                out_d.extend(list(range(d)) + [-1])
-                out_s.extend(list(sums) + [n])
-            yield pd.DataFrame({"cluster": out_c, "dim": out_d, "s": out_s})
-
-    return base.select("vec").mapInPandas(stats_batches, schema)
-
-
 def _np_final_assign(base: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """Final (id, cluster, dist2_micros) pass, numpy-blocked; micros
     via round-half-away of the sequential-fold distance — the same
@@ -243,51 +198,10 @@ def kmeans_fit_assign_np(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("vec"),
     )
-    centroids = fit_centroids_np(base, k, n_iter)
+    (centroids,) = fit_centroids_np_multi(base, k, n_iter, 1)
     if not centroids:  # empty corpus → empty assignment, not a crash
         return _np_final_assign(base, [[0.0]]).limit(0)
     return _np_final_assign(base, centroids)
-
-
-def fit_centroids_np(base: DataFrame, k: int, n_iter: int) -> list[list[float]]:
-    """The Lloyd fit loop alone: md5-seeded init + n_iter blocked-numpy
-    sufficient-stat rounds, returning the final k×dim centroid list
-    (driver state). Shared by kmeans_fit_assign_np and the per-subspace
-    product-quantization codebook fits (operators/ann.py:pq_encode);
-    ``base`` must already carry (id, vec) columns. The micros-BIGINT
-    sums keep the trajectory order-independent and SQL-replayable."""
-    seeds = (
-        base.withColumn("__h", F.md5(F.col("id").cast("string")))
-        .orderBy("__h")
-        .limit(k)
-        .select("vec")
-        .collect()
-    )
-    centroids = [list(r.vec) for r in seeds]
-    if not centroids:
-        return centroids
-    dim = len(centroids[0])
-    for _ in range(n_iter):
-        stats = (
-            _np_iter_stats(base, centroids)
-            .groupBy("cluster", "dim")
-            .agg(F.sum("s").alias("s"))
-            .collect()
-        )
-        by_cluster: dict[int, dict[int, int]] = {}
-        counts: dict[int, int] = {}
-        for r in stats:
-            if r.dim == -1:
-                counts[r.cluster] = r.s
-            else:
-                by_cluster.setdefault(r.cluster, {})[r.dim] = r.s
-        for ci in range(len(centroids)):
-            if ci in by_cluster:
-                dims = by_cluster[ci]
-                centroids[ci] = [
-                    (dims[d] / 1_000_000.0) / counts[ci] for d in range(dim)
-                ]
-    return centroids
 
 
 def _np_iter_stats_multi(
@@ -295,12 +209,16 @@ def _np_iter_stats_multi(
 ):
     """One Lloyd round's sufficient statistics for ALL m subspaces in
     ONE blocked numpy pass: per-(sub, cluster, dim) micros-bigint sums
-    (dim = -1 carries the count). Per-batch arithmetic per subspace is
-    byte-identical to _np_iter_stats over the sliced frame — element
-    micros quantize elementwise (slice-before or slice-after is the
-    same), _np_assign sees exactly the sliced values, and the integer
-    partial sums are combine-order independent — so the driver-side
-    centroid trajectory equals m independent fits."""
+    (dim = -1 carries the count) — the posexplode + corpus-sized
+    shuffle per iteration becomes m×k×(sub+1) partial rows per Arrow
+    batch. Element micros are round-half-away (the same value Spark's
+    F.round produces on this substrate — see _np_half_away on the
+    .5-boundary caveat) and quantize elementwise (slice-before or
+    slice-after is the same), _np_assign sees exactly the sliced
+    values, and the integer partial sums are combine-order
+    independent — so the driver-side centroid trajectory equals m
+    independent fits, and for m=1 the JVM path's (pinned empirically:
+    tests/test_ann_kernels.py)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
@@ -347,15 +265,20 @@ def _np_iter_stats_multi(
 def fit_centroids_np_multi(
     base: DataFrame, k: int, n_iter: int, m: int
 ) -> list[list[list[float]]]:
-    """All m per-subspace Lloyd fits FUSED: one seed collect and ONE
-    sufficient-stat corpus pass per round for every subspace, instead
-    of m independent fit_centroids_np calls = m x (n_iter + 1) corpus
-    passes. Bit-identical codebooks to the per-subspace fits (pinned
-    in tests/test_ann_kernels.py): the md5(id) seed order is the same
+    """The numpy Lloyd fit loop: md5-seeded init + n_iter blocked-numpy
+    sufficient-stat rounds, returning one k×(dim/m) codebook per
+    subspace (driver state). ``base`` must already carry (id, vec)
+    columns; m=1 fits the whole space (kmeans_fit_assign_np,
+    kmeans_cluster_quality), m>1 the product-quantization subspaces
+    (operators/ann.py:pq_encode). All m fits are FUSED: one seed
+    collect and ONE corpus pass per round for every subspace, instead
+    of m x (n_iter + 1) passes, with codebooks bit-identical to m
+    independent m=1 fits over the sliced frames (pinned in
+    tests/test_ann_kernels.py): the md5(id) seed order is the same
     rows for every subspace, the per-batch numpy arithmetic per
-    subspace matches _np_iter_stats over the sliced frame exactly,
-    and the integer micros sums are combine-order independent, so the
-    SQL replay chains (_kmeans_cte_sql per subspace) verify the fused
+    subspace matches a fit over the sliced frame exactly, and the
+    integer micros sums are combine-order independent, so the SQL
+    replay chains (_kmeans_cte_sql per subspace) verify the fused
     path unchanged."""
     seeds = (
         base.withColumn("__h", F.md5(F.col("id").cast("string")))

@@ -45,6 +45,31 @@ def _dot_expr(vec_col: str, lit_vec: list[float]) -> F.Column:
     )
 
 
+def _centered(df: DataFrame, id_col: str, vec_col: str, dim: int) -> DataFrame:
+    """(id, vec, cvec): the vectors as doubles and centered on their
+    micros-exact mean, mu_j = (sum(round(x*1e6)) / 1e6) / n — one
+    distributed agg; only `dim` rows reach the driver."""
+    base = df.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).cast("array<double>").alias("vec"),
+    )
+    stats = (
+        base.select(F.posexplode("vec").alias("dim", "x"))
+        .groupBy("dim")
+        .agg(
+            F.sum(F.round(F.col("x") * 1_000_000).cast("long")).alias("s"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        .collect()
+    )
+    by_dim = {r.dim: (r.s, r.n) for r in stats}
+    mu = [(by_dim[d][0] / 1_000_000.0) / by_dim[d][1] for d in range(dim)]
+    mu_lit = F.array(*[F.lit(float(m)) for m in mu])
+    return base.withColumn(
+        "cvec", F.zip_with(F.col("vec"), mu_lit, lambda a, b: a - b)
+    )
+
+
 def power_iteration_top_pc(
     df: DataFrame,
     id_col: str,
@@ -59,28 +84,7 @@ def power_iteration_top_pc(
     Each round runs ONE distributed aggregation; direction state
     (`dim` doubles) is the only data that ever reaches the driver.
     """
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-    )
-    # mean vector, micros-exact: mu_j = (sum(round(x*1e6)) / 1e6) / n
-    stats = (
-        base.select(F.posexplode("vec").alias("dim", "x"))
-        .groupBy("dim")
-        .agg(
-            F.sum(F.round(F.col("x") * 1_000_000).cast("long")).alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .collect()
-    )
-    by_dim = {r.dim: (r.s, r.n) for r in stats}
-    mu = [(by_dim[d][0] / 1_000_000.0) / by_dim[d][1] for d in range(dim)]
-    mu_lit = F.array(*[F.lit(float(m)) for m in mu])
-
-    centered = base.withColumn(
-        "cvec", F.zip_with(F.col("vec"), mu_lit, lambda a, b: a - b)
-    )
-
+    centered = _centered(df, id_col, vec_col, dim)
     v = _fit_direction(centered, "cvec", dim, n_iter)
     proj = centered.select(
         "id",
@@ -135,26 +139,7 @@ def power_iteration_two_pc(
     deflated data keeps the (quantized-)zero mean, so the second fit
     does not re-center; v2 is orthogonal to v1 up to the micros
     quantization of the update sums."""
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-    )
-    stats = (
-        base.select(F.posexplode("vec").alias("dim", "x"))
-        .groupBy("dim")
-        .agg(
-            F.sum(F.round(F.col("x") * 1_000_000).cast("long")).alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .collect()
-    )
-    by_dim = {r.dim: (r.s, r.n) for r in stats}
-    mu = [(by_dim[d][0] / 1_000_000.0) / by_dim[d][1] for d in range(dim)]
-    mu_lit = F.array(*[F.lit(float(m)) for m in mu])
-    centered = base.withColumn(
-        "cvec", F.zip_with(F.col("vec"), mu_lit, lambda a, b: a - b)
-    )
-
+    centered = _centered(df, id_col, vec_col, dim)
     v1 = _fit_direction(centered, "cvec", dim, n_iter)
     v1_lit = F.array(*[F.lit(float(x)) for x in v1])
     deflated = centered.withColumn("w1", _dot_expr("cvec", v1)).withColumn(

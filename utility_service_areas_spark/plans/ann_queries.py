@@ -36,15 +36,18 @@ def _cos_micros_sql(a: str, b: str) -> str:
 def _lsh_bucket_sql(vec: str, dim: int = 64, n_planes: int = 4) -> str:
     """Bucket-bit SQL mirroring hyperplane_lsh_bucket: the SAME
     md5-derived coefficients (lsh_plane_coeffs) inlined as list
-    literals, the same sequential double fold, the same >= 0 sign."""
+    literals, the same sequential double fold, the same >= 0 sign.
+    The literal is zipped OUTSIDE the lambda: DuckDB re-evaluates a
+    literal inside a lambda body for every element (1.6 s to bucket
+    500 vectors on 6 planes, against 0.03 s zipped)."""
     from utility_service_areas_spark.operators.ann import lsh_plane_coeffs
 
     bits = []
     for coeffs in lsh_plane_coeffs(dim, n_planes):
         lits = "[" + ", ".join(str(c) for c in coeffs) + "]"
         proj = (
-            f"list_sum(list_transform(generate_series(1, {dim}), "
-            f"i -> {vec}[i]::DOUBLE * ({lits}[i])::DOUBLE))"
+            f"list_sum(list_transform(list_zip({vec}[1:{dim}], {lits}), "
+            f"p -> p[1]::DOUBLE * p[2]::DOUBLE))"
         )
         bits.append(f"(CASE WHEN {proj} >= 0 THEN '1' ELSE '0' END)")
     return " || ".join(bits)
@@ -1896,7 +1899,7 @@ def _cluster_quality_oracle_sql(k: int = 8, n_iter: int = 5, dim: int = 64) -> s
 def kmeans_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from utility_service_areas_spark.operators.kmeans import (
         _np_final_assign,
-        fit_centroids_np,
+        fit_centroids_np_multi,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1904,7 +1907,7 @@ def kmeans_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("id"),
         F.col("embedding").cast("array<double>").alias("vec"),
     )
-    centroids = fit_centroids_np(base, k=8, n_iter=5)
+    (centroids,) = fit_centroids_np_multi(base, k=8, n_iter=5, m=1)
     assign = _np_final_assign(base, centroids)
     per = assign.groupBy("cluster").agg(
         F.count(F.lit(1)).alias("n_vectors"),

@@ -152,10 +152,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_candidate_pairs(sig, n_hashes=8, band_size=2)
 
 
-# Shared by #50 (min-label propagation CC) and #243 (two-star CC):
-# the two algorithms are pinned label-identical, so ONE oracle attests
-# both — same pairs, same keeper/size semantics. Its edge list (and
-# the keep-best oracles' below) is MATERIALIZED: DuckDB inlines a plain
+# #50's oracle: transitive closure over the scored pairs. Its edge
+# list (and the keep-best oracles' below) is MATERIALIZED: DuckDB inlines a plain
 # CTE per reference, so the recursive step would replay the minhash and
 # LSH chain on every iteration (measured 6.0 s -> 1.6 s at sf0.001).
 _CLUSTERS_ORACLE = f"""
@@ -1090,7 +1088,7 @@ def _bbit_oracle_sql() -> str:
       FROM cand JOIN sig sa ON doc_a = sa.doc JOIN sig sb ON doc_b = sb.doc"""
     )
     union = " UNION ALL ".join(per_b)
-    return f"""
+    sql = f"""
     WITH {_SHINGLES_CTE},
     {_minhash_sig_sql()},
     {_bands_sql()},
@@ -1122,6 +1120,12 @@ def _bbit_oracle_sql() -> str:
            CAST(floor(sum(err_micros) * 1.0 / count(*) + 0.5) AS BIGINT)
              AS mean_abs_err_micros
     FROM errs GROUP BY bits"""
+    # ex, sig and cand are each read by several branches, and DuckDB
+    # inlines a plain CTE per reference: MATERIALIZE them (measured
+    # 2.4 -> 0.15 s at sf0.001, same result).
+    for cte in ("ex", "sig", "cand"):
+        sql = sql.replace(f" {cte} AS (", f" {cte} AS MATERIALIZED (")
+    return sql
 
 
 @query(
@@ -1238,49 +1242,4 @@ def minhash_bbit_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.sum("err_micros") * 1.0 / F.count(F.lit(1)) + 0.5)
         .cast("long")
         .alias("mean_abs_err_micros"),
-    )
-
-
-@query(
-    "dedup_cc_twostar",
-    oracle=_CLUSTERS_ORACLE,
-    doc="The dedup endgame computed by ALTERNATING LARGE-STAR / "
-    "SMALL-STAR connected components (Kiveris et al. 2014) instead of "
-    "#50's min-label propagation — same pairs, same keeper/size "
-    "output, SAME oracle (the two algorithms are additionally pinned "
-    "label-identical on chain/clique/star/substrate graphs in "
-    "tests/test_graph_skew.py). Why a second CC: label propagation "
-    "re-joins the FULL edge list every round; two-star provably "
-    "shrinks the edge multiset toward stars (O(log^2 n) rounds, and "
-    "near-clique dedup components collapse to a star in ONE "
-    "large-star round), so later rounds join node-sized frames — the "
-    "algorithm of record for trillion-edge CC. Per round: two "
-    "groupBy-min aggs + two node-keyed joins, localCheckpoint lineage "
-    "cut, order-independent xxhash64 fingerprint as the fixpoint test.",
-    tags=("dedup", "graph"),
-)
-def dedup_cc_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from utility_service_areas_spark.operators.dedup import lineage_cut
-    from utility_service_areas_spark.operators.graph import (
-        connected_components_twostar,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    sig = minhash_signatures(docs, "doc_id", "text", k=3, n_hashes=8)
-    pairs = lsh_candidate_pairs(sig, n_hashes=8, band_size=2).filter(
-        "n_matching_minhashes >= 6"
-    )
-    comp = connected_components_twostar(pairs)
-    joined = docs.select(F.col("doc_id").alias("node")).join(comp, "node", "left")
-    resolved = lineage_cut(
-        joined.select(
-            F.col("node").alias("doc_id"),
-            F.coalesce(F.col("comp"), F.col("node")).alias("keeper_id"),
-        )
-    )
-    sizes = resolved.groupBy("keeper_id").agg(
-        F.count(F.lit(1)).alias("cluster_size")
-    )
-    return resolved.join(sizes, "keeper_id").select(
-        "doc_id", "keeper_id", "cluster_size"
     )
